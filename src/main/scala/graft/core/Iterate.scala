@@ -19,9 +19,11 @@ import org.apache.spark.storage.StorageLevel
   * frame once into a persisted row RDD and rebuild the DataFrame from
   * it. The rebuilt LogicalRDD inherits NO statistics (planner default
   * only), so every round plans in constant time regardless of round
-  * count. Fixed-round loops of ≤~10 rounds can keep `localCheckpoint`
-  * (InternalRow, no Row conversion): 64·k^10 bits is still cheap —
-  * the blowup only bites unbounded convergence loops.
+  * count. Fixed-round loops of ≤~10 rounds stay clear of the blowup
+  * (64·k^10 bits is still cheap), so their per-round `localCheckpoint`s
+  * (PageRank, HITS) are safe; a loop whose rounds stay co-partitioned needs
+  * no per-round truncation at all — `ConnectedComponents.propagate` runs
+  * its rounds as RDD rounds in one job and materializes once.
   */
 object Iterate {
   /** A materialized loop-carried frame + the handle to free it. */

@@ -60,12 +60,8 @@ object Dedup {
     MinHashParams(numHashes = 4 * r, rowsPerBand = r)
   }
 
-  /** (doc, shingle-hash) rows via explode + window-lead. Staged this way —
-    * not as nested array lambdas — so the tokenizer and regex normalization
-    * run ONCE per document: a nested transform(...element_at(split(...)))
-    * re-evaluates the split per element (O(len²) per doc, measured 20×
-    * slower at sf0.1). The window shuffles by doc id, which also spreads
-    * long documents' shingle work across the cluster. */
+  /** (doc, shingle-hash) rows: [[TextOps.explodedShingles]] tokenizes each
+    * document once and explodes its k-gram array — a pure map, no shuffle. */
   def shingleHashes(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
     TextOps.explodedShingles(df, col(idCol), normText(col(textCol)), k)
       .select(col("doc"), Num.md5Mod(col("sh")).as("hv"))
@@ -92,15 +88,15 @@ object Dedup {
     require(p.numHashes % p.rowsPerBand == 0,
       s"numHashes (${p.numHashes}) must be a multiple of rowsPerBand " +
         s"(${p.rowsPerBand}) — trailing hashes would be silently dropped")
-    // cache: the signature table (n × numHashes longs) is read nBands
-    // times by the band union
-    val sigs = minhashSignatures(df, textCol, idCol, p).cache()
-    val nBands = p.numHashes / p.rowsPerBand
-    (0 until nBands).map { b =>
-      val key = concat_ws("_",
-        (0 until p.rowsPerBand).map(r => col(s"mh${b * p.rowsPerBand + r}")): _*)
-      sigs.select(lit(b).as("band"), key.as("bkey"), col("doc"))
-    }.reduce(_ unionAll _)
+    // every band of a signature row is emitted in-row (one Generate over
+    // the signature aggregate): the table is read once, nothing is cached
+    val bands = (0 until p.numHashes / p.rowsPerBand).map { b =>
+      struct(lit(b).as("band"), concat_ws("_",
+        (0 until p.rowsPerBand).map(r => col(s"mh${b * p.rowsPerBand + r}")): _*).as("bkey"))
+    }
+    minhashSignatures(df, textCol, idCol, p)
+      .select(col("doc"), explode(array(bands: _*)).as("_b"))
+      .select(col("_b.band").as("band"), col("_b.bkey").as("bkey"), col("doc"))
   }
 
   /** LSH candidate pairs: docs sharing any band of the signature.
@@ -241,33 +237,37 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Per-doc DISTINCT shingle sets as ARRAYS, restricted to the docs that
-    * appear in some candidate pair — the r17 verify-stage shape shared by
-    * [[jaccardForCandidates]] and [[containmentForCandidates]]. The array
-    * build is a pure codegen map (no explode, no shuffle); the semi join
-    * ships each kept doc ONCE (AQE broadcasts the id set while it is
-    * small, and at corpus scale it degrades to one shuffle of compact
-    * array rows — never the exploded shingle table). Docs shorter than k
-    * tokens are dropped, replaying the old inner-join-on-shingle-rows
-    * semantics exactly (such docs have no signature, so they cannot be
-    * candidates anyway). */
+  /** Per-doc DISTINCT k-shingle sets (doc, shs), built in-row — one row per
+    * document, no shuffle. The token array and the set each
+    * go through the structural Generate barrier: shingles() reads its input
+    * size(toks)+k times per element, and an INLINED split() would
+    * re-tokenize at every read (the O(len²)-per-doc trap — measured 272 s
+    * vs 9 s at 500k docs); a set read twice (size + explode, or a filter
+    * and its output) would otherwise be rebuilt per read. */
+  private def shingleSets(df: DataFrame, textCol: String, idCol: String,
+                          k: Int): DataFrame = {
+    val toks = Barrier.once(
+      df.select(col(idCol).cast("long").as("doc"), normText(col(textCol)).as("_t")),
+      Seq(col("doc")), split(col("_t"), " "), "toks")
+    Barrier.once(toks, Seq(col("doc")),
+      array_distinct(TextOps.shingles(col("toks"), k)), "shs")
+  }
+
+  /** [[shingleSets]] restricted to the docs that appear in some candidate
+    * pair — the r17 verify-stage shape shared by [[jaccardForCandidates]]
+    * and [[containmentForCandidates]]. The semi join ships each kept doc
+    * ONCE (AQE broadcasts the id set while it is small, and at corpus
+    * scale it degrades to one shuffle of compact array rows — never the
+    * exploded shingle table). Docs shorter than k tokens are dropped,
+    * replaying the old inner-join-on-shingle-rows semantics exactly (such
+    * docs have no signature, so they cannot be candidates anyway). */
   private def candidateShingleSets(df: DataFrame, textCol: String,
                                    idCol: String, k: Int,
                                    cand: DataFrame): DataFrame = {
-    // the token array goes through the structural Generate barrier:
-    // shingles() reads it size(toks)+k times per element, and an INLINED
-    // split() would re-tokenize at every read (the O(len²)-per-doc trap
-    // shingleHashes documents — measured 272 s vs 9 s at 500k docs)
-    val toks = Barrier.once(
-      df.select(col(idCol).cast("long").as("doc"),
-        normText(col(textCol)).as("_t")),
-      Seq(col("doc")), split(col("_t"), " "), "toks")
-    val arrays = toks.select(col("doc"),
-        array_distinct(TextOps.shingles(col("toks"), k)).as("shs"))
-      .filter(size(col("shs")) > 0)
     val docsInPairs = cand
       .select(explode(array(col("doc1"), col("doc2"))).as("doc")).distinct()
-    arrays.join(docsInPairs, Seq("doc"), "left_semi")
+    shingleSets(df, textCol, idCol, k).filter(size(col("shs")) > 0)
+      .join(docsInPairs, Seq("doc"), "left_semi")
   }
 
   /** Exact n-gram Jaccard for the MinHash-LSH candidate pairs — the scale
@@ -407,18 +407,19 @@ object Dedup {
     * training documents sharing k-gram shingles with an evaluation set).
     * The benchmark side is tiny by nature (eval suites), so its distinct
     * shingle set broadcasts and the corpus-side scan never shuffles for the
-    * join; per-doc counts group on doc id. Returns one row per
-    * contaminated doc: (doc, n_matched, n_shingles, ratio). */
+    * join. Each corpus document's distinct shingle set is built in-row
+    * (`array_distinct`, no (doc, shingle) shuffle), so `n_shingles` is its
+    * size and only matched shingles reach the per-doc count. Returns one
+    * row per contaminated doc: (doc, n_matched, n_shingles, ratio). */
   def benchmarkOverlap(corpus: DataFrame, benchmark: DataFrame, textCol: String,
                        idCol: String, k: Int = 3): DataFrame = {
-    val cs = TextOps.explodedShingles(corpus, col(idCol), normText(col(textCol)), k)
-      .select(col("doc"), col("sh")).distinct().cache()
     val bs = TextOps.explodedShingles(benchmark, col(idCol), normText(col(textCol)), k)
       .select(col("sh")).distinct()
-    val sizes = cs.groupBy(col("doc")).agg(count(lit(1)).cast("double").as("_n"))
-    val matched = cs.join(broadcast(bs), Seq("sh"))
-      .groupBy(col("doc")).agg(count(lit(1)).cast("double").as("_m"))
-    sizes.join(matched, Seq("doc"))
+    shingleSets(corpus, textCol, idCol, k)
+      .select(col("doc"), size(col("shs")).cast("double").as("_n"),
+        explode(col("shs")).as("sh"))
+      .join(broadcast(bs), Seq("sh"))
+      .groupBy(col("doc"), col("_n")).agg(count(lit(1)).cast("double").as("_m"))
       .select(col("doc"), col("_m").cast("long").as("n_matched"),
         col("_n").cast("long").as("n_shingles"),
         r4(col("_m") / col("_n")).as("ratio"))

@@ -1,7 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Distributed connected components by min-label propagation over an
   * undirected edge list — the shuffle-native alternative to collecting the
@@ -10,9 +16,13 @@ import org.apache.spark.sql.functions._
   *
   * Each round every node takes the minimum label over itself and its
   * neighbors; labels only decrease, and the propagation converges in
-  * graph-diameter rounds to label = min node id of the component. Every
-  * round is one join + one grouped min (shuffle key = node id);
-  * localCheckpoint truncates the lineage so k rounds stay k shuffles.
+  * graph-diameter rounds to label = min node id of the component.
+  * [[propagate]] runs its fixed rounds as co-partitioned RDD rounds: the
+  * edge list is hash-partitioned by node ONCE and the labels stay under
+  * the same partitioner, so each round is one narrow (partition-local)
+  * join plus one `reduceByKey(min)` shuffle, and all rounds run in one
+  * job. [[converge]] keeps the DataFrame rounds (its pointer jump joins
+  * by label, not by node, so it cannot stay co-partitioned).
   */
 object ConnectedComponents {
   /** Both directions of the edge list: (src, dst). */
@@ -39,7 +49,9 @@ object ConnectedComponents {
 
   /** Exactly `rounds` propagation rounds — deterministic and (for graphs
     * whose diameter < rounds) converged. The fixed count exists so a SQL
-    * oracle can replay the identical computation as chained CTEs. */
+    * oracle can replay the identical computation as chained CTEs. A null
+    * endpoint is not a node: an edge with one null end keeps only its
+    * other end (as an isolated node unless other edges reach it). */
   def propagate(edges: DataFrame, a: String, b: String, rounds: Int): DataFrame =
     graft.core.FitCache.getOrFit(graft.core.FitCache.key(edges,
       "cc_propagate", a, b, rounds)) {
@@ -48,15 +60,36 @@ object ConnectedComponents {
 
   private def propagateUncached(edges: DataFrame, a: String, b: String,
                                 rounds: Int): DataFrame = {
-    val dir = directed(edges, a, b).localCheckpoint(true)
-    var lab = initLabels(dir)
-    // checkpoint every other round: enough to keep the plan shallow while
-    // halving the eager materializations
-    (0 until rounds).foreach { i =>
-      lab = step(dir, lab)
-      if (i % 2 == 1 || i == rounds - 1) lab = lab.localCheckpoint(true)
+    val spark = edges.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // (node, neighbor) in both directions, partitioned ONCE by node; a
+    // one-sided edge becomes a self-loop so its endpoint stays a node
+    val adj = edges.select(col(a).cast("long"), col(b).cast("long"))
+      .queryExecution.toRdd.flatMap { r =>
+        if (r.isNullAt(0) && r.isNullAt(1)) Iterator.empty
+        else if (r.isNullAt(0)) Iterator((r.getLong(1), r.getLong(1)))
+        else if (r.isNullAt(1)) Iterator((r.getLong(0), r.getLong(0)))
+        else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
+      }
+      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    // every node is a key of adj, and adj's partitions are key-disjoint
+    val init: RDD[(Long, Long)] = adj.mapPartitions(
+      _.map(_._1).distinct.map(n => (n, n)), preservesPartitioning = true)
+    val lab = (0 until rounds).foldLeft(init) { (lab, _) =>
+      // narrow join: partition i of the labels covers exactly the nodes of
+      // adj's partition i, so each neighbor row streams past a label map
+      // of its own partition's nodes (no per-node neighbor lists)
+      adj.zipPartitions(lab) { (es, ls) =>
+        val own = mutable.LongMap.empty[Long]
+        ls.foreach { case (n, l) => own.update(n, l) }
+        own.iterator ++ es.map { case (n, nb) => (nb, own(n)) }
+      }.reduceByKey(part, (x: Long, y: Long) => math.min(x, y))
     }
-    lab
+    val schema = StructType(Seq(StructField("node", LongType), StructField("label", LongType)))
+    val out = spark.createDataFrame(lab.map { case (n, l) => Row(n, l) }, schema)
+      .localCheckpoint(true)
+    adj.unpersist(blocking = false)
+    out
   }
 
   /** Pointer jump: every node additionally adopts its current label's OWN

@@ -20,9 +20,10 @@ object TextOps {
     * (Spark's sequence(a,b) runs DESCENDING when a > b, so short docs need
     * the explicit empty-array guard.)
     *
-    * NOTE: fine for one-shot use, but nested-lambda evaluation re-computes
-    * the `toks` expression per element — hot paths must use
-    * [[explodedShingles]] (evaluate-once explode + window staging). */
+    * NOTE: nested-lambda evaluation re-computes the `toks` expression per
+    * element — hot paths stage the token array (and any set built from the
+    * result that is read more than once) through [[graft.core.Barrier.once]]
+    * so it evaluates once per document. */
   def shingles(toks: Column, k: Int): Column =
     when(size(toks) >= k,
       transform(

@@ -4,9 +4,12 @@
   2. loads each <outDir>/<name> parquet (Spark result),
   3. runs <outDir>/oracle_sql.json in DuckDB over the sf parquet tables,
   4. compares column-name-sorted, row-sorted values exactly.
-Usage: check_oracle.py <sfDir> <outDir>
+Usage: check_oracle.py <sfDir> <outDir> [jsonOut]
+With SPARK_GRAFT_VERIFY_ONLY=q1,q2 (the list Verify reads) only those
+queries are checked, so a subset run does not report every other query as
+"spark result missing"; a listed name with no oracle SQL fails.
 """
-import json, math, sys
+import json, math, os, sys
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -42,6 +45,14 @@ def main(sf_dir, out_dir, json_out=None):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     results = {}
+    only = {q.strip() for q in os.environ.get("SPARK_GRAFT_VERIFY_ONLY", "").split(",")
+            if q.strip()}
+    if only:
+        for name in sorted(only - oracle.keys()):
+            print(f"FAIL {name}: no oracle sql")
+            results[name] = {"status": "fail", "reason": "no oracle sql"}
+            n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         try:
             res = con.execute(sql)
