@@ -30,35 +30,6 @@ object DBSCANGrid {
           eps: Double, minPts: Int, ccEdgeLimit: Long = 500000L): DataFrame =
     fitND(points, idCol, Seq(xCol, yCol), eps, minPts, ccEdgeLimit)
 
-  /** n-dimensional grid DBSCAN (reference dbscan.pyx accepts any feature
-    * count). TWO grids, one job each does what one grid cannot do cheaply:
-    *
-    *  - candidate PAIRS come from COARSE cells of width eps: two points
-    *    within eps are within ±1 coarse cell per axis, so the window is
-    *    3^d and half-space replication is (3^d+1)/2 offsets (d=3: 14 — vs
-    *    63 on a fine ±⌈√d⌉ window, 4.5× less explode/shuffle volume, the
-    *    term that dominates at corpus scale). Every candidate is still
-    *    distance-verified, so the pair set is EXACTLY all eps-pairs.
-    *  - cluster MERGING runs on FINE cells of width eps/√d: the fine-cell
-    *    diagonal is exactly eps, so same-fine-cell core points are always
-    *    mutual eps-neighbors and the cell-graph CC is exact, with the
-    *    graph bounded by occupied cells, not by n.
-    *
-    * The grid method is for LOW d (the regime where cuML's own grid/rtree
-    * strategies win; at high d use knnJoin-style brute force), enforced by
-    * d ≤ 5.
-    *
-    * Cell coordinates pack into one long key, ⌊62/d⌋ bits per axis
-    * (signed-centered: valid for |coord/cw| < 2^(bits−1) — at d=2 that
-    * is the old 31-bit layout, at d=3 a ±2^19-cell extent per axis; the
-    * fine grid has the larger coordinates, so its extent guard also
-    * covers the coarse key).
-    *
-    * @param ccEdgeLimit cell-edge count above which the connected
-    *   components run distributed (min-label propagation) instead of in a
-    *   driver union-find. The occupied-cell graph is usually tiny next to
-    *   n, but sparse data over a huge extent can make it data-scale too —
-    *   both paths produce identical labels (component rep = min cell id). */
   /** Steps 1-2 of the grid estimator, shared with [[coreSummary]]: the
     * packed fine/coarse cell frame and the distance-verified eps-pair set
     * (normalized id < bid), both cached — callers unpersist. */
@@ -128,28 +99,37 @@ object DBSCANGrid {
     (withCell, pairs)
   }
 
-  /** One fit shared across the family's views and across Bench's repeat
-    * runs (the gbt_stumps/Forest fit-once pattern): fitND's output is a
-    * cached, materialized assignment frame, so memoizing on
-    * (session, canonicalized input plan, hyperparameters) makes every
-    * re-request a cache read instead of a refit. Bounded: one entry per
-    * distinct (input, eps, minPts) in the process — three in a bench
-    * run — each a (id, is_core, cluster) frame, and at cluster scale a
-    * caller fits once anyway. Keyed on the session too: a cached frame
-    * from a stopped session must not serve a new one. */
-  private val fits = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** n-dimensional grid DBSCAN (reference dbscan.pyx accepts any feature
+    * count). TWO grids, one job each does what one grid cannot do cheaply:
+    *
+    *  - candidate PAIRS come from COARSE cells of width eps: two points
+    *    within eps are within ±1 coarse cell per axis, so the window is
+    *    3^d and half-space replication is (3^d+1)/2 offsets (d=3: 14 — vs
+    *    63 on a fine ±⌈√d⌉ window, 4.5× less explode/shuffle volume, the
+    *    term that dominates at corpus scale). Every candidate is still
+    *    distance-verified, so the pair set is EXACTLY all eps-pairs.
+    *  - cluster MERGING runs on FINE cells of width eps/√d: the fine-cell
+    *    diagonal is exactly eps, so same-fine-cell core points are always
+    *    mutual eps-neighbors and the cell-graph CC is exact, with the
+    *    graph bounded by occupied cells, not by n.
+    *
+    * The grid method is for LOW d (the regime where cuML's own grid/rtree
+    * strategies win; at high d use knnJoin-style brute force), enforced by
+    * d ≤ 5.
+    *
+    * Cell coordinates pack into one long key, ⌊62/d⌋ bits per axis
+    * (signed-centered: valid for |coord/cw| < 2^(bits−1) — at d=2 that
+    * is the old 31-bit layout, at d=3 a ±2^19-cell extent per axis; the
+    * fine grid has the larger coordinates, so its extent guard also
+    * covers the coarse key).
+    *
+    * @param ccEdgeLimit cell-edge count above which the connected
+    *   components run distributed (min-label propagation) instead of in a
+    *   driver union-find. The occupied-cell graph is usually tiny next to
+    *   n, but sparse data over a huge extent can make it data-scale too —
+    *   both paths produce identical labels (component rep = min cell id). */
   def fitND(points: DataFrame, idCol: String, featCols: Seq[String],
             eps: Double, minPts: Int, ccEdgeLimit: Long = 500000L): DataFrame = {
-    val key = s"${System.identityHashCode(points.sparkSession)}:" +
-      s"${points.queryExecution.analyzed.semanticHash()}:" +
-      s"$idCol:${featCols.mkString(",")}:$eps:$minPts:$ccEdgeLimit"
-    fits.computeIfAbsent(key, _ =>
-      fitNDUncached(points, idCol, featCols, eps, minPts, ccEdgeLimit))
-  }
-
-  private def fitNDUncached(points: DataFrame, idCol: String, featCols: Seq[String],
-                            eps: Double, minPts: Int, ccEdgeLimit: Long): DataFrame = {
     val (withCell, pairs) = cellsAndPairs(points, idCol, featCols, eps)
     val bothDirs = pairs.unionAll(pairs.select(col("bid").as("id"), col("id").as("bid")))
 
@@ -211,8 +191,7 @@ object DBSCANGrid {
       .join(borderLabel, Seq("id"), "left")
       .select(col("id"), col("is_core"),
         coalesce(col("cluster"), col("border_cluster"), lit(-1L)).as("cluster"))
-      .cache()
-    out.count() // materialize, then drop the intermediate caches
+      .localCheckpoint(true) // materialize, then drop the intermediate caches
     withCell.unpersist(); pairs.unpersist(); core.unpersist(); cellEdgeDF.unpersist()
     out
   }
@@ -303,7 +282,7 @@ object DBSCANGrid {
       .crossJoin(broadcast(nPairs))
       .select(col("n_points"), col("n_eps_pairs"), col("n_core"),
         col("n_border"), col("n_noise"))
-    out.cache().count() // materialize, then release the shared caches
+      .localCheckpoint(true) // materialize, then release the shared caches
     withCell.unpersist(); pairs.unpersist()
     out
   }

@@ -1,14 +1,21 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Process-wide fit-once memoization for deterministic estimator fits —
-  * the gbt_stumps / forest / grid-DBSCAN pattern factored out. A seeded,
-  * deterministic fit is a pure function of (input plan, hyperparameters),
-  * so re-requesting it — another query viewing the same estimator, or a
-  * benchmark's repeat run — returns the memoized model instead of
-  * refitting. This is the fit-once/serve-many shape production pipelines
-  * have anyway; at 100 TB nobody refits per query.
+/** The library's one fit-once memo for deterministic estimator fits. A
+  * seeded, deterministic fit is a pure function of (input plan,
+  * hyperparameters), so re-requesting it — another query viewing the same
+  * estimator, or a benchmark's repeat run — returns the memoized model
+  * instead of refitting. This is the fit-once/serve-many shape production
+  * pipelines have anyway; at 100 TB nobody refits per query.
+  *
+  * RULE: values are DRIVER-LOCAL only — coefficients, stumps, MLlib model
+  * objects, collected rows. Never a Dataset: a frame's cached or
+  * checkpointed blocks live on executors, and losing one (routine at 1000
+  * executors) would turn every later hit into a failed job, while the
+  * entry would pin that storage for as long as it stayed in the LRU.
+  * Callers that return a frame memoize its rows and build the frame
+  * outside the memo. [[getOrFit]] enforces the rule.
   *
   * Keys include the SESSION identity (a model fitted under a stopped
   * session must never serve a new one) and the CANONICALIZED analyzed
@@ -17,15 +24,13 @@ import org.apache.spark.sql.DataFrame
   * (VectorAssembler output etc.) canonicalize differently on every call
   * and would defeat the memo (the forest-fit memo-key lesson).
   *
-  * BOUNDED: entries are driver-local literals (coefs, centroids,
-  * codebooks, stump lists) or MLlib model objects. One workload sees one
-  * entry per distinct (session, input, hyperparameters) — small — but a
-  * long-lived serving process with evolving input plans accumulates
-  * entries forever, and MLlib model entries pin RDD/plan references
-  * (r10 verdict finding). The store is therefore an access-ordered LRU
-  * capped at [[MaxEntries]]: the eviction victim is the
-  * least-recently-SERVED model, exactly the one a serving process is
-  * least likely to need again.
+  * BOUNDED: one workload sees one entry per distinct (session, input,
+  * hyperparameters) — small — but a long-lived serving process with
+  * evolving input plans accumulates entries forever, and MLlib model
+  * entries pin RDD/plan references (r10 verdict finding). The store is
+  * therefore an access-ordered LRU capped at [[MaxEntries]]: the eviction
+  * victim is the least-recently-SERVED model, exactly the one a serving
+  * process is least likely to need again.
   */
 object FitCache {
   /** Far above any single workload's distinct-fit count (the full 257-query
@@ -69,13 +74,16 @@ object FitCache {
     * through the fit would deadlock), and Spark jobs must never run under
     * a driver-side lock. Racing duplicate fits are harmless — both compute
     * the same deterministic value; first-in wins so every caller serves
-    * one object. */
+    * one object. A fit that yields a Dataset throws
+    * IllegalArgumentException and stores nothing. */
   def getOrFit[T <: AnyRef](k: String)(fit: => T): T = {
     val hit = cache.synchronized(cache.get(k))
     if (hit != null) { hitCount.incrementAndGet(); hit.asInstanceOf[T] }
     else {
       missCount.incrementAndGet()
       val v = fit
+      require(!v.isInstanceOf[Dataset[_]],
+        s"FitCache holds driver-local values only, not a Dataset (key $k)")
       cache.synchronized {
         val prev = cache.get(k)
         if (prev != null) prev.asInstanceOf[T]

@@ -56,24 +56,19 @@ object Boosting {
         carries.map { case (n, c) => c.as(n) }: _*)
       .select(col("u.f").as("f") +: col("u.v").as("v") +: carries.map(c => col(c._1)): _*)
 
-  /** One fit shared by `gbt_stumps` and `partial_dependence` — two views
-    * of the same fitted estimator (the Forest fit-once pattern): memoized
-    * on (canonicalized input plan, label expression, hyperparameters).
-    * The fit is deterministic (rounded-argmin winners), the model is a
-    * handful of driver-local stump parameters, and both queries stay
-    * independently callable. */
-  private val gbtFits =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Seq[Stump])]()
-
   /** Gradient-boosted regression stumps (squared loss, shrinkage `lr`,
     * `rounds` rounds). Returns (f0, stumps): f0 = 4-dp-rounded global mean,
-    * each stump's leaves = 6-dp-rounded mean residuals of its split. */
+    * each stump's leaves = 6-dp-rounded mean residuals of its split.
+    * One fit shared by `gbt_stumps` and `partial_dependence` — two views
+    * of the same fitted estimator, memoized in FitCache: the fit is
+    * deterministic (rounded-argmin winners) and the model is a handful of
+    * driver-local stump parameters. */
   def fitGBT(df: DataFrame, features: Seq[String], label: Column,
-             rounds: Int, lr: Double): (Double, Seq[Stump]) = {
-    val key = s"${df.queryExecution.analyzed.semanticHash()}:" +
-      s"${features.mkString(",")}:$label:$rounds:$lr"
-    gbtFits.computeIfAbsent(key, _ => fitGBTUncached(df, features, label, rounds, lr))
-  }
+             rounds: Int, lr: Double): (Double, Seq[Stump]) =
+    graft.core.FitCache.getOrFit(graft.core.FitCache.key(df, "gbt",
+      features.mkString(","), label, rounds, lr)) {
+      fitGBTUncached(df, features, label, rounds, lr)
+    }
 
   private def fitGBTUncached(df: DataFrame, features: Seq[String], label: Column,
                              rounds: Int, lr: Double): (Double, Seq[Stump]) = {

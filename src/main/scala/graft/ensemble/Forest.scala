@@ -35,26 +35,22 @@ object Forest {
     * [[classifierImportances]] — the two queries are different VIEWS of the
     * same fitted estimator (exactly the reference's fit-once object with
     * `predict` and `feature_importances_` accessors), so the fit is
-    * memoized on (canonicalized input plan, hyperparameters). The fit is
-    * deterministic given the seed, the model holds only driver-local
-    * trees, and both queries stay independently callable. */
-  private val classifierFits =
-    new java.util.concurrent.ConcurrentHashMap[String, RandomForestClassificationModel]()
-
+    * memoized in FitCache. The fit is deterministic given the seed, the
+    * model holds only driver-local trees, and both queries stay
+    * independently callable. */
   private def fitClassifier(df: DataFrame, features: Seq[String], labelCol: String,
                             numTrees: Int, maxDepth: Int,
                             seed: Long): (DataFrame, RandomForestClassificationModel) = {
     val input = indexedInput(df, features, labelCol)
-    // key on the RAW caller plan (pure column ops over the scan — stable
-    // semanticHash), not the assembled/indexed one: VectorAssembler and
-    // StringIndexerModel wrap per-instance UDF closures whose canonical
-    // form differs on every call, which would defeat the memoization
-    val key = s"${df.queryExecution.analyzed.semanticHash()}:" +
-      s"${features.mkString(",")}:$labelCol:$numTrees:$maxDepth:$seed:$MaxBins"
-    (input, classifierFits.computeIfAbsent(key, _ =>
+    // key on the RAW caller plan, not the assembled/indexed one:
+    // VectorAssembler and StringIndexerModel wrap per-instance UDF closures
+    // whose canonical form differs on every call
+    (input, graft.core.FitCache.getOrFit(graft.core.FitCache.key(df, "rf_cls",
+        features.mkString(","), labelCol, numTrees, maxDepth, seed, MaxBins)) {
       new RandomForestClassifier().setFeaturesCol("_fv").setLabelCol("_lab")
         .setNumTrees(numTrees).setMaxDepth(maxDepth).setMaxBins(MaxBins).setSeed(seed)
-        .fit(input)))
+        .fit(input)
+    })
   }
 
   private def indexedInput(df: DataFrame, features: Seq[String], labelCol: String): DataFrame = {

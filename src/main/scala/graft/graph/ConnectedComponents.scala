@@ -52,14 +52,7 @@ object ConnectedComponents {
     * oracle can replay the identical computation as chained CTEs. A null
     * endpoint is not a node: an edge with one null end keeps only its
     * other end (as an isolated node unless other edges reach it). */
-  def propagate(edges: DataFrame, a: String, b: String, rounds: Int): DataFrame =
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(edges,
-      "cc_propagate", a, b, rounds)) {
-      propagateUncached(edges, a, b, rounds)
-    }
-
-  private def propagateUncached(edges: DataFrame, a: String, b: String,
-                                rounds: Int): DataFrame = {
+  def propagate(edges: DataFrame, a: String, b: String, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     // (node, neighbor) in both directions, partitioned ONCE by node; a
@@ -106,16 +99,7 @@ object ConnectedComponents {
     * any real graph. One extra count() per round for the fixpoint test.
     * (The fixed-rounds `propagate` deliberately omits the jump: its SQL
     * oracle replays plain neighbor-min rounds.) */
-  def converge(edges: DataFrame, a: String, b: String, maxRounds: Int = 64): DataFrame =
-    // labeling is deterministic (min-label fixpoint) over eager
-    // checkpoints — memoized like PageRank/HITS
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(edges,
-      "cc_converge", a, b, maxRounds)) {
-      convergeUncached(edges, a, b, maxRounds)
-    }
-
-  private def convergeUncached(edges: DataFrame, a: String, b: String,
-                               maxRounds: Int): DataFrame = {
+  def converge(edges: DataFrame, a: String, b: String, maxRounds: Int = 64): DataFrame = {
     // UNBOUNDED loop ⇒ graft.core.Iterate.materialize, NOT localCheckpoint:
     // Spark 4 carries estimated stats through checkpoints, and with three
     // joins per round the estimated sizeInBytes grows 3^r in bit-width —

@@ -24,16 +24,7 @@ object HITS {
   /** Returns (kind ∈ {hub, authority}, node, score, rank) — top `topK`
     * per kind by (rounded score desc, node). */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-          rounds: Int, topK: Int): DataFrame =
-    // deterministic mutual-reinforcement fit over eager checkpoints —
-    // memoized like PageRank
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(edges,
-      "hits", srcCol, dstCol, rounds, topK)) {
-      runUncached(edges, srcCol, dstCol, rounds, topK)
-    }
-
-  private def runUncached(edges: DataFrame, srcCol: String, dstCol: String,
-                          rounds: Int, topK: Int): DataFrame = {
+          rounds: Int, topK: Int): DataFrame = {
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst")).distinct().localCheckpoint(true)
     var hub = e.select(col("src").as("node")).distinct()

@@ -21,16 +21,7 @@ object LabelPropagation {
 
   /** @param nodes (node: long, seed: nullable long)
     * @param edges (src, dst) one row per undirected edge */
-  def propagate(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame =
-    // deterministic fixed-round spread (sorted-tie argmax) — memoized;
-    // key covers BOTH input plans (nodes seeds + edge list)
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(nodes,
-      "label_prop", edges.queryExecution.analyzed.semanticHash(), rounds)) {
-      propagateUncached(nodes, edges, rounds)
-    }
-
-  private def propagateUncached(nodes: DataFrame, edges: DataFrame,
-                                rounds: Int): DataFrame = {
+  def propagate(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val dir = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)

@@ -22,17 +22,7 @@ object PageRank {
   /** `edges`: (srcCol, dstCol) string node ids, already deduplicated.
     * Returns (node, rank) with Σ rank = 1. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-          rounds: Int, damping: Double = 0.85): DataFrame =
-    // the converged rank vector is a deterministic fit of the graph
-    // (fixed rounds, fixed damping) and every round is already an eager
-    // localCheckpoint — memoize the materialized result (FitCache)
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(edges,
-      "pagerank", srcCol, dstCol, rounds, damping)) {
-      runUncached(edges, srcCol, dstCol, rounds, damping)
-    }
-
-  private def runUncached(edges: DataFrame, srcCol: String, dstCol: String,
-                          rounds: Int, damping: Double): DataFrame = {
+          rounds: Int, damping: Double = 0.85): DataFrame = {
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst")).localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))

@@ -16,18 +16,21 @@ object Softmax {
     * coefRows: one row per (class, term) — pivoted coefficient matrix
     * plus per-class intercepts, deterministically ordered. */
   def fit(df: DataFrame, features: Seq[String], labelCol: String,
-          maxIter: Int = 50): (DataFrame, Double) =
-    // deterministic L-BFGS (fixed start/tol, alphabet-sorted labels) →
-    // fit-once; the memoized frame is a tiny driver-local coef table
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(df, "softmax_fit",
-      features.mkString(","), labelCol, maxIter)) {
-      fitUncached(df, features, labelCol, maxIter)
-    }
-
-  private def fitUncached(df: DataFrame, features: Seq[String], labelCol: String,
-                          maxIter: Int): (DataFrame, Double) = {
+          maxIter: Int = 50): (DataFrame, Double) = {
     val spark = df.sparkSession
     import spark.implicits._
+    // deterministic L-BFGS (fixed start/tol, alphabet-sorted labels) →
+    // fit-once
+    val (rows, acc) = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
+      "softmax_fit", features.mkString(","), labelCol, maxIter)) {
+      fitRows(df, features, labelCol, maxIter)
+    }
+    (rows.toDF("class", "term", "coef").orderBy("class", "term"), acc)
+  }
+
+  /** The fitted coefficient rows (class, term, coef) and train accuracy. */
+  private def fitRows(df: DataFrame, features: Seq[String], labelCol: String,
+                      maxIter: Int): (Seq[(String, String, Double)], Double) = {
     val labels = df.select(col(labelCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
     val idx = labels.zipWithIndex.toMap
@@ -49,7 +52,7 @@ object Softmax {
     val acc = m.transform(prepared)
       .select(avg(when(col("prediction") === col("_y"), 1.0).otherwise(0.0)))
       .head().getDouble(0)
-    (rows.toDF("class", "term", "coef").orderBy("class", "term"), acc)
+    (rows, acc)
   }
 
   /** Softmax predict with a LITERAL coefficient matrix — pure column

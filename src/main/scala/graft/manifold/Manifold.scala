@@ -66,15 +66,20 @@ object Manifold {
     * repulsion (t-SNE: exact KL gradient with global normalizer Z and
     * early exaggeration ×12 for the first half, as in t_sne.pyx). */
   def forceLayout(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-                  iters: Int, lr: Double, mode: LayoutMode): DataFrame =
+                  iters: Int, lr: Double, mode: LayoutMode): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     // md5-seeded init + deterministic force pass → fit-once
     graft.core.FitCache.getOrFit(graft.core.FitCache.key(emb,
       "force_layout", idCol, vecCol, k, iters, lr, mode)) {
-      forceLayoutUncached(emb, idCol, vecCol, k, iters, lr, mode)
-    }
+      layoutRows(emb, idCol, vecCol, k, iters, lr, mode)
+    }.toDF("id", "x", "y")
+  }
 
-  private def forceLayoutUncached(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-                                  iters: Int, lr: Double, mode: LayoutMode): DataFrame = {
+  /** The fitted layout as driver-local (id, x, y) rows. */
+  private def layoutRows(emb: DataFrame, idCol: String, vecCol: String, k: Int,
+                         iters: Int, lr: Double,
+                         mode: LayoutMode): Seq[(Long, Double, Double)] = {
     val knn = KNN.bruteForce(emb, emb, idCol, idCol, vecCol, vecCol, k,
       KNN.Euclidean, excludeSelf = true)
     val half = knn.select(col("qid").as("i"), col("id").as("j"),
@@ -211,9 +216,7 @@ object Manifold {
       }
       it += 1
     }
-    val spark = emb.sparkSession
-    import spark.implicits._
-    ids.indices.map(i => (ids(i), px(i), py(i))).toDF("id", "x", "y")
+    ids.indices.map(i => (ids(i), px(i), py(i)))
   }
 
   /** UMAP out-of-sample transform (reference manifold/umap.pyx:495 —

@@ -134,4 +134,33 @@ class DbscanNdSpec extends AnyFunSuite {
       assert(self(id) == labels(id), s"core $id: ${self(id)} vs ${labels(id)}")
     }
   }
+
+  /** The result owns its one checkpoint; every intermediate SQL cache entry
+    * is released. */
+  private def ownsItsStorage(name: String)(result: => org.apache.spark.sql.DataFrame): Unit = {
+    val sc = spark.sparkContext
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    assert(result.collect().nonEmpty, s"$name returned no rows")
+    assert(cacheManager.isEmpty, s"$name left a SQL cache entry")
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"$name left persisted RDDs ${added.mkString(", ")}")
+  }
+
+  private def blobs(seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    (0 until 80).map(i => (i.toLong, (i % 2) * 9 + rnd.nextGaussian() * 0.6,
+      rnd.nextGaussian() * 0.6)).toDF("id", "x", "y")
+  }
+
+  test("fitND leaves no SQL cache entry and at most its own checkpoint") {
+    ownsItsStorage("fitND")(DBSCANGrid.fitND(blobs(31), "id", Seq("x", "y"), 1.0, 4))
+  }
+
+  test("coreSummary leaves no SQL cache entry and at most its own checkpoint") {
+    ownsItsStorage("coreSummary")(DBSCANGrid.coreSummary(blobs(32), "id", Seq("x", "y"), 1.0, 4))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{FitCache, Tables}
+import graft.ensemble.{Boosting, Forest}
 import graft.linear.GradientSolver
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,5 +75,42 @@ class FitCacheSpec extends AnyFunSuite {
     assert(m1 - m0 >= 1, "first request must count as a miss")
     assert(h1 - h0 >= 1, "second request must count as a hit")
     assert(live <= FitCache.MaxEntries, s"live entries $live exceed the cap")
+  }
+
+  test("getOrFit refuses a Dataset and stores nothing") {
+    val k = s"frame_${System.nanoTime()}"
+    intercept[IllegalArgumentException](FitCache.getOrFit(k)(spark.range(3).toDF()))
+    val v = java.lang.Integer.valueOf(7)
+    assert(FitCache.getOrFit(k)(v) eq v, "the refused frame must not have been stored")
+  }
+
+  /** (hits, misses) since the last FitCache.clear(). */
+  private def hitsMisses: (Long, Long) = { val (h, m, _) = FitCache.stats; (h, m) }
+
+  test("the forest's two views share one FitCache fit, and clear() reaches it") {
+    val li = Tables.lineitem(spark, sf)
+    val feats = Seq("l_quantity", "l_discount", "l_tax")
+    FitCache.clear()
+    Forest.classifierSummary(li, feats, "l_returnflag", numTrees = 3, maxDepth = 3)
+    assert(hitsMisses == ((0L, 1L)), "summary")
+    Forest.classifierImportances(li, feats, "l_returnflag", numTrees = 3, maxDepth = 3)
+    assert(hitsMisses == ((1L, 1L)), "importances")
+    FitCache.clear()
+    Forest.classifierImportances(li, feats, "l_returnflag", numTrees = 3, maxDepth = 3)
+    assert(hitsMisses == ((0L, 1L)), "after clear")
+  }
+
+  test("repeated fitGBT calls share one FitCache fit, and clear() reaches it") {
+    val li = Tables.lineitem(spark, sf)
+    val feats = Seq("l_quantity", "l_discount")
+    val label = col("l_extendedprice") / 100000.0
+    FitCache.clear()
+    val a = Boosting.fitGBT(li, feats, label, rounds = 2, lr = 0.5)
+    assert(hitsMisses == ((0L, 1L)), "first")
+    assert(Boosting.fitGBT(li, feats, label, rounds = 2, lr = 0.5) eq a)
+    assert(hitsMisses == ((1L, 1L)), "second")
+    FitCache.clear()
+    assert(!(Boosting.fitGBT(li, feats, label, rounds = 2, lr = 0.5) eq a))
+    assert(hitsMisses == ((0L, 1L)), "after clear")
   }
 }

@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sf0.001 too, so a floor that only holds at one scale fails loudly in
   * `sbt test` before the driver ever sees it. */
 class GateSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("gate-spec").getOrCreate()
+  lazy val spark: SparkSession = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
   private val gated = Seq(
