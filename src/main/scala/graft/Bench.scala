@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 object Bench {
   def main(args: Array[String]): Unit = {
     // SPARK_GRAFT_SF_DIR may be a comma-separated list (r12 verdict #9 —
@@ -10,25 +10,8 @@ object Bench {
     // invocation).
     val sfDirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt, 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected L-BFGS line-search resets would otherwise spam the log
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "breeze.optimize", org.apache.logging.log4j.Level.ERROR)
-    // bounded ≤P-row summary windows (Ranks offsets, decile frames) are
-    // deliberately unpartitioned; see Verify for why lit(0) can't be used
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.local(Session.cpus)
     // noop sink: forces full materialization of every output column — a
     // bare count() lets Catalyst prune the actual operator work away.
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration).

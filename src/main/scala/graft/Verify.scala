@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +10,7 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // breeze's L-BFGS logs line-search resets at WARN on every
-    // hw_fit_opt/arima_fit_bfgs evaluation — expected optimizer
-    // behavior, so keep it out of the verify log where it buries real
-    // errors
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "breeze.optimize", org.apache.logging.log4j.Level.ERROR)
-    // every remaining "No Partition Defined for Window" warning comes from
-    // a DECLARED bounded summary frame (≤P-row Ranks partition offsets,
-    // decile/λ-grid frames) — a foldable partitionBy(lit(0)) would be
-    // optimized away by EliminateWindowPartitions, so the category is
-    // silenced instead; data-scale SinglePartition windows stay impossible
-    // via the PlanSpec gates, which is the stronger protection
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (driver always runs the full set)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

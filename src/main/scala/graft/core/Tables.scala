@@ -52,8 +52,8 @@ object Tables {
     * vectorized reader only accepts as Long (nanosAsLong=true) — restored
     * via floor division (matches DuckDB's native nanos read for all
     * date/second-level truncations). Newer data writes TIMESTAMP(MICROS)
-    * without timezone, which Spark loads as TIMESTAMP_NTZ; the session
-    * timezone is pinned UTC everywhere (Bench/Verify/RunQuery/specs), so
+    * without timezone, which Spark loads as TIMESTAMP_NTZ; every session
+    * is built by `graft.core.Session`, which pins the timezone UTC, so
     * casting to TimestampType is value-identical and keeps `unix_micros`
     * and friends analyzable. */
   def events(s: SparkSession, d: String): DataFrame = {

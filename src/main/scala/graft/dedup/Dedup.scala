@@ -253,21 +253,30 @@ object Dedup {
       array_distinct(TextOps.shingles(col("toks"), k)), "shs")
   }
 
-  /** [[shingleSets]] restricted to the docs that appear in some candidate
-    * pair — the r17 verify-stage shape shared by [[jaccardForCandidates]]
-    * and [[containmentForCandidates]]. The semi join ships each kept doc
-    * ONCE (AQE broadcasts the id set while it is small, and at corpus
-    * scale it degrades to one shuffle of compact array rows — never the
-    * exploded shingle table). Docs shorter than k tokens are dropped,
+  /** The MinHash-LSH candidate pairs with their exact shingle-set sizes
+    * (doc1, doc2, inter = |A∩B|, sz1 = |A|, sz2 = |B|) — the r17
+    * verify-stage shape shared by [[jaccardForCandidates]] and
+    * [[containmentForCandidates]]. [[shingleSets]] is restricted to the
+    * docs that appear in some candidate pair: the semi join ships each
+    * kept doc ONCE (AQE broadcasts the id set while it is small, and at
+    * corpus scale it degrades to one shuffle of compact array rows — never
+    * the exploded shingle table). Docs shorter than k tokens are dropped,
     * replaying the old inner-join-on-shingle-rows semantics exactly (such
     * docs have no signature, so they cannot be candidates anyway). */
-  private def candidateShingleSets(df: DataFrame, textCol: String,
-                                   idCol: String, k: Int,
-                                   cand: DataFrame): DataFrame = {
+  private def candidateOverlaps(df: DataFrame, textCol: String, idCol: String,
+                                p: MinHashParams): DataFrame = {
+    val cand = minhashCandidates(df, textCol, idCol, p).cache()
     val docsInPairs = cand
       .select(explode(array(col("doc1"), col("doc2"))).as("doc")).distinct()
-    shingleSets(df, textCol, idCol, k).filter(size(col("shs")) > 0)
-      .join(docsInPairs, Seq("doc"), "left_semi")
+    val sub = shingleSets(df, textCol, idCol, p.shingleK).filter(size(col("shs")) > 0)
+      .join(docsInPairs, Seq("doc"), "left_semi").cache()
+    cand
+      .join(sub.select(col("doc").as("doc1"), col("shs").as("shs1")), Seq("doc1"))
+      .join(sub.select(col("doc").as("doc2"), col("shs").as("shs2")), Seq("doc2"))
+      .select(col("doc1"), col("doc2"),
+        size(array_intersect(col("shs1"), col("shs2"))).cast("double").as("inter"),
+        size(col("shs1")).cast("double").as("sz1"),
+        size(col("shs2")).cast("double").as("sz2"))
   }
 
   /** Exact n-gram Jaccard for the MinHash-LSH candidate pairs — the scale
@@ -286,20 +295,11 @@ object Dedup {
     * distinct '_'-joined k-gram strings. */
   def jaccardForCandidates(df: DataFrame, textCol: String, idCol: String,
                            p: MinHashParams = MinHashParams(),
-                           minJaccard: Double = 0.0): DataFrame = {
-    val cand = minhashCandidates(df, textCol, idCol, p).cache()
-    val sub = candidateShingleSets(df, textCol, idCol, p.shingleK, cand).cache()
-    cand
-      .join(sub.select(col("doc").as("doc1"), col("shs").as("shs1")), Seq("doc1"))
-      .join(sub.select(col("doc").as("doc2"), col("shs").as("shs2")), Seq("doc2"))
-      .select(col("doc1"), col("doc2"),
-        size(array_intersect(col("shs1"), col("shs2"))).cast("double").as("inter"),
-        size(col("shs1")).cast("double").as("sz1"),
-        size(col("shs2")).cast("double").as("sz2"))
+                           minJaccard: Double = 0.0): DataFrame =
+    candidateOverlaps(df, textCol, idCol, p)
       .select(col("doc1"), col("doc2"),
         (col("inter") / (col("sz1") + col("sz2") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-  }
 
   /** [[jaccardForCandidates]] / [[containmentForCandidates]] under the
     * n-scaled [[autoParams]] band depth — the scale path for both
@@ -320,20 +320,11 @@ object Dedup {
     * [[jaccardForCandidates]]; the exact set join only touches proposed
     * pairs. */
   def containmentForCandidates(df: DataFrame, textCol: String, idCol: String,
-                               p: MinHashParams = MinHashParams()): DataFrame = {
-    val cand = minhashCandidates(df, textCol, idCol, p).cache()
-    val sub = candidateShingleSets(df, textCol, idCol, p.shingleK, cand).cache()
-    cand
-      .join(sub.select(col("doc").as("doc1"), col("shs").as("shs1")), Seq("doc1"))
-      .join(sub.select(col("doc").as("doc2"), col("shs").as("shs2")), Seq("doc2"))
-      .select(col("doc1"), col("doc2"),
-        size(array_intersect(col("shs1"), col("shs2"))).cast("double").as("inter"),
-        size(col("shs1")).cast("double").as("sz1"),
-        size(col("shs2")).cast("double").as("sz2"))
+                               p: MinHashParams = MinHashParams()): DataFrame =
+    candidateOverlaps(df, textCol, idCol, p)
       .select(col("doc1"), col("doc2"),
         (col("inter") / least(col("sz1"), col("sz2"))).as("containment"),
         (col("inter") / (col("sz1") + col("sz2") - col("inter"))).as("jaccard"))
-  }
 
   /** n-gram Jaccard similarity for candidate pairs (same `source`, nearby
     * ids). Pair scope: 0 < doc2 − doc1 ≤ maxIdGap within a source — so

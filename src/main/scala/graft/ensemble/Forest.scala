@@ -3,7 +3,7 @@ package graft.ensemble
 import graft.core.Num.r4
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
-import org.apache.spark.ml.regression.RandomForestRegressor
+import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -60,6 +60,38 @@ object Forest {
     si.fit(input0).transform(input0)
   }
 
+  /** The seeded regressor fit shared by [[regressorSummary]] and
+    * [[regressorGate]], memoized like [[fitClassifier]] (keyed on the raw
+    * caller frame). Returns the assembled input with the model. */
+  private def fitRegressor(df: DataFrame, features: Seq[String], labelCol: String,
+                           numTrees: Int, maxDepth: Int,
+                           seed: Long): (DataFrame, RandomForestRegressionModel) = {
+    val input = withFeatures(df, features, Seq("_y" -> col(labelCol).cast("double")))
+    (input, graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
+        "rf_reg", features.mkString(","), labelCol, numTrees, maxDepth, seed, MaxBins)) {
+      new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
+        .setNumTrees(numTrees).setMaxDepth(maxDepth).setMaxBins(MaxBins).setSeed(seed)
+        .fit(input)
+    })
+  }
+
+  /** The depth-5 train-split fit shared by [[inferenceSummary]] and
+    * [[inferenceGate]], memoized on the raw train frame. */
+  private def fitInference(train: DataFrame, features: Seq[String], labelCol: String,
+                           numTrees: Int, seed: Long): RandomForestRegressionModel =
+    graft.core.FitCache.getOrFit(graft.core.FitCache.key(train,
+      "rf_infer", features.mkString(","), labelCol, numTrees, seed, MaxBins)) {
+      // cache the assembled train split: MLlib's tree growth iterates over it,
+      // and the upstream split filter (md5 per row) must not re-run per pass
+      val input = withFeatures(train, features, Seq("_y" -> col(labelCol).cast("double")))
+        .select(col("_fv"), col("_y")).cache()
+      input.count() // materialize before the iterative fit
+      try {
+        new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
+          .setNumTrees(numTrees).setMaxDepth(5).setMaxBins(MaxBins).setSeed(seed).fit(input)
+      } finally input.unpersist(blocking = false)
+    }
+
   /** Train a seeded RF classifier; return per-class prediction counts and
     * per-class precision (deterministic given the seed). */
   def classifierSummary(df: DataFrame, features: Seq[String], labelCol: String,
@@ -89,14 +121,7 @@ object Forest {
 
   def regressorSummary(df: DataFrame, features: Seq[String], labelCol: String,
                        numTrees: Int = 20, maxDepth: Int = 5, seed: Long = 42L): DataFrame = {
-    val input = withFeatures(df, features, Seq("_y" -> col(labelCol).cast("double")))
-    // seeded → deterministic → fit-once (keyed on the raw caller frame)
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-      "rf_reg", features.mkString(","), labelCol, numTrees, maxDepth, seed, MaxBins)) {
-      new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-        .setNumTrees(numTrees).setMaxDepth(maxDepth).setMaxBins(MaxBins).setSeed(seed)
-        .fit(input)
-    }
+    val (input, model) = fitRegressor(df, features, labelCol, numTrees, maxDepth, seed)
     val scored = model.transform(input)
     scored.agg(
       r4(sqrt(avg((col("prediction") - col("_y")) * (col("prediction") - col("_y"))))).as("train_rmse"),
@@ -153,13 +178,7 @@ object Forest {
     * train RMSE does not exceed the constant-mean predictor's stddev. */
   def regressorGate(df: DataFrame, features: Seq[String], labelCol: String,
                     numTrees: Int = 20, maxDepth: Int = 5, seed: Long = 42L): DataFrame = {
-    val input = withFeatures(df, features, Seq("_y" -> col(labelCol).cast("double")))
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-      "rf_reg", features.mkString(","), labelCol, numTrees, maxDepth, seed, MaxBins)) {
-      new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-        .setNumTrees(numTrees).setMaxDepth(maxDepth).setMaxBins(MaxBins).setSeed(seed)
-        .fit(input)
-    }
+    val (input, model) = fitRegressor(df, features, labelCol, numTrees, maxDepth, seed)
     model.transform(input).agg(
         count(lit(1)).cast("long").as("_n"),
         min(col("prediction")).as("_plo"), max(col("prediction")).as("_phi"),
@@ -177,16 +196,7 @@ object Forest {
     * forest outputs are averages of train leaf means). */
   def inferenceGate(train: DataFrame, score: DataFrame, features: Seq[String],
                     labelCol: String, numTrees: Int = 20, seed: Long = 42L): DataFrame = {
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(train,
-      "rf_infer", features.mkString(","), labelCol, numTrees, seed, MaxBins)) {
-      val input = withFeatures(train, features, Seq("_y" -> col(labelCol).cast("double")))
-        .select(col("_fv"), col("_y")).cache()
-      input.count()
-      try {
-        new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-          .setNumTrees(numTrees).setMaxDepth(5).setMaxBins(MaxBins).setSeed(seed).fit(input)
-      } finally input.unpersist(blocking = false)
-    }
+    val model = fitInference(train, features, labelCol, numTrees, seed)
     val r = train.agg(min(col(labelCol).cast("double")), max(col(labelCol).cast("double"))).head()
     val (ylo, yhi) = (r.getDouble(0), r.getDouble(1))
     model.transform(withFeatures(score, features, Seq.empty)).agg(
@@ -233,19 +243,8 @@ object Forest {
     * distribution — the inference pass itself is shuffle-free. */
   def inferenceSummary(train: DataFrame, score: DataFrame, features: Seq[String],
                        labelCol: String, numTrees: Int = 20, seed: Long = 42L): DataFrame = {
-    // cache the assembled train split: MLlib's tree growth iterates over it,
-    // and the upstream split filter (md5 per row) must not re-run per pass
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(train,
-      "rf_infer", features.mkString(","), labelCol, numTrees, seed, MaxBins)) {
-      val input = withFeatures(train, features, Seq("_y" -> col(labelCol).cast("double")))
-        .select(col("_fv"), col("_y")).cache()
-      input.count() // materialize before the iterative fit
-      try {
-        new RandomForestRegressor().setFeaturesCol("_fv").setLabelCol("_y")
-          .setNumTrees(numTrees).setMaxDepth(5).setMaxBins(MaxBins).setSeed(seed).fit(input)
-      } finally input.unpersist(blocking = false)
-    }
-    val scored = model.transform(withFeatures(score, features, Seq.empty))
+    val scored = fitInference(train, features, labelCol, numTrees, seed)
+      .transform(withFeatures(score, features, Seq.empty))
     scored.agg(
       count(lit(1)).cast("long").as("n_scored"),
       r4(avg(col("prediction"))).as("mean_pred"),

@@ -53,24 +53,6 @@ object AnalyticsQueries {
       .select(explode(basketPairsUdf(col("ps"))).as("t"))
       .select(col("t._1").as("p1"), col("t._2").as("p2"))
 
-  /** The pre-r18 nested-HOF pair fan-out, kept for the CC-iterating
-    * consumers (modularity / louvain_move / louvain_rounds): with the
-    * compiled-UDF build those queries consistently ran ~2.5 s SLOWER at
-    * sf1 (52 → 65 scheduler stages; same checkpointed edge rows and
-    * partitions, so the effect is in how AQE stages the build job, not
-    * in the data) while the non-CC consumers (kcore, item_item_cf,
-    * triangle_count) ran 20-45% FASTER. Measured, not explained — each
-    * query keeps its measured-best form; the output rows are identical. */
-  private[queries] def basketPairsExpr(b: DataFrame): DataFrame = {
-    val n = size(col("ps"))
-    val pairsArr = flatten(transform(sequence(lit(0), n - 2),
-      i => transform(sequence(i + 1, n - 1),
-        j => struct(element_at(col("ps"), i + 1).as("p1"),
-          element_at(col("ps"), j + 1).as("p2")))))
-    b.filter(n >= 2).select(explode(pairsArr).as("t"))
-      .select(col("t.p1").as("p1"), col("t.p2").as("p2"))
-  }
-
   val queries: Map[String, Q] = Map(
     "permutation_test" -> { (s, d) =>
       // Fisher permutation test of the A/B conversion difference: 200
@@ -88,7 +70,7 @@ object AnalyticsQueries {
       // support-2 co-purchase graph: per-node best-positive-gain choice
       // (one degree join + a node-key window), choice-graph CC, scored by
       // the gated modularity frame. Full hash gate
-      val e = basketPairsExpr(baskets(Tables.lineitem(s, d)))
+      val e = basketPairs(baskets(Tables.lineitem(s, d)))
         .groupBy(col("p1"), col("p2"))
         .agg(count(lit(1)).as("_np"))
         .filter(col("_np") >= 2).select(col("p1"), col("p2"))
@@ -100,7 +82,7 @@ object AnalyticsQueries {
       // graph; the oracle replays every round as chained CTEs and
       // hash-gates the per-round modularity sequence AND an md5 checksum
       // of each round's full (node, label) partition. Full hash gate
-      val e = basketPairsExpr(baskets(Tables.lineitem(s, d)))
+      val e = basketPairs(baskets(Tables.lineitem(s, d)))
         .groupBy(col("p1"), col("p2"))
         .agg(count(lit(1)).as("_np"))
         .filter(col("_np") >= 2).select(col("p1"), col("p2"))
@@ -302,7 +284,7 @@ object AnalyticsQueries {
       // the way silhouette grades k-means. Labels, degrees, and internal
       // edges are all equi-joins/aggregates on node ids; full hash gate
       // (the CC rounds replay as chained CTEs, kcore-style)
-      val e = basketPairsExpr(baskets(Tables.lineitem(s, d)))
+      val e = basketPairs(baskets(Tables.lineitem(s, d)))
         .groupBy(col("p1"), col("p2"))
         .agg(count(lit(1)).as("_np"))
         .filter(col("_np") >= 2).select(col("p1"), col("p2"))

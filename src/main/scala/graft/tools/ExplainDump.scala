@@ -1,27 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files.
   * Usage: runMain graft.tools.ExplainDump <sfDir> <name1,name2,...> <outDir> [suffix]
   * Writes <outDir>/<name>_<suffix>.txt (suffix defaults to "before").
-  * Session config mirrors Bench so the captured plan is the benched plan. */
+  * The session is Bench's ([[Session.local]]), so the captured plan is the
+  * benched plan. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val outDir = args(2)
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,14 +35,7 @@ object MakeOrganicSF {
     require(args.length >= 3, "usage: MakeOrganicSF <outDir> <nDocs> <nVecs> [seed]")
     val out = args(0); val nDocs = args(1).toLong; val nVecs = args(2).toLong
     val seed = if (args.length > 3) args(3).toLong else 42L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     documents(spark, nDocs, seed).write.mode("overwrite")
       .parquet(s"$out/documents.parquet")
     embeddings(spark, nVecs, seed).write.mode("overwrite")

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,15 +18,7 @@ object MakeSF {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: MakeSF <srcSfDir> <outDir> <factor>")
     val Array(src, out, factorS) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     make(spark, src, out, factorS.toInt)
     println(s"""{"made":"$out","factor":${factorS.toInt}}""")
     spark.stop()

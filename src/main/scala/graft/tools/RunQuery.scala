@@ -1,29 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
-/** Dev tool: run named queries once and print timing + row count.
+/** Dev tool: run named queries once and print timing + row count. The
+  * timed action is Bench's noop sink (a timed count() would let Catalyst
+  * prune the projected work); rows are counted afterwards, untimed.
   * Usage: runMain graft.tools.RunQuery <sfDir> <name1,name2,...> [show] */
 object RunQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val show = args.length > 2 && args(2) == "show"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     names.foreach { n =>
       val t0 = System.nanoTime()
       try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
-        val cnt = df.count()
-        println(f"[runquery] $n%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s  $cnt rows")
+        df.write.format("noop").mode("overwrite").save()
+        val el = (System.nanoTime() - t0) / 1e9
+        println(f"[runquery] $n%-22s $el%7.2f s  ${df.count()} rows")
         if (show) df.show(30, truncate = false)
       } catch {
         case e: Throwable =>

@@ -100,6 +100,27 @@ class FitCacheSpec extends AnyFunSuite {
     assert(hitsMisses == ((0L, 1L)), "after clear")
   }
 
+  test("the forest regressor's gate and summary share one FitCache fit") {
+    val li = Tables.lineitem(spark, sf)
+    val feats = Seq("l_quantity", "l_discount", "l_tax")
+    FitCache.clear()
+    Forest.regressorGate(li, feats, "l_extendedprice", numTrees = 3, maxDepth = 3)
+    assert(hitsMisses == ((0L, 1L)), "gate")
+    Forest.regressorSummary(li, feats, "l_extendedprice", numTrees = 3, maxDepth = 3)
+    assert(hitsMisses == ((1L, 1L)), "summary")
+  }
+
+  test("forest inference's gate and summary share one FitCache fit") {
+    val li = Tables.lineitem(spark, sf)
+    val feats = Seq("l_quantity", "l_discount", "l_tax")
+    val (train, score) = (li.filter(col("l_orderkey") % 4 =!= 0), li.filter(col("l_orderkey") % 4 === 0))
+    FitCache.clear()
+    Forest.inferenceGate(train, score, feats, "l_extendedprice", numTrees = 3)
+    assert(hitsMisses == ((0L, 1L)), "gate")
+    Forest.inferenceSummary(train, score, feats, "l_extendedprice", numTrees = 3)
+    assert(hitsMisses == ((1L, 1L)), "summary")
+  }
+
   test("repeated fitGBT calls share one FitCache fit, and clear() reaches it") {
     val li = Tables.lineitem(spark, sf)
     val feats = Seq("l_quantity", "l_discount")
