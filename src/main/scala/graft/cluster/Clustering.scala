@@ -1,40 +1,54 @@
 package graft.cluster
 
+import graft.core.{FitCache, Rows}
 import graft.core.Num.r4
-import org.apache.spark.ml.clustering.{KMeans => MLKMeans}
-import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Clustering surface (reference python/cuml/cluster/kmeans.pyx,
-  * dbscan.pyx).
+  * dbscan.pyx). KMeansGraft fits with [[Lloyd]], the library's one
+  * k-means (best-of-8 k-means++ seeding of a bounded sample, then Lloyd
+  * rounds over cached primitive rows), which also trains the IVF coarse
+  * quantizer and seeds the PQ codebooks.
   */
 object KMeansGraft {
-  /** Fit with MLlib's distributed Lloyd + k-means|| init (the Spark-native
-    * counterpart of cuML's GPU Lloyd; same objective, seeded). Returns
-    * per-cluster size and centroid, ordered by size desc for a
-    * deterministic presentation. */
-  def fitSummary(df: DataFrame, features: Seq[String], k: Int, seed: Long = 42L,
-                 maxIter: Int = 20): DataFrame = {
-    val va = new VectorAssembler().setInputCols(features.toArray).setOutputCol("_fv")
-    val input = va.transform(df.select(features.map(c => col(c).cast("double").as(c)): _*))
-    // seeded k-means|| + Lloyd → deterministic → fit-once (keyed on the
-    // RAW frame: the assembler wraps a per-instance UDF closure)
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-      "kmeans", features.mkString(","), k, seed, maxIter)) {
-      new MLKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .setFeaturesCol("_fv").setPredictionCol("_cl").setTol(1e-8)
-        .fit(input)
-    }
-    val pred = model.transform(input)
-    val aggCols = count(lit(1)).cast("long").as("size") +:
-      features.map(c => r4(avg(col(c))).as(s"mean_$c"))
-    val sizes = pred.groupBy(col("_cl")).agg(aggCols.head, aggCols.tail: _*)
-    sizes.orderBy(col("size").desc, col("_cl")).drop("_cl")
+  /** The seeded fit shared by [[fitSummary]] and [[fitGate]]: the features
+    * become cached primitive rows, [[Lloyd.fit]] finds the centers (the
+    * FitCache entry, under one "kmeans" key for both views), and one more
+    * pass over the same rows gives the per-cluster sizes and sums and the
+    * SSE, which `use` reads (with the rows, for a further pass). The rows are
+    * unpersisted before it returns. */
+  private def withFit[T](df: DataFrame, features: Seq[String], k: Int, seed: Long,
+                         maxIter: Int)(use: (RDD[Array[Double]], Lloyd.Pass) => T): T = {
+    val rows = Rows.cached(df, features.map(col))
+    try {
+      val centers = FitCache.getOrFit(FitCache.key(df, "kmeans", features.mkString(","),
+        k, seed, maxIter)) {
+        Lloyd.fit(rows, k, maxIter, tol = 1e-8, seed)
+      }
+      use(rows, Lloyd.pass(rows, centers))
+    } finally rows.unpersist(blocking = false)
   }
 
-  /** PARTIAL HASH GATE row for the seeded k-means|| fit: point count
+  /** Fit the graft k-means (the Spark-native counterpart of cuML's GPU
+    * Lloyd; same objective, seeded). Returns per-cluster size and centroid,
+    * ordered by size desc for a deterministic presentation. */
+  def fitSummary(df: DataFrame, features: Seq[String], k: Int, seed: Long = 42L,
+                 maxIter: Int = 20): DataFrame = {
+    val p = withFit(df, features, k, seed, maxIter)((_, p) => p)
+    val spark = df.sparkSession
+    import spark.implicits._
+    p.counts.indices.filter(p.counts(_) > 0).sortBy(j => (-p.counts(j), j))
+      .map(j => (p.counts(j), p.sums(j).map(_ / p.counts(j))))
+      .toDF("size", "_m")
+      .select(col("size") +: features.zipWithIndex.map { case (f, i) =>
+        r4(col("_m")(i)).as(s"mean_$f")
+      }: _*)
+  }
+
+  /** PARTIAL HASH GATE row for the seeded k-means fit: point count
     * (SQL-exact), the BOUNDED non-empty-cluster invariant 1 ≤ k' ≤ k
     * (an exact k' would fail spuriously if Lloyd ever left a cluster
     * empty on degenerate data — same discipline as DBSCAN's
@@ -43,30 +57,20 @@ object KMeansGraft {
     * Centroid coordinates stay spec-gated. */
   def fitGate(df: DataFrame, features: Seq[String], k: Int, seed: Long = 42L,
               maxIter: Int = 20): DataFrame = {
-    val va = new VectorAssembler().setInputCols(features.toArray).setOutputCol("_fv")
-    val input = va.transform(df.select(features.map(c => col(c).cast("double").as(c)): _*))
-    val model = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-      "kmeans", features.mkString(","), k, seed, maxIter)) {
-      new MLKMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .setFeaturesCol("_fv").setPredictionCol("_cl").setTol(1e-8)
-        .fit(input)
+    // the total sum of squares is the SSE of the one-center fit at the
+    // mean, summed term by term (no Σ‖x‖² − ‖Σx‖²/n cancellation: constant
+    // features give exactly the fit's own SSE)
+    val (p, tss) = withFit(df, features, k, seed, maxIter) { (rows, p) =>
+      val n = p.counts.sum
+      val mean = features.indices.map(x => p.sums.map(_(x)).sum / n).toArray
+      (p, Lloyd.pass(rows, Array(mean)).sse)
     }
-    // SSE against the model's own centers (summary.trainingCost is only
-    // carried by a fresh fit; recompute so the memoized path agrees)
-    val centers = model.clusterCenters.map(_.toArray)
-    val assigned = assign(features.map(col), centers.map(_.toSeq))
-    val dists = centers.map { c =>
-      features.zip(c).map { case (f, ci) => (col(f) - ci) * (col(f) - ci) }.reduce(_ + _)
-    }
-    val aggs = Seq(count(lit(1)).cast("long").as("_n"),
-      countDistinct(assigned).cast("long").as("_k"),
-      sum(least(dists: _*)).as("_sse")) ++
-      features.map(f => var_pop(col(f)).as(s"_v$f"))
-    input.agg(aggs.head, aggs.tail: _*)
-      .select(col("_n").as("n_points"),
-        (col("_k") >= 1 && col("_k") <= k).as("n_clusters_bounded"),
-        (col("_sse") < col("_n") * features.map(f => col(s"_v$f")).reduce(_ + _))
-          .as("sse_lt_totss"))
+    val n = p.counts.sum
+    val kk = p.counts.count(_ > 0)
+    val spark = df.sparkSession
+    import spark.implicits._
+    Seq((n, kk >= 1 && kk <= k, p.sse < tss))
+      .toDF("n_points", "n_clusters_bounded", "sse_lt_totss")
   }
 
   /** The assignment step (KMeans.predict) as a pure codegen'd expression:

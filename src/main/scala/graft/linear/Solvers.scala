@@ -2,10 +2,10 @@ package graft.linear
 
 import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
+import graft.core.Rows
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative solvers (cuML's SGD / MBSGD* / QN surface —
   * reference python/cuml/solvers/sgd.pyx, qn.pyx;
@@ -14,7 +14,8 @@ import org.apache.spark.storage.StorageLevel
   * Spark-first shape: standardization stats come from ONE codegen'd
   * Catalyst aggregate; the iterations then run `treeAggregate` (depth 2)
   * over a cached primitive `RDD[Array[Double]]` — MLlib's own
-  * GradientDescent/LBFGS dataflow. The inner loop deliberately does NOT
+  * GradientDescent/LBFGS dataflow ([[graft.core.Rows]], shared with the
+  * k-means Lloyd rounds). The inner loop deliberately does NOT
   * re-issue a Catalyst aggregate per iteration: the weight vector changes
   * every step, so each pass would re-analyze the plan and recompile its
   * whole-stage codegen (~100–200 ms of driver work per iteration that
@@ -46,21 +47,6 @@ object GradientSolver extends Serializable {
     (mu, sd)
   }
 
-  /** Materialize the (standardized) projection as a cached primitive RDD of
-    * [f0..fp-1, y] rows — the iteration substrate shared by fit/fitQN. */
-  private def cachedRows(df: DataFrame, fx: Seq[Column], y: Column): RDD[Array[Double]] = {
-    val p = fx.size
-    val proj = df.select((fx :+ y.as("_y")).zipWithIndex.map {
-      case (c, i) => if (i < p) c.as(s"_f$i") else c
-    }: _*)
-    proj.rdd.map { r =>
-      val a = new Array[Double](p + 1)
-      var i = 0
-      while (i <= p) { a(i) = r.getDouble(i); i += 1 }
-      a
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
   private def marginAt(w: Array[Double], row: Array[Double], p: Int): Double = {
     var m = w(0)
     var i = 0
@@ -81,11 +67,15 @@ object GradientSolver extends Serializable {
         val ypm = yv * 2.0 - 1.0
         val z = ypm * m
         val (lv, g) = lossB match {
+          case SquaredLoss =>
+            // cuML QN's 'normal' loss: ½(m−y)²; d/dm = m−y
+            val r = m - yv
+            (0.5 * r * r, r)
           case HingeLoss =>
             // squared hinge: max(0, 1−z)²; d/dm = −2·y±·max(0, 1−z)
             val hz = math.max(0.0, 1.0 - z)
             (hz * hz, -2.0 * ypm * hz)
-          case _ =>
+          case LogisticLoss =>
             // log(1+exp(-z)) computed stably: max(0,-z) + log1p(exp(-|z|))
             (math.max(0.0, -z) + math.log1p(math.exp(-math.abs(z))),
               1.0 / (1.0 + math.exp(-m)) - yv)
@@ -121,7 +111,7 @@ object GradientSolver extends Serializable {
         (fx0.zipWithIndex.map { case (c, i) => (c - mu(i)) / sd(i) }, mu, sd)
       }
     val p = features.size
-    val data = cachedRows(df, fx, y)
+    val data = Rows.cached(df, fx :+ y)
     try {
       val w = Array.fill(p + 1)(0.0)
       var it = 0
@@ -170,7 +160,8 @@ object GradientSolver extends Serializable {
     * dispatch (solvers/qn.pyx:179: "if non-zero l1, will run OWL-QN, else
     * L-BFGS"; Andrew & Gao ICML'07). One aggregate pass per objective
     * evaluation; breeze drives the search. LogisticLoss gives cuML's QN
-    * logistic regression; HingeLoss gives the squared-hinge linear SVC
+    * logistic regression; SquaredLoss its 'normal' loss ½(m−y)² (least
+    * squares); HingeLoss gives the squared-hinge linear SVC
     * (smooth, so L-BFGS converges — the same loss cuML's LinearSVC/QN
     * path optimizes). `l1 > 0` switches to OWL-QN with the intercept
     * unpenalized; the L1 prox runs on the STANDARDIZED coefficients (the
@@ -193,7 +184,7 @@ object GradientSolver extends Serializable {
     // standardize: mixed feature scales stall the line search otherwise
     val (mu, sd) = featureStats(df, fx0)
     val fx = fx0.zipWithIndex.map { case (c, i) => (c - mu(i)) / sd(i) }
-    val data = cachedRows(df, fx, col(label).cast("double"))
+    val data = Rows.cached(df, fx :+ col(label).cast("double"))
     try {
       val n = data.count().toDouble
       val f = new DiffFunction[DenseVector[Double]] {

@@ -1,9 +1,7 @@
 package graft.neighbors
 
-import graft.core.VectorOps
-import org.apache.spark.ml.clustering.{KMeans => MLKMeans}
-import org.apache.spark.ml.linalg.{Vectors => MLVectors}
-import org.apache.spark.ml.functions.array_to_vector
+import graft.cluster.Lloyd
+import graft.core.{FitCache, Rows, VectorOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,20 +11,21 @@ import org.apache.spark.sql.functions._
   *
   * The 100 TB path: cells are the shuffle/partition key (corpus is written
   * bucketed by cell), probing touches nprobe/ncells of the data, and the
-  * rerank is a codegen'd scan of those partitions. The quantizer trains on
-  * a sample — standard IVF practice.
+  * rerank is a codegen'd scan of those partitions. The quantizer is the
+  * library's one k-means, [[graft.cluster.Lloyd]]: a bounded, seeded sample
+  * is seeded by the local k-means++/Lloyd that also trains the PQ codebooks
+  * (best of 8 restarts by SSE), then Lloyd rounds over the cached corpus
+  * vectors refine it.
   */
 object IVF {
   final case class Index(centers: Array[Array[Double]])
 
   def train(corpus: DataFrame, vecCol: String, nCells: Int, seed: Long = 42L): Index =
     // seeded k-means quantizer → deterministic → fit-once
-    graft.core.FitCache.getOrFit(graft.core.FitCache.key(corpus,
-      "ivf", vecCol, nCells, seed)) {
-      val input = corpus.select(array_to_vector(col(vecCol).cast("array<double>")).as("_fv"))
-      val km = new MLKMeans().setK(nCells).setSeed(seed).setMaxIter(15)
-        .setFeaturesCol("_fv").fit(input)
-      Index(km.clusterCenters.map(_.toArray))
+    FitCache.getOrFit(FitCache.key(corpus, "ivf", vecCol, nCells, seed)) {
+      val rows = Rows.cachedVectors(corpus, col(vecCol))
+      try Index(Lloyd.fit(rows, nCells, maxIter = 15, tol = 1e-4, seed))
+      finally rows.unpersist(blocking = false)
     }
 
   /** Nearest-cell id. A fully-unrolled expression tree over k·dim literals
@@ -107,20 +106,33 @@ object IVF {
   }
 
   /** Recall@k of the IVF result against brute force — the query-surface
-    * summary (avg recall over the query set). */
+    * summary (avg recall over the query set) — and the cost it was bought
+    * with: `scanned_frac`, the mean over queries of the share of the corpus
+    * in the nprobe probed cells (nprobe/nCells only when the cells are
+    * equal in size). */
   def recallSummary(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nCells: Int, k: Int, nprobe: Int): DataFrame = {
     val idx = train(corpus, vecCol, nCells)
+    val v = col(vecCol).cast("array<double>")
     val approx = topK(corpus, queries, idCol, vecCol, idx, k, nprobe)
       .select(col("qid"), col("id"))
     val exact = KNN.bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol,
       k, KNN.Cosine).select(col("qid"), col("id"))
     val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
       .agg(count(lit(1)).cast("double").as("hits"))
+    val share = corpus.select(cellUdf(idx)(v).as("cell")).groupBy("cell").count()
+      .select(col("cell"), (col("count") / sum(col("count")).over()).as("share"))
+    val scanned = queries.select(col(idCol).cast("long").as("qid"),
+        explode(probeUdf(idx, nprobe)(v)).as("cell"))
+      .join(share, Seq("cell"), "left").groupBy("qid")
+      .agg(sum(coalesce(col("share"), lit(0.0))).as("scanned"))
     exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
       .join(hits, Seq("qid"), "left")
-      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"))
+      .join(scanned, Seq("qid"), "left")
+      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"),
+        col("scanned"))
       .agg(count(lit(1)).cast("long").as("n_queries"),
-        round(avg(col("recall")), 4).as("avg_recall"))
+        round(avg(col("recall")), 4).as("avg_recall"),
+        round(avg(col("scanned")), 4).as("scanned_frac"))
   }
 }

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * one at corpus scale. A query builds one M×K table of subspace distances
   * (asymmetric distance computation), so scoring a candidate is M array
   * lookups + adds: pure codegen over the code column, no per-pair
-  * multiplies. Codebooks train on a bounded driver-side sample with a
-  * deterministic local Lloyd (standard PQ practice — the sample, not the
-  * corpus, bounds training); encoding is a broadcast-codebook map,
-  * shuffle-free. */
+  * multiplies. Codebooks train on a bounded driver-side sample with the
+  * library's one k-means seeding, [[graft.cluster.Lloyd.bestOf]] (the same
+  * local k-means++/Lloyd that seeds the IVF quantizer and KMeansGraft;
+  * standard PQ practice — the sample, not the corpus, bounds training);
+  * encoding is a broadcast-codebook map, shuffle-free. */
 object PQ {
   /** centers(m)(j) = the j-th centroid of subspace m (length dim/m each). */
   final case class Codebook(m: Int, k: Int, centers: Array[Array[Array[Double]]]) {
@@ -28,8 +29,8 @@ object PQ {
   /** Per-subspace k-means codebooks, trained on a BOUNDED driver-side
     * sample (standard PQ practice — FAISS trains its codebooks on ~10⁴-10⁵
     * sampled vectors regardless of corpus size): one collect of sampleN
-    * rows, then M tiny local Lloyd runs (seeded k-means++ init, best-of-8
-    * by SSE). Replaces M sequential MLlib jobs whose per-job overhead
+    * rows, then M tiny local Lloyd runs ([[graft.cluster.Lloyd.bestOf]]:
+    * seeded k-means++ init, best-of-8 by SSE). Replaces M sequential MLlib jobs whose per-job overhead
     * dominated at small k·subdim — training cost is now independent of
     * the corpus SIZE up to the one full scan the md5-order sample
     * requires (a TakeOrdered pass; the Lloyd work itself is bounded);
@@ -54,120 +55,11 @@ object PQ {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    // the M×8 Lloyd runs are independent and fully seeded, so they fan out
-    // across driver cores as one flat task list (the driver is otherwise
-    // idle here — no Spark job in flight); per-(s,r) seeds make results
-    // ordering-independent and bit-identical to the sequential loop.
-    // A DEDICATED pool (not ExecutionContext.global: blocking the caller
-    // on the shared global pool risks starvation if train is ever invoked
-    // from code already running on it) and a generous FINITE timeout, so
-    // a wedged run fails loudly instead of hanging the driver forever.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
     val subPts = (0 until m).map { s =>
       sample.map(row => java.util.Arrays.copyOfRange(row, s * sub, (s + 1) * sub))
     }
-    // best-of-8 restarts by SSE — recovers the quality of a k-means||
-    // style init on the bounded sample
-    val runs = for (s <- 0 until m; r <- 0 until 8) yield (s, r)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(runs.size, Runtime.getRuntime.availableProcessors())))
-    val fitted =
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.traverse(runs.toList) { case (s, r) =>
-          Future((s, lloyd(subPts(s), k, iters = 40, seed = seed + s + r * 1000L)))
-        }, 10.minutes)
-      } finally pool.shutdown()
-    def sse(pts: Array[Array[Double]], cs: Array[Array[Double]]): Double =
-      pts.map { p =>
-        cs.map { c =>
-          var d = 0.0; var i = 0
-          while (i < p.length) { val t = p(i) - c(i); d += t * t; i += 1 }
-          d
-        }.min
-      }.sum
-    val centers = (0 until m).map { s =>
-      fitted.collect { case (`s`, cs) => cs }.minBy(sse(subPts(s), _))
-    }.toArray
-    Codebook(m, k, centers)
-  }
-
-  /** Deterministic local Lloyd: k-means++ init with a fixed-seed RNG
-    * (D²-weighted sampling — farthest-first chases outliers and costs
-    * recall), then `iters` assignment/mean rounds; an emptied cluster
-    * keeps its previous center. O(n·k·d·iters) on the bounded training
-    * sample. */
-  private def lloyd(points: Array[Array[Double]], k: Int, iters: Int,
-                    seed: Long): Array[Array[Double]] = {
-    val n = points.length
-    val d = points.head.length
-    def sq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
-    val rng = new scala.util.Random(seed)
-    val kk = math.min(k, n)
-    val centers = Array.ofDim[Array[Double]](kk)
-    centers(0) = points(rng.nextInt(n)).clone()
-    val minD = Array.fill(n)(Double.MaxValue)
-    var c = 1
-    while (c < kk) {
-      var total = 0.0
-      var i = 0
-      while (i < n) {
-        val dd = sq(points(i), centers(c - 1))
-        if (dd < minD(i)) minD(i) = dd
-        total += minD(i)
-        i += 1
-      }
-      // D²-weighted draw; total = 0 (all-duplicate sample) falls back to
-      // an unweighted pick
-      var pick = if (total > 0) rng.nextDouble() * total else -1.0
-      var chosen = rng.nextInt(n)
-      if (pick >= 0) {
-        var j = 0
-        var acc = 0.0
-        while (j < n && pick >= 0) {
-          acc += minD(j)
-          if (acc >= pick) { chosen = j; pick = -1.0 }
-          j += 1
-        }
-      }
-      centers(c) = points(chosen).clone()
-      c += 1
-    }
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(kk)(new Array[Double](d))
-      val counts = new Array[Long](kk)
-      var i = 0
-      while (i < n) {
-        var bj = 0; var bd = Double.MaxValue
-        var j = 0
-        while (j < kk) {
-          val dd = sq(points(i), centers(j))
-          if (dd < bd) { bd = dd; bj = j }
-          j += 1
-        }
-        counts(bj) += 1
-        var x = 0
-        while (x < d) { sums(bj)(x) += points(i)(x); x += 1 }
-        i += 1
-      }
-      var j = 0
-      while (j < kk) {
-        if (counts(j) > 0) {
-          var x = 0
-          while (x < d) { centers(j)(x) = sums(j)(x) / counts(j); x += 1 }
-        }
-        j += 1
-      }
-      it += 1
-    }
-    // pad (k > n corner): repeat the last center so the codebook shape holds
-    if (kk < k) centers ++ Array.fill(k - kk)(centers(kk - 1).clone()) else centers
+    Codebook(m, k, graft.cluster.Lloyd.bestOf(subPts, k, iters = 40,
+      (s, r) => seed + s + r * 1000L).toArray)
   }
 
   /** Nearest-code vector for one input (shared with IVFPQ's residual

@@ -1,5 +1,6 @@
 package graft
 
+import graft.cluster.KMeansGraft
 import graft.core.{FitCache, Tables}
 import graft.ensemble.{Boosting, Forest}
 import graft.linear.GradientSolver
@@ -119,6 +120,16 @@ class FitCacheSpec extends AnyFunSuite {
     assert(hitsMisses == ((0L, 1L)), "gate")
     Forest.inferenceSummary(train, score, feats, "l_extendedprice", numTrees = 3)
     assert(hitsMisses == ((1L, 1L)), "summary")
+  }
+
+  test("KMeans' summary and gate share one FitCache fit") {
+    val li = Tables.lineitem(spark, sf)
+    val feats = Seq("l_quantity", "l_discount", "l_tax")
+    FitCache.clear()
+    KMeansGraft.fitSummary(li, feats, 4, maxIter = 5)
+    assert(hitsMisses == ((0L, 1L)), "summary")
+    KMeansGraft.fitGate(li, feats, 4, maxIter = 5)
+    assert(hitsMisses == ((1L, 1L)), "gate")
   }
 
   test("repeated fitGBT calls share one FitCache fit, and clear() reaches it") {

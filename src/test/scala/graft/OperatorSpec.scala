@@ -206,6 +206,26 @@ class OperatorSpec extends AnyFunSuite {
     assert(abs(r.getDouble(1) - 1.0) < 1e-9)
   }
 
+  test("IVF scanned_frac is the share of the corpus in the probed cells") {
+    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val q = e.filter(col("vec_id") < 20)
+    val idx = IVF.train(e, "embedding", 16)
+    def ranked(v: Seq[Double]) = idx.centers.indices.map { c =>
+      (v.indices.map(i => (v(i) - idx.centers(c)(i)) * (v(i) - idx.centers(c)(i))).sum, c)
+    }.sorted
+    def vecs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0))
+    val sizes = vecs(e).groupBy(ranked(_).head._2).map { case (c, vs) => c -> vs.length }
+    val n = sizes.values.sum.toDouble
+    val want = vecs(q).map(v => ranked(v).take(4).map(c => sizes.getOrElse(c._2, 0)).sum / n)
+      .sum / 20
+    val r = IVF.recallSummary(e, q, "vec_id", "embedding", nCells = 16, k = 5, nprobe = 4).head()
+    assert(math.abs(r.getAs[Double]("scanned_frac") - want) <= 5e-5,
+      s"scanned ${r.getAs[Double]("scanned_frac")} vs $want")
+    val all = IVF.recallSummary(e, q, "vec_id", "embedding", nCells = 16, k = 5, nprobe = 16).head()
+    assert(all.getAs[Double]("scanned_frac") == 1.0)
+  }
+
   test("real-embedding ANN recalls sit in (floor, 1] — the continuous gate behind the query invariants") {
     // the ann_* queries hash-gate deterministic columns + recall-floor
     // booleans; the CONTINUOUS recall stays gated here on real data
@@ -758,6 +778,17 @@ class OperatorSpec extends AnyFunSuite {
     assert(math.abs(l1("x0")) > 0.5, s"signal coef ${l1("x0")}")
     assert(l1("x1") == 0.0 && l1("x2") == 0.0, s"noise coefs ${l1("x1")}, ${l1("x2")}")
     assert(l2("x1") != 0.0 || l2("x2") != 0.0, "unregularized fit should keep noise coefs")
+  }
+
+  test("QN squared loss matches OLS on a planted y = Xw + b frame") {
+    val fs = Seq("x0", "x1", "x2")
+    val df = Datasets.makeRegression(spark, 2000, Seq(1.5, -2.0, 0.7), 0.3, 0.1)
+    val qn = graft.linear.GradientSolver.fitQN(df, fs, "y",
+      loss = graft.linear.GradientSolver.SquaredLoss)
+    val ols = graft.linear.OLS.fit(df, fs, "y")
+    assert(qn.terms == ols.terms)
+    for ((t, (a, b)) <- qn.terms.zip(qn.coefs.zip(ols.coefs)))
+      assert(abs(a - b) < 1e-4, s"$t: QN $a vs OLS $b")
   }
 
   test("MAD outliers: a planted spike is flagged, steady series stay clean") {
