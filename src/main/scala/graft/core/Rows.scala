@@ -16,7 +16,11 @@ import org.apache.spark.storage.StorageLevel
   * default; it is never read as 0.0. */
 object Rows {
   /** One row of the given scalar columns, each cast to double. */
-  def cached(df: DataFrame, cols: Seq[Column]): RDD[Array[Double]] = {
+  def cached(df: DataFrame, cols: Seq[Column]): RDD[Array[Double]] =
+    of(df, cols).persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** [[cached]] without the storage: for a single pass over the rows. */
+  def of(df: DataFrame, cols: Seq[Column]): RDD[Array[Double]] = {
     val p = cols.size
     val names = cols.map(_.toString)
     df.select(cols.zipWithIndex.map { case (c, i) => c.cast("double").as(s"_f$i") }: _*)
@@ -29,7 +33,7 @@ object Rows {
           i += 1
         }
         a
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      }
   }
 
   /** The elements of one array column (e.g. an `array<float>` embedding),

@@ -4,20 +4,25 @@ import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
 import graft.core.Rows
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative solvers (cuML's SGD / MBSGD* / QN surface —
   * reference python/cuml/solvers/sgd.pyx, qn.pyx;
   * reference cpp/src/solver/sgd.h, qn/qn.h).
   *
-  * Spark-first shape: standardization stats come from ONE codegen'd
-  * Catalyst aggregate; the iterations then run `treeAggregate` (depth 2)
-  * over a cached primitive `RDD[Array[Double]]` — MLlib's own
-  * GradientDescent/LBFGS dataflow ([[graft.core.Rows]], shared with the
-  * k-means Lloyd rounds). The inner loop deliberately does NOT
-  * re-issue a Catalyst aggregate per iteration: the weight vector changes
-  * every step, so each pass would re-analyze the plan and recompile its
+  * Spark-first shape: the raw features and label are cached once as a
+  * primitive `RDD[Array[Double]]` ([[graft.core.Rows]], shared with the
+  * k-means Lloyd rounds); the row count and the standardization stats come
+  * from ONE Welford `treeAggregate` over those rows ([[standardization]]),
+  * and the iterations then run `treeAggregate` (depth 2) over the same
+  * rows — MLlib's own GradientDescent/LBFGS dataflow — standardizing each
+  * feature inside the closure. No fitted value (mean, stddev, weight)
+  * enters a Catalyst plan, so no fit compiles a class of its own: the only
+  * generated code is the cast projection, identical for every fit over
+  * the same schema. The inner loop deliberately does NOT plan a fresh
+  * Catalyst aggregate per iteration: the weight vector changes every
+  * step, so each pass would re-analyze the plan and recompile its
   * whole-stage codegen (~100–200 ms of driver work per iteration that
   * dwarfs the scan at local scale and serializes the driver at cluster
   * scale). Per-pass cost is a cache scan + map-side partial aggregation —
@@ -29,28 +34,65 @@ object GradientSolver extends Serializable {
   case object LogisticLoss extends Loss   // y ∈ {0,1}
   case object HingeLoss extends Loss      // y ∈ {0,1} (mapped to ±1)
 
-  /** One-pass feature stats. Null stats (empty input) fall back to (0,1);
-    * NaN or ~0 stddev (single row / constant column) falls back to scale 1
-    * so a degenerate column can't poison every standardized feature. */
-  private def featureStats(df: DataFrame, fx0: Seq[Column]): (Array[Double], Array[Double]) = {
-    val p = fx0.size
-    val aggs = fx0.flatMap(c => Seq(avg(c), stddev_samp(c)))
-    val st = df.agg(aggs.head, aggs.tail: _*).head()
-    val mu = Array.tabulate(p)(i => if (st.isNullAt(2 * i)) 0.0 else st.getDouble(2 * i))
-    val sd = Array.tabulate(p) { i =>
-      if (st.isNullAt(2 * i + 1)) 1.0
-      else {
-        val s = st.getDouble(2 * i + 1)
-        if (s.isNaN || s < 1e-12) 1.0 else s
+  /** Welford running moments of the first `p` columns of a row (count,
+    * means, sums of squared deviations), merged as in Chan et al. */
+  private final class Moments(p: Int) extends Serializable {
+    var n = 0L
+    val mean = new Array[Double](p)
+    val m2 = new Array[Double](p)
+
+    def add(row: Array[Double]): Moments = {
+      n += 1
+      var i = 0
+      while (i < p) {
+        val d = row(i) - mean(i)
+        mean(i) += d / n
+        m2(i) += d * (row(i) - mean(i))
+        i += 1
       }
+      this
     }
-    (mu, sd)
+
+    def merge(o: Moments): Moments = {
+      if (n == 0) {
+        n = o.n
+        System.arraycopy(o.mean, 0, mean, 0, p)
+        System.arraycopy(o.m2, 0, m2, 0, p)
+      } else if (o.n > 0) {
+        val nt = n + o.n
+        var i = 0
+        while (i < p) {
+          val d = o.mean(i) - mean(i)
+          mean(i) += d * o.n / nt
+          m2(i) += o.m2(i) + d * d * n * o.n / nt
+          i += 1
+        }
+        n = nt
+      }
+      this
+    }
   }
 
-  private def marginAt(w: Array[Double], row: Array[Double], p: Int): Double = {
+  /** Row count, means and sample stddevs of the first `p` columns of the
+    * rows, in one pass. An empty input falls back to (0, 1); a single row
+    * or a (near-)constant column falls back to scale 1, so a degenerate
+    * column can't poison every standardized feature. */
+  private[graft] def standardization(rows: RDD[Array[Double]],
+                                     p: Int): (Long, Array[Double], Array[Double]) = {
+    val m = rows.treeAggregate(new Moments(p))((a, r) => a.add(r), (a, b) => a.merge(b), depth = 2)
+    val sd = m.m2.map { s =>
+      val v = math.sqrt(s / (m.n - 1))
+      if (m.n < 2 || v.isNaN || v < 1e-12) 1.0 else v
+    }
+    (m.n, m.mean, sd)
+  }
+
+  /** b + Σ w_i·(x_i − μ_i)/σ_i: the margin on the standardized features. */
+  private def marginAt(w: Array[Double], row: Array[Double], mu: Array[Double],
+                       sd: Array[Double], p: Int): Double = {
     var m = w(0)
     var i = 0
-    while (i < p) { m += row(i) * w(i + 1); i += 1 }
+    while (i < p) { m += (row(i) - mu(i)) / sd(i) * w(i + 1); i += 1 }
     m
   }
 
@@ -59,10 +101,10 @@ object GradientSolver extends Serializable {
     * lossB, p) — defined inside the breeze DiffFunction they would capture
     * the (non-serializable) anonymous class itself. */
   private def qnPass(data: RDD[Array[Double]], wB: Array[Double], lossB: Loss,
-                     p: Int): Array[Double] =
+                     mu: Array[Double], sd: Array[Double], p: Int): Array[Double] =
     data.treeAggregate(new Array[Double](p + 2))(
       seqOp = (a, row) => {
-        val m = marginAt(wB, row, p)
+        val m = marginAt(wB, row, mu, sd, p)
         val yv = row(p)
         val ypm = yv * 2.0 - 1.0
         val z = ypm * m
@@ -83,7 +125,7 @@ object GradientSolver extends Serializable {
         a(0) += lv
         a(1) += g
         var i = 0
-        while (i < p) { a(i + 2) += g * row(i); i += 1 }
+        while (i < p) { a(i + 2) += g * ((row(i) - mu(i)) / sd(i)); i += 1 }
         a
       },
       combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
@@ -101,18 +143,13 @@ object GradientSolver extends Serializable {
   private def fitUncached(df: DataFrame, features: Seq[String], label: String, loss: Loss,
                           lr: Double, iters: Int, batchFraction: Double,
                           l2: Double, seed: Long, standardize: Boolean): LinearModel = {
-    val fx0 = features.map(c => col(c).cast("double"))
-    val y = col(label).cast("double")
-    // standardize features once (stats from one pass) for a sane fixed lr
-    val (fx, shift, sc) =
-      if (!standardize) (fx0, Array.fill(features.size)(0.0), Array.fill(features.size)(1.0))
-      else {
-        val (mu, sd) = featureStats(df, fx0)
-        (fx0.zipWithIndex.map { case (c, i) => (c - mu(i)) / sd(i) }, mu, sd)
-      }
     val p = features.size
-    val data = Rows.cached(df, fx :+ y)
+    val data = Rows.cached(df, (features :+ label).map(col))
     try {
+      // standardize features (stats from one pass) for a sane fixed lr
+      val (shift, sc) =
+        if (standardize) { val (_, mu, sd) = standardization(data, p); (mu, sd) }
+        else (Array.fill(p)(0.0), Array.fill(p)(1.0))
       val w = Array.fill(p + 1)(0.0)
       var it = 0
       while (it < iters) {
@@ -123,7 +160,7 @@ object GradientSolver extends Serializable {
         // acc = [Σg, Σg·x0..Σg·xp-1, n]
         val acc = batch.treeAggregate(new Array[Double](p + 2))(
           seqOp = (a, row) => {
-            val m = marginAt(wB, row, p)
+            val m = marginAt(wB, row, shift, sc, p)
             val yv = row(p)
             val g = lossB match {
               case SquaredLoss  => m - yv
@@ -134,7 +171,7 @@ object GradientSolver extends Serializable {
             }
             a(0) += g
             var i = 0
-            while (i < p) { a(i + 1) += g * row(i); i += 1 }
+            while (i < p) { a(i + 1) += g * ((row(i) - shift(i)) / sc(i)); i += 1 }
             a(p + 1) += 1.0
             a
           },
@@ -180,16 +217,14 @@ object GradientSolver extends Serializable {
                             l2: Double, maxIter: Int, loss: Loss, tol: Double,
                             l1: Double): LinearModel = {
     val p = features.size
-    val fx0 = features.map(c => col(c).cast("double"))
-    // standardize: mixed feature scales stall the line search otherwise
-    val (mu, sd) = featureStats(df, fx0)
-    val fx = fx0.zipWithIndex.map { case (c, i) => (c - mu(i)) / sd(i) }
-    val data = Rows.cached(df, fx :+ col(label).cast("double"))
+    val data = Rows.cached(df, (features :+ label).map(col))
     try {
-      val n = data.count().toDouble
+      // standardize: mixed feature scales stall the line search otherwise
+      val (rowCount, mu, sd) = standardization(data, p)
+      val n = rowCount.toDouble
       val f = new DiffFunction[DenseVector[Double]] {
         def calculate(w: DenseVector[Double]): (Double, DenseVector[Double]) = {
-          val acc = qnPass(data, w.toArray, loss, p)
+          val acc = qnPass(data, w.toArray, loss, mu, sd, p)
           val lossV = acc(0) / n +
             0.5 * l2 * (1 until p + 1).map(i => w(i) * w(i)).sum
           val grad = DenseVector.tabulate(p + 1) { i =>

@@ -113,19 +113,13 @@ object IVF {
   def recallSummary(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nCells: Int, k: Int, nprobe: Int): DataFrame = {
     val idx = train(corpus, vecCol, nCells)
-    val v = col(vecCol).cast("array<double>")
     val approx = topK(corpus, queries, idCol, vecCol, idx, k, nprobe)
       .select(col("qid"), col("id"))
     val exact = KNN.bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol,
       k, KNN.Cosine).select(col("qid"), col("id"))
     val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
       .agg(count(lit(1)).cast("double").as("hits"))
-    val share = corpus.select(cellUdf(idx)(v).as("cell")).groupBy("cell").count()
-      .select(col("cell"), (col("count") / sum(col("count")).over()).as("share"))
-    val scanned = queries.select(col(idCol).cast("long").as("qid"),
-        explode(probeUdf(idx, nprobe)(v)).as("cell"))
-      .join(share, Seq("cell"), "left").groupBy("qid")
-      .agg(sum(coalesce(col("share"), lit(0.0))).as("scanned"))
+    val scanned = scannedShare(corpus, queries, idCol, vecCol, idx, nprobe)
     exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
       .join(hits, Seq("qid"), "left")
       .join(scanned, Seq("qid"), "left")
@@ -134,5 +128,20 @@ object IVF {
       .agg(count(lit(1)).cast("long").as("n_queries"),
         round(avg(col("recall")), 4).as("avg_recall"),
         round(avg(col("scanned")), 4).as("scanned_frac"))
+  }
+
+  /** (qid, scanned): per query, the share of the corpus in the nprobe
+    * cells it probes — measured from the cell sizes, the scan a recall
+    * figure was bought with (shared by [[recallSummary]] and
+    * [[IVFPQ.recallSummary]]). */
+  private[neighbors] def scannedShare(corpus: DataFrame, queries: DataFrame, idCol: String,
+                                      vecCol: String, idx: Index, nprobe: Int): DataFrame = {
+    val v = col(vecCol).cast("array<double>")
+    val share = corpus.select(cellUdf(idx)(v).as("cell")).groupBy("cell").count()
+      .select(col("cell"), (col("count") / sum(col("count")).over()).as("share"))
+    queries.select(col(idCol).cast("long").as("qid"),
+        explode(probeUdf(idx, nprobe)(v)).as("cell"))
+      .join(share, Seq("cell"), "left").groupBy("qid")
+      .agg(sum(coalesce(col("share"), lit(0.0))).as("scanned"))
   }
 }

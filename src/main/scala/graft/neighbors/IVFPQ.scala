@@ -130,6 +130,9 @@ object IVFPQ {
 
   /** Recall@k vs exact L2 brute force + compression + probed fraction —
     * the figure-of-merit surface, as for [[IVF]] and [[PQ]].
+    * `probed_frac` is the nominal nprobe/nCells; `scanned_frac` is the
+    * measured mean share of the corpus in the probed cells (as
+    * [[IVF.recallSummary]]'s), which follows the cell sizes.
     * `shortlist` > k enables the refine stage ([[topKRefined]]). */
   def recallSummary(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nCells: Int, m: Int, kCodes: Int,
@@ -145,12 +148,16 @@ object IVFPQ {
     val dim = idx.ivf.centers(0).length
     val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
       .agg(count(lit(1)).cast("double").as("hits"))
+    val scanned = IVF.scannedShare(corpus, queries, idCol, vecCol, idx.ivf, nprobe)
     exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
       .join(hits, Seq("qid"), "left")
-      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"))
+      .join(scanned, Seq("qid"), "left")
+      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"),
+        col("scanned"))
       .agg(count(lit(1)).cast("long").as("n_queries"),
         round(avg(col("recall")), 4).as("avg_recall"),
         lit(dim * 4L / m.toLong).cast("long").as("compression_x"),
-        round(lit(nprobe.toDouble / nCells), 4).as("probed_frac"))
+        round(lit(nprobe.toDouble / nCells), 4).as("probed_frac"),
+        round(avg(col("scanned")), 4).as("scanned_frac"))
   }
 }

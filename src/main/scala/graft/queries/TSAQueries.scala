@@ -495,9 +495,12 @@ object TSAQueries {
        |  (n*(s11*s2y-s1y*s12) - sx1*(sx1*s2y-s1y*sx2) + sy*(sx1*s12-s11*sx2)) / det END AS c2
        |  FROM dm$sfx)""".stripMargin
 
-  /** The full Hannan–Rissanen CTE chain mirrored from
-    * TimeSeries.arimaHRStage: s (indexed daily series), e1 (rows with dx,
-    * l1, prelim residual e and its lag e1) and dt2 (final c0/c1/c2). */
+  /** The full Hannan–Rissanen CTE chain: s (indexed daily series), e1
+    * (rows with dx, l1, prelim residual e and its lag e1) and dt2 (final
+    * c0/c1/c2). TimeSeries.arimaHRStage computes the same per series in
+    * one in-partition pass — positional lags over the defined differences,
+    * sums in t order, cramer3's operand order in every determinant — so
+    * its doubles equal this chain's. */
   private def hrSql: String =
     s"""s0 AS ($dailySql),
        |s AS (SELECT series, x, (row_number() OVER (PARTITION BY series ORDER BY day) - 1)::BIGINT AS t FROM s0),

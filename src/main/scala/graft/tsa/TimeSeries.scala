@@ -1,7 +1,7 @@
 package graft.tsa
 
 import graft.core.Num.{r4, r6}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,10 +10,15 @@ import org.apache.spark.sql.functions._
   *
   * Batched-series layout, like the reference: many independent series keyed
   * by a series column. Everything partitions by series key, so 10⁶ series ×
-  * long histories parallelize trivially; per-series state recursions run
-  * in-partition after the groupByKey shuffle, and per-series model fits are
-  * ONE grouped aggregate + a per-row closed-form solve — never a driver
-  * loop over series.
+  * long histories parallelize trivially, and no code loops over the
+  * series one at a time. Per-series recursions and fits run in-partition,
+  * one call per series. [[bySeries]] groups by the `series` column itself,
+  * so a frame already clustered by series (as [[dailySeries]] output is)
+  * is sorted within its partitions but not shuffled again; the seasonal
+  * Holt-Winters recursion and the ARIMA Hannan–Rissanen fit
+  * ([[arimaHRStage]]) run on it. The other recursions group by a key
+  * closure, which adds one exchange. The AR-only fits are ONE grouped
+  * aggregate + a per-row closed-form solve ([[cramer3]]).
   */
 object TimeSeries {
   /** Daily aggregation of the events table into (series, t, x) — t is a
@@ -23,6 +28,20 @@ object TimeSeries {
     events.groupBy(col(seriesCol).as("series"), to_date(col("ts")).as("day"))
       .agg(sum(col("value")).as("x"))
       .withColumn("t", row_number().over(w).cast("long") - 1)
+  }
+
+  /** One call of `f` per series, in-partition, on the series' (t, x)
+    * observations in t order (x None where the input is null). Groups by
+    * the `series` column itself rather than by a key closure, so a frame
+    * already clustered by series is sorted within its partitions but not
+    * shuffled again. */
+  private def bySeries[U: Encoder](series: DataFrame)(
+      f: (String, IndexedSeq[(Long, Option[Double])]) => Iterator[U]): Dataset[U] = {
+    import series.sparkSession.implicits._
+    series.select(col("series").cast("string").as("series"), col("t").cast("long").as("t"),
+        col("x").cast("double").as("x"))
+      .groupBy(col("series")).as[String, (String, Long, Option[Double])]
+      .flatMapGroups((key, it) => f(key, it.map(r => (r._2, r._3)).toIndexedSeq.sortBy(_._1)))
   }
 
   /** Simple exponential smoothing — the HoltWinters level channel
@@ -173,10 +192,8 @@ object TimeSeries {
                           multiplicative: Boolean = false): DataFrame = {
     import series.sparkSession.implicits._
     val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3)
+    bySeries(series) { (key, obs) =>
+      val xs = obs.map(_._2.getOrElse(throw new IllegalArgumentException(s"null x in series $key")))
       if (xs.length < 2 * m) Iterator.empty
       else {
         var l = xs.take(m).sum / m.toDouble
@@ -1020,13 +1037,13 @@ object TimeSeries {
   }
 
   /** ARIMA(1,1,1) by differencing + Hannan–Rissanen (reference
-    * tsa/arima.pyx fits batched (p,d,q); this is the distributed
-    * re-expression): d=1 via window difference, a preliminary AR(2) on the
-    * differenced series supplies residuals, then dx_t is regressed on
-    * (dx_{t−1}, e_{t−1}) — intercept + AR(1) + MA(1). Every stage is a
-    * window + grouped aggregate; the only join is coefficient-broadcast
-    * back onto the rows (shuffle key = series). Mirrors its SQL oracle
-    * expression-for-expression. */
+    * tsa/arima.pyx fits batched (p,d,q) per series in one kernel; this is
+    * the distributed re-expression): d=1 by differencing, a preliminary
+    * AR(2) on the differenced series supplies residuals, then dx_t is
+    * regressed on (dx_{t−1}, e_{t−1}) — intercept + AR(1) + MA(1). The
+    * whole fit is one per-series in-partition pass ([[arimaHRStage]]);
+    * its sums and solves match the SQL oracle's window/aggregate chain
+    * bit for bit. */
   def arimaHR(series: DataFrame): DataFrame = {
     val (_, cf) = arimaHRStage(series)
     unpivotCoefs(cf, Seq("intercept", "ar1", "ma1"))
@@ -1034,31 +1051,102 @@ object TimeSeries {
 
   /** The Hannan–Rissanen pipeline behind [[arimaHR]], staged: returns
     * (rows, coefs) where rows carries per-observation (series, t, dx, l1,
-    * e, e1) — differenced value, its lag, the preliminary-AR(2) residual
-    * and its lag — and coefs the wide (series, c0, c1, c2) fit of
-    * dx_t ~ intercept + dx_{t−1} + ê_{t−1}. The in-sample and forecast
-    * surfaces both consume these without re-fitting. */
+    * l2, e, e1) — differenced value, its two lags, the preliminary-AR(2)
+    * residual and its lag — and coefs the wide (series, c0, c1, c2) fit of
+    * dx_t ~ intercept + dx_{t−1} + ê_{t−1}. The per-row prediction and
+    * likelihood surfaces consume these without re-fitting; the in-sample
+    * SSE, the order grid and the forecast state are computed inside the
+    * same per-series pass instead, so they need no join back onto the rows.
+    *
+    * Each frame is ONE in-partition pass per series ([[bySeries]]: grouped
+    * by the series column in place, so a frame clustered by series, such
+    * as [[dailySeries]] output, is not shuffled again). The pass computes
+    * the differences, the lags, the AR(2) solve, the residuals and the
+    * second solve in Scala ([[hannanRissanen]]), with the sums taken in t
+    * order and every determinant in [[cramer3]]'s operand order, so the
+    * doubles equal those of the SQL oracle's window + grouped-aggregate
+    * chain exactly (ArimaStageSpec keeps that chain as the reference): the
+    * lags are positional over the defined differences, a series with fewer
+    * than 3 differences is dropped, and a singular AR(2) (det = 0, e.g. a
+    * constant series) leaves e null and no coefficient row. */
   private[tsa] def arimaHRStage(series: DataFrame): (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(col("series")).orderBy(col("t"))
-    // d = 1: difference away the trend (what `stationarity` recommends here)
-    val dx = series.withColumn("dx", col("x") - lag(col("x"), 1).over(w))
-      .filter(col("dx").isNotNull)
-      .select(col("series"), col("t"), col("dx"))
-    // step 1: preliminary AR(2) per series → residuals
-    val l = dx
-      .withColumn("l1", lag(col("dx"), 1).over(w))
-      .withColumn("l2", lag(col("dx"), 2).over(w))
-    val f1 = l.filter(col("l1").isNotNull && col("l2").isNotNull)
-    val ar = cramer3(f1, col("dx"), col("l1"), col("l2"))
-    val e = l.join(ar, Seq("series"))
-      .withColumn("e", when(col("l1").isNotNull && col("l2").isNotNull,
-        col("dx") - (col("c0") + col("c1") * col("l1") + col("c2") * col("l2"))))
-    // step 2: dx_t ~ intercept + dx_{t−1} + e_{t−1}
-    val e1 = e.withColumn("e1", lag(col("e"), 1).over(w))
-      .select(col("series"), col("t"), col("dx"), col("l1"), col("l2"),
-        col("e"), col("e1"))
-    val f2 = e1.filter(col("l1").isNotNull && col("e1").isNotNull)
-    (e1, cramer3(f2, col("dx"), col("l1"), col("e1")))
+    import series.sparkSession.implicits._
+    val rows = bySeries(series) { (key, obs) =>
+      hannanRissanen(obs).iterator.flatMap(_._1.iterator.map {
+        case (t, dx, l1, l2, e, e1) => (key, t, dx, l1, l2, e, e1)
+      })
+    }.toDF("series", "t", "dx", "l1", "l2", "e", "e1")
+    val cf = bySeries(series) { (key, obs) =>
+      hannanRissanen(obs).flatMap(_._2).iterator.map { case (c0, c1, c2) => (key, c0, c1, c2) }
+    }.toDF("series", "c0", "c1", "c2")
+    (rows, cf)
+  }
+
+  /** One series' Hannan–Rissanen fit from its (t, x) observations in t
+    * order: the rows (t, dx, l1, l2, e, e1) and, when the second
+    * regression has rows, its (c0, c1, c2) — all None where its Gram
+    * matrix is singular. None when there are fewer than 3 differences. */
+  private def hannanRissanen(obs: IndexedSeq[(Long, Option[Double])]): Option[(
+      IndexedSeq[(Long, Double, Option[Double], Option[Double], Option[Double], Option[Double])],
+      Option[(Option[Double], Option[Double], Option[Double])])] = {
+    // d = 1: difference each observation from the one before it, then drop
+    // the undefined differences; the lags below count defined differences
+    val d = (1 until obs.length).flatMap { i =>
+      for (a <- obs(i)._2; b <- obs(i - 1)._2) yield (obs(i)._1, a - b)
+    }
+    val dx = d.map(_._2)
+    val n = dx.length
+    if (n < 3) None
+    else {
+      def lag(i: Int, k: Int): Option[Double] = if (i >= k) Some(dx(i - k)) else None
+      // step 1: preliminary AR(2) → residuals
+      val ar = new Gram3
+      for (i <- 2 until n) ar.add(dx(i), dx(i - 1), dx(i - 2))
+      val c = ar.solve
+      val e = IndexedSeq.tabulate(n) { i =>
+        if (i < 2) None else c.map(c => dx(i) - (c(0) + c(1) * dx(i - 1) + c(2) * dx(i - 2)))
+      }
+      // step 2: dx_t ~ intercept + dx_{t−1} + e_{t−1}
+      val ma = new Gram3
+      for (i <- 3 until n; e1 <- e(i - 1)) ma.add(dx(i), dx(i - 1), e1)
+      val rows = IndexedSeq.tabulate(n) { i =>
+        (d(i)._1, dx(i), lag(i, 1), lag(i, 2), e(i), if (i >= 1) e(i - 1) else None)
+      }
+      val coefs = if (ma.n == 0) None else Some(ma.solve match {
+        case Some(c) => (Some(c(0)), Some(c(1)), Some(c(2)))
+        case None => (None, None, None)
+      })
+      Some((rows, coefs))
+    }
+  }
+
+  /** The moment sums of one series' y ~ 1 + x1 + x2, added in row order,
+    * and their Cramer solve: the scalar twin of [[cramer3]] — the same
+    * sums and the same operand order in every determinant, so the two give
+    * identical doubles. */
+  private final class Gram3 {
+    var n, sx1, sx2, s11, s12, s22, sy, s1y, s2y = 0.0
+
+    def add(y: Double, x1: Double, x2: Double): Unit = {
+      n += 1.0
+      sx1 += x1; sx2 += x2
+      s11 += x1 * x1; s12 += x1 * x2; s22 += x2 * x2
+      sy += y; s1y += x1 * y; s2y += x2 * y
+    }
+
+    /** (c0, c1, c2); None where det = 0, as [[cramer3]]'s null guard. */
+    def solve: Option[Array[Double]] = {
+      val det = n * (s11 * s22 - s12 * s12) - sx1 * (sx1 * s22 - s12 * sx2) +
+        sx2 * (sx1 * s12 - s11 * sx2)
+      if (det == 0.0) None
+      else Some(Array(
+        (sy * (s11 * s22 - s12 * s12) - sx1 * (s1y * s22 - s12 * s2y) +
+          sx2 * (s1y * s12 - s11 * s2y)) / det,
+        (n * (s1y * s22 - s12 * s2y) - sy * (sx1 * s22 - s12 * sx2) +
+          sx2 * (sx1 * s2y - s1y * sx2)) / det,
+        (n * (s11 * s2y - s1y * s12) - sx1 * (sx1 * s2y - s1y * sx2) +
+          sy * (sx1 * s12 - s11 * sx2)) / det))
+    }
   }
 
   /** ARIMA(1,1,1) in-sample surface — the reference's predict_in_sample /
@@ -1068,17 +1156,22 @@ object TimeSeries {
     *   ll = −(n/2)·(ln(2π·SSE/n) + 1)
     * (the CLS approximation of the reference's Kalman batched_loglike),
     * then AIC = −2ll + 2k, BIC = −2ll + k·ln(n) with model complexity
-    * k = p+d+q = 3 (arima.pyx:822-826). One join + one grouped aggregate
-    * on top of the HR fit — order selection over 10⁶ series is one job. */
+    * k = p+d+q = 3 (arima.pyx:822-826). n and the SSE come from the HR
+    * fit's own per-series pass (residuals summed in t order, as the SQL
+    * oracle's grouped sum); order selection over 10⁶ series is one job. */
   def arimaInsample(series: DataFrame): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    val scored = rows.filter(col("l1").isNotNull && col("e1").isNotNull)
-      .join(cf, Seq("series"))
-      .withColumn("resid",
-        col("dx") - (col("c0") + col("c1") * col("l1") + col("c2") * col("e1")))
-    scored.groupBy(col("series")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("resid") * col("resid")).as("sse"))
+    import series.sparkSession.implicits._
+    bySeries(series) { (key, obs) =>
+      hannanRissanen(obs).flatMap { case (rows, coefs) =>
+        coefs.map { case (c0, c1, c2) =>
+          val used = rows.collect { case (_, dx, Some(l1), _, _, Some(e1)) => (dx, l1, e1) }
+          val sse = for (a <- c0; b <- c1; c <- c2) yield used.foldLeft(0.0) {
+            case (acc, (dx, l1, e1)) => val r = dx - (a + b * l1 + c * e1); acc + r * r
+          }
+          (key, used.length.toDouble, sse)
+        }
+      }.iterator
+    }.toDF("series", "n", "sse")
       .withColumn("loglik",
         (lit(0.0) - col("n") / lit(2.0)) *
           (log(lit(2.0) * lit(math.Pi) * col("sse") / col("n")) + lit(1.0)))
@@ -1377,64 +1470,65 @@ object TimeSeries {
     * pick the argmin. Candidates (all d=1, CLS on the COMMON support —
     * the rows where every candidate's regressors are defined — so the
     * likelihoods are comparable): (0,1,0) mean model, (1,1,0), (2,1,0),
-    * and (1,1,1) via the HR residual regressor. Each candidate is one
-    * grouped-aggregate fit + one residual aggregate; the whole grid over
-    * 10⁶ series stays a handful of jobs, never a per-series loop.
+    * and (1,1,1) via the HR residual regressor. Every candidate is fitted
+    * inside the HR fit's own per-series pass ([[gridCandidates]]); the
+    * whole grid over 10⁶ series is one job, never a per-series loop.
     * BIC = −2·ll + k·ln(n) at CLS loglik and complexity k = d+p+q
     * (arima.pyx:822-826). Output: (series, ord, bic, chosen). */
   def arimaGridSearch(series: DataFrame): DataFrame = {
-    val (rows, _) = arimaHRStage(series)
-    // cached: every candidate fit + residual pass re-reads this frame (8
-    // scans) — without the cache each would replay the full HR window
-    // chain over the corpus
-    val common = rows
-      .filter(col("l1").isNotNull && col("l2").isNotNull && col("e1").isNotNull)
-      .select(col("series"), col("dx"), col("l1"), col("l2"), col("e1"))
-      .cache()
-    // (0,1,0): dx_t = μ; SSE via the moment identity
-    val a010 = common.groupBy(col("series")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("dx")).as("sdx"), sum(col("dx") * col("dx")).as("s2dx"))
-      .select(col("series"), col("n"), lit("010").as("ord"), lit(1.0).as("k"),
-        (col("s2dx") - col("sdx") * col("sdx") / col("n")).as("sse"))
-    // (1,1,0): dx_t ~ a + b·dx_{t−1}, 2-unknown OLS (det-guarded)
-    val f110 = common.groupBy(col("series")).agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("l1")).as("sx"), sum(col("dx")).as("sy"),
-        sum(col("l1") * col("l1")).as("sxx"), sum(col("l1") * col("dx")).as("sxy"))
-      .withColumn("det", col("n") * col("sxx") - col("sx") * col("sx"))
-      .withColumn("b", when(col("det") === 0.0, lit(null).cast("double"))
-        .otherwise((col("n") * col("sxy") - col("sx") * col("sy")) / col("det")))
-      .withColumn("a", (col("sy") - col("b") * col("sx")) / col("n"))
-    val m110 = common.join(f110.select(col("series"), col("a"), col("b")), Seq("series"))
-      .withColumn("r", col("dx") - (col("a") + col("b") * col("l1")))
-      .groupBy(col("series")).agg(count(lit(1)).cast("double").as("n"),
-        sum(col("r") * col("r")).as("sse"))
-      .select(col("series"), col("n"), lit("110").as("ord"), lit(2.0).as("k"), col("sse"))
-    // (2,1,0) and (1,1,1): 3-unknown Cramer fits + residual pass
-    def m3(x2: String, ordName: String) = {
-      val cf = cramer3(common, col("dx"), col("l1"), col(x2))
-      common.join(cf, Seq("series"))
-        .withColumn("r", col("dx") - (col("c0") + col("c1") * col("l1") + col("c2") * col(x2)))
-        .groupBy(col("series")).agg(count(lit(1)).cast("double").as("n"),
-          sum(col("r") * col("r")).as("sse"))
-        .select(col("series"), col("n"), lit(ordName).as("ord"), lit(3.0).as("k"), col("sse"))
-    }
-    val all = a010.unionByName(m110).unionByName(m3("l2", "210")).unionByName(m3("e1", "111"))
+    import series.sparkSession.implicits._
+    val all = bySeries(series) { (key, obs) =>
+      hannanRissanen(obs).iterator.flatMap { case (rows, _) =>
+        val common = rows.collect {
+          case (_, dx, Some(l1), Some(l2), _, Some(e1)) => (dx, l1, l2, e1)
+        }
+        val n = common.length.toDouble
+        if (common.isEmpty) Nil
+        else gridCandidates(common).map { case (ord, k, sse) => (key, n, ord, k, sse) }
+      }
+    }.toDF("series", "n", "ord", "k", "sse")
     val ll = (lit(0.0) - col("n") / lit(2.0)) *
       (log(lit(2.0) * lit(math.Pi) * col("sse") / col("n")) + lit(1.0))
     val scored = all.withColumn("bic", lit(-2.0) * ll + col("k") * log(col("n")))
     val w = Window.partitionBy(col("series")).orderBy(col("bic").asc_nulls_last, col("ord"))
-    val out = scored.withColumn("rk", row_number().over(w))
+    scored.withColumn("rk", row_number().over(w))
       .select(col("series"), col("ord"), round(col("bic"), 4).as("bic"),
         when(col("rk") === 1, 1L).otherwise(0L).as("chosen"))
-      .cache()
-    // eager materialization lets the big fit-stage cache be released here;
-    // the retained result cache is O(4 rows × series) — result-sized, the
-    // same footprint the caller holds anyway
-    out.count()
-    common.unpersist()
-    out
+  }
+
+  /** [[arimaGridSearch]]'s candidates on one series' common support rows
+    * (dx, l1, l2, e1) in t order, as (ord, k, SSE): the moment sums in t
+    * order and each formula in the SQL oracle's operand order; a singular
+    * fit has no SSE. */
+  private def gridCandidates(common: IndexedSeq[(Double, Double, Double, Double)])
+      : Seq[(String, Double, Option[Double])] = {
+    val n = common.length.toDouble
+    def sse(resid: ((Double, Double, Double, Double)) => Double): Double =
+      common.foldLeft(0.0) { (acc, row) => val r = resid(row); acc + r * r }
+    var (sdx, s2dx, sx, sxx, sxy) = (0.0, 0.0, 0.0, 0.0, 0.0)
+    val (g210, g111) = (new Gram3, new Gram3)
+    common.foreach { case (dx, l1, l2, e1) =>
+      sdx += dx; s2dx += dx * dx
+      sx += l1; sxx += l1 * l1; sxy += l1 * dx
+      g210.add(dx, l1, l2); g111.add(dx, l1, e1)
+    }
+    // (1,1,0): dx_t ~ a + b·dx_{t−1}, 2-unknown OLS (det-guarded)
+    val det = n * sxx - sx * sx
+    val sse110 = if (det == 0.0) None else {
+      val b = (n * sxy - sx * sdx) / det
+      val a = (sdx - b * sx) / n
+      Some(sse { case (dx, l1, _, _) => dx - (a + b * l1) })
+    }
+    // (2,1,0) and (1,1,1): 3-unknown Cramer fits
+    val sse210 = g210.solve.map { c =>
+      sse { case (dx, l1, l2, _) => dx - (c(0) + c(1) * l1 + c(2) * l2) }
+    }
+    val sse111 = g111.solve.map { c =>
+      sse { case (dx, l1, _, e1) => dx - (c(0) + c(1) * l1 + c(2) * e1) }
+    }
+    // (0,1,0): dx_t = μ; SSE via the moment identity
+    Seq(("010", 1.0, Some(s2dx - sdx * sdx / n)), ("110", 2.0, sse110),
+      ("210", 3.0, sse210), ("111", 3.0, sse111))
   }
 
   /** h-step ARIMA(1,1,1) forecast — the reference's forecast on a d=1
@@ -1442,17 +1536,21 @@ object TimeSeries {
     * (c0, ar1, ma1) — dx̂_{T+1} = c0 + c1·dx_T + c2·ê_T, then
     * dx̂_{T+k} = c0 + c1·dx̂_{T+k−1} (future shocks are zero) — and
     * integrate back: x̂_{T+k} = x_T + Σ_{j≤k} dx̂_{T+j}, unrolled as h
-    * nested column expressions after a coefficient⋈last-state join. */
+    * nested column expressions. The HR fit's per-series pass emits the
+    * state they start from: (c0, c1, c2), the last observation with a
+    * residual (dx_T, ê_T) and the last observation x_T. */
   def arimaForecastHR(series: DataFrame, h: Int): DataFrame = {
     require(h >= 1, "h >= 1")
-    val (rows, cf) = arimaHRStage(series)
-    val wDesc = Window.partitionBy(col("series")).orderBy(col("t").desc)
-    val last = rows.filter(col("e").isNotNull)
-      .withColumn("_rn", row_number().over(wDesc)).filter(col("_rn") === 1)
-      .select(col("series"), col("dx").as("dxT"), col("e").as("eT"))
-    val lastX = series.withColumn("_rn", row_number().over(wDesc))
-      .filter(col("_rn") === 1).select(col("series"), col("x").as("xT"))
-    val j = cf.join(last, Seq("series")).join(lastX, Seq("series"))
+    import series.sparkSession.implicits._
+    val j = bySeries(series) { (key, obs) =>
+      hannanRissanen(obs).iterator.flatMap { case (rows, coefs) =>
+        coefs.flatMap { case (c0, c1, c2) =>
+          rows.reverseIterator.collectFirst {
+            case (_, dx, _, _, Some(e), _) => (key, c0, c1, c2, dx, e, obs.last._2)
+          }
+        }
+      }
+    }.toDF("series", "c0", "c1", "c2", "dxT", "eT", "xT")
     var prevD: Column = col("c0") + col("c1") * col("dxT") + col("c2") * col("eT")
     var cum: Column = col("xT") + prevD
     val fs = (1 to h).map { k =>

@@ -226,6 +226,34 @@ class OperatorSpec extends AnyFunSuite {
     assert(all.getAs[Double]("scanned_frac") == 1.0)
   }
 
+  test("IVFPQ scanned_frac is the share of the corpus in the probed cells") {
+    import spark.implicits._
+    // seeded clusters of uneven size, so the cells hold uneven shares
+    val rnd = new scala.util.Random(21)
+    val hubs = Seq.fill(6)(Array.fill(16)(rnd.nextGaussian() * 4))
+    val e = (0 until 480).map { i =>
+      (i.toLong, hubs(math.min(i % 9, 5)).map(_ + rnd.nextGaussian()))
+    }.toDF("vec_id", "embedding")
+    val q = e.filter(col("vec_id") < 20)
+    val centers = graft.neighbors.IVFPQ.train(e, "embedding", 16, m = 8, kCodes = 16).ivf.centers
+    def ranked(v: Seq[Double]) = centers.indices.map { c =>
+      (v.indices.map(i => (v(i) - centers(c)(i)) * (v(i) - centers(c)(i))).sum, c)
+    }.sorted
+    def vecs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0))
+    val sizes = vecs(e).groupBy(ranked(_).head._2).map { case (c, vs) => c -> vs.length }
+    val n = sizes.values.sum.toDouble
+    val want = vecs(q).map(v => ranked(v).take(4).map(c => sizes.getOrElse(c._2, 0)).sum / n)
+      .sum / 20
+    def summary(nprobe: Int) = graft.neighbors.IVFPQ.recallSummary(e, q, "vec_id", "embedding",
+      nCells = 16, m = 8, kCodes = 16, k = 5, nprobe = nprobe).head()
+    val r = summary(4)
+    assert(math.abs(r.getAs[Double]("scanned_frac") - want) <= 5e-5,
+      s"scanned ${r.getAs[Double]("scanned_frac")} vs $want")
+    assert(r.getAs[Double]("probed_frac") == 0.25)
+    assert(summary(16).getAs[Double]("scanned_frac") == 1.0)
+  }
+
   test("real-embedding ANN recalls sit in (floor, 1] — the continuous gate behind the query invariants") {
     // the ann_* queries hash-gate deterministic columns + recall-floor
     // booleans; the CONTINUOUS recall stays gated here on real data
