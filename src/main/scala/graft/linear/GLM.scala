@@ -54,7 +54,7 @@ object GLM {
   /** Binomial GLM (logit link, intercept + two features) by the same
     * fixed-round IRLS: w = p(1−p), z = η + (y−p)/w, one aggregate of the
     * 9 weighted sums per round, 3×3 Cramer on the driver. Unlike the
-    * MLlib L-BFGS path (logreg, rows-only by necessity), the fixed-round
+    * QN L-BFGS path (logreg, partially gated by necessity), the fixed-round
     * Newton iterate is bit-replayable by a SQL oracle. β starts at 0 —
     * the first round is then exactly weighted least squares on z = 4y−2. */
   def logisticIrls(df: DataFrame, y: Column, x1: Column, x2: Column,

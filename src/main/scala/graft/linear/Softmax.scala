@@ -1,15 +1,13 @@
 package graft.linear
 
-import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.feature.VectorAssembler
+import graft.core.Rows
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multiclass (softmax) logistic regression — the reference's
   * LogisticRegression is explicitly multiclass
-  * (python/cuml/linear_model/logistic_regression.pyx:41-42, solver
-  * `qn` with softmax loss when n_classes > 2). MLlib's multinomial
-  * family is the same model; the fit is its distributed L-BFGS.
+  * (python/cuml/linear_model/logistic_regression.pyx:41-42, solver `qn`
+  * with softmax loss when n_classes > 2): GradientSolver's QN with SoftmaxLoss.
   */
 object Softmax {
   /** Fit a multinomial model; returns (coefRows, trainAccuracy).
@@ -19,47 +17,39 @@ object Softmax {
           maxIter: Int = 50): (DataFrame, Double) = {
     val spark = df.sparkSession
     import spark.implicits._
-    // deterministic L-BFGS (fixed start/tol, alphabet-sorted labels) →
-    // fit-once
+    // deterministic L-BFGS (fixed start and tol, sorted labels) → fit-once
     val (rows, acc) = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
       "softmax_fit", features.mkString(","), labelCol, maxIter)) {
-      fitRows(df, features, labelCol, maxIter)
+      val found = df.select(col(labelCol).cast("string")).distinct().collect().map(_.getString(0))
+      require(!found.contains(null), s"null $labelCol label")
+      val labels = found.sorted
+      val (p, k) = (features.size, labels.length)
+      val index = udf((s: String) => labels.indexOf(s).toDouble)
+      val data = Rows.cached(df, features.map(col) :+ index(col(labelCol).cast("string")))
+      try {
+        val w = GradientSolver.qn(data, features, l2 = 0.0, maxIter, GradientSolver.SoftmaxLoss,
+          tol = 1e-9, l1 = 0.0).coefs
+        // train accuracy of the argmax (first wins ties), coefficients in the closure
+        val (hits, n) = data.treeAggregate((0L, 0L))((a, r) => {
+          val s = (0 until k).map(c =>
+            w(c * (p + 1)) + (0 until p).map(i => r(i) * w(c * (p + 1) + i + 1)).sum)
+          (if (s.indexOf(s.max) == r(p)) a._1 + 1 else a._1, a._2 + 1)
+        }, (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
+        (for {
+          c <- labels.indices
+          (term, j) <- ("intercept", -1) +: features.zipWithIndex
+        } yield (labels(c), term, math.rint(w(c * (p + 1) + j + 1) * 10000) / 10000),
+          hits.toDouble / n)
+      } finally data.unpersist(blocking = false)
     }
     (rows.toDF("class", "term", "coef").orderBy("class", "term"), acc)
-  }
-
-  /** The fitted coefficient rows (class, term, coef) and train accuracy. */
-  private def fitRows(df: DataFrame, features: Seq[String], labelCol: String,
-                      maxIter: Int): (Seq[(String, String, Double)], Double) = {
-    val labels = df.select(col(labelCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted
-    val idx = labels.zipWithIndex.toMap
-    val toIdx = udf((s: String) => idx(s).toDouble)
-    val prepared = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("_fv")
-      .transform(df.select((features.map(c => col(c).cast("double").as(c)) :+
-        toIdx(col(labelCol).cast("string")).as("_y")): _*))
-    val m = new LogisticRegression().setFeaturesCol("_fv").setLabelCol("_y")
-      .setFamily("multinomial").setMaxIter(maxIter).setRegParam(0.0)
-      .setTol(1e-9).fit(prepared)
-    val cm = m.coefficientMatrix
-    val iv = m.interceptVector
-    val rows = for {
-      c <- labels.indices
-      (term, j) <- ("intercept", -1) +: features.zipWithIndex
-    } yield (labels(c), term,
-      math.rint((if (j < 0) iv(c) else cm(c, j)) * 10000) / 10000)
-    val acc = m.transform(prepared)
-      .select(avg(when(col("prediction") === col("_y"), 1.0).otherwise(0.0)))
-      .head().getDouble(0)
-    (rows, acc)
   }
 
   /** Softmax predict with a LITERAL coefficient matrix — pure column
     * expressions (codegen'd, zero shuffle until the caller aggregates):
     * per-class score s_c = b_c + w_c·x, predicted class = argmax, and
     * the winning softmax probability exp(s*)/Σexp(s_c). The SQL-oracle
-    * twin of MLlib's predict, same shape as KMeansGraft.assign. */
+    * twin of the fit's argmax, same shape as KMeansGraft.assign. */
   def predict(features: Seq[Column], classes: Seq[String],
               intercepts: Seq[Double], weights: Seq[Seq[Double]])
       : (Column, Column) = {

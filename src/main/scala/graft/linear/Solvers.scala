@@ -33,13 +33,15 @@ object GradientSolver extends Serializable {
   case object SquaredLoss extends Loss    // y ∈ ℝ
   case object LogisticLoss extends Loss   // y ∈ {0,1}
   case object HingeLoss extends Loss      // y ∈ {0,1} (mapped to ±1)
+  case object SoftmaxLoss extends Loss    // y ∈ {0..k−1}, k = max y + 1 (fitQN only)
 
-  /** Welford running moments of the first `p` columns of a row (count,
-    * means, sums of squared deviations), merged as in Chan et al. */
+  /** Welford running moments of the first `p` columns of a row (count, means,
+    * sums of squared deviations; Chan et al. merge), and the largest label. */
   private final class Moments(p: Int) extends Serializable {
     var n = 0L
     val mean = new Array[Double](p)
     val m2 = new Array[Double](p)
+    var top = Double.NegativeInfinity
 
     def add(row: Array[Double]): Moments = {
       n += 1
@@ -50,10 +52,12 @@ object GradientSolver extends Serializable {
         m2(i) += d * (row(i) - mean(i))
         i += 1
       }
+      if (row.length > p) top = math.max(top, row(p))
       this
     }
 
     def merge(o: Moments): Moments = {
+      top = math.max(top, o.top)
       if (n == 0) {
         n = o.n
         System.arraycopy(o.mean, 0, mean, 0, p)
@@ -71,44 +75,65 @@ object GradientSolver extends Serializable {
       }
       this
     }
+
+    /** Sample stddevs; fewer than two rows or a (near-)constant column fall
+      * back to scale 1, so a degenerate column can't poison every feature. */
+    def scales: Array[Double] = m2.map { s =>
+      val v = math.sqrt(s / (n - 1))
+      if (n < 2 || v.isNaN || v < 1e-12) 1.0 else v
+    }
   }
 
-  /** Row count, means and sample stddevs of the first `p` columns of the
-    * rows, in one pass. An empty input falls back to (0, 1); a single row
-    * or a (near-)constant column falls back to scale 1, so a degenerate
-    * column can't poison every standardized feature. */
+  private def moments(rows: RDD[Array[Double]], p: Int): Moments =
+    rows.treeAggregate(new Moments(p))((a, r) => a.add(r), (a, b) => a.merge(b), depth = 2)
+
+  /** Row count, means and sample stddevs ([[Moments.scales]]) of the first
+    * `p` columns of the rows, in one pass. */
   private[graft] def standardization(rows: RDD[Array[Double]],
                                      p: Int): (Long, Array[Double], Array[Double]) = {
-    val m = rows.treeAggregate(new Moments(p))((a, r) => a.add(r), (a, b) => a.merge(b), depth = 2)
-    val sd = m.m2.map { s =>
-      val v = math.sqrt(s / (m.n - 1))
-      if (m.n < 2 || v.isNaN || v < 1e-12) 1.0 else v
-    }
-    (m.n, m.mean, sd)
+    val m = moments(rows, p)
+    (m.n, m.mean, m.scales)
   }
 
-  /** b + Σ w_i·(x_i − μ_i)/σ_i: the margin on the standardized features. */
-  private def marginAt(w: Array[Double], row: Array[Double], mu: Array[Double],
+  /** b + Σ w_i·(x_i − μ_i)/σ_i on the standardized features, b at w(o). */
+  private def marginAt(w: Array[Double], o: Int, row: Array[Double], mu: Array[Double],
                        sd: Array[Double], p: Int): Double = {
-    var m = w(0)
+    var m = w(o)
     var i = 0
-    while (i < p) { m += (row(i) - mu(i)) / sd(i) * w(i + 1); i += 1 }
+    while (i < p) { m += (row(i) - mu(i)) / sd(i) * w(o + i + 1); i += 1 }
     m
   }
 
-  /** One L-BFGS objective evaluation: acc = [Σloss, Σg, Σg·x0..Σg·xp-1].
-    * A standalone method so the treeAggregate closures capture only (wB,
-    * lossB, p) — defined inside the breeze DiffFunction they would capture
-    * the (non-serializable) anonymous class itself. */
+  /** One row's softmax terms: loss log Σ_c exp(s_c) − s_y, taken at the
+    * largest score so no exp overflows, and per class g_c = P(c) − [c = y]. */
+  private def softmaxAdd(a: Array[Double], row: Array[Double], w: Array[Double],
+                         mu: Array[Double], sd: Array[Double], p: Int, k: Int): Unit = {
+    val y = row(p).toInt
+    require(y >= 0 && y == row(p), s"label ${row(p)} is not a class index")
+    val s = Array.tabulate(k)(c => marginAt(w, c * (p + 1), row, mu, sd, p))
+    val sMax = s.max
+    val lse = sMax + math.log(s.map(v => math.exp(v - sMax)).sum)
+    a(0) += lse - s(y)
+    for (c <- 0 until k) {
+      val g = math.exp(s(c) - lse) - (if (c == y) 1.0 else 0.0)
+      a(1 + c * (p + 1)) += g
+      for (i <- 0 until p) a(2 + c * (p + 1) + i) += g * ((row(i) - mu(i)) / sd(i))
+    }
+  }
+
+  /** One L-BFGS objective evaluation: acc = [Σloss, then per class Σg,
+    * Σg·x0..Σg·xp-1]. A standalone method so the treeAggregate closures
+    * capture only (wB, lossB, p, k) — defined inside the breeze DiffFunction
+    * they would capture the (non-serializable) anonymous class itself. */
   private def qnPass(data: RDD[Array[Double]], wB: Array[Double], lossB: Loss,
-                     mu: Array[Double], sd: Array[Double], p: Int): Array[Double] =
-    data.treeAggregate(new Array[Double](p + 2))(
-      seqOp = (a, row) => {
-        val m = marginAt(wB, row, mu, sd, p)
+                     mu: Array[Double], sd: Array[Double], p: Int, k: Int): Array[Double] =
+    data.treeAggregate(new Array[Double](1 + k * (p + 1)))(
+      seqOp = (a, row) => if (lossB == SoftmaxLoss) { softmaxAdd(a, row, wB, mu, sd, p, k); a } else {
+        val m = marginAt(wB, 0, row, mu, sd, p)
         val yv = row(p)
         val ypm = yv * 2.0 - 1.0
         val z = ypm * m
-        val (lv, g) = lossB match {
+        val (lv, g) = (lossB: @unchecked) match {
           case SquaredLoss =>
             // cuML QN's 'normal' loss: ½(m−y)²; d/dm = m−y
             val r = m - yv
@@ -143,6 +168,7 @@ object GradientSolver extends Serializable {
   private def fitUncached(df: DataFrame, features: Seq[String], label: String, loss: Loss,
                           lr: Double, iters: Int, batchFraction: Double,
                           l2: Double, seed: Long, standardize: Boolean): LinearModel = {
+    require(loss != SoftmaxLoss, "SoftmaxLoss is fitted by fitQN")
     val p = features.size
     val data = Rows.cached(df, (features :+ label).map(col))
     try {
@@ -160,9 +186,9 @@ object GradientSolver extends Serializable {
         // acc = [Σg, Σg·x0..Σg·xp-1, n]
         val acc = batch.treeAggregate(new Array[Double](p + 2))(
           seqOp = (a, row) => {
-            val m = marginAt(wB, row, shift, sc, p)
+            val m = marginAt(wB, 0, row, shift, sc, p)
             val yv = row(p)
-            val g = lossB match {
+            val g = (lossB: @unchecked) match {
               case SquaredLoss  => m - yv
               case LogisticLoss => 1.0 / (1.0 + math.exp(-m)) - yv
               case HingeLoss =>
@@ -186,10 +212,7 @@ object GradientSolver extends Serializable {
         }
         it += 1
       }
-      // un-standardize: w·(x-μ)/σ + b  →  coefs on original scale
-      val coefs = Array.tabulate(p)(i => w(i + 1) / sc(i))
-      val b0 = w(0) - (0 until p).map(i => coefs(i) * shift(i)).sum
-      LinearModel("intercept" +: features, b0 +: coefs.toSeq)
+      unscaled(w, features, shift, sc, 1)
     } finally data.unpersist(blocking = false)
   }
 
@@ -200,9 +223,11 @@ object GradientSolver extends Serializable {
     * logistic regression; SquaredLoss its 'normal' loss ½(m−y)² (least
     * squares); HingeLoss gives the squared-hinge linear SVC
     * (smooth, so L-BFGS converges — the same loss cuML's LinearSVC/QN
-    * path optimizes). `l1 > 0` switches to OWL-QN with the intercept
-    * unpenalized; the L1 prox runs on the STANDARDIZED coefficients (the
-    * scale on which the penalty is comparable across features). */
+    * path optimizes); SoftmaxLoss its multinomial logistic regression, one
+    * ("intercept" +: features) block per class. `l1 > 0` switches to
+    * OWL-QN with the intercepts unpenalized; the L1 prox runs on the
+    * STANDARDIZED coefficients (the scale on which the penalty is
+    * comparable across features). */
   def fitQN(df: DataFrame, features: Seq[String], label: String,
             l2: Double = 0.0, maxIter: Int = 50,
             loss: Loss = LogisticLoss, tol: Double = 1e-9,
@@ -210,41 +235,49 @@ object GradientSolver extends Serializable {
     // deterministic (fixed start, deterministic line search) → fit-once
     graft.core.FitCache.getOrFit(graft.core.FitCache.key(df, "qn_fit",
       features.mkString(","), label, l2, maxIter, loss, tol, l1)) {
-      fitQNUncached(df, features, label, l2, maxIter, loss, tol, l1)
+      val data = Rows.cached(df, (features :+ label).map(col))
+      try qn(data, features, l2, maxIter, loss, tol, l1)
+      finally data.unpersist(blocking = false)
     }
 
-  private def fitQNUncached(df: DataFrame, features: Seq[String], label: String,
-                            l2: Double, maxIter: Int, loss: Loss, tol: Double,
-                            l1: Double): LinearModel = {
+  /** [[fitQN]] over [[graft.core.Rows]] of the features, then the label; the caller owns them. */
+  private[graft] def qn(data: RDD[Array[Double]], features: Seq[String], l2: Double,
+                        maxIter: Int, loss: Loss, tol: Double, l1: Double): LinearModel = {
     val p = features.size
-    val data = Rows.cached(df, (features :+ label).map(col))
-    try {
-      // standardize: mixed feature scales stall the line search otherwise
-      val (rowCount, mu, sd) = standardization(data, p)
-      val n = rowCount.toDouble
-      val f = new DiffFunction[DenseVector[Double]] {
-        def calculate(w: DenseVector[Double]): (Double, DenseVector[Double]) = {
-          val acc = qnPass(data, w.toArray, loss, mu, sd, p)
-          val lossV = acc(0) / n +
-            0.5 * l2 * (1 until p + 1).map(i => w(i) * w(i)).sum
-          val grad = DenseVector.tabulate(p + 1) { i =>
-            acc(i + 1) / n + (if (i == 0) 0.0 else l2 * w(i))
-          }
-          (lossV, grad)
+    // standardize: mixed feature scales stall the line search otherwise
+    val stats = moments(data, p)
+    val (n, mu, sd) = (stats.n.toDouble, stats.mean, stats.scales)
+    val k = if (loss == SoftmaxLoss) stats.top.toInt + 1 else 1
+    val d = k * (p + 1)
+    val penalized = (0 until d).filter(_ % (p + 1) != 0)
+    val f = new DiffFunction[DenseVector[Double]] {
+      def calculate(w: DenseVector[Double]): (Double, DenseVector[Double]) = {
+        val acc = qnPass(data, w.toArray, loss, mu, sd, p, k)
+        val lossV = acc(0) / n + 0.5 * l2 * penalized.map(i => w(i) * w(i)).sum
+        val grad = DenseVector.tabulate(d) { i =>
+          acc(i + 1) / n + (if (i % (p + 1) == 0) 0.0 else l2 * w(i))
         }
+        (lossV, grad)
       }
-      val w =
-        if (l1 > 0.0)
-          new breeze.optimize.OWLQN[Int, DenseVector[Double]](maxIter, 7,
-              (i: Int) => if (i == 0) 0.0 else l1, tol)
-            .minimize(f, DenseVector.zeros[Double](p + 1))
-        else
-          new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tol)
-            .minimize(f, DenseVector.zeros[Double](p + 1))
-      // un-standardize back to the original feature scale
-      val coefs = Array.tabulate(p)(i => w(i + 1) / sd(i))
-      val b0 = w(0) - (0 until p).map(i => coefs(i) * mu(i)).sum
-      LinearModel("intercept" +: features, b0 +: coefs.toSeq)
-    } finally data.unpersist(blocking = false)
+    }
+    val w =
+      if (l1 > 0.0)
+        new breeze.optimize.OWLQN[Int, DenseVector[Double]](maxIter, 7,
+            (i: Int) => if (i % (p + 1) == 0) 0.0 else l1, tol)
+          .minimize(f, DenseVector.zeros[Double](d))
+      else
+        new LBFGS[DenseVector[Double]](maxIter = maxIter, m = 7, tolerance = tol)
+          .minimize(f, DenseVector.zeros[Double](d))
+    unscaled(w.toArray, features, mu, sd, k)
+  }
+
+  /** k standardized weight blocks w·(x−μ)/σ + b back on the original scale. */
+  private def unscaled(w: Array[Double], features: Seq[String], mu: Array[Double],
+                       sd: Array[Double], k: Int): LinearModel = {
+    val p = features.size
+    LinearModel(Seq.fill(k)("intercept" +: features).flatten, (0 until k).flatMap { c =>
+      val coefs = Array.tabulate(p)(i => w(c * (p + 1) + i + 1) / sd(i))
+      (w(c * (p + 1)) - (0 until p).map(i => coefs(i) * mu(i)).sum) +: coefs.toSeq
+    })
   }
 }

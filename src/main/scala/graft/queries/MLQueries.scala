@@ -7,13 +7,11 @@ import graft.core.Num.r4
 import graft.linear.{ElasticNet, GradientSolver, Lasso, Softmax}
 import graft.preprocessing.Preprocessing
 import graft.svm.SVMGraft
-import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iterative / seeded estimators (rows-only checks): MLlib-backed models and
-  * the graft solver harness. Deterministic output shapes, coefficients
+/** Iterative / seeded estimators (rows-only checks): the graft solver
+  * harness and the MLlib ALS fit. Deterministic output shapes, coefficients
   * rounded — the driver checks row presence; ScalaTest checks semantics
   * against closed-form ground truth where it exists. */
 object MLQueries {
@@ -72,23 +70,26 @@ object MLQueries {
   private def softplus(t: Column): Column =
     greatest(t, lit(0.0)) + log1p(exp(-abs(t)))
 
-  /** PARTIAL HASH GATE row shared by the logistic fits: the SQL-exact
-    * slice (row count, positive count, term count) plus the optimality
-    * floor — the fitted model's training log-loss sits below the
-    * intercept-only MLE's entropy −(p̄·ln p̄ + (1−p̄)·ln(1−p̄)), which is a
-    * feasible point for every solver here. One codegen'd aggregate. */
-  private def logisticGateRow(df: DataFrame, features: Seq[String], bin: Column,
-                              coefs: Seq[Double]): DataFrame = {
-    val margin = features.zipWithIndex.foldLeft(lit(coefs.head)) {
+  /** logreg and qn_logreg: one QN fit (breeze L-BFGS, engine-internal) and
+    * its PARTIAL HASH GATE row (r11): the SQL-exact slice (row count,
+    * positive count, term count) plus the optimality floor — the training
+    * log-loss sits below the intercept-only MLE's entropy
+    * −(p̄·ln p̄ + (1−p̄)·ln(1−p̄)), a feasible point. One codegen'd aggregate
+    * over literal coefficients, whose values stay spec-gated (pinned to the
+    * IRLS twin). */
+  private val qnLogreg: Q = { (s, d) =>
+    val base = liWithLabel(s, d)
+    val coefs = GradientSolver.fitQN(base, LiFeatures, "_bin").coefs
+    val margin = LiFeatures.zipWithIndex.foldLeft(lit(coefs.head)) {
       case (acc, (f, i)) => acc + col(f).cast("double") * coefs(i + 1)
     }
-    val y = bin.cast("double")
-    df.agg(count(lit(1)).cast("long").as("_n"),
+    val y = col("_bin").cast("double")
+    base.agg(count(lit(1)).cast("long").as("_n"),
         sum(y).cast("long").as("_npos"),
         avg(softplus(-(y * 2.0 - 1.0) * margin)).as("_loss"),
         avg(y).as("_p"))
       .select(col("_n").as("n_rows"), col("_npos").as("n_pos"),
-        lit(features.size + 1).cast("long").as("n_terms"),
+        lit(LiFeatures.size + 1).cast("long").as("n_terms"),
         (col("_loss") < -(col("_p") * log(col("_p")) +
           (lit(1.0) - col("_p")) * log(lit(1.0) - col("_p")))).as("loss_lt_null"))
   }
@@ -105,28 +106,13 @@ object MLQueries {
     },
     "logreg_irls" -> { (s, d) =>
       // the hash-gated sibling of logreg: fixed 8-round Newton/IRLS with
-      // a 3×3 Cramer solve per round — unlike the MLlib L-BFGS path
-      // (engine-internal, rows-only), every iterate replays in SQL
+      // a 3×3 Cramer solve per round — unlike the QN path (engine-internal
+      // L-BFGS, partially gated), every iterate replays in SQL
       graft.linear.GLM.logisticFrame(Tables.lineitem(s, d),
         (col("l_returnflag") === "R").cast("double"),
         col("l_quantity") / 10.0, col("l_discount"), rounds = 8)
     },
-    "logreg" -> { (s, d) =>
-      // PARTIAL HASH GATE (r11): MLlib's L-BFGS iterates are engine-
-      // internal, but the fitted coefficients must beat the intercept-only
-      // entropy — scored here with literal coefficients in one aggregate.
-      // Coefficient values stay spec-gated (pinned to the IRLS twin).
-      val df = liWithLabel(s, d)
-      val input = new VectorAssembler().setInputCols(LiFeatures.toArray).setOutputCol("_fv")
-        .transform(df.select((LiFeatures.map(c => col(c).cast("double").as(c)) :+ col("_bin")): _*))
-      val m = graft.core.FitCache.getOrFit(graft.core.FitCache.key(df,
-        "logreg_bin", LiFeatures.mkString(","), 50)) {
-        new LogisticRegression().setFeaturesCol("_fv").setLabelCol("_bin")
-          .setMaxIter(50).setRegParam(0.0).setTol(1e-9).fit(input)
-      }
-      logisticGateRow(df, LiFeatures, col("_bin"),
-        m.intercept +: LiFeatures.indices.map(m.coefficients(_)))
-    },
+    "logreg" -> qnLogreg,
     "logreg_multi" -> { (s, d) =>
       // softmax multiclass on the 3-class returnflag — the reference's
       // LogisticRegression is multiclass (logistic_regression.pyx:41-42).
@@ -137,11 +123,9 @@ object MLQueries {
       val rows = Softmax.fit(li, LiFeatures, "l_returnflag")._1.collect()
       val classes = rows.map(_.getString(0)).distinct.sorted
       val cmap = rows.map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-      val scoreCols = classes.toSeq.map { c =>
-        LiFeatures.foldLeft(lit(cmap((c, "intercept")))) { (acc, f) =>
-          acc + col(f).cast("double") * cmap((c, f))
-        }
-      }
+      val scoreCols = Softmax.scoreColumns(LiFeatures.map(f => col(f).cast("double")),
+        classes.toSeq.map(c => cmap((c, "intercept"))),
+        classes.toSeq.map(c => LiFeatures.map(f => cmap((c, f)))))
       val smax = greatest(scoreCols: _*)
       val lse = log(scoreCols.map(sc => exp(sc - smax)).reduce(_ + _)) + smax
       val sTrue = classes.toSeq.zip(scoreCols).foldLeft(lit(0.0)) {
@@ -162,13 +146,7 @@ object MLQueries {
         .agg(count(lit(1)).as("n"), r4(avg(col("p"))).as("avg_pmax"))
         .orderBy("class")
     },
-    "qn_logreg" -> { (s, d) =>
-      // PARTIAL HASH GATE (r11): breeze L-BFGS is engine-internal; the
-      // optimum must beat the intercept-only entropy (same gate as logreg)
-      val base = liWithLabel(s, d)
-      val model = GradientSolver.fitQN(base, LiFeatures, "_bin")
-      logisticGateRow(base, LiFeatures, col("_bin"), model.coefs)
-    },
+    "qn_logreg" -> qnLogreg,
     "qn_logreg_l1" -> { (s, d) =>
       // the reference's OWL-QN dispatch (qn.pyx: l1 > 0 → OWL-QN) — L1
       // drives weak coefficients to EXACTLY zero. PARTIAL HASH GATE (r11):
@@ -420,18 +398,17 @@ object MLQueries {
   private val TestSplitPredicate =
     "('0x' || substr(md5(l_orderkey::VARCHAR || '_42'), 1, 15))::BIGINT % 1000 < 250"
 
+  private val QnLogregSql =
+    """SELECT count(*)::BIGINT AS n_rows,
+      |  sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS n_pos,
+      |  4::BIGINT AS n_terms, TRUE AS loss_lt_null FROM lineitem""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // ---- r11 partial hash gates for the seeded/iterative estimators:
     // counts are SQL-exact; invariant booleans assert the optimality /
     // structural floors the Spark side computes from the real fit ----
-    "logreg" ->
-      """SELECT count(*)::BIGINT AS n_rows,
-        |  sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS n_pos,
-        |  4::BIGINT AS n_terms, TRUE AS loss_lt_null FROM lineitem""".stripMargin,
-    "qn_logreg" ->
-      """SELECT count(*)::BIGINT AS n_rows,
-        |  sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS n_pos,
-        |  4::BIGINT AS n_terms, TRUE AS loss_lt_null FROM lineitem""".stripMargin,
+    "logreg" -> QnLogregSql,
+    "qn_logreg" -> QnLogregSql,
     "qn_logreg_l1" ->
       """SELECT count(*)::BIGINT AS n_rows, 4::BIGINT AS n_terms,
         |  TRUE AS obj_lt_null FROM lineitem""".stripMargin,

@@ -132,6 +132,14 @@ class FitCacheSpec extends AnyFunSuite {
     assert(hitsMisses == ((1L, 1L)), "gate")
   }
 
+  test("logreg and qn_logreg share one FitCache fit") {
+    FitCache.clear()
+    SparkEntry.queries("logreg")(spark, sf).collect()
+    assert(hitsMisses == ((0L, 1L)), "logreg")
+    SparkEntry.queries("qn_logreg")(spark, sf).collect()
+    assert(hitsMisses == ((1L, 1L)), "qn_logreg")
+  }
+
   test("repeated fitGBT calls share one FitCache fit, and clear() reaches it") {
     val li = Tables.lineitem(spark, sf)
     val feats = Seq("l_quantity", "l_discount")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Rows
-import graft.linear.GradientSolver
+import graft.linear.{GradientSolver, Softmax}
 import graft.svm.SVMGraft
 import graft.tsa.TimeSeries
 import org.apache.spark.graft.Codegen
@@ -50,6 +50,10 @@ class FitCompileSpec extends AnyFunSuite {
 
   test("fitQN compiles no class for a second frame of new values") {
     assert(secondCallCompiles(tabular, 1L)(GradientSolver.fitQN(_, fs, "y", maxIter = 5)) == 0)
+  }
+
+  test("Softmax.fit compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 9L)(Softmax.fit(_, fs, "y", maxIter = 5)) == 0)
   }
 
   test("GradientSolver.fit compiles no class for a second frame of new values") {
@@ -102,5 +106,6 @@ class FitCompileSpec extends AnyFunSuite {
       iters = 3, batchFraction = 0.5))
     leavesNothing("linearSvcSummary")(
       SVMGraft.linearSvcSummary(tabular(13L), fs, col("y") === 1.0, maxIter = 5).collect())
+    leavesNothing("Softmax.fit")(Softmax.fit(tabular(14L), fs, "y", maxIter = 5))
   }
 }

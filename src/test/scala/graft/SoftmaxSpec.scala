@@ -24,6 +24,31 @@ class SoftmaxSpec extends AnyFunSuite {
     assert(acc > 0.95, s"train accuracy $acc")
   }
 
+  test("a null label fails naming the label column") {
+    import spark.implicits._
+    val df = Seq((Some("a"), 0.0), (None, 1.0), (Some("b"), 2.0)).toDF("y", "f1")
+    val e = intercept[IllegalArgumentException](graft.linear.Softmax.fit(df, Seq("f1"), "y"))
+    assert(e.getMessage.contains("y"), e.getMessage)
+  }
+
+  test("two classes: w_b - w_a is fitQN's logistic fit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val df = (0 until 2000).map { _ =>
+      val (x1, x2) = (rnd.nextGaussian(), rnd.nextGaussian() * 2 + 1)
+      val p = 1.0 / (1.0 + math.exp(-(0.3 + 1.2 * x1 - 0.8 * x2)))
+      (if (rnd.nextDouble() < p) "b" else "a", x1, x2)
+    }.toDF("y", "x1", "x2")
+    val coef = graft.linear.Softmax.fit(df, Seq("x1", "x2"), "y")._1.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+    val lr = graft.linear.GradientSolver.fitQN(
+      df.withColumn("yb", (col("y") === "b").cast("double")), Seq("x1", "x2"), "yb")
+    lr.terms.zip(lr.coefs).foreach { case (t, c) =>
+      val d = coef(("b", t)) - coef(("a", t))
+      assert(math.abs(d - c) < 1e-3, s"$t: softmax $d vs logistic $c")
+    }
+  }
+
   test("softmax predict: argmax + winning probability match a hand check") {
     import spark.implicits._
     val df = Seq((1.0, 0.0), (0.0, 1.0)).toDF("f1", "f2")

@@ -418,6 +418,21 @@ class StatQueriesSpec extends AnyFunSuite {
     assert(math.abs(m.coefficientMatrix(0, 1) - f.b2) < 0.01)
   }
 
+  test("QN logistic regression agrees with logistic IRLS on the planted frame") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(59)
+    val df = (0 until 4000).map { _ =>
+      val x1 = rnd.nextGaussian(); val x2 = rnd.nextGaussian()
+      val p = 1.0 / (1.0 + math.exp(-(0.5 + 1.5 * x1 - 2.0 * x2)))
+      (if (rnd.nextDouble() < p) 1.0 else 0.0, x1, x2)
+    }.toDF("y", "x1", "x2")
+    val f = graft.linear.GLM.logisticIrls(df, col("y"), col("x1"), col("x2"))
+    val qn = graft.linear.GradientSolver.fitQN(df, Seq("x1", "x2"), "y").coefs
+    assert(math.abs(qn(0) - f.b0) < 0.01, s"b0 ${qn(0)} vs ${f.b0}")
+    assert(math.abs(qn(1) - f.b1) < 0.01, s"b1 ${qn(1)} vs ${f.b1}")
+    assert(math.abs(qn(2) - f.b2) < 0.01, s"b2 ${qn(2)} vs ${f.b2}")
+  }
+
   test("kaplan_meier matches a driver-side product-limit replay") {
     val ev = graft.core.Tables.events(spark, sf)
       .select(col("user_id").cast("long"),
