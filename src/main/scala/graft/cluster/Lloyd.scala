@@ -21,11 +21,55 @@ object Lloyd {
     * and the SSE of the nearest-center assignment. */
   final case class Pass(counts: Array[Long], sums: Array[Array[Double]], sse: Double)
 
-  /** Squared Euclidean distance. */
-  private def sq(a: Array[Double], b: Array[Double]): Double = {
+  /** Squared Euclidean distance from `b` to the slice of `a` that starts
+    * at `off` (a PQ subspace; 0 for a whole vector). */
+  private[graft] def sq(a: Array[Double], b: Array[Double], off: Int = 0): Double = {
     var s = 0.0; var i = 0
-    while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
+    while (i < b.length) { val t = a(off + i) - b(i); s += t * t; i += 1 }
     s
+  }
+
+  /** The quantizer family's one nearest-center rule: the index of the
+    * center nearest to `v` (read from `off`, as [[sq]]), the first index
+    * winning a tie. Every k-means assignment, IVF cell and PQ code is it. */
+  private[graft] def nearest(v: Array[Double], centers: Array[Array[Double]],
+                             off: Int = 0): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val d = sq(v, centers(c), off)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The indices of the `n` centers nearest to `v` (at most all of them),
+    * nearest first: by distance under `java.lang.Double.compare`, then by
+    * the lower index, which is the order of sorting every (distance,
+    * index) pair and taking n. A bounded insertion into n slots, so an
+    * IVF probe list costs O(k·n), not a sort of all k cells. */
+  private[graft] def nearestN(v: Array[Double], centers: Array[Array[Double]],
+                              n: Int): Array[Int] = {
+    val m = math.max(0, math.min(n, centers.length))
+    val ids = new Array[Int](m)
+    val ds = new Array[Double](m)
+    var size = 0
+    var c = 0
+    while (c < centers.length && m > 0) {
+      val d = sq(v, centers(c))
+      // c is above every kept index, so it goes after an equal distance
+      if (size < m || java.lang.Double.compare(d, ds(m - 1)) < 0) {
+        var i = math.min(size, m - 1)
+        while (i > 0 && java.lang.Double.compare(d, ds(i - 1)) < 0) {
+          ds(i) = ds(i - 1); ids(i) = ids(i - 1); i -= 1
+        }
+        ds(i) = d; ids(i) = c
+        if (size < m) size += 1
+      }
+      c += 1
+    }
+    ids
   }
 
   /** Deterministic local Lloyd: k-means++ init with a fixed-seed RNG
@@ -74,13 +118,7 @@ object Lloyd {
       val counts = new Array[Long](kk)
       var i = 0
       while (i < n) {
-        var bj = 0; var bd = Double.MaxValue
-        var j = 0
-        while (j < kk) {
-          val dd = sq(points(i), centers(j))
-          if (dd < bd) { bd = dd; bj = j }
-          j += 1
-        }
+        val bj = nearest(points(i), centers)
         counts(bj) += 1
         var x = 0
         while (x < d) { sums(bj)(x) += points(i)(x); x += 1 }
@@ -102,7 +140,7 @@ object Lloyd {
 
   /** Sum over points of the squared distance to the nearest center. */
   private def sse(pts: Array[Array[Double]], cs: Array[Array[Double]]): Double =
-    pts.map(p => cs.map(sq(p, _)).min).sum
+    pts.map(p => sq(p, cs(nearest(p, cs)))).sum
 
   /** For each point set s, the lowest-SSE of 8 [[lloyd]] restarts, run r
     * seeded `seedOf(s, r)` (best-of-8 recovers the quality of a k-means||
@@ -189,18 +227,12 @@ object Lloyd {
     val partials = rows.mapPartitionsWithIndex { (p, it) =>
       val a = new Array[Double](w)
       it.foreach { x =>
-        var bj = 0; var bd = Double.MaxValue
-        var j = 0
-        while (j < k) {
-          val s = sq(x, centers(j))
-          if (s < bd) { bd = s; bj = j }
-          j += 1
-        }
+        val bj = nearest(x, centers)
         val o = bj * (d + 1)
         a(o) += 1.0
         var i = 0
         while (i < d) { a(o + 1 + i) += x(i); i += 1 }
-        a(w - 1) += bd
+        a(w - 1) += sq(x, centers(bj))
       }
       Iterator((p, a))
     }

@@ -842,7 +842,7 @@ object Dedup {
     //     flat-semdedup argmax shape (~2 s).
     // (2) the kf·dim Box-Muller entries as COLUMN EXPRESSIONS explode:
     //     2880 md5+conv trees in one projection OOM'd janino's compile.
-    //     A scalar JVM loop per cell row is the IVF.cellUdf precedent —
+    //     A scalar JVM loop per cell row, as IVF's cell assignment is —
     //     the same MessageDigest arithmetic as KNN.hyperplanes, so the
     //     oracle replay is bit-identical.
     // (3) localCheckpoint(true) MATERIALIZES the anchors: without the

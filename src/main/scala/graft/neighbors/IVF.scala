@@ -28,72 +28,54 @@ object IVF {
       finally rows.unpersist(blocking = false)
     }
 
-  /** Nearest-cell id. A fully-unrolled expression tree over k·dim literals
-    * exceeds the codegen method limit, so the quantizer assignment runs as
-    * a JVM closure over the broadcast centers (tight primitive loop —
-    * faster than the interpreted-expression fallback, and not part of any
-    * oracle contract). */
-  private def cellUdf(idx: Index) = udf { (v: Seq[Double]) =>
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < idx.centers.length) {
-      val ctr = idx.centers(c)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
+  /** The nprobe nearest cells for a query vector ([[Lloyd.nearestN]]). */
+  private def probeUdf(idx: Index, nprobe: Int) = udf { (v: Seq[Double]) =>
+    Lloyd.nearestN(v.toArray, idx.centers, nprobe)
   }
 
-  /** The nprobe nearest cells for a query vector. */
-  private def probeUdf(idx: Index, nprobe: Int) = udf { (v: Seq[Double]) =>
-    idx.centers.indices.map { c =>
-      val ctr = idx.centers(c)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-      (d, c)
-    }.sortBy(identity).take(nprobe).map(_._2)
+  /** The corpus as (id, cv, cell): the rows an IVF list holds, each in its
+    * [[Lloyd.nearest]] cell. A fully-unrolled expression tree over k·dim
+    * literals exceeds the codegen method limit, so the assignment runs as a
+    * JVM closure over the broadcast centers (tight primitive loop — faster
+    * than the interpreted-expression fallback, and not part of any oracle
+    * contract). */
+  private def cells(corpus: DataFrame, idCol: String, vecCol: String, idx: Index): DataFrame = {
+    val v = col(vecCol).cast("array<double>")
+    val cell = udf((x: Seq[Double]) => Lloyd.nearest(x.toArray, idx.centers))
+    corpus.select(col(idCol).cast("long").as("id"), v.as("cv"), cell(v).as("cell"))
   }
 
   /** Top-k cosine neighbors probing nprobe cells per query. */
   def topK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-           idx: Index, k: Int, nprobe: Int): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val dim = idx.centers(0).length
-    val data = corpus.select(col(idCol).cast("long").as("id"), v.as("cv"),
-      cellUdf(idx)(v).as("cell"))
-    // per-query list of the nprobe nearest cells, exploded → (qid, qv, cell)
-    val q = queries.select(col(idCol).cast("long").as("qid"), v.as("qv"),
-        probeUdf(idx, nprobe)(v).as("probes"))
-      .select(col("qid"), col("qv"), explode(col("probes")).as("cell"))
-    val s = VectorOps.dotFixed(col("qv"), col("cv"), dim) /
-      sqrt(VectorOps.sqNormFixed(col("qv"), dim) * VectorOps.sqNormFixed(col("cv"), dim))
-    val pairs = q.join(data, Seq("cell")).select(col("qid"), col("id"), s.as("_s"))
-    // bounded-heap rerank (map-side combined) instead of a row_number
-    // window over the full O(candidates) pair set
-    KNN.topKPerKey(pairs, k, KNN.nearFirst(KNN.Cosine))
-  }
+           idx: Index, k: Int, nprobe: Int): DataFrame =
+    probe(cells(corpus, idCol, vecCol, idx), queries, idCol, vecCol, idx, k, nprobe)
 
   /** Persist the corpus bucketed by quantizer cell — at scale the index IS
     * the table layout: probes then join bucket-to-bucket, so the corpus is
     * never re-shuffled at query time (only the small probe side moves).
     * Written once per index build, like any IVF list structure. */
   def writeBucketed(corpus: DataFrame, idCol: String, vecCol: String, idx: Index,
-                    table: String, nBuckets: Int = 32): Unit = {
-    val v = col(vecCol).cast("array<double>")
-    corpus.select(col(idCol).cast("long").as("id"), v.as("cv"),
-        cellUdf(idx)(v).as("cell"))
+                    table: String, nBuckets: Int = 32): Unit =
+    cells(corpus, idCol, vecCol, idx)
       .write.mode("overwrite").bucketBy(nBuckets, "cell")
       .format("parquet").saveAsTable(table)
-  }
 
   /** Top-k over a bucketed corpus table written by writeBucketed: the scan
     * side carries its bucketing, so the cell join adds no corpus exchange. */
   def topKBucketed(spark: org.apache.spark.sql.SparkSession, table: String,
                    queries: DataFrame, idCol: String, vecCol: String,
-                   idx: Index, k: Int, nprobe: Int): DataFrame = {
-    val data = spark.table(table)
+                   idx: Index, k: Int, nprobe: Int): DataFrame =
+    probe(spark.table(table), queries, idCol, vecCol, idx, k, nprobe)
+
+  /** The search both top-k entry points run over a corpus side of
+    * (id, cv, cell): each query explodes into its nprobe nearest cells
+    * (nprobe above the cell count probes them all), joins the corpus on the
+    * cell, and the cosine-scored pairs rerank in a bounded heap
+    * (map-side combined) instead of a row_number window over the full
+    * O(candidates) pair set. */
+  private def probe(data: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+                    idx: Index, k: Int, nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"IVF: nprobe must be at least 1, got $nprobe")
     val v = col(vecCol).cast("array<double>")
     val dim = idx.centers(0).length
     val q = queries.select(col(idCol).cast("long").as("qid"), v.as("qv"),
@@ -113,21 +95,10 @@ object IVF {
   def recallSummary(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nCells: Int, k: Int, nprobe: Int): DataFrame = {
     val idx = train(corpus, vecCol, nCells)
-    val approx = topK(corpus, queries, idCol, vecCol, idx, k, nprobe)
-      .select(col("qid"), col("id"))
-    val exact = KNN.bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol,
-      k, KNN.Cosine).select(col("qid"), col("id"))
-    val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
-      .agg(count(lit(1)).cast("double").as("hits"))
-    val scanned = scannedShare(corpus, queries, idCol, vecCol, idx, nprobe)
-    exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
-      .join(hits, Seq("qid"), "left")
-      .join(scanned, Seq("qid"), "left")
-      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"),
-        col("scanned"))
-      .agg(count(lit(1)).cast("long").as("n_queries"),
-        round(avg(col("recall")), 4).as("avg_recall"),
-        round(avg(col("scanned")), 4).as("scanned_frac"))
+    KNN.recallFrame(corpus, queries, idCol, vecCol, k, KNN.Cosine,
+      topK(corpus, queries, idCol, vecCol, idx, k, nprobe),
+      Some(scannedShare(corpus, queries, idCol, vecCol, idx, nprobe)))(
+      round(avg(col("scanned")), 4).as("scanned_frac"))
   }
 
   /** (qid, scanned): per query, the share of the corpus in the nprobe
@@ -136,11 +107,10 @@ object IVF {
     * [[IVFPQ.recallSummary]]). */
   private[neighbors] def scannedShare(corpus: DataFrame, queries: DataFrame, idCol: String,
                                       vecCol: String, idx: Index, nprobe: Int): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val share = corpus.select(cellUdf(idx)(v).as("cell")).groupBy("cell").count()
+    val share = cells(corpus, idCol, vecCol, idx).groupBy("cell").count()
       .select(col("cell"), (col("count") / sum(col("count")).over()).as("share"))
     queries.select(col(idCol).cast("long").as("qid"),
-        explode(probeUdf(idx, nprobe)(v)).as("cell"))
+        explode(probeUdf(idx, nprobe)(col(vecCol).cast("array<double>"))).as("cell"))
       .join(share, Seq("cell"), "left").groupBy("qid")
       .agg(sum(coalesce(col("share"), lit(0.0))).as("scanned"))
   }

@@ -1,5 +1,6 @@
 package graft.neighbors
 
+import graft.cluster.Lloyd
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,63 +41,49 @@ object IVFPQ {
       Index(ivf, PQ.train(res, "rv", m, kCodes, seed))
     }
 
-  /** (cell, residual) for one vector — broadcast-centers JVM closure,
-    * same codegen-limit justification as IVF.cellUdf. Every UDF here is
+  /** (cell, residual) for one vector: its [[Lloyd.nearest]] cell and
+    * x − that cell's centroid (IVFPQ's residual encoding). */
+  private def cellResidual(ivf: IVF.Index, v: Seq[Double]): (Int, Array[Double]) = {
+    val x = v.toArray
+    val c = Lloyd.nearest(x, ivf.centers)
+    (c, residual(x, ivf.centers(c)))
+  }
+
+  private def residual(x: Array[Double], ctr: Array[Double]): Array[Double] =
+    Array.tabulate(ctr.length)(i => x(i) - ctr(i))
+
+  /** [[cellResidual]] as a broadcast-centers JVM closure, for the same
+    * codegen-limit reason as IVF's cell assignment. Every UDF here is
     * emitted through a structural barrier (Barrier.once, or the Generate
     * that explode() already is): a struct result read through two
     * getFields must not run the UDF twice per row, nor the per-probe ADC
     * table M times per candidate (see PQ.encodeUdf). */
-  private def residualUdf(ivf: IVF.Index) = udf { (v: Seq[Double]) =>
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < ivf.centers.length) {
-      val ctr = ivf.centers(c)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    val ctr = ivf.centers(best)
-    (best, Array.tabulate(ctr.length)(i => v(i) - ctr(i)))
-  }
+  private def residualUdf(ivf: IVF.Index) = udf { (v: Seq[Double]) => cellResidual(ivf, v) }
 
   /** Corpus → (id, cell, code): the compressed, cell-bucketable index. */
   def encode(corpus: DataFrame, idCol: String, vecCol: String, idx: Index): DataFrame = {
     val enc = udf { (v: Seq[Double]) =>
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < idx.ivf.centers.length) {
-        val ctr = idx.ivf.centers(c)
-        var d = 0.0; var i = 0
-        while (i < ctr.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      val ctr = idx.ivf.centers(best)
-      (best, PQ.encodeVec(idx.cb, Array.tabulate(ctr.length)(i => v(i) - ctr(i))))
+      val (c, r) = cellResidual(idx.ivf, v)
+      (c, PQ.encodeVec(idx.cb, r))
     }
     graft.core.Barrier.once(corpus, Seq(col(idCol).cast("long").as("id")),
         enc(col(vecCol).cast("array<double>")), "_e")
       .select(col("id"), col("_e._1").as("cell"), col("_e._2").as("code"))
   }
 
-  /** The nprobe nearest cells with their per-cell residual ADC tables. */
+  /** The nprobe nearest cells ([[Lloyd.nearestN]]) with their per-cell
+    * residual ADC tables. */
   private def probeLutUdf(idx: Index, nprobe: Int) = udf { (v: Seq[Double]) =>
-    idx.ivf.centers.indices.map { c =>
-      val ctr = idx.ivf.centers(c)
-      var d = 0.0; var i = 0
-      while (i < ctr.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-      (d, c)
-    }.sortBy(identity).take(nprobe).map { case (_, c) =>
-      val ctr = idx.ivf.centers(c)
-      (c, PQ.adcVec(idx.cb, Array.tabulate(ctr.length)(i => v(i) - ctr(i))))
-    }
+    val x = v.toArray
+    Lloyd.nearestN(x, idx.ivf.centers, nprobe).map(c =>
+      (c, PQ.adcVec(idx.cb, residual(x, idx.ivf.centers(c)))))
   } // consumed directly under explode(): the Generate node IS the barrier
 
   /** Top-k by asymmetric distance over the probed cells: cell-key join,
     * M element_at adds per candidate, bounded-heap rerank. */
   def topK(codes: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
            idx: Index, k: Int, nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"IVFPQ: nprobe must be at least 1, got $nprobe")
     val q = queries.select(col(idCol).cast("long").as("qid"),
         explode(probeLutUdf(idx, nprobe)(col(vecCol).cast("array<double>"))).as("p"))
       .select(col("qid"), col("p._1").as("cell"), col("p._2").as("lut"))
@@ -114,19 +101,9 @@ object IVFPQ {
     * set). */
   def topKRefined(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, idx: Index, k: Int,
-                  nprobe: Int, shortlist: Int): DataFrame = {
-    val cand = topK(codes, queries, idCol, vecCol, idx, shortlist, nprobe)
-      .select(col("qid"), col("id"))
-    val cv = corpus.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("_cv"))
-    val qv = queries.select(col(idCol).cast("long").as("qid"),
-      col(vecCol).cast("array<double>").as("_qv"))
-    val dim = idx.ivf.centers(0).length
-    val exactD = graft.core.VectorOps.sqDistFixed(col("_qv"), col("_cv"), dim)
-    val pairs = cand.join(cv, "id").join(broadcast(qv), "qid")
-      .select(col("qid"), col("id"), exactD.as("_s"))
-    KNN.topKPerKey(pairs, k, KNN.nearFirst(KNN.Euclidean))
-  }
+                  nprobe: Int, shortlist: Int): DataFrame =
+    KNN.refine(topK(codes, queries, idCol, vecCol, idx, shortlist, nprobe), corpus, queries,
+      idCol, vecCol, idx.ivf.centers(0).length, k)
 
   /** Recall@k vs exact L2 brute force + compression + probed fraction —
     * the figure-of-merit surface, as for [[IVF]] and [[PQ]].
@@ -139,25 +116,13 @@ object IVFPQ {
                     k: Int, nprobe: Int, shortlist: Int = 0): DataFrame = {
     val idx = train(corpus, vecCol, nCells, m, kCodes)
     val codes = encode(corpus, idCol, vecCol, idx)
-    val approx = (if (shortlist > k)
+    val approx = if (shortlist > k)
         topKRefined(codes, corpus, queries, idCol, vecCol, idx, k, nprobe, shortlist)
-      else topK(codes, queries, idCol, vecCol, idx, k, nprobe))
-      .select(col("qid"), col("id"))
-    val exact = KNN.bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol,
-      k, KNN.Euclidean).select(col("qid"), col("id"))
-    val dim = idx.ivf.centers(0).length
-    val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
-      .agg(count(lit(1)).cast("double").as("hits"))
-    val scanned = IVF.scannedShare(corpus, queries, idCol, vecCol, idx.ivf, nprobe)
-    exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
-      .join(hits, Seq("qid"), "left")
-      .join(scanned, Seq("qid"), "left")
-      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"),
-        col("scanned"))
-      .agg(count(lit(1)).cast("long").as("n_queries"),
-        round(avg(col("recall")), 4).as("avg_recall"),
-        lit(dim * 4L / m.toLong).cast("long").as("compression_x"),
-        round(lit(nprobe.toDouble / nCells), 4).as("probed_frac"),
-        round(avg(col("scanned")), 4).as("scanned_frac"))
+      else topK(codes, queries, idCol, vecCol, idx, k, nprobe)
+    KNN.recallFrame(corpus, queries, idCol, vecCol, k, KNN.Euclidean, approx,
+      Some(IVF.scannedShare(corpus, queries, idCol, vecCol, idx.ivf, nprobe)))(
+      lit(idx.cb.subDim * 4L).as("compression_x"),
+      round(lit(nprobe.toDouble / nCells), 4).as("probed_frac"),
+      round(avg(col("scanned")), 4).as("scanned_frac"))
   }
 }

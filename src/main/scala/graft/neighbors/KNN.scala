@@ -84,6 +84,41 @@ object KNN {
       .select(col("qid"), col("id"), s.as("_s"))
   }
 
+  /** Exact L2 rerank of an ANN shortlist `cand` (qid, id), shared by
+    * [[PQ.topKRefined]] and [[IVFPQ.topKRefined]]: the candidates join the
+    * raw corpus vectors on id and the broadcast query vectors on qid, and
+    * the k nearest by exact squared distance remain. `dim` comes from the
+    * index, so no job reads it off the corpus. */
+  private[neighbors] def refine(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                                idCol: String, vecCol: String, dim: Int, k: Int): DataFrame = {
+    val cv = corpus.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("_cv"))
+    val qv = queries.select(col(idCol).cast("long").as("qid"), asDouble(col(vecCol)).as("_qv"))
+    val exactD = VectorOps.sqDistFixed(col("_qv"), col("_cv"), dim)
+    val pairs = cand.select(col("qid"), col("id")).join(cv, "id").join(broadcast(qv), "qid")
+      .select(col("qid"), col("id"), exactD.as("_s"))
+    topKPerKey(pairs, k, nearFirst(Euclidean))
+  }
+
+  /** The recall summary frame of the three ANN indexes: per query, the
+    * share of the exact `metric` top k (brute force) that `approx`
+    * (qid, id, …) found, left-joined with `perQuery` (qid, …) when given,
+    * then aggregated to n_queries, avg_recall and the index's own `more`
+    * columns. */
+  private[neighbors] def recallFrame(corpus: DataFrame, queries: DataFrame, idCol: String,
+                                     vecCol: String, k: Int, metric: Metric, approx: DataFrame,
+                                     perQuery: Option[DataFrame])(more: Column*): DataFrame = {
+    val exact = bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol, k, metric)
+      .select(col("qid"), col("id"))
+    val hits = exact.join(approx.select(col("qid"), col("id")), Seq("qid", "id"))
+      .groupBy("qid").agg(count(lit(1)).cast("double").as("hits"))
+    val total = exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
+      .join(hits, Seq("qid"), "left")
+    perQuery.fold(total)(total.join(_, Seq("qid"), "left"))
+      .withColumn("recall", coalesce(col("hits"), lit(0.0)) / col("total"))
+      .agg(count(lit(1)).cast("long").as("n_queries"),
+        round(avg(col("recall")), 4).as("avg_recall") +: more: _*)
+  }
+
   /** True when `a` ranks nearer than `b` (score, id). */
   private[graft] def nearFirst(metric: Metric): ((Double, Long), (Double, Long)) => Boolean =
     metric match {

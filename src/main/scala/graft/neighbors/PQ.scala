@@ -1,5 +1,6 @@
 package graft.neighbors
 
+import graft.cluster.Lloyd
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -58,55 +59,37 @@ object PQ {
     val subPts = (0 until m).map { s =>
       sample.map(row => java.util.Arrays.copyOfRange(row, s * sub, (s + 1) * sub))
     }
-    Codebook(m, k, graft.cluster.Lloyd.bestOf(subPts, k, iters = 40,
+    Codebook(m, k, Lloyd.bestOf(subPts, k, iters = 40,
       (s, r) => seed + s + r * 1000L).toArray)
   }
 
-  /** Nearest-code vector for one input (shared with IVFPQ's residual
-    * encoding). */
-  private[neighbors] def encodeVec(cb: Codebook, v: Seq[Double]): Array[Int] = {
-    val sub = cb.subDim
-    Array.tabulate(cb.m) { s =>
-      var best = 0; var bestD = Double.MaxValue
-      var j = 0
-      while (j < cb.k) {
-        val ctr = cb.centers(s)(j)
-        var d = 0.0; var i = 0
-        while (i < sub) { val t = v(s * sub + i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
-      }
-      best
-    }
-  }
+  /** Nearest-code vector for one input: per subspace s, [[Lloyd.nearest]]
+    * over the slice at s·subDim (shared with IVFPQ's residual encoding). */
+  private[neighbors] def encodeVec(cb: Codebook, v: Array[Double]): Array[Int] =
+    Array.tabulate(cb.m)(s => Lloyd.nearest(v, cb.centers(s), s * cb.subDim))
 
   /** The flattened M×K ADC table: lut[s*k + j] = ‖v_s − c_sj‖² (shared
     * with IVFPQ's per-probe residual tables). */
-  private[neighbors] def adcVec(cb: Codebook, v: Seq[Double]): Array[Double] = {
-    val sub = cb.subDim
+  private[neighbors] def adcVec(cb: Codebook, v: Array[Double]): Array[Double] =
     Array.tabulate(cb.m * cb.k) { x =>
-      val s = x / cb.k; val j = x % cb.k
-      val ctr = cb.centers(s)(j)
-      var d = 0.0; var i = 0
-      while (i < sub) { val t = v(s * sub + i) - ctr(i); d += t * t; i += 1 }
-      d
+      val s = x / cb.k
+      Lloyd.sq(v, cb.centers(s)(x % cb.k), s * cb.subDim)
     }
-  }
 
-  /** Nearest-centroid code per subspace (broadcast-codebook JVM closure —
-    * same justification as IVF.cellUdf: an m·k·subdim unrolled expression
-    * tree exceeds the codegen method limit). Emitted through
+  /** Nearest-centroid code per subspace (broadcast-codebook JVM closure: an
+    * m·k·subdim unrolled expression tree exceeds the codegen method limit,
+    * so the assignment is a primitive loop over the codebook). Emitted through
     * [[graft.core.Barrier.once]]: the M element_at reads of the ADC
     * table must not re-run the whole m·k·subdim table build M times per
     * candidate row — 8× the scan cost at kCodes=64 (measured
     * 23.6 s → 1.2 s at sf0.1). r16: the barrier is the STRUCTURAL
     * one-element Generate, not an asNondeterministic marker. */
   private def encodeUdf(cb: Codebook) =
-    udf { (v: Seq[Double]) => encodeVec(cb, v) }
+    udf { (v: Seq[Double]) => encodeVec(cb, v.toArray) }
 
   /** The flattened M×K ADC table for a query. */
   private def lutUdf(cb: Codebook) =
-    udf { (v: Seq[Double]) => adcVec(cb, v) }
+    udf { (v: Seq[Double]) => adcVec(cb, v.toArray) }
 
   /** Corpus → (id, code) — the compressed index; persist this instead of
     * the raw vectors (32× smaller at m=8 over 64-dim float). */
@@ -143,19 +126,9 @@ object PQ {
     * stays the compressed one. */
   def topKRefined(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, cb: Codebook, k: Int,
-                  shortlist: Int): DataFrame = {
-    val cand = topK(codes, queries, idCol, vecCol, cb, shortlist)
-      .select(col("qid"), col("id"))
-    val cv = corpus.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("_cv"))
-    val qv = queries.select(col(idCol).cast("long").as("qid"),
-      col(vecCol).cast("array<double>").as("_qv"))
-    val dim = graft.core.VectorOps.dimOf(cv, col("_cv"))
-    val exactD = graft.core.VectorOps.sqDistFixed(col("_qv"), col("_cv"), dim)
-    val pairs = cand.join(cv, "id").join(broadcast(qv), "qid")
-      .select(col("qid"), col("id"), exactD.as("_s"))
-    KNN.topKPerKey(pairs, k, KNN.nearFirst(KNN.Euclidean))
-  }
+                  shortlist: Int): DataFrame =
+    KNN.refine(topK(codes, queries, idCol, vecCol, cb, shortlist), corpus, queries,
+      idCol, vecCol, cb.m * cb.subDim, k)
 
   /** Recall@k vs exact L2 brute force + the compression ratio — the query
     * surface (PQ is approximate by construction; recall against the exact
@@ -166,20 +139,11 @@ object PQ {
                     shortlist: Int = 0): DataFrame = {
     val cb = train(corpus, vecCol, m, kCodes)
     val codes = encode(corpus, idCol, vecCol, cb)
-    val approx = (if (shortlist > k)
+    val approx = if (shortlist > k)
         topKRefined(codes, corpus, queries, idCol, vecCol, cb, k, shortlist)
-      else topK(codes, queries, idCol, vecCol, cb, k))
-      .select(col("qid"), col("id"))
-    val exact = KNN.bruteForceCached(queries, corpus, idCol, idCol, vecCol, vecCol,
-      k, KNN.Euclidean).select(col("qid"), col("id"))
-    val dim = corpus.select(size(col(vecCol).cast("array<double>"))).head().getInt(0)
-    val hits = exact.join(approx, Seq("qid", "id")).groupBy("qid")
-      .agg(count(lit(1)).cast("double").as("hits"))
-    exact.groupBy("qid").agg(count(lit(1)).cast("double").as("total"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), (coalesce(col("hits"), lit(0.0)) / col("total")).as("recall"))
-      .agg(count(lit(1)).cast("long").as("n_queries"),
-        round(avg(col("recall")), 4).as("avg_recall"),
-        lit(dim * 4L / m.toLong).cast("long").as("compression_x"))
+      else topK(codes, queries, idCol, vecCol, cb, k)
+    // dim 4-byte floats over m one-byte codes
+    KNN.recallFrame(corpus, queries, idCol, vecCol, k, KNN.Euclidean, approx, None)(
+      lit(cb.subDim * 4L).as("compression_x"))
   }
 }

@@ -22,20 +22,8 @@ object SVMGraft {
       binaryLabel.cast("double").as("_lab")): _*)
     val model = GradientSolver.fitQN(base, features, "_lab",
       l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss)
-    // train accuracy of sign(margin) against the 0/1 label, one pass over
-    // the rows; the coefficients stay in the closure, not in generated code
-    val w = model.coefs.toArray
-    val p = features.size
-    val (hits, n) = Rows.of(base, (features :+ "_lab").map(col)).treeAggregate((0L, 0L))(
-      (a, r) => {
-        var m = w(0)
-        var i = 0
-        while (i < p) { m += r(i) * w(i + 1); i += 1 }
-        (if ((m > 0) == (r(p) == 1.0)) a._1 + 1 else a._1, a._2 + 1)
-      },
-      (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-    // Spark's round(avg, 4): HALF_UP on the decimal form of the double
-    val acc = BigDecimal(hits.toDouble / n).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val (n, hits, _, _) = marginPass(base, features, model.coefs.toArray)
+    val acc = round4(hits.toDouble / n)
     val spark = df.sparkSession
     import spark.implicits._
     model.terms.zip(model.coefs).map { case (t, c) => (t, math.rint(c * 10000) / 10000, acc) }
@@ -89,7 +77,7 @@ object SVMGraft {
       binaryLabel.cast("double").as("_lab")): _*)
     val model = GradientSolver.fitQN(base, features, "_lab",
       l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss)
-    hingeGateRow(base, features, model.coefs)
+    hingeGateRow(base, features, model.coefs.toArray)
   }
 
   /** Same gate over the RFF feature map — the kernel-SVC twin. */
@@ -101,7 +89,7 @@ object SVMGraft {
       val model = GradientSolver.fitQN(zdf, zNames, "_lab",
         l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss,
         tol = 1e-5)
-      hingeGateRow(zdf, zNames, model.coefs)
+      hingeGateRow(zdf, zNames, model.coefs.toArray)
     } finally zdf.unpersist(blocking = false)
   }
 
@@ -146,24 +134,40 @@ object SVMGraft {
         "dual_obj_nonneg")
   }
 
-  /** One codegen'd aggregate: n, squared-hinge loss of the literal
-    * coefficients vs the zero model's exact 1.0, accuracy vs majority. */
+  /** n, squared-hinge loss of the fitted coefficients vs the zero model's
+    * exact 1.0, accuracy vs majority, from one [[marginPass]]. */
   private def hingeGateRow(base: DataFrame, features: Seq[String],
-                           coefs: Seq[Double]): DataFrame = {
-    val margin = features.zipWithIndex.foldLeft(lit(coefs.head)) {
-      case (acc, (f, i)) => acc + col(f) * coefs(i + 1)
-    }
-    val ypm = col("_lab") * 2.0 - 1.0
-    val hz = greatest(lit(0.0), lit(1.0) - ypm * margin)
-    base.agg(count(lit(1)).cast("long").as("_n"),
-        avg(hz * hz).as("_loss"),
-        avg(when((margin > 0) === (col("_lab") === 1.0), 1.0).otherwise(0.0)).as("_acc"),
-        avg(col("_lab")).as("_pbar"))
-      .select(col("_n").as("n_rows"),
-        (col("_loss") < 1.0).as("loss_lt_zero_model"),
-        (col("_acc") >= greatest(col("_pbar"), lit(1.0) - col("_pbar")))
-          .as("acc_ge_majority"))
+                           coefs: Array[Double]): DataFrame = {
+    val (n, hits, hinge, labels) = marginPass(base, features, coefs)
+    val pbar = labels / n
+    val spark = base.sparkSession
+    import spark.implicits._
+    Seq((n, hinge / n < 1.0, hits.toDouble / n >= math.max(pbar, 1.0 - pbar)))
+      .toDF("n_rows", "loss_lt_zero_model", "acc_ge_majority")
   }
+
+  /** One pass over the rows of `base` (`features`, then `_lab`) scoring the
+    * margin w(0) + Σ x_i·w(i+1): (rows, sign(margin) hits against the 0/1
+    * label, sum of squared hinge losses, sum of labels). The coefficients
+    * stay in the closure, not in generated code, so a fit over new values
+    * compiles no class. */
+  private def marginPass(base: DataFrame, features: Seq[String],
+                         w: Array[Double]): (Long, Long, Double, Double) = {
+    val p = features.size
+    Rows.of(base, (features :+ "_lab").map(col)).treeAggregate((0L, 0L, 0.0, 0.0))(
+      (a, r) => {
+        var m = w(0)
+        var i = 0
+        while (i < p) { m += r(i) * w(i + 1); i += 1 }
+        val h = math.max(0.0, 1.0 - (r(p) * 2.0 - 1.0) * m)
+        (a._1 + 1, if ((m > 0) == (r(p) == 1.0)) a._2 + 1 else a._2, a._3 + h * h, a._4 + r(p))
+      },
+      (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4), depth = 2)
+  }
+
+  /** Spark's round(x, 4): HALF_UP on the decimal form of the double. */
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Per-row RFF decision margins keyed by `idCol` — the comparison
     * surface the exact-SMO audit twin scores agreement against
@@ -223,15 +227,10 @@ object SVMGraft {
       val model = GradientSolver.fitQN(zdf, zNames, "_lab",
         l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss,
         tol = 1e-5)
-      val marginC = zNames.zipWithIndex.foldLeft(lit(model.coefs.head)) {
-        case (acc, (zn, j)) => acc + col(zn) * model.coefs(j + 1)
-      }
-      val row = zdf.agg(
-        r4(avg(when((marginC > 0) === (col("_lab") === 1.0), 1.0).otherwise(0.0))).as("acc"),
-        count(lit(1)).cast("long").as("n")).head()
+      val (n, hits, _, _) = marginPass(zdf, zNames, model.coefs.toArray)
       val spark = df.sparkSession
       import spark.implicits._
-      Seq((row.getLong(1), dRff.toLong, gamma, row.getDouble(0)))
+      Seq((n, dRff.toLong, gamma, round4(hits.toDouble / n)))
         .toDF("n", "d_rff", "gamma", "train_accuracy")
     } finally zdf.unpersist()
   }

@@ -66,6 +66,11 @@ class FitCompileSpec extends AnyFunSuite {
       SVMGraft.linearSvcSummary(_, fs, col("y") === 1.0, maxIter = 5).collect()) == 0)
   }
 
+  test("linearSvcGate compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 15L)(
+      SVMGraft.linearSvcGate(_, fs, col("y") === 1.0, maxIter = 5).collect()) == 0)
+  }
+
   test("arimaHR compiles no class for a second frame of new values") {
     assert(secondCallCompiles(series, 7L)(TimeSeries.arimaHR(_).collect()) == 0)
   }

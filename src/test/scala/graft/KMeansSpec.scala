@@ -1,17 +1,25 @@
 package graft
 
 import graft.cluster.{KMeansGraft, Lloyd}
-import graft.core.{FitCache, Tables}
+import graft.core.{FitCache, Rows, Tables}
 import graft.neighbors.{IVF, IVFPQ, PQ}
 import graft.preprocessing.Datasets
 import graft.tools.StageListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The library's one k-means ([[graft.cluster.Lloyd]]) behind KMeansGraft,
   * the IVF quantizer and the PQ codebooks: it finds planted centers, is
   * deterministic, survives k above the distinct-point count, fails loudly on
-  * a null feature and leaves no storage behind. */
+  * a null feature and leaves no storage behind. Its one nearest-center
+  * kernel ([[Lloyd.nearest]], [[Lloyd.nearestN]]) equals the sort-based
+  * rule it replaced, the bits of every quantizer output at sf0.001 (cell
+  * ids, probe lists, PQ and IVFPQ codes, Lloyd centers) are pinned, and the
+  * ANN indexes on it keep their argument and job contracts. */
 class KMeansSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
@@ -127,5 +135,182 @@ class KMeansSpec extends AnyFunSuite {
         .digest(bits.mkString(",").getBytes("UTF-8")).map("%02x".format(_)).mkString
       assert(digest == want, s"k=$k")
     }
+  }
+
+  private def cases[A](gen: Gen[A], n: Int): Seq[A] =
+    (1 to n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
+
+  // the rule every quantizer used before the shared kernel
+  private def sqRef(v: Seq[Double], c: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < c.length) { val t = v(i) - c(i); d += t * t; i += 1 }
+    d
+  }
+  private def argminRef(v: Seq[Double], cs: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cs.length) { val d = sqRef(v, cs(c)); if (d < bestD) { bestD = d; best = c }; c += 1 }
+    best
+  }
+  private def probesRef(v: Seq[Double], cs: Array[Array[Double]], n: Int): Seq[Int] =
+    cs.indices.map(c => (sqRef(v, cs(c)), c)).sortBy(identity).take(n).map(_._2)
+
+  // small integer coordinates, and some centers repeated: distance ties
+  private val centerSets = for {
+    dim <- Gen.choose(1, 6)
+    k <- Gen.choose(1, 12)
+    coord = Gen.choose(-3, 3).map(_.toDouble)
+    base <- Gen.listOfN(k, Gen.listOfN(dim, coord))
+    dups <- Gen.listOfN(k, Gen.choose(0, k - 1))
+    dupMask <- Gen.listOfN(k, Gen.oneOf(true, false))
+    v <- Gen.listOfN(dim, Gen.oneOf(coord, Gen.choose(-4.0, 4.0)))
+  } yield {
+    val cs = base.indices.map(j => if (dupMask(j)) base(dups(j)) else base(j))
+    (cs.map(_.toArray).toArray, v.toArray)
+  }
+
+  test("nearest and nearestN equal the argmin loop and the sort-and-take probe list") {
+    cases(centerSets, 400).foreach { case (cs, v) =>
+      val k = cs.length
+      assert(Lloyd.nearest(v, cs) == argminRef(v.toSeq, cs), s"v=${v.toSeq} cs=${cs.map(_.toSeq).toSeq}")
+      for (n <- Seq(1, 2, k - 1, k, k + 1, k + 5).distinct.filter(_ >= 1)) {
+        assert(Lloyd.nearestN(v, cs, n).toSeq == probesRef(v.toSeq, cs, n),
+          s"n=$n v=${v.toSeq} cs=${cs.map(_.toSeq).toSeq}")
+      }
+      assert(Lloyd.nearestN(v, cs, k + 3).length == k)
+      assert(Lloyd.nearestN(v, cs, 1).toSeq == Seq(Lloyd.nearest(v, cs)))
+    }
+  }
+
+  test("the subspace offset reads the same slice encodeVec cut out") {
+    val gen = for {
+      m <- Gen.choose(1, 4)
+      sub <- Gen.choose(1, 4)
+      k <- Gen.choose(1, 8)
+      cs <- Gen.listOfN(k, Gen.listOfN(sub, Gen.choose(-2.0, 2.0)))
+      v <- Gen.listOfN(m * sub, Gen.choose(-2.0, 2.0))
+      s <- Gen.choose(0, m - 1)
+    } yield (cs.map(_.toArray).toArray, v.toArray, s * sub, sub)
+    cases(gen, 300).foreach { case (cs, v, off, sub) =>
+      val slice = java.util.Arrays.copyOfRange(v, off, off + sub)
+      assert(Lloyd.nearest(v, cs, off) == argminRef(slice.toSeq, cs))
+      cs.foreach(c => assert(java.lang.Double.doubleToLongBits(Lloyd.sq(v, c, off)) ==
+        java.lang.Double.doubleToLongBits(sqRef(slice.toSeq, c))))
+    }
+  }
+
+  private def md5(lines: Seq[String]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  private def bits(xs: Iterable[Double]): String =
+    xs.map(java.lang.Double.doubleToLongBits).mkString(",")
+
+  /** Sorted rows, arrays spelled out element by element. */
+  private def rowsDigest(df: DataFrame): String =
+    md5(df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case x => String.valueOf(x)
+    }.mkString("|")).sorted.toSeq)
+
+  test("quantizer outputs at sf0.001 keep their pinned bits") {
+    // recorded before the quantizers shared Lloyd.nearest / nearestN: the
+    // shared kernel moves no cell id, probe list, code or center
+    FitCache.clear()
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter(col("vec_id") < 20)
+    val li = Tables.lineitem(spark, sf)
+    val rows = Rows.cached(li, Seq("l_quantity", "l_discount", "l_tax").map(col))
+    val (lloydCenters, lloydPass) =
+      try {
+        val cs = Lloyd.fit(rows, 4, 20, 1e-8, 42L)
+        (cs, Lloyd.pass(rows, cs))
+      } finally rows.unpersist(blocking = false)
+    val ivf = IVF.train(e, "embedding", 16)
+    val ivfpq = IVFPQ.train(e, "embedding", 16, m = 8, kCodes = 16)
+    val ivfpqCodes = IVFPQ.encode(e, "vec_id", "embedding", ivfpq)
+    val cb = PQ.train(e, "embedding", m = 8, k = 16)
+    val pqCodes = PQ.encode(e, "vec_id", "embedding", cb)
+    val got = Seq(
+      "Lloyd.fit centers" -> md5(Seq(bits(lloydCenters.flatten.toSeq))),
+      "Lloyd.pass" -> md5(Seq(lloydPass.counts.mkString(","),
+        bits(lloydPass.sums.flatten.toSeq), bits(Seq(lloydPass.sse)))),
+      "IVF.train centers" -> md5(Seq(bits(ivf.centers.flatten.toSeq))),
+      "IVF.topK rows" -> rowsDigest(IVF.topK(e, q, "vec_id", "embedding", ivf, k = 5, nprobe = 4)),
+      "IVFPQ.encode rows" -> rowsDigest(ivfpqCodes),
+      "IVFPQ.topK rows" -> rowsDigest(
+        IVFPQ.topK(ivfpqCodes, q, "vec_id", "embedding", ivfpq, k = 5, nprobe = 4)),
+      "IVFPQ.topKRefined rows" -> rowsDigest(IVFPQ.topKRefined(ivfpqCodes, e, q,
+        "vec_id", "embedding", ivfpq, k = 5, nprobe = 4, shortlist = 20)),
+      "PQ.encode rows" -> rowsDigest(pqCodes),
+      "PQ.topKRefined rows" -> rowsDigest(
+        PQ.topKRefined(pqCodes, e, q, "vec_id", "embedding", cb, k = 5, shortlist = 20)))
+    val want = Seq(
+      "Lloyd.fit centers" -> "3f9ac6c6bb0ff747410c9e7b3b7114a1",
+      "Lloyd.pass" -> "233b5451eb42463cee98122955064cbf",
+      "IVF.train centers" -> "57f61a26276a27e17afc3c4a714980cd",
+      "IVF.topK rows" -> "ee36641863801d7013007be773eaafa1",
+      "IVFPQ.encode rows" -> "1a10f3218b9396ad11f18e2da15918ed",
+      "IVFPQ.topK rows" -> "ec75dbeb48733b28d4fe50bdfdbf4ef8",
+      "IVFPQ.topKRefined rows" -> "cf72149fb951c5ccbb00b80efd068bf6",
+      "PQ.encode rows" -> "c190add566c89755ee70d603e5b72c1f",
+      "PQ.topKRefined rows" -> "5b3158746b08a421a6d323a3575d25d8")
+    assert(got == want, got.map { case (n, d) => s"$n -> $d" }.mkString("\n", "\n", ""))
+  }
+
+  test("nprobe below 1 fails; nprobe above nCells clamps to nCells") {
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter(col("vec_id") < 10)
+    val ivf = IVF.train(e, "embedding", 8)
+    val ivfpq = IVFPQ.train(e, "embedding", 8, m = 8, kCodes = 16)
+    val codes = IVFPQ.encode(e, "vec_id", "embedding", ivfpq)
+    spark.sql("DROP TABLE IF EXISTS q_ivf_nprobe")
+    IVF.writeBucketed(e, "vec_id", "embedding", ivf, "q_ivf_nprobe", nBuckets = 4)
+    try {
+      for (bad <- Seq(0, -1)) {
+        intercept[IllegalArgumentException](IVF.topK(e, q, "vec_id", "embedding", ivf, 5, bad))
+        intercept[IllegalArgumentException](
+          IVF.topKBucketed(spark, "q_ivf_nprobe", q, "vec_id", "embedding", ivf, 5, bad))
+        intercept[IllegalArgumentException](
+          IVFPQ.topK(codes, q, "vec_id", "embedding", ivfpq, 5, bad))
+      }
+      def same(over: DataFrame, all: DataFrame): Unit =
+        assert(rowsDigest(over) == rowsDigest(all) && over.count() == 50L)
+      same(IVF.topK(e, q, "vec_id", "embedding", ivf, 5, 20),
+        IVF.topK(e, q, "vec_id", "embedding", ivf, 5, 8))
+      same(IVF.topKBucketed(spark, "q_ivf_nprobe", q, "vec_id", "embedding", ivf, 5, 20),
+        IVF.topKBucketed(spark, "q_ivf_nprobe", q, "vec_id", "embedding", ivf, 5, 8))
+      same(IVFPQ.topK(codes, q, "vec_id", "embedding", ivfpq, 5, 20),
+        IVFPQ.topK(codes, q, "vec_id", "embedding", ivfpq, 5, 8))
+    } finally spark.sql("DROP TABLE IF EXISTS q_ivf_nprobe")
+  }
+
+  test("building PQ.topKRefined's frame starts no job but its broadcast collects") {
+    // the bounded-heap rerank turns its input into an RDD, and AQE collects
+    // that plan's broadcast sides right then; any other job (a dimension
+    // read off the corpus, say) is work the index already knows the answer to
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter(col("vec_id") < 10)
+    val cb = PQ.train(e, "embedding", m = 8, k = 16)
+    val codes = PQ.encode(e, "vec_id", "embedding", cb)
+    val sc = spark.sparkContext
+    val group = "pq-refine-build"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group) &&
+            !p.exists(_.getProperty("spark.job.tags", "").contains("broadcast exchange")))
+          jobs.add(j.stageInfos.map(_.name).mkString(", "))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build only")
+      try PQ.topKRefined(codes, e, q, "vec_id", "embedding", cb, k = 5, shortlist = 20)
+      finally sc.clearJobGroup()
+      org.apache.spark.graft.Codegen.drainListeners(sc)
+      assert(jobs.isEmpty, s"jobs started while building the frame: $jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }
