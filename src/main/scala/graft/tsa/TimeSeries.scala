@@ -1,9 +1,10 @@
 package graft.tsa
 
 import graft.core.Num.{r4, r6}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, TypedColumn}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Time-series surface (reference python/cuml/tsa/: stationarity.pyx,
   * holtwinters.pyx, arima.pyx; python/cuml/filter/kalman_filter.pyx).
@@ -11,14 +12,14 @@ import org.apache.spark.sql.functions._
   * Batched-series layout, like the reference: many independent series keyed
   * by a series column. Everything partitions by series key, so 10⁶ series ×
   * long histories parallelize trivially, and no code loops over the
-  * series one at a time. Per-series recursions and fits run in-partition,
-  * one call per series. [[bySeries]] groups by the `series` column itself,
-  * so a frame already clustered by series (as [[dailySeries]] output is)
-  * is sorted within its partitions but not shuffled again; the seasonal
-  * Holt-Winters recursion and the ARIMA Hannan–Rissanen fit
-  * ([[arimaHRStage]]) run on it. The other recursions group by a key
-  * closure, which adds one exchange. The AR-only fits are ONE grouped
-  * aggregate + a per-row closed-form solve ([[cramer3]]).
+  * series one at a time. Every per-series recursion and fit (the
+  * exponential-smoothing and Holt-Winters family, the Kalman filters and
+  * the ARIMA Hannan–Rissanen and likelihood fits) runs in-partition, one
+  * call per series, through [[bySeries]]: it groups by the `series` column
+  * itself, so a frame already clustered by series (as [[dailySeries]]
+  * output is) is sorted within its partitions but not shuffled again. The
+  * AR-only fits are ONE grouped aggregate + a per-row closed-form solve
+  * ([[cramer3]]).
   */
 object TimeSeries {
   /** Daily aggregation of the events table into (series, t, x) — t is a
@@ -30,19 +31,28 @@ object TimeSeries {
       .withColumn("t", row_number().over(w).cast("long") - 1)
   }
 
-  /** One call of `f` per series, in-partition, on the series' (t, x)
-    * observations in t order (x None where the input is null). Groups by
-    * the `series` column itself rather than by a key closure, so a frame
-    * already clustered by series is sorted within its partitions but not
-    * shuffled again. */
-  private def bySeries[U: Encoder](series: DataFrame)(
-      f: (String, IndexedSeq[(Long, Option[Double])]) => Iterator[U]): Dataset[U] = {
+  /** The x column of a (series, t, x) frame, as [[bySeries]] reads it. */
+  private val X: TypedColumn[Any, Double] = col("x").cast("double").as[Double](Encoders.scalaDouble)
+
+  /** One call of `f` per series, in-partition, on the series' (t, v)
+    * observations in t order, v the `value` column (None where it is
+    * null). Groups by the `series` column itself rather than by a key
+    * closure, so a frame already clustered by series is sorted within its
+    * partitions but not shuffled again. */
+  private def bySeries[V: TypeTag, U: Encoder](series: DataFrame, value: TypedColumn[Any, V])(
+      f: (String, IndexedSeq[(Long, Option[V])]) => Iterator[U]): Dataset[U] = {
     import series.sparkSession.implicits._
     series.select(col("series").cast("string").as("series"), col("t").cast("long").as("t"),
-        col("x").cast("double").as("x"))
-      .groupBy(col("series")).as[String, (String, Long, Option[Double])]
+        value.as("v"))
+      .groupBy(col("series")).as[String, (String, Long, Option[V])]
       .flatMapGroups((key, it) => f(key, it.map(r => (r._2, r._3)).toIndexedSeq.sortBy(_._1)))
   }
+
+  /** A series' values in t order. A null one fails the call: no recursion
+    * here defines a step on a missing observation. */
+  private def defined[V](key: String, obs: IndexedSeq[(Long, Option[V])],
+                         column: String = "x"): IndexedSeq[V] =
+    obs.map(_._2.getOrElse(throw new IllegalArgumentException(s"null $column in series $key")))
 
   /** Simple exponential smoothing — the HoltWinters level channel
     * (reference tsa/holtwinters.pyx, additive level only):
@@ -53,18 +63,12 @@ object TimeSeries {
     * every (series, t, x, smoothed) row; parallel across series. */
   def sesSmoothed(series: DataFrame, alpha: Double): DataFrame = {
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2)
-      if (xs.isEmpty) Iterator.empty
-      else {
-        var s = xs.head._3
-        var first = true
-        xs.iterator.map { case (_, t, x) =>
-          if (first) first = false else s = alpha * x + (1.0 - alpha) * s
-          (key, t, x, s)
-        }
+    bySeries(series, X) { (key, obs) =>
+      val xs = defined(key, obs)
+      var s = xs(0)
+      obs.indices.iterator.map { i =>
+        if (i > 0) s = alpha * xs(i) + (1.0 - alpha) * s
+        (key, obs(i)._1, xs(i), s)
       }
     }.toDF("series", "t", "x", "smoothed")
   }
@@ -72,27 +76,17 @@ object TimeSeries {
   /** Holt's linear-trend smoothing (the level+trend channels of
     * reference tsa/holtwinters.pyx additive model):
     *   l_t = α·x_t + (1−α)(l_{t−1} + b_{t−1});  b_t = β(l_t − l_{t−1}) + (1−β)b_{t−1}
-    * init l_0 = x_0, b_0 = x_1 − x_0. Per-series sequential recursion run
-    * in-partition via groupByKey — parallel across series, like the
+    * init l_0 = x_0, b_0 = x_1 − x_0: [[holtRun]] at φ = 1, run in-partition
+    * per series ([[bySeries]]) — parallel across series, like the
     * reference's batched layout. Returns final level/trend and the 1-step
     * forecast per series. */
   def holtTrend(series: DataFrame, alpha: Double, beta: Double): DataFrame = {
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3)
+    bySeries(series, X) { (key, obs) =>
+      val xs = defined(key, obs)
       if (xs.length < 2) Iterator.empty
       else {
-        var l = xs(0)
-        var b = xs(1) - xs(0)
-        var i = 1
-        while (i < xs.length) {
-          val lPrev = l
-          l = alpha * xs(i) + (1.0 - alpha) * (l + b)
-          b = beta * (l - lPrev) + (1.0 - beta) * b
-          i += 1
-        }
+        val (l, b) = holtRun(xs, alpha, beta, 1.0)
         Iterator((key, xs.length.toLong - 1, l, b, l + b))
       }
     }.toDF("series", "t_last", "_l", "_b", "_f")
@@ -107,26 +101,16 @@ object TimeSeries {
     *   l_t = α·x_t + (1−α)(l_{t−1} + φ·b_{t−1})
     *   b_t = β(l_t − l_{t−1}) + (1−β)·φ·b_{t−1}
     *   ŷ_{T+k} = l + (φ + φ² + … + φᵏ)·b
-    * Same per-series in-partition recursion + scale posture as
-    * [[holtTrend]]; one row per (series, step). */
+    * Same per-series in-partition recursion ([[holtRun]]) and scale posture
+    * as [[holtTrend]]; one row per (series, step). */
   def holtDamped(series: DataFrame, alpha: Double, beta: Double, phi: Double,
                  h: Int): DataFrame = {
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    val fitted = rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3)
+    val fitted = bySeries(series, X) { (key, obs) =>
+      val xs = defined(key, obs)
       if (xs.length < 2) Iterator.empty
       else {
-        var l = xs(0)
-        var b = xs(1) - xs(0)
-        var i = 1
-        while (i < xs.length) {
-          val lPrev = l
-          l = alpha * xs(i) + (1.0 - alpha) * (l + phi * b)
-          b = beta * (l - lPrev) + (1.0 - beta) * phi * b
-          i += 1
-        }
+        val (l, b) = holtRun(xs, alpha, beta, phi)
         Iterator((key, l, b))
       }
     }.toDF("series", "_l", "_b")
@@ -141,6 +125,22 @@ object TimeSeries {
           struct(lit(k.toLong).as("step"), col(s"_f$k").as("forecast"))): _*)).as("u"))
       .select(col("series"), col("u.step").as("step"), col("level"), col("trend"),
         col("u.forecast").as("forecast"))
+  }
+
+  /** Damped-trend Holt's final (level, trend) on xs (length ≥ 2). At φ = 1
+    * it is Holt's linear trend exactly, since multiplying by 1.0 is exact. */
+  private def holtRun(xs: IndexedSeq[Double], alpha: Double, beta: Double,
+                      phi: Double): (Double, Double) = {
+    var l = xs(0)
+    var b = xs(1) - xs(0)
+    var i = 1
+    while (i < xs.length) {
+      val lPrev = l
+      l = alpha * xs(i) + (1.0 - alpha) * (l + phi * b)
+      b = beta * (l - lPrev) + (1.0 - beta) * phi * b
+      i += 1
+    }
+    (l, b)
   }
 
   /** Theta-method forecast (Assimakopoulos & Nikolopoulos 2000; the
@@ -185,38 +185,17 @@ object TimeSeries {
     *   s_t = γ(x_t − l_t) + (1−γ)s_{t−m}
     * Init (classical): l = mean(x_0..x_{m−1}), b = (mean of second m − mean
     * of first m)/m, s_i = x_i − l. Series shorter than 2m are skipped.
-    * Per-series in-partition recursion, parallel across series; the 1-step
-    * forecast adds the matching seasonal term. */
+    * Per-series in-partition recursion ([[hwRun]]), parallel across series;
+    * the 1-step forecast adds the matching seasonal term. */
   def holtWintersSeasonal(series: DataFrame, alpha: Double, beta: Double,
                           gamma: Double, period: Int,
                           multiplicative: Boolean = false): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    bySeries(series) { (key, obs) =>
-      val xs = obs.map(_._2.getOrElse(throw new IllegalArgumentException(s"null x in series $key")))
-      if (xs.length < 2 * m) Iterator.empty
-      else {
-        var l = xs.take(m).sum / m.toDouble
-        var b = (xs.slice(m, 2 * m).sum / m.toDouble - l) / m.toDouble
-        val seas = scala.collection.mutable.Queue(
-          xs.take(m).map(x => if (multiplicative) x / l else x - l): _*)
-        var t = m
-        while (t < xs.length) {
-          val sOld = seas.dequeue()
-          val lPrev = l
-          if (multiplicative) {
-            l = alpha * (xs(t) / sOld) + (1.0 - alpha) * (l + b)
-            b = beta * (l - lPrev) + (1.0 - beta) * b
-            seas.enqueue(gamma * (xs(t) / l) + (1.0 - gamma) * sOld)
-          } else {
-            l = alpha * (xs(t) - sOld) + (1.0 - alpha) * (l + b)
-            b = beta * (l - lPrev) + (1.0 - beta) * b
-            seas.enqueue(gamma * (xs(t) - l) + (1.0 - gamma) * sOld)
-          }
-          t += 1
-        }
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.map { xs =>
+        val (_, l, b, seas) = hwRun(xs, period, alpha, beta, gamma, multiplicative)
         val f = if (multiplicative) (l + b) * seas.head else l + b + seas.head
-        Iterator((key, xs.length.toLong - 1, l, b, f))
+        (key, xs.length.toLong - 1, l, b, f)
       }
     }.toDF("series", "t_last", "_l", "_b", "_f")
       .select(col("series"), col("t_last"),
@@ -228,61 +207,48 @@ object TimeSeries {
   /** h-step Holt-Winters forecasts — the reference's
     * ExponentialSmoothing.forecast(h) (tsa/holtwinters.pyx): run the same
     * per-series recursion as [[holtWintersSeasonal]], then emit
-    *   ŷ_{T+k} = l + k·b + s_{(k−1) mod m}   (additive)
-    *   ŷ_{T+k} = (l + k·b) · s_{(k−1) mod m} (multiplicative)
-    * for k = 1..h, where s is the final seasonal window (oldest first —
-    * s_0 is the season of time T+1). One row per (series, step). */
+    * [[hwSteps]]. One row per (series, step). */
   def holtWintersForecast(series: DataFrame, alpha: Double, beta: Double,
                           gamma: Double, period: Int, h: Int,
                           multiplicative: Boolean = false): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3)
-      if (xs.length < 2 * m) Iterator.empty
-      else {
-        var l = xs.take(m).sum / m.toDouble
-        var b = (xs.slice(m, 2 * m).sum / m.toDouble - l) / m.toDouble
-        val seas = scala.collection.mutable.Queue(
-          xs.take(m).map(x => if (multiplicative) x / l else x - l): _*)
-        var t = m
-        while (t < xs.length) {
-          val sOld = seas.dequeue()
-          val lPrev = l
-          if (multiplicative) {
-            l = alpha * (xs(t) / sOld) + (1.0 - alpha) * (l + b)
-            b = beta * (l - lPrev) + (1.0 - beta) * b
-            seas.enqueue(gamma * (xs(t) / l) + (1.0 - gamma) * sOld)
-          } else {
-            l = alpha * (xs(t) - sOld) + (1.0 - alpha) * (l + b)
-            b = beta * (l - lPrev) + (1.0 - beta) * b
-            seas.enqueue(gamma * (xs(t) - l) + (1.0 - gamma) * sOld)
-          }
-          t += 1
-        }
-        val seasArr = seas.toIndexedSeq
-        (1 to h).iterator.map { k =>
-          val s = seasArr((k - 1) % m)
-          val f = if (multiplicative) (l + k * b) * s else l + k * b + s
-          (key, k.toLong, f)
-        }
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.flatMap { xs =>
+        val (_, l, b, seas) = hwRun(xs, period, alpha, beta, gamma, multiplicative)
+        hwSteps(key, l, b, seas, h, multiplicative)
       }
     }.toDF("series", "step", "_f")
       .select(col("series"), col("step"), round(col("_f"), 4).as("forecast"))
   }
 
-  /** One additive Holt-Winters pass over a materialized series: returns the
-    * one-step-ahead SSE and the final (level, trend, seasonal window). The
-    * prediction at t is l+b+s_{t−m} using the PRE-update state — the loss
-    * the reference's optimizer minimizes (cpp/src/holtwinters/internal/
+  /** A series' values in t order when it spans the two seasons the
+    * Holt-Winters init reads (None when shorter than 2m). */
+  private def seasons(key: String, obs: IndexedSeq[(Long, Option[Double])],
+                      m: Int): Option[IndexedSeq[Double]] =
+    Some(defined(key, obs)).filter(_.length >= 2 * m)
+
+  /** The h forecasts from a final Holt-Winters state, for k = 1..h:
+    *   ŷ_{T+k} = l + k·b + s_{(k−1) mod m}   (additive)
+    *   ŷ_{T+k} = (l + k·b) · s_{(k−1) mod m} (multiplicative)
+    * where s is the final seasonal window (oldest first — s_0 is the
+    * season of time T+1). */
+  private def hwSteps(key: String, l: Double, b: Double, seas: IndexedSeq[Double],
+                      h: Int, multiplicative: Boolean): Iterator[(String, Long, Double)] =
+    (1 to h).iterator.map { k =>
+      val s = seas((k - 1) % seas.length)
+      (key, k.toLong, if (multiplicative) (l + k * b) * s else l + k * b + s)
+    }
+
+  /** One Holt-Winters pass over a materialized series (length ≥ 2m):
+    * returns the one-step-ahead SSE and the final (level, trend, seasonal
+    * window). The prediction at t is l+b+s_{t−m} ((l+b)·s_{t−m} in the
+    * multiplicative form) using the PRE-update state — the loss the
+    * reference's optimizer minimizes (cpp/src/holtwinters/internal/
     * hw_eval.h accumulates the same one-step error inside the smoothing
-    * recursion). Arithmetic mirrors [[holtWintersSeasonal]] op-for-op so
-    * the SQL oracle replays it bit-identically. */
-  private def hwRunAdd(xs: IndexedSeq[Double], m: Int, alpha: Double,
-                       beta: Double, gamma: Double,
-                       multiplicative: Boolean = false)
+    * recursion). Every Holt-Winters surface takes its state from here, and
+    * their SQL oracles replay these updates bit-identically. */
+  private def hwRun(xs: IndexedSeq[Double], m: Int, alpha: Double,
+                    beta: Double, gamma: Double, multiplicative: Boolean)
       : (Double, Double, Double, IndexedSeq[Double]) = {
     var l = xs.take(m).sum / m.toDouble
     var b = (xs.slice(m, 2 * m).sum / m.toDouble - l) / m.toDouble
@@ -322,7 +288,7 @@ object TimeSeries {
     var bestL = 0.0; var bestTr = 0.0
     var bestSeas: IndexedSeq[Double] = IndexedSeq.empty
     for (a <- alphas; bt <- betas; g <- gammas) {
-      val (sse, l, b, seas) = hwRunAdd(xs, m, a, bt, g, multiplicative)
+      val (sse, l, b, seas) = hwRun(xs, m, a, bt, g, multiplicative)
       if (sse < bestSse) {
         bestSse = sse; bestA = a; bestB = bt; bestG = g
         bestL = l; bestTr = b; bestSeas = seas
@@ -334,8 +300,8 @@ object TimeSeries {
   /** The (δφ, δθ) likelihood-grid argmax shared by arimaFitML and
     * arimaForecastML: ascending lattice with strict >, |φ| ≥ 0.99
     * candidates excluded. Returns None when no candidate is stationary. */
-  private def mlGridWinner(xs: Seq[Double], phi0: Double, theta0: Double,
-                           deltas: Seq[Double])
+  private[tsa] def mlGridWinner(xs: Seq[Double], phi0: Double, theta0: Double,
+                                deltas: Seq[Double])
       : Option[(Double, Double, Double, Double, Double)] = {
     var bestLl = Double.NegativeInfinity
     var bestPhi = 0.0; var bestTheta = 0.0; var bestS2 = 0.0; var bestPred = 0.0
@@ -369,16 +335,11 @@ object TimeSeries {
             betas: Seq[Double], gammas: Seq[Double],
             multiplicative: Boolean = false): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3).toIndexedSeq
-      if (xs.length < 2 * m) Iterator.empty
-      else {
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.map { xs =>
         val (sse, a, b, g, _, _, _) =
-          hwGridWinner(xs, m, alphas, betas, gammas, multiplicative)
-        Iterator((key, a, b, g, sse))
+          hwGridWinner(xs, period, alphas, betas, gammas, multiplicative)
+        (key, a, b, g, sse)
       }
     }.toDF("series", "_a", "_b", "_g", "_sse")
       // α/β/γ are reported raw (exact lattice members) — display rounding
@@ -408,18 +369,13 @@ object TimeSeries {
                betas: Seq[Double], gammas: Seq[Double],
                multiplicative: Boolean = false, maxIter: Int = 50): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3).toIndexedSeq
-      if (xs.length < 2 * m) Iterator.empty
-      else {
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.map { xs =>
         val (sseLat, a0, b0, g0, _, _, _) =
-          hwGridWinner(xs, m, alphas, betas, gammas, multiplicative)
-        val (a, b, g, sse) = hwOpt(xs, m, a0, b0, g0, multiplicative, maxIter)
-        Iterator((key, a, b, g, sse, a0, b0, g0, sseLat,
-          math.rint(sse * 10000) <= math.rint(sseLat * 10000)))
+          hwGridWinner(xs, period, alphas, betas, gammas, multiplicative)
+        val (a, b, g, sse) = hwOpt(xs, period, a0, b0, g0, multiplicative, maxIter)
+        (key, a, b, g, sse, a0, b0, g0, sseLat,
+          math.rint(sse * 10000) <= math.rint(sseLat * 10000))
       }
     }.toDF("series", "_a", "_b", "_g", "_sse", "_a0", "_b0", "_g0", "_sseL", "_leq")
       .select(col("series"),
@@ -443,7 +399,7 @@ object TimeSeries {
       math.log(c / (1.0 - c))
     }
     def sse(v: DenseVector[Double]): Double = {
-      val s = hwRunAdd(xs, m, sig(v(0)), sig(v(1)), sig(v(2)), multiplicative)._1
+      val s = hwRun(xs, m, sig(v(0)), sig(v(1)), sig(v(2)), multiplicative)._1
       if (s.isNaN || s.isInfinite) 1e18 else s
     }
     val f = new DiffFunction[DenseVector[Double]] {
@@ -465,25 +421,18 @@ object TimeSeries {
   }
 
   /** Fit-then-forecast: grid-fit (α,β,γ) per series as [[hwFit]], then emit
-    * h forecasts from the WINNING candidate's final state —
-    * ŷ_{T+k} = l + k·b + s_{(k−1) mod m}. This is the reference's
-    * fit().forecast(h) composition (holtwinters.pyx) with the fitted
-    * rather than user-supplied smoothing parameters. */
+    * h additive forecasts ([[hwSteps]]) from the WINNING candidate's final
+    * state. This is the reference's fit().forecast(h) composition
+    * (holtwinters.pyx) with the fitted rather than user-supplied smoothing
+    * parameters. */
   def hwFitForecast(series: DataFrame, period: Int, alphas: Seq[Double],
                     betas: Seq[Double], gammas: Seq[Double], h: Int): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3).toIndexedSeq
-      if (xs.length < 2 * m) Iterator.empty
-      else {
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.flatMap { xs =>
         val (_, _, _, _, l, b, seas) =
-          hwGridWinner(xs, m, alphas, betas, gammas, multiplicative = false)
-        (1 to h).iterator.map { k =>
-          (key, k.toLong, l + k * b + seas((k - 1) % m))
-        }
+          hwGridWinner(xs, period, alphas, betas, gammas, multiplicative = false)
+        hwSteps(key, l, b, seas, h, multiplicative = false)
       }
     }.toDF("series", "step", "_f")
       .select(col("series"), col("step"), round(col("_f"), 4).as("forecast"))
@@ -491,27 +440,13 @@ object TimeSeries {
 
   /** Fitted-state accessors — the reference's get_level()/get_trend()/
     * get_season() after fit (holtwinters.pyx:197-213 test surface): the
-    * grid-fit winner's final level, trend, and m-element seasonal window,
-    * unpivoted to (series, component, value) rows. */
+    * grid-fit winner's final level, trend, and m-element seasonal window
+    * ([[hwFitStateRaw]] rounded to 4 dp), unpivoted to
+    * (series, component, value) rows. */
   def hwFitState(series: DataFrame, period: Int, alphas: Seq[Double],
-                 betas: Seq[Double], gammas: Seq[Double]): DataFrame = {
-    import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3).toIndexedSeq
-      if (xs.length < 2 * m) Iterator.empty
-      else {
-        val (_, _, _, _, l, b, seas) =
-          hwGridWinner(xs, m, alphas, betas, gammas, multiplicative = false)
-        (("level", l) +: ("trend", b) +:
-          seas.zipWithIndex.map { case (s, i) => (s"season_$i", s) })
-          .iterator.map { case (c, v) => (key, c, v) }
-      }
-    }.toDF("series", "component", "_v")
-      .select(col("series"), col("component"), round(col("_v"), 4).as("value"))
-  }
+                 betas: Seq[Double], gammas: Seq[Double]): DataFrame =
+    hwFitStateRaw(series, period, alphas, betas, gammas)
+      .select(col("series"), col("key").as("component"), round(col("value"), 4).as("value"))
 
   /** The hw_fit grid winner's state at FULL precision, shaped for
     * persistence (ModelIO.saveSeriesModel: one (series, key, value) row
@@ -523,15 +458,10 @@ object TimeSeries {
   def hwFitStateRaw(series: DataFrame, period: Int, alphas: Seq[Double],
                     betas: Seq[Double], gammas: Seq[Double]): DataFrame = {
     import series.sparkSession.implicits._
-    val m = period
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val xs = it.toSeq.sortBy(_._2).map(_._3).toIndexedSeq
-      if (xs.length < 2 * m) Iterator.empty
-      else {
+    bySeries(series, X) { (key, obs) =>
+      seasons(key, obs, period).iterator.flatMap { xs =>
         val (_, _, _, _, l, b, seas) =
-          hwGridWinner(xs, m, alphas, betas, gammas, multiplicative = false)
+          hwGridWinner(xs, period, alphas, betas, gammas, multiplicative = false)
         (("level", l) +: ("trend", b) +:
           seas.zipWithIndex.map { case (s, i) => (s"season_$i", s) })
           .iterator.map { case (c, v) => (key, c, v) }
@@ -1053,10 +983,10 @@ object TimeSeries {
     * (rows, coefs) where rows carries per-observation (series, t, dx, l1,
     * l2, e, e1) — differenced value, its two lags, the preliminary-AR(2)
     * residual and its lag — and coefs the wide (series, c0, c1, c2) fit of
-    * dx_t ~ intercept + dx_{t−1} + ê_{t−1}. The per-row prediction and
-    * likelihood surfaces consume these without re-fitting; the in-sample
-    * SSE, the order grid and the forecast state are computed inside the
-    * same per-series pass instead, so they need no join back onto the rows.
+    * dx_t ~ intercept + dx_{t−1} + ê_{t−1}. The other ARIMA surfaces (the
+    * in-sample predictions and SSE, the order grid, the forecast state and
+    * the likelihood fits) run [[hannanRissanen]] inside their own
+    * per-series pass instead, so they need no join back onto the rows.
     *
     * Each frame is ONE in-partition pass per series ([[bySeries]]: grouped
     * by the series column in place, so a frame clustered by series, such
@@ -1071,12 +1001,12 @@ object TimeSeries {
     * constant series) leaves e null and no coefficient row. */
   private[tsa] def arimaHRStage(series: DataFrame): (DataFrame, DataFrame) = {
     import series.sparkSession.implicits._
-    val rows = bySeries(series) { (key, obs) =>
+    val rows = bySeries(series, X) { (key, obs) =>
       hannanRissanen(obs).iterator.flatMap(_._1.iterator.map {
         case (t, dx, l1, l2, e, e1) => (key, t, dx, l1, l2, e, e1)
       })
     }.toDF("series", "t", "dx", "l1", "l2", "e", "e1")
-    val cf = bySeries(series) { (key, obs) =>
+    val cf = bySeries(series, X) { (key, obs) =>
       hannanRissanen(obs).flatMap(_._2).iterator.map { case (c0, c1, c2) => (key, c0, c1, c2) }
     }.toDF("series", "c0", "c1", "c2")
     (rows, cf)
@@ -1161,7 +1091,7 @@ object TimeSeries {
     * oracle's grouped sum); order selection over 10⁶ series is one job. */
   def arimaInsample(series: DataFrame): DataFrame = {
     import series.sparkSession.implicits._
-    bySeries(series) { (key, obs) =>
+    bySeries(series, X) { (key, obs) =>
       hannanRissanen(obs).flatMap { case (rows, coefs) =>
         coefs.map { case (c0, c1, c2) =>
           val used = rows.collect { case (_, dx, Some(l1), _, _, Some(e1)) => (dx, l1, e1) }
@@ -1220,32 +1150,36 @@ object TimeSeries {
     * [[arimaInsample]]'s conditional-sum-of-squares approximation this
     * is the full prediction-error decomposition including the
     * stationary-init F_1 term. μ is the sample mean of the differences;
-    * non-stationary fits (|φ| ≥ 1) are dropped. One coefficient join +
-    * a per-series in-partition recursion — 10⁶ series is one job.
+    * non-stationary fits (|φ| ≥ 1) are dropped. The HR fit and the
+    * recursion share one per-series in-partition pass ([[mlStart]]) — 10⁶
+    * series is one job.
     * Output: (series, phi, theta, sigma2, loglik, aic_ml). */
   def arimaLoglike(series: DataFrame): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    val pars = cf.filter(abs(col("c1")) < 1.0)
-      .select(col("series"), col("c1").as("phi"), col("c2").as("theta"))
     import series.sparkSession.implicits._
-    val joined = rows.select(col("series").cast("string"), col("t").cast("long"),
-        col("dx").cast("double"))
-      .join(pars, Seq("series"))
-      .select(col("series"), col("t"), col("dx"), col("phi"), col("theta"))
-      .as[(String, Long, Double, Double, Double)]
-    joined.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val rs = it.toSeq.sortBy(_._2)
-      if (rs.isEmpty) Iterator.empty
-      else {
-        val (phi, theta) = (rs.head._4, rs.head._5)
-        val (s2, ll, _) = armaLoglikeScalar(rs.map(_._3), phi, theta)
-        Iterator((key, phi, theta, s2, ll, -2.0 * ll + 6.0))
+    bySeries(series, X) { (key, obs) =>
+      mlStart(key, obs).iterator.map { case (dx, phi, theta) =>
+        val (s2, ll, _) = armaLoglikeScalar(dx, phi, theta)
+        (key, phi, theta, s2, ll, -2.0 * ll + 6.0)
       }
     }.toDF("series", "_phi", "_theta", "_s2", "_ll", "_aic")
       .select(col("series"),
         round(col("_phi"), 4).as("phi"), round(col("_theta"), 4).as("theta"),
         round(col("_s2"), 4).as("sigma2"), round(col("_ll"), 4).as("loglik"),
         round(col("_aic"), 4).as("aic_ml"))
+  }
+
+  /** The likelihood fits' start on one series, from its own
+    * Hannan–Rissanen fit ([[hannanRissanen]]): the differences dx in t
+    * order and (φ₀, θ₀) = (c1, c2), where c1 is defined and |c1| < 1
+    * (None otherwise: a singular or non-stationary HR fit is dropped). */
+  private def mlStart(key: String, obs: IndexedSeq[(Long, Option[Double])])
+      : Option[(IndexedSeq[Double], Double, Double)] = {
+    defined(key, obs) // a null x fails the call, as in every recursion here
+    hannanRissanen(obs).flatMap { case (rows, coefs) =>
+      coefs.collect { case (_, Some(c1), Some(c2)) if math.abs(c1) < 1.0 =>
+        (rows.map(_._2), c1, c2)
+      }
+    }
   }
 
   /** ARIMA(1,1,1) fitted by MAXIMUM LIKELIHOOD — the reference's fit
@@ -1261,19 +1195,10 @@ object TimeSeries {
     * loglik). */
   def arimaFitML(series: DataFrame,
                  deltas: Seq[Double] = Seq(-0.1, -0.05, 0.0, 0.05, 0.1)): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    val pars = cf.filter(abs(col("c1")) < 1.0)
-      .select(col("series"), col("c1").as("phi0"), col("c2").as("theta0"))
     import series.sparkSession.implicits._
-    val joined = rows.select(col("series").cast("string"), col("t").cast("long"),
-        col("dx").cast("double"))
-      .join(pars, Seq("series"))
-      .select(col("series"), col("t"), col("dx"), col("phi0"), col("theta0"))
-      .as[(String, Long, Double, Double, Double)]
-    joined.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val rs = it.toSeq.sortBy(_._2)
-      if (rs.isEmpty) Iterator.empty
-      else mlGridWinner(rs.map(_._3), rs.head._4, rs.head._5, deltas)
+    bySeries(series, X) { (key, obs) =>
+      mlStart(key, obs)
+        .flatMap { case (dx, phi0, theta0) => mlGridWinner(dx, phi0, theta0, deltas) }
         .map { case (phi, theta, s2, ll, _) => (key, phi, theta, s2, ll) }.iterator
     }.toDF("series", "_phi", "_theta", "_s2", "_ll")
       .select(col("series"),
@@ -1303,27 +1228,15 @@ object TimeSeries {
     *          phi_lat, theta_lat, ll_lattice, opt_ge_lattice). */
   def arimaFitBFGS(series: DataFrame, maxIter: Int = 60,
                    deltas: Seq[Double] = Seq(-0.1, -0.05, 0.0, 0.05, 0.1)): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    val pars = cf.filter(abs(col("c1")) < 1.0)
-      .select(col("series"), col("c1").as("phi0"), col("c2").as("theta0"))
     import series.sparkSession.implicits._
-    val joined = rows.select(col("series").cast("string"), col("t").cast("long"),
-        col("dx").cast("double"))
-      .join(pars, Seq("series"))
-      .select(col("series"), col("t"), col("dx"), col("phi0"), col("theta0"))
-      .as[(String, Long, Double, Double, Double)]
-    joined.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val rs = it.toSeq.sortBy(_._2)
-      if (rs.length < 5) Iterator.empty
-      else {
-        val xs = rs.map(_._3)
-        mlGridWinner(xs, rs.head._4, rs.head._5, deltas).map {
-          case (phiL, thetaL, _, llLat, _) =>
-            val (phi, theta, s2, ll) = bfgsArma(xs, phiL, thetaL, maxIter)
-            (key, phi, theta, s2, ll, phiL, thetaL, llLat,
-              math.rint(ll * 10000) >= math.rint(llLat * 10000))
-        }.iterator
-      }
+    bySeries(series, X) { (key, obs) =>
+      mlStart(key, obs).filter(_._1.length >= 5).flatMap { case (dx, phi0, theta0) =>
+        mlGridWinner(dx, phi0, theta0, deltas).map { case (phiL, thetaL, _, llLat, _) =>
+          val (phi, theta, s2, ll) = bfgsArma(dx, phiL, thetaL, maxIter)
+          (key, phi, theta, s2, ll, phiL, thetaL, llLat,
+            math.rint(ll * 10000) >= math.rint(llLat * 10000))
+        }
+      }.iterator
     }.toDF("series", "_phi", "_theta", "_s2", "_ll", "_phiL", "_thetaL", "_llL", "_ge")
       .select(col("series"),
         round(col("_phi"), 4).as("phi"), round(col("_theta"), 4).as("theta"),
@@ -1377,9 +1290,10 @@ object TimeSeries {
     * [[arimaFitML]] grid, keep the winner's final one-step state
     * prediction ẑ_{T+1} from the Kalman recursion, then
     *   d̂x_{T+k} = μ + φ^{k−1}·ẑ_{T+1}   (future innovations zero)
-    * integrated back from x_T by a running sum. Winner selection and
-    * forecast seeding happen inside the one per-series pass; the only
-    * joins are last-x and the final unroll. */
+    * integrated back from x_T by a running sum, unrolled as h column
+    * expressions. The HR fit, winner selection and forecast seeding happen
+    * inside the one per-series pass ([[arimaMLWinners]]); the only join
+    * brings in the last observation x_T. */
   def arimaForecastML(series: DataFrame, h: Int,
                       deltas: Seq[Double] = Seq(-0.1, -0.05, 0.0, 0.05, 0.1)): DataFrame =
     arimaMLForecastFrom(arimaMLWinners(series, deltas), series, h)
@@ -1388,24 +1302,13 @@ object TimeSeries {
     * forecast recursion needs besides the data's last observation:
     * (series, phi, pred, mu), unrounded. */
   private[tsa] def arimaMLWinners(series: DataFrame, deltas: Seq[Double]): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    val pars = cf.filter(abs(col("c1")) < 1.0)
-      .select(col("series"), col("c1").as("phi0"), col("c2").as("theta0"))
     import series.sparkSession.implicits._
-    val joined = rows.select(col("series").cast("string"), col("t").cast("long"),
-        col("dx").cast("double"))
-      .join(pars, Seq("series"))
-      .select(col("series"), col("t"), col("dx"), col("phi0"), col("theta0"))
-      .as[(String, Long, Double, Double, Double)]
-    joined.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val rs = it.toSeq.sortBy(_._2)
-      if (rs.isEmpty) Iterator.empty
-      else {
-        val xs = rs.map(_._3)
-        val mu = xs.sum / xs.length.toDouble
-        mlGridWinner(xs, rs.head._4, rs.head._5, deltas)
-          .map { case (phi, _, _, _, pred) => (key, phi, pred, mu) }.iterator
-      }
+    bySeries(series, X) { (key, obs) =>
+      mlStart(key, obs).flatMap { case (dx, phi0, theta0) =>
+        val mu = dx.sum / dx.length.toDouble
+        mlGridWinner(dx, phi0, theta0, deltas)
+          .map { case (phi, _, _, _, pred) => (key, phi, pred, mu) }
+      }.iterator
     }.toDF("series", "phi", "pred", "mu")
   }
 
@@ -1456,13 +1359,20 @@ object TimeSeries {
 
   /** Per-row in-sample predictions — the reference's predict_in_sample
     * (arima.pyx:244) on the HR(1,1,1) fit: ŷ-row output (series, t, pred)
-    * wherever the one-step prediction is defined. */
+    * wherever the one-step prediction is defined, computed inside the HR
+    * fit's own per-series pass as c0 + c1·l1 + c2·e1, left-associated as
+    * the SQL oracle evaluates it. */
   def arimaPredictInsample(series: DataFrame): DataFrame = {
-    val (rows, cf) = arimaHRStage(series)
-    rows.filter(col("l1").isNotNull && col("e1").isNotNull)
-      .join(cf, Seq("series"))
-      .select(col("series"), col("t"),
-        round(col("c0") + col("c1") * col("l1") + col("c2") * col("e1"), 4).as("pred"))
+    import series.sparkSession.implicits._
+    bySeries(series, X) { (key, obs) =>
+      hannanRissanen(obs).iterator.flatMap { case (rows, coefs) =>
+        coefs.iterator.flatMap { case (c0, c1, c2) =>
+          rows.iterator.collect { case (t, _, Some(l1), _, _, Some(e1)) =>
+            (key, t, for (a <- c0; b <- c1; c <- c2) yield a + b * l1 + c * e1)
+          }
+        }
+      }
+    }.toDF("series", "t", "_p").select(col("series"), col("t"), round(col("_p"), 4).as("pred"))
   }
 
   /** ARIMA order selection — the reference's grid_search (arima.pyx:611,
@@ -1477,7 +1387,7 @@ object TimeSeries {
     * (arima.pyx:822-826). Output: (series, ord, bic, chosen). */
   def arimaGridSearch(series: DataFrame): DataFrame = {
     import series.sparkSession.implicits._
-    val all = bySeries(series) { (key, obs) =>
+    val all = bySeries(series, X) { (key, obs) =>
       hannanRissanen(obs).iterator.flatMap { case (rows, _) =>
         val common = rows.collect {
           case (_, dx, Some(l1), Some(l2), _, Some(e1)) => (dx, l1, l2, e1)
@@ -1542,7 +1452,7 @@ object TimeSeries {
   def arimaForecastHR(series: DataFrame, h: Int): DataFrame = {
     require(h >= 1, "h >= 1")
     import series.sparkSession.implicits._
-    val j = bySeries(series) { (key, obs) =>
+    val j = bySeries(series, X) { (key, obs) =>
       hannanRissanen(obs).iterator.flatMap { case (rows, coefs) =>
         coefs.flatMap { case (c0, c1, c2) =>
           rows.reverseIterator.collectFirst {
@@ -1576,33 +1486,28 @@ object TimeSeries {
     * series. Init: level = x_0, trend = 0, P = I. */
   def kalmanCV(series: DataFrame, q0: Double, q1: Double, r: Double): DataFrame = {
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val sorted = it.toSeq.sortBy(_._2)
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        var x0 = sorted.head._3; var x1 = 0.0
-        var p00 = 1.0; var p01 = 0.0; var p11 = 1.0
-        var si = 0.0
-        sorted.tail.foreach { case (_, _, z) =>
-          // predict (F x, F P F' + Q), then scalar-observation update
-          val x0p = x0 + x1
-          val p00p = p00 + p01 + p01 + p11 + q0
-          val p01p = p01 + p11
-          val p11p = p11 + q1
-          val k0 = p00p / (p00p + r)
-          val k1 = p01p / (p00p + r)
-          val iv = z - x0p
-          x0 = x0p + k0 * iv
-          x1 = x1 + k1 * iv
-          p00 = (1.0 - k0) * p00p
-          p01 = (1.0 - k0) * p01p
-          p11 = p11p - k1 * p01p
-          si = si + iv * iv
-        }
-        Iterator((key, sorted.last._2, x0, x1, p00, si))
+    bySeries(series, X) { (key, obs) =>
+      val xs = defined(key, obs)
+      var x0 = xs(0); var x1 = 0.0
+      var p00 = 1.0; var p01 = 0.0; var p11 = 1.0
+      var si = 0.0
+      xs.iterator.drop(1).foreach { z =>
+        // predict (F x, F P F' + Q), then scalar-observation update
+        val x0p = x0 + x1
+        val p00p = p00 + p01 + p01 + p11 + q0
+        val p01p = p01 + p11
+        val p11p = p11 + q1
+        val k0 = p00p / (p00p + r)
+        val k1 = p01p / (p00p + r)
+        val iv = z - x0p
+        x0 = x0p + k0 * iv
+        x1 = x1 + k1 * iv
+        p00 = (1.0 - k0) * p00p
+        p01 = (1.0 - k0) * p01p
+        p11 = p11p - k1 * p01p
+        si = si + iv * iv
       }
+      Iterator((key, obs.last._1, x0, x1, p00, si))
     }.toDF("series", "t_last", "_l", "_tr", "_p", "_si")
       .select(col("series"), col("t_last"),
         round(col("_l"), 4).as("level"),
@@ -1614,61 +1519,22 @@ object TimeSeries {
   /** General small-matrix Kalman filter — the reference's KalmanFilter
     * takes arbitrary (dim_x, dim_z) with user-set F, H, Q, R
     * (filter/kalman_filter.pyx:197). This is the dim_z = 1 instance over
-    * a scalar series column (the only observation shape the batched
-    * (series, t, x) surface carries; a vector-z variant is the same pass
-    * with a dim_z×dim_z solve in place of the scalar divide):
-    *   predict  x = F·x,  P = F·P·Fᵀ + Q
-    *   update   s = H·P·Hᵀ + R,  K = P·Hᵀ/s,  x += K·(z − H·x),
-    *            P = P − K·(H·P)
-    * Dense row-major loops over dim_x ≤ ~8 state entries — per-series
-    * in-partition recursion exactly like [[kalmanCV]], which remains the
-    * SQL-oracle-able unrolled specialization (F=[[1,1],[0,1]], H=[1,0]).
-    * Init: x = (z_0, 0, …), P = I. Output: final level (= x_0), full
-    * state vector, p00 and the innovation energy. */
+    * the scalar x column: [[kalmanMatVec]] with H = [hRow] and R = [r],
+    * whose elimination at dim_z = 1 is the scalar divide K = P·Hᵀ/s.
+    * [[kalmanCV]] remains the SQL-oracle-able unrolled specialization
+    * (F=[[1,1],[0,1]], H=[1,0]); its operand order differs from this
+    * filter's, so the two agree only at the rounding grid. Output: final
+    * level (= state[0]), full state vector, p00 and the innovation energy. */
   def kalmanMat(series: DataFrame, f: Seq[Seq[Double]], hRow: Seq[Double],
                 qDiag: Seq[Double], r: Double): DataFrame = {
     val dim = f.size
     require(f.forall(_.size == dim) && hRow.size == dim && qDiag.size == dim,
       s"F must be ${dim}x$dim, H and Q diag length $dim")
-    import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    val fArr = f.map(_.toArray).toArray
-    val hArr = hRow.toArray
-    val qArr = qDiag.toArray
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val sorted = it.toSeq.sortBy(_._2)
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        var x = Array.tabulate(dim)(i => if (i == 0) sorted.head._3 else 0.0)
-        var p = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-        var si = 0.0
-        sorted.tail.foreach { case (_, _, z) =>
-          val xp = Array.tabulate(dim)(i =>
-            (0 until dim).map(j => fArr(i)(j) * x(j)).sum)
-          val fp = Array.tabulate(dim, dim)((i, j) =>
-            (0 until dim).map(k => fArr(i)(k) * p(k)(j)).sum)
-          val pp = Array.tabulate(dim, dim)((i, j) =>
-            (0 until dim).map(k => fp(i)(k) * fArr(j)(k)).sum +
-              (if (i == j) qArr(i) else 0.0))
-          val hp = Array.tabulate(dim)(j =>
-            (0 until dim).map(k => hArr(k) * pp(k)(j)).sum)
-          val s = (0 until dim).map(k => hp(k) * hArr(k)).sum + r
-          val kGain = Array.tabulate(dim)(i =>
-            (0 until dim).map(k => pp(i)(k) * hArr(k)).sum / s)
-          val iv = z - (0 until dim).map(k => hArr(k) * xp(k)).sum
-          x = Array.tabulate(dim)(i => xp(i) + kGain(i) * iv)
-          p = Array.tabulate(dim, dim)((i, j) => pp(i)(j) - kGain(i) * hp(j))
-          si += iv * iv
-        }
-        Iterator((key, sorted.last._2, x(0), x.toSeq, p(0)(0), si))
-      }
-    }.toDF("series", "t_last", "_l", "_st", "_p", "_si")
-      .select(col("series"), col("t_last"),
-        round(col("_l"), 4).as("level"),
-        transform(col("_st"), v => round(v, 4)).as("state"),
-        round(col("_p"), 6).as("p00"),
-        round(col("_si"), 4).as("sum_innov2"))
+    // x as a one-element observation vector, null where x is null
+    kalmanMatVec(series.withColumn("x", when(col("x").isNotNull, array(col("x")))),
+        f, Seq(hRow), qDiag, Seq(r), zCol = "x")
+      .select(col("series"), col("t_last"), col("state")(0).as("level"), col("state"),
+        col("p00"), col("sum_innov2"))
   }
 
   /** Full (dim_x, dim_z) Kalman filter — vector observations, completing
@@ -1676,11 +1542,13 @@ object TimeSeries {
     * 3). Input rows carry an observation ARRAY column z of length dim_z;
     * H is dim_z×dim_x, R a dim_z diagonal. The innovation covariance
     * S = H·P·Hᵀ + R is solved by an in-place Gaussian elimination on the
-    * (dim_z ≤ ~4) system — all dense small-matrix loops inside the same
-    * per-series in-partition pass as [[kalmanMat]].
+    * (dim_z ≤ ~4) system — dense small-matrix loops over dim_x ≤ ~8 state
+    * entries, per-series in-partition ([[bySeries]]).
     *   predict  x = F·x,  P = F·P·Fᵀ + Q
     *   update   K = P·Hᵀ·S⁻¹,  x += K·(z − H·x),  P = P − K·(H·P)
-    * Output: final state vector, p00, innovation energy Σ‖ν‖². */
+    * Init: x = (z_0(0), 0, …), P = I. A singular S leaves the state, p00
+    * and the energy null. Output: final state vector, p00, innovation
+    * energy Σ‖ν‖². */
   def kalmanMatVec(series: DataFrame, f: Seq[Seq[Double]], h: Seq[Seq[Double]],
                    qDiag: Seq[Double], rDiag: Seq[Double],
                    zCol: String = "z"): DataFrame = {
@@ -1690,75 +1558,69 @@ object TimeSeries {
       qDiag.size == dim && rDiag.size == dz,
       s"F ${dim}x$dim, H ${dz}x$dim, qDiag $dim, rDiag $dz")
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col(zCol).cast("array<double>")).as[(String, Long, Seq[Double])]
     val fA = f.map(_.toArray).toArray
     val hA = h.map(_.toArray).toArray
     val qA = qDiag.toArray
     val rA = rDiag.toArray
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val sorted = it.toSeq.sortBy(_._2)
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        // init: least-squares-free start — x solves H x ≈ z_0 only through
-        // the first observation row convention x_0 = z_0(0) on state 0
-        var x = Array.tabulate(dim)(i => if (i == 0) sorted.head._3.head else 0.0)
-        var p = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-        var si = 0.0
-        var singular = false
-        sorted.tail.withFilter(_ => !singular).foreach { case (_, _, zSeq) =>
-          val z = zSeq.toArray
-          val xp = Array.tabulate(dim)(i => (0 until dim).map(j => fA(i)(j) * x(j)).sum)
-          val fp = Array.tabulate(dim, dim)((i, j) =>
-            (0 until dim).map(k => fA(i)(k) * p(k)(j)).sum)
-          val pp = Array.tabulate(dim, dim)((i, j) =>
-            (0 until dim).map(k => fp(i)(k) * fA(j)(k)).sum +
-              (if (i == j) qA(i) else 0.0))
-          val hp = Array.tabulate(dz, dim)((a, j) =>          // H·Pp
-            (0 until dim).map(k => hA(a)(k) * pp(k)(j)).sum)
-          val s = Array.tabulate(dz, dz)((a, b) =>            // H·Pp·Hᵀ + R
-            (0 until dim).map(k => hp(a)(k) * hA(b)(k)).sum +
-              (if (a == b) rA(a) else 0.0))
-          val pht = Array.tabulate(dim, dz)((i, a) =>         // Pp·Hᵀ
-            (0 until dim).map(k => pp(i)(k) * hA(a)(k)).sum)
-          // K = Pp·Hᵀ·S⁻¹ via solving S·Kᵀ = (Pp·Hᵀ)ᵀ (Gaussian elim)
-          val m = Array.tabulate(dz)(a => s(a).clone())
-          val rhs = Array.tabulate(dz, dim)((a, i) => pht(i)(a))
-          for (c <- 0 until dz) {
-            var piv = c
-            for (r2 <- c + 1 until dz) if (math.abs(m(r2)(c)) > math.abs(m(piv)(c))) piv = r2
-            val tm = m(c); m(c) = m(piv); m(piv) = tm
-            val tr = rhs(c); rhs(c) = rhs(piv); rhs(piv) = tr
-            // singular S (duplicate noiseless sensors): visible failure
-            // beats NaN-poisoned state — same policy as arFitWide
-            if (m(c)(c) == 0.0) singular = true
-            else for (r2 <- c + 1 until dz) {
-              val fct = m(r2)(c) / m(c)(c)
-              for (cc <- c until dz) m(r2)(cc) -= fct * m(c)(cc)
-              for (i <- 0 until dim) rhs(r2)(i) -= fct * rhs(c)(i)
-            }
-          }
-          if (!singular) {
-            val kT = Array.ofDim[Double](dz, dim)             // Kᵀ rows
-            for (c <- dz - 1 to 0 by -1; i <- 0 until dim) {
-              var v = rhs(c)(i)
-              for (cc <- c + 1 until dz) v -= m(c)(cc) * kT(cc)(i)
-              kT(c)(i) = v / m(c)(c)
-            }
-            val nu = Array.tabulate(dz)(a =>
-              z(a) - (0 until dim).map(k => hA(a)(k) * xp(k)).sum)
-            x = Array.tabulate(dim)(i => xp(i) + (0 until dz).map(a => kT(a)(i) * nu(a)).sum)
-            p = Array.tabulate(dim, dim)((i, j) =>
-              pp(i)(j) - (0 until dz).map(a => kT(a)(i) * hp(a)(j)).sum)
-            si += nu.map(v => v * v).sum
+    bySeries(series, col(zCol).cast("array<double>").as[Seq[Double]]) { (key, obs) =>
+      val zs = defined(key, obs, zCol)
+      // init: least-squares-free start — x solves H x ≈ z_0 only through
+      // the first observation row convention x_0 = z_0(0) on state 0
+      var x = Array.tabulate(dim)(i => if (i == 0) zs.head.head else 0.0)
+      var p = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
+      var si = 0.0
+      var singular = false
+      zs.iterator.drop(1).takeWhile(_ => !singular).foreach { zSeq =>
+        val z = zSeq.toArray
+        val xp = Array.tabulate(dim)(i => (0 until dim).map(j => fA(i)(j) * x(j)).sum)
+        val fp = Array.tabulate(dim, dim)((i, j) =>
+          (0 until dim).map(k => fA(i)(k) * p(k)(j)).sum)
+        val pp = Array.tabulate(dim, dim)((i, j) =>
+          (0 until dim).map(k => fp(i)(k) * fA(j)(k)).sum +
+            (if (i == j) qA(i) else 0.0))
+        val hp = Array.tabulate(dz, dim)((a, j) =>          // H·Pp
+          (0 until dim).map(k => hA(a)(k) * pp(k)(j)).sum)
+        val s = Array.tabulate(dz, dz)((a, b) =>            // H·Pp·Hᵀ + R
+          (0 until dim).map(k => hp(a)(k) * hA(b)(k)).sum +
+            (if (a == b) rA(a) else 0.0))
+        val pht = Array.tabulate(dim, dz)((i, a) =>         // Pp·Hᵀ
+          (0 until dim).map(k => pp(i)(k) * hA(a)(k)).sum)
+        // K = Pp·Hᵀ·S⁻¹ via solving S·Kᵀ = (Pp·Hᵀ)ᵀ (Gaussian elim)
+        val m = Array.tabulate(dz)(a => s(a).clone())
+        val rhs = Array.tabulate(dz, dim)((a, i) => pht(i)(a))
+        for (c <- 0 until dz) {
+          var piv = c
+          for (r2 <- c + 1 until dz) if (math.abs(m(r2)(c)) > math.abs(m(piv)(c))) piv = r2
+          val tm = m(c); m(c) = m(piv); m(piv) = tm
+          val tr = rhs(c); rhs(c) = rhs(piv); rhs(piv) = tr
+          // singular S (duplicate noiseless sensors): visible failure
+          // beats NaN-poisoned state — same policy as arFitWide
+          if (m(c)(c) == 0.0) singular = true
+          else for (r2 <- c + 1 until dz) {
+            val fct = m(r2)(c) / m(c)(c)
+            for (cc <- c until dz) m(r2)(cc) -= fct * m(c)(cc)
+            for (i <- 0 until dim) rhs(r2)(i) -= fct * rhs(c)(i)
           }
         }
-        if (singular)
-          Iterator((key, sorted.last._2, Option.empty[Seq[Double]],
-            Option.empty[Double], Option.empty[Double]))
-        else Iterator((key, sorted.last._2, Option(x.toSeq),
-          Option(p(0)(0)), Option(si)))
+        if (!singular) {
+          val kT = Array.ofDim[Double](dz, dim)             // Kᵀ rows
+          for (c <- dz - 1 to 0 by -1; i <- 0 until dim) {
+            var v = rhs(c)(i)
+            for (cc <- c + 1 until dz) v -= m(c)(cc) * kT(cc)(i)
+            kT(c)(i) = v / m(c)(c)
+          }
+          val nu = Array.tabulate(dz)(a =>
+            z(a) - (0 until dim).map(k => hA(a)(k) * xp(k)).sum)
+          x = Array.tabulate(dim)(i => xp(i) + (0 until dz).map(a => kT(a)(i) * nu(a)).sum)
+          p = Array.tabulate(dim, dim)((i, j) =>
+            pp(i)(j) - (0 until dz).map(a => kT(a)(i) * hp(a)(j)).sum)
+          si += nu.map(v => v * v).sum
+        }
       }
+      if (singular)
+        Iterator((key, obs.last._1, Option.empty[Seq[Double]],
+          Option.empty[Double], Option.empty[Double]))
+      else Iterator((key, obs.last._1, Option(x.toSeq), Option(p(0)(0)), Option(si)))
     }.toDF("series", "t_last", "_st", "_p", "_si")
       .select(col("series"), col("t_last"),
         transform(col("_st"), v => round(v, 4)).as("state"),
@@ -1768,31 +1630,24 @@ object TimeSeries {
 
   /** Scalar Kalman filter (constant-velocity-free local level model):
     *   predict: P += Q;  update: K = P/(P+R); s += K(x−s); P *= (1−K).
-    * Runs in-partition per series via groupBy+flatMapGroups — the recursion
-    * is inherently sequential per series, parallel across series (exactly
+    * Runs in-partition per series ([[bySeries]]) — the recursion is
+    * inherently sequential per series, parallel across series (exactly
     * the reference's batched layout, reference filter/kalman_filter.pyx). */
   def kalman1D(series: DataFrame, q: Double, r: Double): DataFrame = {
     import series.sparkSession.implicits._
-    val rows = series.select(col("series").cast("string"), col("t").cast("long"),
-      col("x").cast("double")).as[(String, Long, Double)]
-    rows.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val sorted = it.toSeq.sortBy(_._2)
-      var s = 0.0; var p = 1.0; var init = false
+    bySeries(series, X) { (key, obs) =>
+      val xs = defined(key, obs)
+      var s = xs(0); var p = 1.0
       var sumInnov2 = 0.0
-      val out = sorted.map { case (_, t, x) =>
-        if (!init) { s = x; p = 1.0; init = true }
-        else {
-          p += q
-          val kGain = p / (p + r)
-          val innov = x - s
-          s += kGain * innov
-          p *= (1.0 - kGain)
-          sumInnov2 += innov * innov
-        }
-        (key, t, x, s, p)
+      xs.iterator.drop(1).foreach { x =>
+        p += q
+        val kGain = p / (p + r)
+        val innov = x - s
+        s += kGain * innov
+        p *= (1.0 - kGain)
+        sumInnov2 += innov * innov
       }
-      val last = out.last
-      Iterator((key, last._2, last._4, last._5, sumInnov2))
+      Iterator((key, obs.last._1, s, p, sumInnov2))
     }.toDF("series", "t_last", "_state", "_p", "_si")
       .select(col("series"), col("t_last"),
         round(col("_state"), 4).as("state"),

@@ -1,6 +1,7 @@
 package graft.tsa
 
 import graft.SparkTestSession
+import graft.tsa.SeriesFixtures.{bits, events, shuffles}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-series Hannan–Rissanen pass behind every ARIMA surface equals
   * the window + grouped-aggregate chain it replaced (kept here as the
-  * reference) to the last bit, and groups in place. */
+  * reference) to the last bit, and it and every other per-series pass
+  * group in place. */
 class ArimaStageSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -34,14 +36,6 @@ class ArimaStageSpec extends AnyFunSuite {
     (e1, TimeSeries.cramer3(f2, col("dx"), col("l1"), col("e1")))
   }
 
-  /** Rows as comparable strings: doubles by their bits, so equal means
-    * identical to the last bit (and -0.0 differs from 0.0). */
-  private def bits(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(r => r.toSeq.map {
-      case d: Double => java.lang.Double.doubleToLongBits(d).toString
-      case v => String.valueOf(v)
-    }.mkString("|")).sorted
-
   private def assertSameAsChain(series: DataFrame): (Seq[String], Seq[String]) = {
     val (rows, cf) = TimeSeries.arimaHRStage(series)
     val (refRows, refCf) = windowChain(series)
@@ -54,17 +48,6 @@ class ArimaStageSpec extends AnyFunSuite {
     val sameCoefs = c == d
     assert(sameCoefs, s"coefficients differ: $c vs $d")
     (a, c)
-  }
-
-  private def events(seed: Long): DataFrame = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(seed)
-    val rows = for (tpe <- 0 until 5; day <- 0 until 45; k <- 0 until 1 + rnd.nextInt(3))
-      yield (s"type$tpe", 1704067200L + day * 86400L + rnd.nextInt(86400),
-        10.0 * tpe + 0.3 * day + math.sin(day * 0.9) * 2 + rnd.nextGaussian())
-    rows.toDF("event_type", "sec", "value")
-      .select(col("event_type"), timestamp_seconds(col("sec")).as("ts"), col("value"))
-      .repartition(3)
   }
 
   test("arimaHRStage equals the window chain on daily series over several partitions") {
@@ -96,17 +79,40 @@ class ArimaStageSpec extends AnyFunSuite {
     assert(cf.exists(_.startsWith("gap|")) && cf.exists(_.startsWith("plain|")))
   }
 
-  private def shuffles(df: DataFrame): Int =
-    "(?<!Broadcast)Exchange ".r.findAllIn(df.queryExecution.executedPlan.toString).length
-
-  test("arimaHR and holtWintersSeasonal add no shuffle to dailySeries") {
+  test("every per-series pass adds no shuffle to dailySeries") {
     val daily = TimeSeries.dailySeries(events(23L))
     val own = shuffles(daily)
     assert(own >= 1)
-    val arima = TimeSeries.arimaHR(daily)
-    assert(shuffles(arima) == own, arima.queryExecution.executedPlan.toString)
-    val hw = TimeSeries.holtWintersSeasonal(daily, 0.3, 0.1, 0.2, 7)
-    assert(shuffles(hw) == own, hw.queryExecution.executedPlan.toString)
-    assert(arima.count() == 5 * 3 && hw.count() == 5)
+    val (as, bs, gs) = (Seq(0.2, 0.6), Seq(0.1), Seq(0.1, 0.5))
+    val ca = Seq(Seq(1.0, 1.0), Seq(0.0, 1.0))
+    // every public function on bySeries whose own tail adds no exchange
+    // (arimaForecastML and thetaForecast join after the pass)
+    val table: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "arimaHR" -> TimeSeries.arimaHR,
+      "holtWintersSeasonal" -> (TimeSeries.holtWintersSeasonal(_, 0.3, 0.1, 0.2, 7)),
+      "sesSmoothed" -> (TimeSeries.sesSmoothed(_, 0.3)),
+      "holtTrend" -> (TimeSeries.holtTrend(_, 0.3, 0.1)),
+      "holtDamped" -> (TimeSeries.holtDamped(_, 0.3, 0.1, 0.9, 3)),
+      "holtWintersForecast" -> (TimeSeries.holtWintersForecast(_, 0.3, 0.1, 0.2, 7, 3)),
+      "hwFit" -> (TimeSeries.hwFit(_, 7, as, bs, gs)),
+      "hwFitOpt" -> (TimeSeries.hwFitOpt(_, 7, as, bs, gs, maxIter = 5)),
+      "hwFitForecast" -> (TimeSeries.hwFitForecast(_, 7, as, bs, gs, 3)),
+      "hwFitState" -> (TimeSeries.hwFitState(_, 7, as, bs, gs)),
+      "hwFitStateRaw" -> (TimeSeries.hwFitStateRaw(_, 7, as, bs, gs)),
+      "kalman1D" -> (TimeSeries.kalman1D(_, 0.1, 2.0)),
+      "kalmanCV" -> (TimeSeries.kalmanCV(_, 0.05, 0.01, 2.0)),
+      "kalmanMat" -> (TimeSeries.kalmanMat(_, ca, Seq(1.0, 0.0), Seq(0.05, 0.01), 2.0)),
+      "kalmanMatVec" -> (df => TimeSeries.kalmanMatVec(
+        df.withColumn("z", array(col("x"), col("x"))),
+        ca, Seq(Seq(1.0, 0.0), Seq(1.0, 0.0)), Seq(0.05, 0.01), Seq(2.0, 4.0))),
+      "arimaLoglike" -> TimeSeries.arimaLoglike,
+      "arimaFitML" -> (TimeSeries.arimaFitML(_)),
+      "arimaFitBFGS" -> (TimeSeries.arimaFitBFGS(_, maxIter = 5)),
+      "arimaMLStateLong" -> (TimeSeries.arimaMLStateLong(_)),
+      "arimaPredictInsample" -> TimeSeries.arimaPredictInsample)
+    val added = table.collect { case (name, f) if shuffles(f(daily)) != own => name }
+    assert(added.isEmpty, s"an exchange beyond dailySeries's $own in: ${added.mkString(", ")}")
+    assert(TimeSeries.arimaHR(daily).count() == 5 * 3)
+    assert(TimeSeries.holtWintersSeasonal(daily, 0.3, 0.1, 0.2, 7).count() == 5)
   }
 }
