@@ -1,5 +1,6 @@
 package graft.cluster
 
+import graft.core.Rows
 import org.apache.spark.rdd.RDD
 
 /** The library's one k-means (cuML's KMeans is a Lloyd loop, reference
@@ -206,25 +207,15 @@ object Lloyd {
     centers
   }
 
-  /** One round over the rows. Each partition folds its rows into a flat
-    * [count_j, sum_j(0..d-1)]·k ++ [sse] partial, and the partials merge as
-    * a depth-2 tree in a fixed order. Up to the size where treeAggregate
-    * (depth 2) adds no level, the driver adds the P partials in partition
-    * order. Above it, runs of about √P consecutive partitions are added in
-    * partition order on the executors first, so the driver receives about √P
-    * partials, not P. treeAggregate itself merges in task-completion order,
-    * so its sums, and the centers, could differ in the last bits from run to
-    * run; the fixed order makes identical rows give identical centers. */
+  /** One round over the rows: each partition folds its rows into a flat
+    * [count_j, sum_j(0..d-1)]·k ++ [sse] partial, and the partials merge in
+    * partition order ([[Rows.fold]]), so identical rows give identical
+    * centers. */
   def pass(rows: RDD[Array[Double]], centers: Array[Array[Double]]): Pass = {
     val k = centers.length
     val d = centers(0).length
     val w = k * (d + 1) + 1
-    def add(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < w) { a(i) += b(i); i += 1 }
-      a
-    }
-    val partials = rows.mapPartitionsWithIndex { (p, it) =>
+    val acc = Rows.fold(rows) { (_, it) =>
       val a = new Array[Double](w)
       it.foreach { x =>
         val bj = nearest(x, centers)
@@ -234,19 +225,8 @@ object Lloyd {
         while (i < d) { a(o + 1 + i) += x(i); i += 1 }
         a(w - 1) += sq(x, centers(bj))
       }
-      Iterator((p, a))
-    }
-    // treeAggregate's depth-2 rule: the group level runs only when P
-    // exceeds scale + ⌈P/scale⌉
-    val nP = rows.getNumPartitions
-    val scale = math.max(math.ceil(math.sqrt(nP)).toInt, 2)
-    val nGroups = (nP + scale - 1) / scale
-    val merged =
-      if (nP <= scale + nGroups) partials.collect()
-      else partials.map { case (p, a) => (p / scale, (p, a)) }.groupByKey(nGroups)
-        .map { case (g, ps) => (g, ps.toSeq.sortBy(_._1).map(_._2).reduce(add)) }
-        .collect()
-    val acc = merged.sortBy(_._1).map(_._2).foldLeft(new Array[Double](w))(add)
+      a
+    }(Rows.add)
     Pass(Array.tabulate(k)(j => acc(j * (d + 1)).toLong),
       Array.tabulate(k)(j => java.util.Arrays.copyOfRange(acc, j * (d + 1) + 1, (j + 1) * (d + 1))),
       acc(w - 1))

@@ -15,6 +15,12 @@ object Num {
   /** Round to the oracle grid. Keep in sync with `round(x, 4)` in oracleSql. */
   def r4(c: Column): Column = round(c, 4)
 
+  /** Spark's round(x, 4) on a driver-side double: HALF_UP on its decimal
+    * form, so a value computed on the driver lands on the grid `r4` puts a
+    * column on. */
+  def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Round to 6 decimals — for small-magnitude values (ratios, weights). */
   def r6(c: Column): Column = round(c, 6)
 

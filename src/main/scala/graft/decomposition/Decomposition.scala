@@ -1,19 +1,19 @@
 package graft.decomposition
 
-import breeze.linalg.{DenseMatrix, DenseVector, eigSym}
+import breeze.linalg.{DenseMatrix, eigSym}
+import graft.core.Rows
 import graft.stats.Moments
-import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
-import org.apache.spark.mllib.linalg.distributed.RowMatrix
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PCA / TruncatedSVD (reference python/cuml/decomposition/pca.pyx,
   * tsvd.pyx — cuML solves the p×p covariance/Gram eigenproblem on GPU).
   *
   * Spark-first: the n-dependent work is ONE distributed pass (SQL-aggregate
-  * moments for named columns; RowMatrix Gramian for array columns — both
-  * map-side combined, no shuffle); the p×p eigensolve is driver-side breeze
-  * — exact, and the right split at 100 TB for p ≤ O(10³).
+  * moments for named columns; [[crossProducts]] over the primitive rows of
+  * an array column — both map-side combined, no shuffle); the p×p
+  * eigensolve is driver-side breeze — exact, and the right split at 100 TB
+  * for p ≤ O(10³).
   */
 object PCAGraft {
   final case class Result(explainedVar: Array[Double], ratio: Array[Double],
@@ -24,13 +24,69 @@ object PCAGraft {
     fromCovariance(g.covariance)
   }
 
-  /** PCA over an array<float> column via RowMatrix covariance (treeAggregated
-    * Gramian — the MLlib primitive built for exactly this access pattern). */
+  /** PCA over an array<float> column: the sample covariance from one
+    * [[crossProducts]] pass. */
   def fitWide(df: DataFrame, vecCol: String): Result = {
-    val rows = df.select(col(vecCol).cast("array<double>")).rdd
-      .map(r => OldVectors.dense(r.getSeq[Double](0).toArray))
-    val cov = new RowMatrix(rows).computeCovariance()
-    fromCovariance(new DenseMatrix(cov.numRows, cov.numCols, cov.toArray))
+    val (n, c) = crossProducts(df, vecCol, centered = true)
+    require(n > 1, s"PCA: covariance of $n rows")
+    fromCovariance(c / (n - 1).toDouble)
+  }
+
+  /** The row count and the d×d cross products of an array column's rows in
+    * one pass over them: centered at the column means (the co-moment
+    * Σ(x−μ)(x−μ)ᵀ: Welford per row, Chan et al.'s merge across partitions,
+    * the shape of GradientSolver.standardization) or not (the Gramian
+    * XᵀX). The partials merge in partition order ([[Rows.fold]]), so the
+    * same rows give the same matrix bit for bit. A partial is
+    * [n, μ(0..d−1), C (d×d, row-major, upper triangle)]; an empty
+    * partition's is empty. */
+  private[decomposition] def crossProducts(df: DataFrame, vecCol: String,
+                                           centered: Boolean): (Long, DenseMatrix[Double]) = {
+    val a = Rows.fold(Rows.vectors(df, col(vecCol))) { (_, it) =>
+      var a = Array.emptyDoubleArray
+      var d = 0
+      it.foreach { x =>
+        if (a.isEmpty) { d = x.length; a = new Array[Double](1 + d + d * d) }
+        require(x.length == d, s"vector of ${x.length} elements, expected $d")
+        a(0) += 1
+        var i = 0
+        if (centered) {
+          val dx = Array.tabulate(d)(j => x(j) - a(1 + j))
+          while (i < d) { a(1 + i) += dx(i) / a(0); i += 1 }
+          i = 0
+          while (i < d) {
+            var j = i
+            while (j < d) { a(1 + d + i * d + j) += dx(i) * (x(j) - a(1 + j)); j += 1 }
+            i += 1
+          }
+        } else while (i < d) {
+          var j = i
+          while (j < d) { a(1 + d + i * d + j) += x(i) * x(j); j += 1 }
+          i += 1
+        }
+      }
+      a
+    } { (a, b) =>
+      if (a.isEmpty) b
+      else if (b.isEmpty) a
+      else {
+        require(a.length == b.length, "vectors of different lengths")
+        val d = (math.sqrt(4.0 * a.length - 3).round.toInt - 1) / 2
+        val (na, nb) = (a(0), b(0))
+        val nt = na + nb
+        val dm = Array.tabulate(d)(j => b(1 + j) - a(1 + j))
+        for (i <- 0 until d; j <- i until d) {
+          val o = 1 + d + i * d + j
+          a(o) += b(o) + (if (centered) dm(i) * dm(j) * na * nb / nt else 0.0)
+        }
+        for (j <- 0 until d) a(1 + j) += dm(j) * nb / nt
+        a(0) = nt
+        a
+      }
+    }
+    require(a.nonEmpty, s"no rows in $vecCol")
+    val d = (math.sqrt(4.0 * a.length - 3).round.toInt - 1) / 2
+    (a(0).toLong, DenseMatrix.tabulate(d, d)((i, j) => a(1 + d + math.min(i, j) * d + math.max(i, j))))
   }
 
   /** Per-dimension means of an array column — one aggregate pass (the
@@ -124,24 +180,18 @@ object TSVDGraft {
     * along the top-k right singular vectors of X — PCA's projection
     * without centering, so it reuses PCAGraft.transformWide with a zero
     * mean vector. Right singular vectors = eigenvectors of the Gram
-    * matrix (one treeAggregate pass + driver eigensolve). */
+    * matrix (one pass + driver eigensolve). */
   def transform(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val rows = df.select(col(vecCol).cast("array<double>")).rdd
-      .map(r => OldVectors.dense(r.getSeq[Double](0).toArray))
-    val g = new RowMatrix(rows).computeGramianMatrix()
-    val gb = new DenseMatrix(g.numRows, g.numCols, g.toArray)
-    val r = PCAGraft.fromCovariance(gb) // eigensolve + sign convention
-    PCAGraft.transformWide(df, idCol, vecCol, r, k, Array.fill(g.numRows)(0.0))
+    val g = PCAGraft.crossProducts(df, vecCol, centered = false)._2
+    val r = PCAGraft.fromCovariance(g) // eigensolve + sign convention
+    PCAGraft.transformWide(df, idCol, vecCol, r, k, Array.fill(g.rows)(0.0))
   }
 
-  /** Singular values of X via the Gram matrix X'X (one treeAggregate pass),
+  /** Singular values of X via the Gram matrix X'X (one pass),
     * σ_i = sqrt(λ_i(X'X)) — cuML TruncatedSVD's Jacobi-on-Gram, re-split. */
   def singularValues(df: DataFrame, vecCol: String, k: Int): Array[Double] = {
-    val rows = df.select(col(vecCol).cast("array<double>")).rdd
-      .map(r => OldVectors.dense(r.getSeq[Double](0).toArray))
-    val g = new RowMatrix(rows).computeGramianMatrix()
-    val gb = new DenseMatrix(g.numRows, g.numCols, g.toArray)
-    eigSym(gb).eigenvalues.toArray.sorted(Ordering[Double].reverse)
+    val g = PCAGraft.crossProducts(df, vecCol, centered = false)._2
+    eigSym(g).eigenvalues.toArray.sorted(Ordering[Double].reverse)
       .take(k).map(l => math.sqrt(math.max(l, 0.0)))
   }
 

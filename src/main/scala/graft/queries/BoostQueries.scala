@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 /** The fitted tree/boosting surface (round-6 session 4): exhaustive stump
   * split search, fixed-round gradient boosting and AdaBoost, and
   * filter-method feature selection — the first HASH GATES in the tree
-  * family (rf_classifier/rf_regressor stay rows-only MLlib fits;
-  * tree_predict scores a literal tree; these entries FIT, verifiably).
+  * family (rf_classifier/rf_regressor are invariant gates over seeded
+  * histogram forests; tree_predict scores a literal tree; these entries
+  * FIT, verifiably).
   *
   * Shared discipline: candidate splits are evaluated on the bounded
   * (feature, distinct-value) frame via cumulative windows — the corpus is

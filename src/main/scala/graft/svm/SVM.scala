@@ -1,6 +1,6 @@
 package graft.svm
 
-import graft.core.Num.r4
+import graft.core.Num.{r4, round4}
 import graft.core.Rows
 import graft.linear.GradientSolver
 import graft.neighbors.KNN
@@ -164,10 +164,6 @@ object SVMGraft {
       },
       (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4), depth = 2)
   }
-
-  /** Spark's round(x, 4): HALF_UP on the decimal form of the double. */
-  private def round4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Per-row RFF decision margins keyed by `idCol` — the comparison
     * surface the exact-SMO audit twin scores agreement against

@@ -1291,25 +1291,23 @@ object TimeSeries {
     * prediction ẑ_{T+1} from the Kalman recursion, then
     *   d̂x_{T+k} = μ + φ^{k−1}·ẑ_{T+1}   (future innovations zero)
     * integrated back from x_T by a running sum, unrolled as h column
-    * expressions. The HR fit, winner selection and forecast seeding happen
-    * inside the one per-series pass ([[arimaMLWinners]]); the only join
-    * brings in the last observation x_T. */
+    * expressions. The HR fit, winner selection, forecast seeding and x_T
+    * all come from the one per-series pass ([[arimaMLWinners]]). */
   def arimaForecastML(series: DataFrame, h: Int,
                       deltas: Seq[Double] = Seq(-0.1, -0.05, 0.0, 0.05, 0.1)): DataFrame =
-    arimaMLForecastFrom(arimaMLWinners(series, deltas), series, h)
+    arimaMLForecast(arimaMLWinners(series, deltas), h)
 
-  /** The ML-lattice winner STATE per series — everything the h-step
-    * forecast recursion needs besides the data's last observation:
-    * (series, phi, pred, mu), unrounded. */
+  /** The ML-lattice winner STATE per series, with the series' last
+    * observation: (series, phi, pred, mu, xT), unrounded. */
   private[tsa] def arimaMLWinners(series: DataFrame, deltas: Seq[Double]): DataFrame = {
     import series.sparkSession.implicits._
     bySeries(series, X) { (key, obs) =>
       mlStart(key, obs).flatMap { case (dx, phi0, theta0) =>
         val mu = dx.sum / dx.length.toDouble
         mlGridWinner(dx, phi0, theta0, deltas)
-          .map { case (phi, _, _, _, pred) => (key, phi, pred, mu) }
+          .map { case (phi, _, _, _, pred) => (key, phi, pred, mu, obs.last._2.get) }
       }.iterator
-    }.toDF("series", "phi", "pred", "mu")
+    }.toDF("series", "phi", "pred", "mu", "xT")
   }
 
   /** [[arimaMLWinners]] shaped for ModelIO.saveSeriesModel: one
@@ -1324,8 +1322,9 @@ object TimeSeries {
   /** [[arimaForecastML]] served through a PERSISTED state frame
     * (ModelIO.saveSeriesModel long format, keys phi/pred/mu): the state
     * pivots back to the exact winners frame, the last observation comes
-    * from the data at serve time, and the recursion arithmetic is
-    * unchanged — forecasts through a loaded model are bit-identical. */
+    * from the data at serve time (a last-row window and a join), and the
+    * recursion arithmetic is unchanged — forecasts through a loaded model
+    * are bit-identical. */
   def arimaMLForecastServe(series: DataFrame, stateLong: DataFrame, h: Int): DataFrame = {
     val winners = stateLong.groupBy("series")
       .agg(map_from_entries(collect_list(struct(col("key"), col("value")))).as("_m"))
@@ -1333,16 +1332,15 @@ object TimeSeries {
         element_at(col("_m"), lit("phi")).as("phi"),
         element_at(col("_m"), lit("pred")).as("pred"),
         element_at(col("_m"), lit("mu")).as("mu"))
-    arimaMLForecastFrom(winners, series, h)
-  }
-
-  private def arimaMLForecastFrom(winners: DataFrame, series: DataFrame,
-                                  h: Int): DataFrame = {
-    require(h >= 1, "h >= 1")
     val wDesc = Window.partitionBy(col("series")).orderBy(col("t").desc)
     val lastX = series.withColumn("_rn", row_number().over(wDesc))
       .filter(col("_rn") === 1).select(col("series"), col("x").as("xT"))
-    val j = winners.join(lastX, Seq("series"))
+    arimaMLForecast(winners.join(lastX, Seq("series")), h)
+  }
+
+  /** The h-step recursion from a (series, phi, pred, mu, xT) state frame. */
+  private def arimaMLForecast(j: DataFrame, h: Int): DataFrame = {
+    require(h >= 1, "h >= 1")
     var dz: Column = col("pred")
     var cum: Column = col("xT")
     val fs = (1 to h).map { _ =>

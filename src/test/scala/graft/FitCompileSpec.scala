@@ -1,6 +1,8 @@
 package graft
 
 import graft.core.Rows
+import graft.decomposition.PCAGraft
+import graft.ensemble.Forest
 import graft.linear.{GradientSolver, Softmax}
 import graft.svm.SVMGraft
 import graft.tsa.TimeSeries
@@ -71,6 +73,16 @@ class FitCompileSpec extends AnyFunSuite {
       SVMGraft.linearSvcGate(_, fs, col("y") === 1.0, maxIter = 5).collect()) == 0)
   }
 
+  test("Forest.classifierSummary compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 17L)(
+      Forest.classifierSummary(_, fs, "y", numTrees = 3, maxDepth = 3).collect()) == 0)
+  }
+
+  test("Forest.regressorSummary compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 19L)(
+      Forest.regressorSummary(_, fs, "y", numTrees = 3, maxDepth = 3).collect()) == 0)
+  }
+
   test("arimaHR compiles no class for a second frame of new values") {
     assert(secondCallCompiles(series, 7L)(TimeSeries.arimaHR(_).collect()) == 0)
   }
@@ -112,5 +124,16 @@ class FitCompileSpec extends AnyFunSuite {
     leavesNothing("linearSvcSummary")(
       SVMGraft.linearSvcSummary(tabular(13L), fs, col("y") === 1.0, maxIter = 5).collect())
     leavesNothing("Softmax.fit")(Softmax.fit(tabular(14L), fs, "y", maxIter = 5))
+  }
+
+  test("the forest fits and PCAGraft.fitWide leave no persisted RDD") {
+    leavesNothing("classifierSummary")(
+      Forest.classifierSummary(tabular(21L), fs, "y", numTrees = 3, maxDepth = 3).collect())
+    leavesNothing("regressorGate")(
+      Forest.regressorGate(tabular(22L), fs, "y", numTrees = 3, maxDepth = 3).collect())
+    leavesNothing("inferenceSummary")(
+      Forest.inferenceSummary(tabular(23L), tabular(24L), fs, "y", numTrees = 3).collect())
+    leavesNothing("PCAGraft.fitWide")(
+      PCAGraft.fitWide(tabular(25L).select(array(fs.map(col): _*).as("v")), "v"))
   }
 }

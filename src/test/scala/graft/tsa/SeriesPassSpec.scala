@@ -193,13 +193,18 @@ class SeriesPassSpec extends AnyFunSuite {
         round(col("_llL"), 4).as("ll_lattice"), col("_ge").as("opt_ge_lattice"))
   }
 
+  /** The former winners chain, with x_T from the former last-row window
+    * and join. */
   private def arimaMLWinnersRef(series: DataFrame): DataFrame = {
     import series.sparkSession.implicits._
+    val lastX = series.withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("series")).orderBy(col("t").desc)))
+      .filter(col("_rn") === 1).select(col("series"), col("x").cast("double").as("xT"))
     mlChain(series) { (key, xs, phi0, theta0) =>
       val mu = xs.sum / xs.length.toDouble
       TimeSeries.mlGridWinner(xs, phi0, theta0, deltas)
         .map { case (phi, _, _, _, pred) => (key, phi, pred, mu) }.iterator
-    }.toDF("series", "phi", "pred", "mu")
+    }.toDF("series", "phi", "pred", "mu").join(lastX, Seq("series"))
   }
 
   /** The former `arimaPredictInsample`: a join of arimaHRStage's frames. */
