@@ -9,102 +9,36 @@ import org.apache.spark.sql.functions._
 /** PCA / TruncatedSVD (reference python/cuml/decomposition/pca.pyx,
   * tsvd.pyx — cuML solves the p×p covariance/Gram eigenproblem on GPU).
   *
-  * Spark-first: the n-dependent work is ONE distributed pass (SQL-aggregate
-  * moments for named columns; [[crossProducts]] over the primitive rows of
-  * an array column — both map-side combined, no shuffle); the p×p
-  * eigensolve is driver-side breeze — exact, and the right split at 100 TB
+  * Spark-first: the n-dependent work is ONE fixed-order pass over the
+  * primitive rows (of named columns, or of an array column's elements)
+  * that folds n, the means and the centered co-moment
+  * ([[graft.stats.Moments.of]]; no shuffle); the p×p eigensolve is
+  * driver-side breeze — exact, and the right split at 100 TB
   * for p ≤ O(10³).
   */
 object PCAGraft {
+  /** The spectrum and components of a fit, and the column means it
+    * centers at (zeros for TruncatedSVD, which does not center). */
   final case class Result(explainedVar: Array[Double], ratio: Array[Double],
-                          components: DenseMatrix[Double])
+                          components: DenseMatrix[Double], mean: Array[Double])
 
-  def fitNarrow(df: DataFrame, features: Seq[String]): Result = {
-    val g = Moments.gram(df, features, None)
-    fromCovariance(g.covariance)
-  }
+  def fitNarrow(df: DataFrame, features: Seq[String]): Result =
+    fromMoments(Moments.of(Rows.of(df, features.map(col))))
 
-  /** PCA over an array<float> column: the sample covariance from one
-    * [[crossProducts]] pass. */
-  def fitWide(df: DataFrame, vecCol: String): Result = {
-    val (n, c) = crossProducts(df, vecCol, centered = true)
-    require(n > 1, s"PCA: covariance of $n rows")
-    fromCovariance(c / (n - 1).toDouble)
-  }
+  /** PCA over an array<float> column, from one [[Moments.of]] pass over its
+    * primitive rows. */
+  def fitWide(df: DataFrame, vecCol: String): Result =
+    fromMoments(Moments.of(Rows.vectors(df, col(vecCol))))
 
-  /** The row count and the d×d cross products of an array column's rows in
-    * one pass over them: centered at the column means (the co-moment
-    * Σ(x−μ)(x−μ)ᵀ: Welford per row, Chan et al.'s merge across partitions,
-    * the shape of GradientSolver.standardization) or not (the Gramian
-    * XᵀX). The partials merge in partition order ([[Rows.fold]]), so the
-    * same rows give the same matrix bit for bit. A partial is
-    * [n, μ(0..d−1), C (d×d, row-major, upper triangle)]; an empty
-    * partition's is empty. */
-  private[decomposition] def crossProducts(df: DataFrame, vecCol: String,
-                                           centered: Boolean): (Long, DenseMatrix[Double]) = {
-    val a = Rows.fold(Rows.vectors(df, col(vecCol))) { (_, it) =>
-      var a = Array.emptyDoubleArray
-      var d = 0
-      it.foreach { x =>
-        if (a.isEmpty) { d = x.length; a = new Array[Double](1 + d + d * d) }
-        require(x.length == d, s"vector of ${x.length} elements, expected $d")
-        a(0) += 1
-        var i = 0
-        if (centered) {
-          val dx = Array.tabulate(d)(j => x(j) - a(1 + j))
-          while (i < d) { a(1 + i) += dx(i) / a(0); i += 1 }
-          i = 0
-          while (i < d) {
-            var j = i
-            while (j < d) { a(1 + d + i * d + j) += dx(i) * (x(j) - a(1 + j)); j += 1 }
-            i += 1
-          }
-        } else while (i < d) {
-          var j = i
-          while (j < d) { a(1 + d + i * d + j) += x(i) * x(j); j += 1 }
-          i += 1
-        }
-      }
-      a
-    } { (a, b) =>
-      if (a.isEmpty) b
-      else if (b.isEmpty) a
-      else {
-        require(a.length == b.length, "vectors of different lengths")
-        val d = (math.sqrt(4.0 * a.length - 3).round.toInt - 1) / 2
-        val (na, nb) = (a(0), b(0))
-        val nt = na + nb
-        val dm = Array.tabulate(d)(j => b(1 + j) - a(1 + j))
-        for (i <- 0 until d; j <- i until d) {
-          val o = 1 + d + i * d + j
-          a(o) += b(o) + (if (centered) dm(i) * dm(j) * na * nb / nt else 0.0)
-        }
-        for (j <- 0 until d) a(1 + j) += dm(j) * nb / nt
-        a(0) = nt
-        a
-      }
-    }
-    require(a.nonEmpty, s"no rows in $vecCol")
-    val d = (math.sqrt(4.0 * a.length - 3).round.toInt - 1) / 2
-    (a(0).toLong, DenseMatrix.tabulate(d, d)((i, j) => a(1 + d + math.min(i, j) * d + math.max(i, j))))
-  }
-
-  /** Per-dimension means of an array column — one aggregate pass (the
-    * centering vector for transform). */
-  def columnMeans(df: DataFrame, vecCol: String, dim: Int): Array[Double] = {
-    val v = col(vecCol).cast("array<double>")
-    val aggs = (0 until dim).map(i => avg(element_at(v, i + 1)))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    Array.tabulate(dim)(row.getDouble)
-  }
+  private def fromMoments(m: Moments): Result = fromCovariance(m.covariance, m.mean.toArray)
 
   /** PCA.transform for wide vectors (reference decomposition/pca.pyx
     * transform): project each row onto the top-k eigenvectors. The centering
     * collapses into a per-component scalar (score = v·w_c − μ·w_c), so the
     * projection is k codegen'd dot products — a pure map at any scale. */
   def transformWide(df: DataFrame, idCol: String, vecCol: String,
-                    r: Result, k: Int, means: Array[Double]): DataFrame = {
-    val dim = means.length
+                    r: Result, k: Int): DataFrame = {
+    val (means, dim) = (r.mean, r.mean.length)
     val v = col(vecCol).cast("array<double>")
     val outs = (0 until k).map { c =>
       val w = Array.tabulate(dim)(i => r.components(i, c))
@@ -120,8 +54,8 @@ object PCAGraft {
     * pure-map shape as [[transformWide]] with the 1/√λ_c factor folded
     * into the projection weights at plan-build time. */
   def transformWhitened(df: DataFrame, idCol: String, vecCol: String,
-                        r: Result, k: Int, means: Array[Double]): DataFrame = {
-    val dim = means.length
+                        r: Result, k: Int): DataFrame = {
+    val (means, dim) = (r.mean, r.mean.length)
     val v = col(vecCol).cast("array<double>")
     val outs = (0 until k).map { c =>
       // components beyond the effective rank (λ ≤ 0 up to eigensolver
@@ -140,9 +74,8 @@ object PCAGraft {
     * components. Uses the orthogonality identity ‖x − x̂‖² = ‖x − μ‖² −
     * Σ_c score_c², so the per-row expression is O(dim + k·dim) — one
     * codegen'd aggregate, no reconstruction materialized. */
-  def reconstructionMse(df: DataFrame, vecCol: String, r: Result, k: Int,
-                        means: Array[Double]): Double = {
-    val dim = means.length
+  def reconstructionMse(df: DataFrame, vecCol: String, r: Result, k: Int): Double = {
+    val (means, dim) = (r.mean, r.mean.length)
     val v = col(vecCol).cast("array<double>")
     val centered2 = (0 until dim).map { i =>
       val c = element_at(v, i + 1) - means(i)
@@ -157,7 +90,7 @@ object PCAGraft {
     df.agg(avg((centered2 - scores2) / dim)).head().getDouble(0)
   }
 
-  def fromCovariance(cov: DenseMatrix[Double]): Result = {
+  def fromCovariance(cov: DenseMatrix[Double], mean: Array[Double]): Result = {
     val es = eigSym(cov)
     val order = es.eigenvalues.toArray.zipWithIndex.sortBy(-_._1).map(_._2)
     val ev = order.map(es.eigenvalues(_))
@@ -171,35 +104,31 @@ object PCAGraft {
       val m = (0 until comps.rows).maxBy(i => math.abs(colVec(i)))
       if (colVec(m) < 0) comps(::, c) := colVec * -1.0
     }
-    Result(ev, ev.map(_ / tot), comps)
+    Result(ev, ev.map(_ / tot), comps, mean)
   }
 }
 
 object TSVDGraft {
+  /** The Gramian XᵀX of an array column's rows, from one [[Moments.of]] pass. */
+  private def gramian(df: DataFrame, vecCol: String): DenseMatrix[Double] =
+    Moments.of(Rows.vectors(df, col(vecCol))).gramian
+
   /** TruncatedSVD.transform (reference decomposition/tsvd.pyx): scores
     * along the top-k right singular vectors of X — PCA's projection
     * without centering, so it reuses PCAGraft.transformWide with a zero
     * mean vector. Right singular vectors = eigenvectors of the Gram
     * matrix (one pass + driver eigensolve). */
   def transform(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val g = PCAGraft.crossProducts(df, vecCol, centered = false)._2
-    val r = PCAGraft.fromCovariance(g) // eigensolve + sign convention
-    PCAGraft.transformWide(df, idCol, vecCol, r, k, Array.fill(g.rows)(0.0))
+    val g = gramian(df, vecCol)
+    val r = PCAGraft.fromCovariance(g, new Array[Double](g.rows)) // eigensolve + sign convention
+    PCAGraft.transformWide(df, idCol, vecCol, r, k)
   }
 
   /** Singular values of X via the Gram matrix X'X (one pass),
     * σ_i = sqrt(λ_i(X'X)) — cuML TruncatedSVD's Jacobi-on-Gram, re-split. */
-  def singularValues(df: DataFrame, vecCol: String, k: Int): Array[Double] = {
-    val g = PCAGraft.crossProducts(df, vecCol, centered = false)._2
-    eigSym(g).eigenvalues.toArray.sorted(Ordering[Double].reverse)
+  def singularValues(df: DataFrame, vecCol: String, k: Int): Array[Double] =
+    eigSym(gramian(df, vecCol)).eigenvalues.toArray.sorted(Ordering[Double].reverse)
       .take(k).map(l => math.sqrt(math.max(l, 0.0)))
-  }
-
-  def singularValuesNarrow(df: DataFrame, features: Seq[String], k: Int): Array[Double] = {
-    val g = Moments.gram(df, features, None)
-    eigSym(g.xx).eigenvalues.toArray.sorted(Ordering[Double].reverse)
-      .take(k).map(l => math.sqrt(math.max(l, 0.0)))
-  }
 }
 
 /** Random projection (reference python/cuml/random_projection/

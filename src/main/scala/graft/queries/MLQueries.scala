@@ -287,7 +287,7 @@ object MLQueries {
   /** Coordinate-descent replayed in SQL: the centered Gram and response
     * moments come from one aggregate CTE; each of the 200 sweeps updates
     * the three coefficients sequentially (nested subselects) exactly as
-    * CoordinateDescent.fitFromGram does. Gram-level FP noise (~1e-12)
+    * CoordinateDescent.fit does. Gram-level FP noise (~1e-12)
     * perturbs converged coefficients far below the rounding grid. */
   private def cdOracle(alpha: Double, l1Ratio: Double): String = {
     val l1 = alpha * l1Ratio

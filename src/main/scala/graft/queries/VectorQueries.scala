@@ -291,9 +291,8 @@ object VectorQueries {
       // bound); the continuous spectrum itself stays spec-gated
       val e = Tables.embeddings(s, d)
       val r = PCAGraft.fitWide(e, "embedding")
-      val mu = PCAGraft.columnMeans(e, "embedding", 64)
       val k = 4
-      val scores = PCAGraft.transformWide(e, "vec_id", "embedding", r, k, mu)
+      val scores = PCAGraft.transformWide(e, "vec_id", "embedding", r, k)
       val aggs = count(lit(1)).cast("long").as("_n") +: (0 until k).flatMap(c =>
         Seq(avg(col(s"pc$c")).as(s"_m$c"), var_samp(col(s"pc$c")).as(s"_v$c")))
       scores.agg(aggs.head, aggs.tail: _*)
@@ -312,9 +311,8 @@ object VectorQueries {
       // HASH GATE: count + mean-zero + unit-variance booleans hashed
       val e = Tables.embeddings(s, d)
       val r = PCAGraft.fitWide(e, "embedding")
-      val mu = PCAGraft.columnMeans(e, "embedding", 64)
       val k = 4
-      val scores = PCAGraft.transformWhitened(e, "vec_id", "embedding", r, k, mu)
+      val scores = PCAGraft.transformWhitened(e, "vec_id", "embedding", r, k)
       val aggs = count(lit(1)).cast("long").as("_n") +: (0 until k).flatMap(c =>
         Seq(avg(col(s"pc$c")).as(s"_m$c"), var_samp(col(s"pc$c")).as(s"_v$c")))
       scores.agg(aggs.head, aggs.tail: _*)
@@ -334,16 +332,15 @@ object VectorQueries {
       import s.implicits._
       val e = Tables.embeddings(s, d)
       val r = PCAGraft.fitWide(e, "embedding")
-      val mu = PCAGraft.columnMeans(e, "embedding", 64)
       val v = col("embedding").cast("array<double>")
       val centered2 = (0 until 64).map { i =>
-        val c = element_at(v, i + 1) - mu(i); c * c
+        val c = element_at(v, i + 1) - r.mean(i); c * c
       }.reduce(_ + _)
       val row = e.agg(count(lit(1)).cast("long").as("_n"),
         avg(centered2 / 64).as("_m0")).head()
       val (n, mse0) = (row.getLong(0), row.getDouble(1))
       val ks = Seq(1, 4, 16)
-      val mses = ks.map(k => PCAGraft.reconstructionMse(e, "embedding", r, k, mu))
+      val mses = ks.map(k => PCAGraft.reconstructionMse(e, "embedding", r, k))
       ks.zip(mses).zip(mse0 +: mses.dropRight(1)).map { case ((k, m), prev) =>
         (k.toLong, n, m >= -1e-9, m <= prev + 1e-12)
       }.toDF("k", "n_rows", "mse_nonneg", "mse_le_prev").orderBy("k")

@@ -1,79 +1,82 @@
 package graft.stats
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.core.Rows
+import org.apache.spark.rdd.RDD
 
-/** One-pass sufficient statistics for the linear-model / decomposition
-  * family: n, Σx_i, Σx_i x_j, Σx_i y, Σy, Σy².
+/** The one-pass sufficient statistics of the closed-form fits (OLS, Ridge,
+  * Lasso/ElasticNet, PCA, TruncatedSVD): the row count n, the column means
+  * μ and the centered co-moment C = Σ(x−μ)(x−μ)ᵀ. The sample covariance is
+  * C/(n−1) and the Gramian XᵀX is C + n·μμᵀ.
   *
-  * Computed as a single codegen'd aggregate over the scan — the Spark-first
-  * replacement for the reference's GPU normal-equation kernels
-  * (reference cpp/src/glm/ols.h: svd/eig/qr solve of X'X). p is the feature
-  * count (small); the p×p Gram collapses to one driver-side row regardless
-  * of n, so the same single pass works at 100 TB: it is a map-side-combined
-  * partial aggregation with no shuffle beyond the final reduce.
+  * The Spark-first replacement for the reference's GPU normal-equation
+  * kernels (reference cpp/src/glm/ols.h: svd/eig/qr solve of X'X): p is
+  * the column count (small), so the p×p statistics collapse to one
+  * partial per partition regardless of n, and the solve runs on the
+  * driver.
   */
-final case class GramStats(
-    n: Long,
-    xSum: DenseVector[Double],    // Σ x_i              (p)
-    xx: DenseMatrix[Double],      // Σ x_i x_j          (p×p)
-    xy: DenseVector[Double],      // Σ x_i y            (p)
-    ySum: Double,                 // Σ y
-    yy: Double                    // Σ y²
-) {
-  def p: Int = xSum.length
+final case class Moments(n: Long, mean: DenseVector[Double], comoment: DenseMatrix[Double]) {
+  def p: Int = mean.length
 
-  /** Gram of the design matrix with an intercept column prepended:
-    * [[n, Σx'], [Σx, Σxx']]  — (p+1)×(p+1). */
-  def designGram: DenseMatrix[Double] = {
-    val g = DenseMatrix.zeros[Double](p + 1, p + 1)
-    g(0, 0) = n.toDouble
-    for (i <- 0 until p) { g(0, i + 1) = xSum(i); g(i + 1, 0) = xSum(i) }
-    for (i <- 0 until p; j <- 0 until p) g(i + 1, j + 1) = xx(i, j)
-    g
-  }
-
-  /** [Σy, Σxy] — response side of the design normal equations. */
-  def designXty: DenseVector[Double] =
-    DenseVector.vertcat(DenseVector(ySum), xy)
-
-  /** Sample covariance matrix of the features. */
+  /** Sample covariance C/(n−1). */
   def covariance: DenseMatrix[Double] = {
-    val c = DenseMatrix.zeros[Double](p, p)
-    for (i <- 0 until p; j <- 0 until p)
-      c(i, j) = (xx(i, j) - xSum(i) * xSum(j) / n) / (n - 1)
-    c
+    require(n > 1, s"covariance of $n rows")
+    comoment / (n - 1).toDouble
   }
+
+  /** The uncentered Gramian XᵀX = C + n·μμᵀ. */
+  def gramian: DenseMatrix[Double] = comoment + (mean * mean.t) * n.toDouble
 }
 
 object Moments {
-  /** Collect GramStats in ONE aggregate pass. `label` optional (PCA needs
-    * none). All products are built as native column expressions (sum(x*y))
-    * so the whole pass stays in whole-stage codegen. */
-  def gram(df: DataFrame, features: Seq[String], label: Option[String]): GramStats = {
-    val p = features.size
-    val fx = features.map(f => col(f).cast("double"))
-    val aggs = Seq(count(lit(1)).cast("long").as("_n")) ++
-      fx.zipWithIndex.map { case (c, i) => sum(c).as(s"_s$i") } ++
-      (for (i <- 0 until p; j <- i until p)
-        yield sum(fx(i) * fx(j)).as(s"_p${i}_$j")) ++
-      label.toSeq.flatMap { l =>
-        val y = col(l).cast("double")
-        fx.zipWithIndex.map { case (c, i) => sum(c * y).as(s"_xy$i") } ++
-          Seq(sum(y).as("_y"), sum(y * y).as("_yy"))
+  /** [[Moments]] of the rows in one pass: Welford's update per row, Chan et
+    * al.'s merge across partitions. The partials merge in partition order
+    * ([[Rows.fold]]), so the same rows give the same statistics bit for
+    * bit. A partial is [n, μ(0..d−1), C (d×d, row-major, upper triangle)];
+    * an empty partition's is empty. */
+  def of(rows: RDD[Array[Double]]): Moments = {
+    val a = Rows.fold(rows) { (_, it) =>
+      var a = Array.emptyDoubleArray
+      var d = 0
+      var dx = Array.emptyDoubleArray
+      it.foreach { x =>
+        if (a.isEmpty) { d = x.length; a = new Array[Double](1 + d + d * d); dx = new Array[Double](d) }
+        require(x.length == d, s"row of ${x.length} columns, expected $d")
+        a(0) += 1
+        var i = 0
+        while (i < d) { dx(i) = x(i) - a(1 + i); a(1 + i) += dx(i) / a(0); i += 1 }
+        i = 0
+        while (i < d) {
+          var j = i
+          while (j < d) { a(1 + d + i * d + j) += dx(i) * (x(j) - a(1 + j)); j += 1 }
+          i += 1
+        }
       }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    var k = 0
-    def next(): Double = { val v = row.getDouble(k); k += 1; v }
-    val n = { val v = row.getLong(0); k = 1; v }
-    val xSum = DenseVector.fill(p)(next())
-    val xx = DenseMatrix.zeros[Double](p, p)
-    for (i <- 0 until p; j <- i until p) { val v = next(); xx(i, j) = v; xx(j, i) = v }
-    val (xy, ySum, yy) = label match {
-      case Some(_) => (DenseVector.fill(p)(next()), next(), next())
-      case None    => (DenseVector.zeros[Double](p), 0.0, 0.0)
+      a
+    } { (a, b) =>
+      if (a.isEmpty) b
+      else if (b.isEmpty) a
+      else {
+        require(a.length == b.length, "rows of different lengths")
+        val d = width(a)
+        val (na, nb) = (a(0), b(0))
+        val nt = na + nb
+        val dm = Array.tabulate(d)(j => b(1 + j) - a(1 + j))
+        for (i <- 0 until d; j <- i until d) {
+          val o = 1 + d + i * d + j
+          a(o) += b(o) + dm(i) * dm(j) * na * nb / nt
+        }
+        for (j <- 0 until d) a(1 + j) += dm(j) * nb / nt
+        a(0) = nt
+        a
+      }
     }
-    GramStats(n, xSum, xx, xy, ySum, yy)
+    require(a.nonEmpty, "Moments.of: no rows")
+    val d = width(a)
+    Moments(a(0).toLong, DenseVector(a.slice(1, 1 + d)),
+      DenseMatrix.tabulate(d, d)((i, j) => a(1 + d + math.min(i, j) * d + math.max(i, j))))
   }
+
+  /** d of a partial of 1 + d + d² elements. */
+  private def width(a: Array[Double]): Int = (math.sqrt(4.0 * a.length - 3).round.toInt - 1) / 2
 }

@@ -4,8 +4,11 @@ import graft.core.Num.{r4, round4}
 import graft.core.Rows
 import graft.linear.GradientSolver
 import graft.neighbors.KNN
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** SVC (reference python/cuml/svm/svm.pyx — SMO-based SVC; linsvm/ — the
   * QN-based LinearSVC). The distributed counterpart of the linear kernel is
@@ -22,7 +25,7 @@ object SVMGraft {
       binaryLabel.cast("double").as("_lab")): _*)
     val model = GradientSolver.fitQN(base, features, "_lab",
       l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss)
-    val (n, hits, _, _) = marginPass(base, features, model.coefs.toArray)
+    val (n, hits, _, _) = marginPass(labeled(base, features), features.size, model.coefs.toArray)
     val acc = round4(hits.toDouble / n)
     val spark = df.sparkSession
     import spark.implicits._
@@ -54,17 +57,6 @@ object SVMGraft {
       .orderBy("pred")
   }
 
-  /** RBF-kernel SVC approximated by Random Fourier Features (Rahimi &
-    * Recht, "Random Features for Large-Scale Kernel Machines", NeurIPS
-    * 2007): z(x) = √(2/D)·cos(Wx + b) with W ~ N(0, 2γI) makes
-    * z(x)·z(y) ≈ exp(−γ‖x−y‖²), so a LINEAR squared-hinge fit on z is a
-    * kernel SVC — the distributed answer to reference svm/svm.pyx's SMO,
-    * which needs the n×n kernel matrix and cannot shard. W and b are
-    * md5-seeded, the D feature columns are codegen'd cos expressions (pure
-    * map), and the fit is the same one-aggregate-per-evaluation QN harness
-    * as the linear path. Features are standardized first so γ acts on
-    * comparable scales. The projection is built by [[rffFrame]]; the fit
-    * surfaces through [[rbfSvcSummary]] and [[rbfSvcGate]]. */
   /** PARTIAL HASH GATE row for the linear SVC fit: row count (SQL-exact)
     * plus two floors — the fitted squared-hinge loss sits below the
     * zero-model's loss of exactly 1.0 (w=0 is feasible for the QN
@@ -77,21 +69,16 @@ object SVMGraft {
       binaryLabel.cast("double").as("_lab")): _*)
     val model = GradientSolver.fitQN(base, features, "_lab",
       l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss)
-    hingeGateRow(base, features, model.coefs.toArray)
+    hingeGateRow(base.sparkSession, labeled(base, features), features.size, model.coefs.toArray)
   }
 
   /** Same gate over the RFF feature map — the kernel-SVC twin. */
   def rbfSvcGate(df: DataFrame, features: Seq[String], binaryLabel: Column,
                  gamma: Double = 0.5, dRff: Int = 32,
-                 regParam: Double = 1e-4, maxIter: Int = 25): DataFrame = {
-    val (zdf, zNames) = rffFrame(df, features, binaryLabel, gamma, dRff)
-    try {
-      val model = GradientSolver.fitQN(zdf, zNames, "_lab",
-        l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss,
-        tol = 1e-5)
-      hingeGateRow(zdf, zNames, model.coefs.toArray)
-    } finally zdf.unpersist(blocking = false)
-  }
+                 regParam: Double = 1e-4, maxIter: Int = 25): DataFrame =
+    withRff(df, features, binaryLabel, gamma, dRff) { (_, z) =>
+      hingeGateRow(df.sparkSession, z, dRff, rffQn(z, dRff, regParam, maxIter))
+    }
 
   /** PARTIAL HASH GATE row for the EXACT kernel SVC ([[SMO]]) on a
     * bounded md5-ordered sample — the reference's true SMO semantics
@@ -136,63 +123,75 @@ object SVMGraft {
 
   /** n, squared-hinge loss of the fitted coefficients vs the zero model's
     * exact 1.0, accuracy vs majority, from one [[marginPass]]. */
-  private def hingeGateRow(base: DataFrame, features: Seq[String],
+  private def hingeGateRow(spark: SparkSession, rows: RDD[Array[Double]], p: Int,
                            coefs: Array[Double]): DataFrame = {
-    val (n, hits, hinge, labels) = marginPass(base, features, coefs)
+    val (n, hits, hinge, labels) = marginPass(rows, p, coefs)
     val pbar = labels / n
-    val spark = base.sparkSession
     import spark.implicits._
     Seq((n, hinge / n < 1.0, hits.toDouble / n >= math.max(pbar, 1.0 - pbar)))
       .toDF("n_rows", "loss_lt_zero_model", "acc_ge_majority")
   }
 
-  /** One pass over the rows of `base` (`features`, then `_lab`) scoring the
-    * margin w(0) + Σ x_i·w(i+1): (rows, sign(margin) hits against the 0/1
-    * label, sum of squared hinge losses, sum of labels). The coefficients
-    * stay in the closure, not in generated code, so a fit over new values
-    * compiles no class. */
-  private def marginPass(base: DataFrame, features: Seq[String],
-                         w: Array[Double]): (Long, Long, Double, Double) = {
-    val p = features.size
-    Rows.of(base, (features :+ "_lab").map(col)).treeAggregate((0L, 0L, 0.0, 0.0))(
+  /** The rows of `base`'s `features`, then its `_lab`. */
+  private def labeled(base: DataFrame, features: Seq[String]): RDD[Array[Double]] =
+    Rows.of(base, (features :+ "_lab").map(col))
+
+  /** The margin w(0) + Σ x_i·w(i+1) of a row's first `p` columns. */
+  private def margin(w: Array[Double], x: Array[Double], p: Int): Double = {
+    var m = w(0)
+    var i = 0
+    while (i < p) { m += x(i) * w(i + 1); i += 1 }
+    m
+  }
+
+  /** One pass over rows of `p` features, then the 0/1 label, scoring the
+    * [[margin]]: (rows, sign(margin) hits against the label, sum of
+    * squared hinge losses, sum of labels). The coefficients stay in the
+    * closure, not in generated code, so a fit over new values compiles no
+    * class. */
+  private def marginPass(rows: RDD[Array[Double]], p: Int,
+                         w: Array[Double]): (Long, Long, Double, Double) =
+    rows.treeAggregate((0L, 0L, 0.0, 0.0))(
       (a, r) => {
-        var m = w(0)
-        var i = 0
-        while (i < p) { m += r(i) * w(i + 1); i += 1 }
+        val m = margin(w, r, p)
         val h = math.max(0.0, 1.0 - (r(p) * 2.0 - 1.0) * m)
         (a._1 + 1, if ((m > 0) == (r(p) == 1.0)) a._2 + 1 else a._2, a._3 + h * h, a._4 + r(p))
       },
       (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4), depth = 2)
-  }
 
-  /** Per-row RFF decision margins keyed by `idCol` — the comparison
-    * surface the exact-SMO audit twin scores agreement against
-    * (SvmSpec); same fit as [[rbfSvcSummary]]. */
+  /** Per-row RFF decision margins keyed by `idCol` (as a long) — the
+    * comparison surface the exact-SMO audit twin scores agreement against
+    * (SvmSpec); same fit as [[rbfSvcSummary]]. The rows are scored with
+    * the feature map and the coefficients in the closure. */
   def rbfSvcDecide(df: DataFrame, idCol: Column, features: Seq[String],
                    binaryLabel: Column, gamma: Double = 0.5, dRff: Int = 32,
-                   regParam: Double = 1e-4, maxIter: Int = 60): DataFrame = {
-    val (zdf, zNames) = rffFrame(df, features, binaryLabel, gamma, dRff,
-      extra = Seq(idCol.as("_id")))
-    try {
-      val model = GradientSolver.fitQN(zdf, zNames, "_lab",
-        l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss,
-        tol = 1e-5)
-      val marginC = zNames.zipWithIndex.foldLeft(lit(model.coefs.head)) {
-        case (acc, (zn, j)) => acc + col(zn) * model.coefs(j + 1)
-      }
-      zdf.select(col("_id").as("id"), marginC.as("margin"),
-        col("_lab").as("label"))
-    } finally zdf.unpersist(blocking = false)
-  }
+                   regParam: Double = 1e-4, maxIter: Int = 60): DataFrame =
+    withRff(df, features, binaryLabel, gamma, dRff) { (rff, z) =>
+      val w = rffQn(z, dRff, regParam, maxIter)
+      val p = features.size
+      val scored = df.select(idCol.cast("long") +:
+          (features.map(col) :+ binaryLabel).map(_.cast("double")): _*).rdd
+        .map { r =>
+          val x = Array.tabulate(p)(i => r.getDouble(i + 1))
+          Row(r.getLong(0), margin(w, rff(x), dRff), r.getDouble(p + 1))
+        }
+      df.sparkSession.createDataFrame(scored, StructType(Seq(StructField("id", LongType),
+        StructField("margin", DoubleType), StructField("label", DoubleType))))
+    }
 
-  /** The standardized RFF projection (cached) + its feature names —
-    * shared by [[rbfSvcSummary]] and [[rbfSvcGate]]. */
-  private def rffFrame(df: DataFrame, features: Seq[String], binaryLabel: Column,
-                       gamma: Double, dRff: Int,
-                       extra: Seq[Column] = Nil): (DataFrame, Seq[String]) = {
-    val p = features.size
-    val fx0 = features.map(c => col(c).cast("double"))
-    val (_, mu, sd) = GradientSolver.standardization(Rows.of(df, fx0), p)
+  /** RBF-kernel SVC approximated by Random Fourier Features (Rahimi &
+    * Recht, "Random Features for Large-Scale Kernel Machines", NeurIPS
+    * 2007): z(x) = √(2/D)·cos(Wx + b) with W ~ N(0, 2γI) makes
+    * z(x)·z(y) ≈ exp(−γ‖x−y‖²), so a LINEAR squared-hinge fit on z is a
+    * kernel SVC — the distributed answer to reference svm/svm.pyx's SMO,
+    * which needs the n×n kernel matrix and cannot shard. W and b are
+    * md5-seeded; x is standardized first by the rows' μ/σ (one pass over
+    * `rows`, features then label) so γ acts on comparable scales. The map
+    * is a closure over those fitted values, so none enters generated
+    * code. */
+  private def rffMap(rows: RDD[Array[Double]], p: Int, gamma: Double,
+                     dRff: Int): Array[Double] => Array[Double] = {
+    val (_, mu, sd) = GradientSolver.standardization(rows, p)
     val w = KNN.hyperplanes(dRff, p, seed = 7L).map(_.map(_ * math.sqrt(2.0 * gamma)))
     // deterministic U[0, 2π) offsets — uniformity is required for the RFF
     // kernel estimate to be unbiased (Rahimi–Recht eq. 2), so draw md5
@@ -204,30 +203,41 @@ object SVMGraft {
       (h % 1000000L).toDouble / 1000000.0 * 2.0 * math.Pi
     }
     val amp = math.sqrt(2.0 / dRff)
-    val zCols = (0 until dRff).map { j =>
-      val proj = (0 until p).map { i =>
-        ((fx0(i) - mu(i)) / sd(i)) * w(j)(i)
-      }.reduce(_ + _) + phase(j)
-      (cos(proj) * amp).as(s"_z$j")
+    x => Array.tabulate(dRff) { j =>
+      var proj = (x(0) - mu(0)) / sd(0) * w(j)(0)
+      var i = 1
+      while (i < p) { proj += (x(i) - mu(i)) / sd(i) * w(j)(i); i += 1 }
+      math.cos(proj + phase(j)) * amp
     }
-    val zNames = (0 until dRff).map(j => s"_z$j")
-    val zdf = df.select((zCols ++ extra :+ binaryLabel.cast("double").as("_lab")): _*).cache()
-    (zdf, zNames)
   }
+
+  /** Runs `body` with the RFF map of `features` and the rows of its image
+    * (z, then the 0/1 label), cached once so the QN passes do not
+    * recompute the cosines; the rows are released when `body` returns. */
+  private def withRff[T](df: DataFrame, features: Seq[String], binaryLabel: Column,
+                         gamma: Double, dRff: Int)(
+      body: (Array[Double] => Array[Double], RDD[Array[Double]]) => T): T = {
+    val p = features.size
+    val rows = Rows.of(df, features.map(col) :+ binaryLabel)
+    val rff = rffMap(rows, p, gamma, dRff)
+    val z = rows.map(r => rff(r) :+ r(p)).persist(StorageLevel.MEMORY_AND_DISK)
+    try body(rff, z) finally z.unpersist(blocking = false)
+  }
+
+  /** The squared-hinge QN fit over [[withRff]]'s rows: [b, w(0..D−1)]. */
+  private def rffQn(z: RDD[Array[Double]], dRff: Int, regParam: Double,
+                    maxIter: Int): Array[Double] =
+    GradientSolver.qn(z, (0 until dRff).map(j => s"_z$j"), l2 = regParam, maxIter = maxIter,
+      loss = GradientSolver.HingeLoss, tol = 1e-5, l1 = 0.0).coefs.toArray
 
   def rbfSvcSummary(df: DataFrame, features: Seq[String], binaryLabel: Column,
                     gamma: Double = 0.5, dRff: Int = 32,
-                    regParam: Double = 1e-4, maxIter: Int = 60): DataFrame = {
-    val (zdf, zNames) = rffFrame(df, features, binaryLabel, gamma, dRff)
-    try {
-      val model = GradientSolver.fitQN(zdf, zNames, "_lab",
-        l2 = regParam, maxIter = maxIter, loss = GradientSolver.HingeLoss,
-        tol = 1e-5)
-      val (n, hits, _, _) = marginPass(zdf, zNames, model.coefs.toArray)
+                    regParam: Double = 1e-4, maxIter: Int = 60): DataFrame =
+    withRff(df, features, binaryLabel, gamma, dRff) { (_, z) =>
+      val (n, hits, _, _) = marginPass(z, dRff, rffQn(z, dRff, regParam, maxIter))
       val spark = df.sparkSession
       import spark.implicits._
       Seq((n, dRff.toLong, gamma, round4(hits.toDouble / n)))
         .toDF("n", "d_rff", "gamma", "train_accuracy")
-    } finally zdf.unpersist()
-  }
+    }
 }

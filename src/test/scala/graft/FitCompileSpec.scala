@@ -1,9 +1,9 @@
 package graft
 
 import graft.core.Rows
-import graft.decomposition.PCAGraft
+import graft.decomposition.{PCAGraft, TSVDGraft}
 import graft.ensemble.Forest
-import graft.linear.{GradientSolver, Softmax}
+import graft.linear.{GradientSolver, Lasso, OLS, Ridge, Softmax}
 import graft.svm.SVMGraft
 import graft.tsa.TimeSeries
 import org.apache.spark.graft.Codegen
@@ -73,6 +73,16 @@ class FitCompileSpec extends AnyFunSuite {
       SVMGraft.linearSvcGate(_, fs, col("y") === 1.0, maxIter = 5).collect()) == 0)
   }
 
+  test("rbfSvcSummary compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 27L)(
+      SVMGraft.rbfSvcSummary(_, fs, col("y") === 1.0, dRff = 8, maxIter = 5).collect()) == 0)
+  }
+
+  test("rbfSvcGate compiles no class for a second frame of new values") {
+    assert(secondCallCompiles(tabular, 29L)(
+      SVMGraft.rbfSvcGate(_, fs, col("y") === 1.0, dRff = 8, maxIter = 5).collect()) == 0)
+  }
+
   test("Forest.classifierSummary compiles no class for a second frame of new values") {
     assert(secondCallCompiles(tabular, 17L)(
       Forest.classifierSummary(_, fs, "y", numTrees = 3, maxDepth = 3).collect()) == 0)
@@ -124,6 +134,13 @@ class FitCompileSpec extends AnyFunSuite {
     leavesNothing("linearSvcSummary")(
       SVMGraft.linearSvcSummary(tabular(13L), fs, col("y") === 1.0, maxIter = 5).collect())
     leavesNothing("Softmax.fit")(Softmax.fit(tabular(14L), fs, "y", maxIter = 5))
+    leavesNothing("rbfSvcSummary")(
+      SVMGraft.rbfSvcSummary(tabular(31L), fs, col("y") === 1.0, dRff = 8, maxIter = 5).collect())
+    leavesNothing("rbfSvcGate")(
+      SVMGraft.rbfSvcGate(tabular(32L), fs, col("y") === 1.0, dRff = 8, maxIter = 5).collect())
+    leavesNothing("rbfSvcDecide")(SVMGraft.rbfSvcDecide(tabular(33L).withColumn("id",
+      monotonically_increasing_id()), col("id"), fs, col("y") === 1.0, dRff = 8, maxIter = 5)
+      .collect())
   }
 
   test("the forest fits and PCAGraft.fitWide leave no persisted RDD") {
@@ -135,5 +152,11 @@ class FitCompileSpec extends AnyFunSuite {
       Forest.inferenceSummary(tabular(23L), tabular(24L), fs, "y", numTrees = 3).collect())
     leavesNothing("PCAGraft.fitWide")(
       PCAGraft.fitWide(tabular(25L).select(array(fs.map(col): _*).as("v")), "v"))
+    leavesNothing("PCAGraft.fitNarrow")(PCAGraft.fitNarrow(tabular(26L), fs))
+    leavesNothing("TSVDGraft.singularValues")(
+      TSVDGraft.singularValues(tabular(34L).select(array(fs.map(col): _*).as("v")), "v", 2))
+    leavesNothing("OLS.fit")(OLS.fit(tabular(35L), fs, "y"))
+    leavesNothing("Ridge.fit")(Ridge.fit(tabular(36L), fs, "y", 1.0))
+    leavesNothing("Lasso.fit")(Lasso.fit(tabular(37L), fs, "y", 0.1))
   }
 }

@@ -604,8 +604,7 @@ class OperatorSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "v")
     val r = PCAGraft.fitWide(df, "v")
-    val mu = PCAGraft.columnMeans(df, "v", 6)
-    val mses = Seq(1, 2, 4, 6).map(k => PCAGraft.reconstructionMse(df, "v", r, k, mu))
+    val mses = Seq(1, 2, 4, 6).map(k => PCAGraft.reconstructionMse(df, "v", r, k))
     assert(mses.zip(mses.tail).forall { case (a, b) => b <= a + 1e-12 }, mses.toString)
     assert(mses.last < 1e-10, s"full-rank reconstruction should be exact: ${mses.last}")
     assert(mses.head > mses(1), "rank-1 must lose more than rank-2 on rank-2 data")
@@ -636,8 +635,7 @@ class OperatorSpec extends AnyFunSuite {
     import graft.decomposition.PCAGraft
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val r = PCAGraft.fitWide(e, "embedding")
-    val mu = PCAGraft.columnMeans(e, "embedding", 64)
-    val scores = PCAGraft.transformWide(e, "vec_id", "embedding", r, 3, mu)
+    val scores = PCAGraft.transformWide(e, "vec_id", "embedding", r, 3)
     val row = scores.agg(
       var_samp(col("pc0")), var_samp(col("pc1")), var_samp(col("pc2")),
       avg(col("pc0")), avg(col("pc1")), avg(col("pc2"))).head()
@@ -652,8 +650,7 @@ class OperatorSpec extends AnyFunSuite {
     import graft.decomposition.PCAGraft
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val r = PCAGraft.fitWide(e, "embedding")
-    val mu = PCAGraft.columnMeans(e, "embedding", 64)
-    val scores = PCAGraft.transformWhitened(e, "vec_id", "embedding", r, 3, mu)
+    val scores = PCAGraft.transformWhitened(e, "vec_id", "embedding", r, 3)
     val row = scores.agg(
       var_samp(col("pc0")), var_samp(col("pc1")), var_samp(col("pc2"))).head()
     for (c <- 0 until 3)
