@@ -44,18 +44,14 @@ object VectorOps {
   // whole-stage codegen — the shape a 100 TB pair scan needs. Accumulation
   // is sequential left-to-right, so results are bit-identical to the fold
   // (and to DuckDB's sequential list sum) — every oracle hash is unchanged.
-  // `dim` documents the expected width; vectors are dense and equal-length
-  // (the loop runs over the common prefix).
+  // Vectors are dense and equal-length (the loop runs over the common
+  // prefix), so no width is passed or read.
 
-  def dotFixed(a: Column, b: Column, dim: Int): Column =
+  def dotFixed(a: Column, b: Column): Column =
     graft.functions.ArrayMath.dot(a, b)
 
-  def sqNormFixed(a: Column, dim: Int): Column = dotFixed(a, a, dim)
+  def sqNormFixed(a: Column): Column = dotFixed(a, a)
 
-  def sqDistFixed(a: Column, b: Column, dim: Int): Column =
+  def sqDistFixed(a: Column, b: Column): Column =
     graft.functions.ArrayMath.sqDist(a, b)
-
-  /** Array length of the first row — one tiny job to pin the dimension. */
-  def dimOf(df: org.apache.spark.sql.DataFrame, c: Column): Int =
-    df.select(org.apache.spark.sql.functions.size(c)).head().getInt(0)
 }

@@ -43,7 +43,7 @@ object PCAGraft {
     val outs = (0 until k).map { c =>
       val w = Array.tabulate(dim)(i => r.components(i, c))
       val base = (0 until dim).map(i => means(i) * w(i)).sum
-      (graft.core.VectorOps.dotFixed(v, lit(w), dim) - base).as(s"pc$c")
+      (graft.core.VectorOps.dotFixed(v, lit(w)) - base).as(s"pc$c")
     }
     df.select((col(idCol).cast("long").as("id") +: outs): _*)
   }
@@ -64,7 +64,7 @@ object PCAGraft {
       val s = if (ev > 1e-12) 1.0 / math.sqrt(ev) else 0.0
       val w = Array.tabulate(dim)(i => r.components(i, c) * s)
       val base = (0 until dim).map(i => means(i) * w(i)).sum
-      (graft.core.VectorOps.dotFixed(v, lit(w), dim) - base).as(s"pc$c")
+      (graft.core.VectorOps.dotFixed(v, lit(w)) - base).as(s"pc$c")
     }
     df.select((col(idCol).cast("long").as("id") +: outs): _*)
   }
@@ -84,7 +84,7 @@ object PCAGraft {
     val scores2 = (0 until k).map { c =>
       val w = Array.tabulate(dim)(i => r.components(i, c))
       val base = (0 until dim).map(i => means(i) * w(i)).sum
-      val s = graft.core.VectorOps.dotFixed(v, lit(w), dim) - base
+      val s = graft.core.VectorOps.dotFixed(v, lit(w)) - base
       s * s
     }.reduce(_ + _)
     df.agg(avg((centered2 - scores2) / dim)).head().getDouble(0)

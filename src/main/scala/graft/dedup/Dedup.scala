@@ -238,20 +238,15 @@ object Dedup {
   }
 
   /** Per-doc DISTINCT k-shingle sets (doc, shs), built in-row — one row per
-    * document, no shuffle. The token array and the set each
-    * go through the structural Generate barrier: shingles() reads its input
-    * size(toks)+k times per element, and an INLINED split() would
-    * re-tokenize at every read (the O(len²)-per-doc trap — measured 272 s
-    * vs 9 s at 500k docs); a set read twice (size + explode, or a filter
-    * and its output) would otherwise be rebuilt per read. */
+    * document, no shuffle. [[TextOps.shingles]] reads the token array once
+    * per document, so the split needs no staging; the set goes through the
+    * structural Generate barrier because its callers read it twice (size +
+    * explode, or a filter and its output), and would otherwise rebuild it
+    * per read. */
   private def shingleSets(df: DataFrame, textCol: String, idCol: String,
-                          k: Int): DataFrame = {
-    val toks = Barrier.once(
-      df.select(col(idCol).cast("long").as("doc"), normText(col(textCol)).as("_t")),
-      Seq(col("doc")), split(col("_t"), " "), "toks")
-    Barrier.once(toks, Seq(col("doc")),
-      array_distinct(TextOps.shingles(col("toks"), k)), "shs")
-  }
+                          k: Int): DataFrame =
+    Barrier.once(df, Seq(col(idCol).cast("long").as("doc")),
+      array_distinct(TextOps.shingles(TextOps.tokens(normText(col(textCol))), k)), "shs")
 
   /** The MinHash-LSH candidate pairs with their exact shingle-set sizes
     * (doc1, doc2, inter = |A∩B|, sz1 = |A|, sz2 = |B|) — the r17
@@ -551,8 +546,8 @@ object Dedup {
   def embeddingTopPairsLsh(df: DataFrame, idCol: String, vecCol: String,
                            topN: Int, bits: Int, dim: Int): DataFrame = {
     val b = graft.neighbors.KNN.lshBuckets(df, idCol, vecCol, bits, dim)
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), dim))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), dim) /
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -574,8 +569,8 @@ object Dedup {
                                topN: Int, dim: Int): DataFrame = {
     val bits = graft.neighbors.KNN.lshBitsFor(df.count())
     val b = graft.neighbors.KNN.lshBucketsAuto(df, idCol, vecCol, bits, dim)
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), dim))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), dim) /
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -591,15 +586,14 @@ object Dedup {
   def embeddingTopPairs(df: DataFrame, idCol: String, vecCol: String, topN: Int): DataFrame = {
     val e0 = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val dim = VectorOps.dimOf(e0, col("v"))
     // precompute each row's squared norm once — the pair scan then does one
     // dot per pair instead of three (identical FP values: sqrt(na·nb) over
     // per-row sums matches the oracle's expression exactly). The streamed
     // side is re-spread if the scan under-partitions (single local file =
     // one nested-loop-join task otherwise).
     val e = graft.core.Tables.ensureParallelism(e0)
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), dim))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), dim) /
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"), sim.as("_sim"))
@@ -732,8 +726,8 @@ object Dedup {
       .withColumn("cell",
         graft.functions.ArrayMath.blockArgMaxDot(col("v"), lit(anchors.flatten))
           .cast("int"))
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), dim))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), dim) /
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     // a doc is dropped if ANY same-cell lower-id doc is ≥ tau similar;
     // comparison on the 4-decimal rounding (identical in both engines)
@@ -874,7 +868,7 @@ object Dedup {
         (col("cc").cast("long") * kf +
           graft.functions.ArrayMath.blockArgMaxDot(col("v"), col("favs"))
             .cast("long")).as("cell"))
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), dim))
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
       // referenced 3× below (overflow counts + split assign + final join):
       // materialize the assign pass once instead of re-running it per
       // reference (MEMORY_AND_DISK — same working-set discipline as the
@@ -933,7 +927,7 @@ object Dedup {
         coalesce(col("newcell"), col("cell")).as("cell"), col("n2"))
       .cache()
 
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), dim) /
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     val dropped = finalAssigned.as("a").join(finalAssigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))

@@ -3,7 +3,7 @@ package graft.io
 import graft.ensemble.{Boosting, Forest}
 import graft.linear.LinearModel
 import graft.neighbors.PQ
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, posexplode}
 
 /** Parquet persistence for graft's fitted models — the Spark-native
@@ -42,13 +42,16 @@ object ModelIO {
     rows.toDF().coalesce(1).write.mode("overwrite").parquet(path)
   }
 
+  /** The table at `path`, read with the [[ParamRow]] schema (so no job
+    * infers it from the files). */
   def load(spark: SparkSession, path: String): Seq[ParamRow] =
-    spark.read.parquet(path).collect().toSeq.map { r: Row =>
-      ParamRow(r.getAs[String]("model_type"), r.getAs[String]("section"),
-        r.getAs[Long]("i"), r.getAs[Long]("j"), r.getAs[String]("key"),
-        Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue()),
-        Option(r.getAs[String]("svalue")))
-    }
+    spark.read.schema(Encoders.product[ParamRow].schema).parquet(path).collect().toSeq
+      .map { r: Row =>
+        ParamRow(r.getAs[String]("model_type"), r.getAs[String]("section"),
+          r.getAs[Long]("i"), r.getAs[Long]("j"), r.getAs[String]("key"),
+          Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue()),
+          Option(r.getAs[String]("svalue")))
+      }
 
   /** The persisted table as a DataFrame (for inspection / SQL over a model
     * registry directory). */

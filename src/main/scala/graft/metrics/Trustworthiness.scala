@@ -23,10 +23,9 @@ object Trustworthiness {
     val o2 = o.select(col("qid").as("id"), col("ov").as("ov2"))
     // full original-space rank table on the sample
     val w = Window.partitionBy(col("qid")).orderBy(col("_d").asc, col("id").asc)
-    val dim = VectorOps.dimOf(o, col("ov"))
     val ranks = o.join(o2, col("qid") =!= col("id"))
       .select(col("qid"), col("id"),
-        VectorOps.sqDistFixed(col("ov"), col("ov2"), dim).as("_d"))
+        VectorOps.sqDistFixed(col("ov"), col("ov2")).as("_d"))
       .withColumn("r", row_number().over(w))
       .select(col("qid"), col("id"), col("r"))
     val embK = KNN.bruteForce(emb, emb, idCol, idCol, embVec, embVec, k,

@@ -77,12 +77,11 @@ object IVF {
                     idx: Index, k: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"IVF: nprobe must be at least 1, got $nprobe")
     val v = col(vecCol).cast("array<double>")
-    val dim = idx.centers(0).length
     val q = queries.select(col(idCol).cast("long").as("qid"), v.as("qv"),
         probeUdf(idx, nprobe)(v).as("probes"))
       .select(col("qid"), col("qv"), explode(col("probes")).as("cell"))
-    val s = VectorOps.dotFixed(col("qv"), col("cv"), dim) /
-      sqrt(VectorOps.sqNormFixed(col("qv"), dim) * VectorOps.sqNormFixed(col("cv"), dim))
+    val s = VectorOps.dotFixed(col("qv"), col("cv")) /
+      sqrt(VectorOps.sqNormFixed(col("qv")) * VectorOps.sqNormFixed(col("cv")))
     val pairs = q.join(data, Seq("cell")).select(col("qid"), col("id"), s.as("_s"))
     KNN.topKPerKey(pairs, k, KNN.nearFirst(KNN.Cosine))
   }

@@ -103,7 +103,7 @@ object IVFPQ {
                   idCol: String, vecCol: String, idx: Index, k: Int,
                   nprobe: Int, shortlist: Int): DataFrame =
     KNN.refine(topK(codes, queries, idCol, vecCol, idx, shortlist, nprobe), corpus, queries,
-      idCol, vecCol, idx.ivf.centers(0).length, k)
+      idCol, vecCol, k)
 
   /** Recall@k vs exact L2 brute force + compression + probed fraction —
     * the figure-of-merit surface, as for [[IVF]] and [[PQ]].

@@ -21,12 +21,12 @@ object KNN {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Distance/similarity as a flat codegen'd expression (dim unrolled). */
-  def score(metric: Metric, a: Column, b: Column, dim: Int): Column = metric match {
+  /** Distance/similarity as one codegen'd loop per pair. */
+  def score(metric: Metric, a: Column, b: Column): Column = metric match {
     case Cosine =>
-      VectorOps.dotFixed(a, b, dim) /
-        sqrt(VectorOps.sqNormFixed(a, dim) * VectorOps.sqNormFixed(b, dim))
-    case Euclidean => sqrt(VectorOps.sqDistFixed(a, b, dim))
+      VectorOps.dotFixed(a, b) /
+        sqrt(VectorOps.sqNormFixed(a) * VectorOps.sqNormFixed(b))
+    case Euclidean => sqrt(VectorOps.sqDistFixed(a, b))
   }
 
   /** Exact top-k neighbors of each query row against the corpus.
@@ -78,8 +78,7 @@ object KNN {
     // local file would run the whole broadcast product as one task)
     val c = graft.core.Tables.ensureParallelism(
       corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("cv")))
-    val dim = VectorOps.dimOf(c, col("cv"))
-    val s = score(metric, col("qv"), col("cv"), dim)
+    val s = score(metric, col("qv"), col("cv"))
     c.join(broadcast(q), if (excludeSelf) col("qid") =!= col("id") else lit(true))
       .select(col("qid"), col("id"), s.as("_s"))
   }
@@ -87,13 +86,12 @@ object KNN {
   /** Exact L2 rerank of an ANN shortlist `cand` (qid, id), shared by
     * [[PQ.topKRefined]] and [[IVFPQ.topKRefined]]: the candidates join the
     * raw corpus vectors on id and the broadcast query vectors on qid, and
-    * the k nearest by exact squared distance remain. `dim` comes from the
-    * index, so no job reads it off the corpus. */
+    * the k nearest by exact squared distance remain. */
   private[neighbors] def refine(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
-                                idCol: String, vecCol: String, dim: Int, k: Int): DataFrame = {
+                                idCol: String, vecCol: String, k: Int): DataFrame = {
     val cv = corpus.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("_cv"))
     val qv = queries.select(col(idCol).cast("long").as("qid"), asDouble(col(vecCol)).as("_qv"))
-    val exactD = VectorOps.sqDistFixed(col("_qv"), col("_cv"), dim)
+    val exactD = VectorOps.sqDistFixed(col("_qv"), col("_cv"))
     val pairs = cand.select(col("qid"), col("id")).join(cv, "id").join(broadcast(qv), "qid")
       .select(col("qid"), col("id"), exactD.as("_s"))
     topKPerKey(pairs, k, nearFirst(Euclidean))
@@ -194,7 +192,7 @@ object KNN {
     val v = asDouble(col(vecCol))
     val sig = (0 until bits).map { b =>
       val plane = lit(planes(b))
-      when(VectorOps.dotFixed(v, plane, dim) >= 0, math.pow(2, b).toLong).otherwise(0L)
+      when(VectorOps.dotFixed(v, plane) >= 0, math.pow(2, b).toLong).otherwise(0L)
     }.reduce(_ + _)
     df.select(col(idCol).cast("long").as("id"), v.as("v"), sig.as("bucket"))
   }
@@ -227,13 +225,13 @@ object KNN {
     * while the median task ran 228 s — the r16 third-decade stall). The
     * salt spreads each bucket's probe side over `salts` reducers; the
     * result multiset is identical to the plain bucket join. */
-  private def saltedBucketPairs(b: DataFrame, dim: Int, metric: Metric,
+  private def saltedBucketPairs(b: DataFrame, metric: Metric,
                                 salts: Int = 16): DataFrame = {
     val bb = b.select(col("id").as("id2"), col("v").as("v2"), col("bucket"))
     graft.core.Salting.saltedJoin(b, bb, "bucket", "id", salts)
       .filter(col("id") =!= col("id2"))
       .select(col("id").as("qid"), col("id2").as("id"),
-        score(metric, col("v"), col("v2"), dim).as("_s"))
+        score(metric, col("v"), col("v2")).as("_s"))
   }
 
   /** Salt fan-out scaled to the corpus (r18): salting insures against a
@@ -251,7 +249,7 @@ object KNN {
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, k: Int, bits: Int,
               dim: Int, metric: Metric = Cosine): DataFrame = {
     val b = lshBuckets(df, idCol, vecCol, bits, dim)
-    topKPerKey(saltedBucketPairs(b, dim, metric, saltsFor(df.count())), k,
+    topKPerKey(saltedBucketPairs(b, metric, saltsFor(df.count())), k,
       nearFirst(metric))
   }
 
@@ -286,7 +284,7 @@ object KNN {
     val n = df.count()
     val bits = lshBitsFor(n, targetBucket)
     val b = lshBucketsAuto(df, idCol, vecCol, bits, dim)
-    topKPerKey(saltedBucketPairs(b, dim, metric, saltsFor(n)), k,
+    topKPerKey(saltedBucketPairs(b, metric, saltsFor(n)), k,
       nearFirst(metric))
   }
 }

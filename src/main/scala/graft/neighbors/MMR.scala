@@ -26,8 +26,8 @@ object MMR {
     val spark = df.sparkSession
     val qn = math.sqrt(query.map(x => x * x).sum)
     val rel = round(
-      graft.core.VectorOps.dotFixed(col("v"), lit(query), query.length) /
-        (sqrt(graft.core.VectorOps.sqNormFixed(col("v"), query.length)) * qn), 6)
+      graft.core.VectorOps.dotFixed(col("v"), lit(query)) /
+        (sqrt(graft.core.VectorOps.sqNormFixed(col("v"))) * qn), 6)
     val cand = df.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("rel", rel)

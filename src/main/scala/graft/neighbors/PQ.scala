@@ -128,7 +128,7 @@ object PQ {
                   idCol: String, vecCol: String, cb: Codebook, k: Int,
                   shortlist: Int): DataFrame =
     KNN.refine(topK(codes, queries, idCol, vecCol, cb, shortlist), corpus, queries,
-      idCol, vecCol, cb.m * cb.subDim, k)
+      idCol, vecCol, k)
 
   /** Recall@k vs exact L2 brute force + the compression ratio — the query
     * surface (PQ is approximate by construction; recall against the exact

@@ -34,8 +34,8 @@ object Rerank {
     val qn = math.sqrt(query.map(x => x * x).sum)
     // first stage: the factorized cosine — ONE literal dot per row
     val rel = round(
-      graft.core.VectorOps.dotFixed(col("v"), lit(query), dim) /
-        (sqrt(graft.core.VectorOps.sqNormFixed(col("v"), dim)) * qn), 6)
+      graft.core.VectorOps.dotFixed(col("v"), lit(query)) /
+        (sqrt(graft.core.VectorOps.sqNormFixed(col("v"))) * qn), 6)
     val cand = df.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("rel", rel)
@@ -43,7 +43,7 @@ object Rerank {
     // joint scorer on the bounded pool: the product term folds to a
     // literal dot (wp∘q), the |q−c| term is the genuinely pairwise part
     val wpq = Array.tabulate(dim)(j => w(0)(j) * query(j))
-    val prod = graft.core.VectorOps.dotFixed(col("v"), lit(wpq), dim)
+    val prod = graft.core.VectorOps.dotFixed(col("v"), lit(wpq))
     val diff = (0 until dim).map(j =>
       lit(w(1)(j)) * abs(lit(query(j)) - element_at(col("v"), j + 1)))
       .reduce(_ + _)

@@ -579,14 +579,8 @@ object TextQueries {
         .orderBy("doc")
     },
     "langid" -> { (s, d) =>
-      // token array staged once through the structural barrier — the
-      // langIdScore expression reads it 14 times (r17 opt)
-      graft.core.Barrier.once(
-          Tables.documents(s, d).select(col("lang"), col("text")),
-          Seq(col("lang").as("lang_actual")),
-          TextOps.tokens(col("text")), "_toks")
-        .select(col("lang_actual"),
-          TextOps.langIdScoreFromTokens(col("_toks")).as("lang_pred"))
+      Tables.documents(s, d)
+        .select(col("lang").as("lang_actual"), TextOps.langIdScore(col("text")).as("lang_pred"))
         .groupBy("lang_actual", "lang_pred")
         .agg(count(lit(1)).cast("long").as("n"))
         .orderBy("lang_actual", "lang_pred")

@@ -182,7 +182,7 @@ object VectorQueries {
       val dp2 = (0 until 8).map(i => (col(s"a.rp_$i") - col(s"b.rp_$i")) *
         (col(s"a.rp_$i") - col(s"b.rp_$i"))).reduce(_ + _)
       val dp = round(sqrt(dp2), 4)
-      val dq = round(sqrt(graft.core.VectorOps.sqDistFixed(col("a.v"), col("b.v"), 64)), 4)
+      val dq = round(sqrt(graft.core.VectorOps.sqDistFixed(col("a.v"), col("b.v"))), 4)
       base.as("a").join(base.as("b"), col("a.id") < col("b.id"))
         .select(dp.as("dp"), dq.as("dq"))
         .filter(col("dq") > 0)
@@ -202,7 +202,7 @@ object VectorQueries {
       import graft.core.VectorOps
       val e = Tables.embeddings(s, d)
       val nrm = round(sqrt(VectorOps.sqNormFixed(
-        col("embedding").cast("array<double>"), 64)), 4)
+        col("embedding").cast("array<double>"))), 4)
       val norms = e.select(nrm.as("nrm"))
         .agg(count(lit(1)).cast("long").as("n_vectors"),
           round(min(col("nrm")), 4).as("min_norm"),
@@ -211,8 +211,8 @@ object VectorQueries {
       val sample = e.filter(col("vec_id") < 60)
         .select(col("vec_id").cast("long").as("id"),
           col("embedding").cast("array<double>").as("v"))
-        .withColumn("n2", VectorOps.sqNormFixed(col("v"), 64))
-      val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), 64) /
+        .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+      val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
         sqrt(col("a.n2") * col("b.n2"))
       val iso = sample.as("a").join(sample.as("b"), col("a.id") < col("b.id"))
         .select(round(sim, 4).as("c"))
@@ -775,8 +775,8 @@ object VectorQueries {
   private def lshThresholdEdges(e: DataFrame): DataFrame = {
     import graft.core.VectorOps
     val b = KNN.lshBuckets(e, "vec_id", "embedding", bits = 8, dim = 64)
-      .withColumn("n2", VectorOps.sqNormFixed(col("v"), 64))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), 64) /
+      .withColumn("n2", VectorOps.sqNormFixed(col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))

@@ -370,11 +370,10 @@ object StreamingOps {
     val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
     val bs = TextOps.explodedShingles(benchmark, col("doc_id"), norm, k)
       .select(col("sh")).distinct()
-    // stream side: per-doc shingles via the array form (per-row transform —
+    // stream side: per-doc shingles via the array form (a per-row map —
     // windows over a stream would need watermarked state for no benefit)
-    val toks = docs.select(col("doc_id").cast("long").as("doc"), split(norm, " ").as("toks"))
-    val sh = toks.select(col("doc"), array_distinct(TextOps.shingles(col("toks"), k)).as("shs"))
-      .select(col("doc"), explode(col("shs")).as("sh"))
+    val sh = docs.select(col("doc_id").cast("long").as("doc"),
+        explode(array_distinct(TextOps.shingles(TextOps.tokens(norm), k))).as("sh"))
     sh.join(broadcast(bs.withColumn("_hit", lit(1L))), Seq("sh"), "left")
       .groupBy(col("doc"))
       .agg(count(lit(1)).cast("long").as("n_shingles"),

@@ -2,13 +2,19 @@ package graft.text
 
 import graft.core.Num
 import graft.core.Num.r4
+import graft.functions.TextKernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for LLM-data pipelines: language ID, quality
-  * scoring, token counting, fingerprinting. All pure column expressions
-  * (codegen'd, embarrassingly parallel — zero shuffle at any scale).
+  * scoring, token counting, fingerprinting. All column expressions or
+  * map-side-combined aggregates (embarrassingly parallel — zero shuffle
+  * for the per-document operators at any scale). Quality, language ID,
+  * token counts and k-shingles are thin wrappers over
+  * [[graft.functions.TextKernel]], which reads each document once; the
+  * arithmetic on its counts stays in Spark expressions, so every output
+  * bit matches the DuckDB oracles.
   *
   * Tokenization contract shared with the DuckDB oracles: tokens are the
   * single-space split of `text`; word k-shingles join tokens with '_'.
@@ -16,20 +22,12 @@ import org.apache.spark.sql.functions._
 object TextOps {
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Word k-gram shingles: ["a b c d"] -> k=3 -> ["a_b_c", "b_c_d"].
-    * (Spark's sequence(a,b) runs DESCENDING when a > b, so short docs need
-    * the explicit empty-array guard.)
-    *
-    * NOTE: nested-lambda evaluation re-computes the `toks` expression per
-    * element — hot paths stage the token array (and any set built from the
-    * result that is read more than once) through [[graft.core.Barrier.once]]
-    * so it evaluates once per document. */
-  def shingles(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      transform(
-        sequence(lit(0), size(toks) - k),
-        i => concat_ws("_", (0 until k).map(j => element_at(toks, i + j + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
+  /** Word k-gram shingles: ["a b c d"] -> k=3 -> ["a_b_c", "b_c_d"]; an
+    * empty array for documents shorter than k tokens and for a null
+    * array. One kernel loop per document, reading `toks` once, so callers
+    * need not stage the token array (a set built from the result that is
+    * read more than once still goes through [[graft.core.Barrier.once]]). */
+  def shingles(toks: Column, k: Int): Column = TextKernel.shingles(toks, k)
 
   /** Shingle rows (id, extras..., sh): the k-gram ARRAY is assembled per
     * document straight off the token array ([[shingles]]) and exploded —
@@ -40,80 +38,58 @@ object TextOps {
     * ~4 GB per pass. Output rows are identical: n−k+1 '_'-joined grams
     * per document, none for docs shorter than k tokens.) */
   def explodedShingles(df: DataFrame, idc: Column, textNorm: Column, k: Int,
-                       extra: Seq[(String, Column)] = Nil): DataFrame = {
-    val toks = df.select((idc.cast("long").as("doc") +:
-      extra.map { case (n, c) => c.as(n) }) :+ split(textNorm, " ").as("toks"): _*)
-    toks.select((col("doc") +: extra.map(e => col(e._1))) :+
-      explode(shingles(col("toks"), k)).as("sh"): _*)
-  }
+                       extra: Seq[(String, Column)] = Nil): DataFrame =
+    df.select((idc.cast("long").as("doc") +: extra.map { case (n, c) => c.as(n) }) :+
+      explode(shingles(tokens(textNorm), k)).as("sh"): _*)
 
-  val EnStop: Seq[String] = Seq("the", "a", "and", "of", "to", "in", "is")
-  val LangMarkers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "and", "of", "to"),
-    "es" -> Seq("el", "la", "los", "de", "y"),
-    "de" -> Seq("der", "die", "und", "das", "ist"),
-    "fr" -> Seq("le", "les", "et", "un", "est"),
-    "zh" -> Seq("de5", "shi4", "le5", "wo3", "ni3"))
-
-  private def countIn(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => words.map(w => t === lit(w)).reduce(_ || _)))
+  val EnStop: Seq[String] = TextKernel.EnStop
+  val LangMarkers: Seq[(String, Seq[String])] = TextKernel.LangMarkers
 
   /** N-gram/stopword-profile language ID: score = marker-token count per
-    * language; argmax with a fixed language-order tiebreak. The
-    * expression reads the token array 14× (one filter per language +
-    * the argmax) — callers on a hot path should stage the array once
-    * via [[graft.core.Barrier.once]] and pass it to
-    * [[langIdScoreFromTokens]] (r17 opt: the filter() higher-order
-    * functions fall back from codegen, so the inlined split() would
-    * otherwise re-tokenize per language). */
-  def langIdScore(text: Column): Column = langIdScoreFromTokens(tokens(text))
+    * language; argmax with a fixed language-order tiebreak, `und` when no
+    * marker occurs (null and empty text included). One kernel scan per
+    * document, shared with any [[qualityScore]] in the same projection. */
+  def langIdScore(text: Column): Column =
+    coalesce(TextKernel.stats(text).getField("lang"), lit("und"))
 
-  def langIdScoreFromTokens(toks: Column): Column = {
-    val scores = LangMarkers.map { case (l, ws) => (l, countIn(toks, ws)) }
-    val best = greatest(scores.map(_._2): _*)
-    scores.foldRight(lit("und")) { case ((l, s), acc) =>
-      when(s === best && best > 0, lit(l)).otherwise(acc)
+  /** The quality terms over the kernel's counts. `alphaRatio` is null for
+    * empty text and every term is null for null text. */
+  private final class Quality(t: Column) {
+    private val s = TextKernel.stats(t)
+    private def count(f: String): Column = s.getField(f).cast("double")
+    val nTok: Column = count("n_tokens")
+    val nChars: Column = count("n_chars")
+    val alphaRatio: Column = when(nChars > 0, count("n_alpha") / nChars)
+    val uniq: Column = count("n_uniq")
+    val stop: Column = count("n_stop")
+    /** The composite in [0,1] on the 4-dp grid; null where a term is null
+      * (`least` would otherwise read a null sum as 1.0). */
+    val score: Column = {
+      val q = (uniq / nTok) * 0.5 + alphaRatio * 0.3 + least(stop / nTok * 5.0, lit(1.0)) * 0.2
+      when(q.isNotNull, r4(least(lit(1.0), q)))
     }
   }
 
   /** The composite quality score in [0,1] as a single codegen column —
     * usable inline in any projection (no join back to the feature frame
     * needed; dedup_keep_best composes it with the content hash in ONE
-    * scan). Rounded to the 4-dp grid like the feature frame. */
-  def qualityScore(t: Column): Column = {
-    val toks = tokens(t)
-    val nTok = size(toks).cast("double")
-    val nChars = length(t).cast("double")
-    val alpha = length(regexp_replace(t, "[^a-z]", "")).cast("double")
-    val uniq = size(array_distinct(toks)).cast("double")
-    val stop = countIn(toks, EnStop).cast("double")
-    r4(least(lit(1.0),
-      (uniq / nTok) * 0.5 + (alpha / nChars) * 0.3 +
-        least(stop / nTok * 5.0, lit(1.0)) * 0.2))
-  }
+    * scan). Rounded to the 4-dp grid like the feature frame; null for null
+    * or empty text. */
+  def qualityScore(t: Column): Column = new Quality(t).score
 
   /** Heuristic quality features + a composite score in [0,1]. */
   def qualityFeatures(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val t = col(textCol)
-    val toks = tokens(t)
-    val nTok = size(toks).cast("double")
-    val nChars = length(t).cast("double")
-    val alpha = length(regexp_replace(t, "[^a-z]", "")).cast("double")
-    val uniq = size(array_distinct(toks)).cast("double")
-    val stop = countIn(toks, EnStop).cast("double")
+    val f = new Quality(col(textCol))
     df.select(
       col(idCol),
-      nTok.cast("long").as("n_tokens"),
-      r4(nChars / nTok).as("avg_token_len"),
-      r4(alpha / nChars).as("alpha_ratio"),
-      r4(uniq / nTok).as("uniq_ratio"),
-      r4(stop / nTok).as("stopword_ratio"),
-      qualityScore(t).as("quality"))
+      f.nTok.cast("long").as("n_tokens"),
+      r4(f.nChars / f.nTok).as("avg_token_len"),
+      r4(f.alphaRatio).as("alpha_ratio"),
+      r4(f.uniq / f.nTok).as("uniq_ratio"),
+      r4(f.stop / f.nTok).as("stopword_ratio"),
+      f.score.as("quality"))
   }
 
-  /** Token counting: whitespace tokens + BPE-ish piece count (runs of
-    * letters / digits / single other chars — a public-tokenizer-style
-    * pre-tokenization regex). */
   /** Sequence packing — the training-sample assembly step: stream each
     * shard's documents in a deterministic order; a doc joins pack
     * ⌊exclusive-cumsum / budget⌋, so pack BOUNDARIES are fixed budget
@@ -144,13 +120,17 @@ object TextOps {
         round(sum(col("n_tokens")) / lit(budget.toDouble), 4).as("fill"))
   }
 
+  /** Token counting: whitespace tokens, distinct tokens and the BPE-ish
+    * piece count (runs of letters / digits / single other chars — a
+    * public-tokenizer-style pre-tokenization regex), from one kernel scan
+    * per document; null counts for null text. */
   def tokenCounts(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val t = col(textCol)
+    val s = TextKernel.stats(col(textCol))
     df.select(
       col(idCol),
-      size(tokens(t)).cast("long").as("ws_tokens"),
-      size(array_distinct(tokens(t))).cast("long").as("uniq_tokens"),
-      size(regexp_extract_all(t, lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long").as("bpe_pieces"))
+      s.getField("n_tokens").cast("long").as("ws_tokens"),
+      s.getField("n_uniq").cast("long").as("uniq_tokens"),
+      s.getField("n_pieces").cast("long").as("bpe_pieces"))
   }
 
   /** Gopher-style repetition metrics (Rae et al. 2021, "Scaling Language

@@ -35,6 +35,33 @@ class ModelIOSpec extends AnyFunSuite {
     assert(score(loaded).except(score(m)).isEmpty)
   }
 
+  test("a load reads with the ParamRow schema: one job, no schema inference") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val path = tmp("onejob")
+    ModelIO.saveLinear(spark, graft.linear.LinearModel(Seq("intercept", "x"), Seq(0.5, 2.0)), path)
+    val sc = spark.sparkContext
+    val group = "modelio-load"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ModelIO.loadLinear")
+      val m = try ModelIO.loadLinear(spark, path) finally sc.clearJobGroup()
+      org.apache.spark.graft.Codegen.drainListeners(sc)
+      assert(m.coefs == Seq(0.5, 2.0))
+      assert(jobs.get == 1, s"${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
+    // a directory holding another table still fails on the model type
+    val other = tmp("other")
+    spark.range(3).write.mode("overwrite").parquet(other)
+    val e = intercept[IllegalArgumentException](ModelIO.loadLinear(spark, other))
+    assert(e.getMessage.contains("model_type"), e.getMessage)
+  }
+
   test("kmeans centroids round-trip and assignment parity") {
     val feats = Seq("l_quantity", "l_discount", "l_tax")
     val cents = graft.queries.TabularQueries.Centroids

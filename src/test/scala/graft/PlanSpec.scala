@@ -48,6 +48,20 @@ class PlanSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("text scoring and token counts project no higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, LambdaFunction}
+    val docs = Tables.documents(spark, sf)
+    val scored = docs.select(graft.text.TextOps.qualityScore(col("text")),
+      graft.text.TextOps.langIdScore(col("text")))
+    for (df <- Seq(scored, graft.text.TextOps.tokenCounts(docs, "text", "doc_id"))) {
+      val plan = df.queryExecution.optimizedPlan
+      val lambdas = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: ArrayFilter | _: ArrayTransform | _: LambdaFunction) => e
+      }))
+      assert(lambdas.isEmpty, plan.toString.take(3000))
+    }
+  }
+
   test("dbscan_1d windows run bucket-partitioned, not as a global sort") {
     val df = graft.cluster.DBSCAN.oneD(Tables.customer(spark, sf),
       "c_custkey", "c_acctbal", 50.0, 3)

@@ -80,8 +80,8 @@ class StatQueriesSpec extends AnyFunSuite {
     val noise = (0 until 30).map(i => ((100 + i).toLong, Array.fill(64)(rnd.nextGaussian()).toSeq))
     val df = (planted ++ noise).toDF("vec_id", "embedding")
     val b = graft.neighbors.KNN.lshBuckets(df, "vec_id", "embedding", bits = 8, dim = 64)
-      .withColumn("n2", VectorOps.sqNormFixed(org.apache.spark.sql.functions.col("v"), 64))
-    val sim = VectorOps.dotFixed(col("a.v"), col("b.v"), 64) /
+      .withColumn("n2", VectorOps.sqNormFixed(org.apache.spark.sql.functions.col("v")))
+    val sim = VectorOps.dotFixed(col("a.v"), col("b.v")) /
       sqrt(col("a.n2") * col("b.n2"))
     val edges = b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
