@@ -26,7 +26,9 @@ object VectorOps {
   def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
-  /** Cosine similarity; 0-vectors yield NULL (division by zero → null in SQL). */
+  /** Cosine similarity. A 0-vector divides by zero: under ANSI mode
+    * (Spark's default) the query fails with DIVIDE_BY_ZERO; with ANSI off
+    * the similarity is NULL. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 

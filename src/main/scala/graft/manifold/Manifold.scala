@@ -230,8 +230,8 @@ object Manifold {
     * Scale shape: the fitted model (original vectors + 2-D positions) is
     * O(sample) by the same bound as the layout state, so BOTH joins
     * broadcast the model side and the new-point corpus only streams;
-    * the sole shuffle is the bounded-heap top-k reduction (k rows per
-    * new point after map-side combine).
+    * the sole shuffle is the bounded top-k aggregate (k entries per
+    * new point after partial aggregation).
     *
     * `fitted` = (idCol, vecCol) rows the layout was fitted on;
     * `layout`  = (id, x, y) as returned by [[forceLayout]]. */

@@ -1,7 +1,7 @@
 package graft.neighbors
 
 import graft.cluster.Lloyd
-import graft.core.{FitCache, Rows, VectorOps}
+import graft.core.{FitCache, Rows}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,9 +40,9 @@ object IVF {
     * than the interpreted-expression fallback, and not part of any oracle
     * contract). */
   private def cells(corpus: DataFrame, idCol: String, vecCol: String, idx: Index): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
     val cell = udf((x: Seq[Double]) => Lloyd.nearest(x.toArray, idx.centers))
-    corpus.select(col(idCol).cast("long").as("id"), v.as("cv"), cell(v).as("cell"))
+    KNN.vectors(corpus, Seq(col(idCol).cast("long").as("id")), vecCol, "cv")
+      .select(col("id"), col("cv"), cell(col("cv")).as("cell"))
   }
 
   /** Top-k cosine neighbors probing nprobe cells per query. */
@@ -70,19 +70,19 @@ object IVF {
   /** The search both top-k entry points run over a corpus side of
     * (id, cv, cell): each query explodes into its nprobe nearest cells
     * (nprobe above the cell count probes them all), joins the corpus on the
-    * cell, and the cosine-scored pairs rerank in a bounded heap
-    * (map-side combined) instead of a row_number window over the full
-    * O(candidates) pair set. */
+    * cell, and the cosine-scored pairs rerank in [[KNN.topKPerKey]]'s
+    * bounded top-k (partially aggregated map-side) instead of a row_number
+    * window over the full O(candidates) pair set. Both sides carry their
+    * squared norms, computed once per row, so a pair costs one dot. */
   private def probe(data: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
                     idx: Index, k: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"IVF: nprobe must be at least 1, got $nprobe")
-    val v = col(vecCol).cast("array<double>")
-    val q = queries.select(col(idCol).cast("long").as("qid"), v.as("qv"),
-        probeUdf(idx, nprobe)(v).as("probes"))
-      .select(col("qid"), col("qv"), explode(col("probes")).as("cell"))
-    val s = VectorOps.dotFixed(col("qv"), col("cv")) /
-      sqrt(VectorOps.sqNormFixed(col("qv")) * VectorOps.sqNormFixed(col("cv")))
-    val pairs = q.join(data, Seq("cell")).select(col("qid"), col("id"), s.as("_s"))
+    val q = KNN.vectors(queries, Seq(col(idCol).cast("long").as("qid")), vecCol, "qv",
+        normed = true)
+      .select(col("qid"), col("qv"), col("sq_qv"),
+        explode(probeUdf(idx, nprobe)(col("qv"))).as("cell"))
+    val pairs = q.join(KNN.withNorm(data, "cv", normed = true), Seq("cell"))
+      .select(col("qid"), col("id"), KNN.score(KNN.Cosine, "qv", "cv").as("_s"))
     KNN.topKPerKey(pairs, k, KNN.nearFirst(KNN.Cosine))
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * (qid, cell, lut) rows — the ADC table is per probe because the
   * residual depends on that cell's centroid — joins the code table on
   * the cell key (only the tiny probe side moves), scores each candidate
-  * with M element_at adds, and reranks in a bounded heap. Candidate
+  * with M element_at adds, and reranks in a bounded top-k. Candidate
   * volume is the probed fraction of the corpus; nothing re-shuffles.
   */
 object IVFPQ {
@@ -80,7 +80,7 @@ object IVFPQ {
   } // consumed directly under explode(): the Generate node IS the barrier
 
   /** Top-k by asymmetric distance over the probed cells: cell-key join,
-    * M element_at adds per candidate, bounded-heap rerank. */
+    * M element_at adds per candidate, bounded top-k rerank. */
   def topK(codes: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
            idx: Index, k: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"IVFPQ: nprobe must be at least 1, got $nprobe")

@@ -1,6 +1,6 @@
 package graft.neighbors
 
-import graft.core.VectorOps
+import graft.core.{Barrier, VectorOps}
 import graft.core.Num.{r4, md5Long}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -13,28 +13,47 @@ import org.apache.spark.sql.functions._
   * Brute force: the query set is broadcast (q·p floats), the corpus streams
   * through a codegen'd distance expression, and top-k is taken per query.
   * No corpus shuffle — at 100 TB the corpus is scanned once, map-side.
+  * As in the reference, each row's vector is cast and normed once
+  * ([[vectors]]), so a pair costs one dot product.
   */
 object KNN {
   sealed trait Metric
   case object Cosine extends Metric     // returns similarity (desc = nearest)
   case object Euclidean extends Metric  // returns distance  (asc  = nearest)
 
-  private def asDouble(c: Column): Column = c.cast("array<double>")
+  /** `df` as `keep` plus `vecCol` cast to array<double> as `v` and, when
+    * `normed`, its squared norm as `sq_<v>` ([[withNorm]]): each evaluated
+    * once per row behind [[Barrier.once]]. Whole-stage codegen defers a
+    * projected column to its first use, which in a nested-loop join is the
+    * inner loop, so a plain projection would cast (boxing every element)
+    * once per PAIR; the barrier's Generate evaluates it once per row. */
+  private[neighbors] def vectors(df: DataFrame, keep: Seq[Column], vecCol: String, v: String,
+                                 normed: Boolean = false): DataFrame =
+    withNorm(Barrier.once(df, keep, col(vecCol).cast("array<double>"), v), v, normed)
 
-  /** Distance/similarity as one codegen'd loop per pair. */
-  def score(metric: Metric, a: Column, b: Column): Column = metric match {
+  /** `df` plus the squared norm of its array<double> column `v` as
+    * `sq_<v>`, once per row (a no-op unless `normed`). The prefix keeps the
+    * pair under a suffix rename: `v2`'s norm is `sq_v2`. */
+  private[neighbors] def withNorm(df: DataFrame, v: String, normed: Boolean): DataFrame =
+    if (!normed) df
+    else Barrier.once(df, df.columns.toSeq.map(col), VectorOps.sqNormFixed(col(v)), s"sq_$v")
+
+  /** Distance/similarity of a pair from two [[vectors]] sides: cosine reads
+    * the sides' squared norms (normed = true), so one dot runs per pair;
+    * dot / sqrt(qn·cn) is the bits of the per-pair form, since both norms
+    * come from the same ArrayMath loop. */
+  private[neighbors] def score(metric: Metric, a: String, b: String): Column = metric match {
     case Cosine =>
-      VectorOps.dotFixed(a, b) /
-        sqrt(VectorOps.sqNormFixed(a) * VectorOps.sqNormFixed(b))
-    case Euclidean => sqrt(VectorOps.sqDistFixed(a, b))
+      VectorOps.dotFixed(col(a), col(b)) / sqrt(col(s"sq_$a") * col(s"sq_$b"))
+    case Euclidean => sqrt(VectorOps.sqDistFixed(col(a), col(b)))
   }
 
   /** Exact top-k neighbors of each query row against the corpus.
-    * The distance scan is a codegen'd broadcast product; the reduction is a
-    * bounded-heap aggregateByKey with map-side combine, so the shuffle
-    * carries only q·k rows PER PARTITION — not the full q·n pair set a
-    * window would move. Deterministic tiebreak on id (identical selection
-    * and order to a row_number window / SQL oracle).
+    * The distance scan is a codegen'd broadcast product; the reduction is
+    * [[topKPerKey]]'s bounded top-k aggregate with partial aggregation, so
+    * the shuffle carries only q·k entries PER PARTITION — not the full q·n
+    * pair set a window would move. Deterministic tiebreak on id (identical
+    * selection and order to a row_number window / SQL oracle).
     * Output: (qid, rank, id, score). */
   def bruteForce(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
                  qVec: String, cVec: String, k: Int, metric: Metric,
@@ -73,14 +92,14 @@ object KNN {
   def broadcastPairs(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
                      qVec: String, cVec: String, metric: Metric,
                      excludeSelf: Boolean): DataFrame = {
-    val q = queries.select(col(qId).cast("long").as("qid"), asDouble(col(qVec)).as("qv"))
+    val normed = metric == Cosine
+    val q = vectors(queries, Seq(col(qId).cast("long").as("qid")), qVec, "qv", normed)
     // re-spread the streamed corpus if the scan under-partitions (a single
     // local file would run the whole broadcast product as one task)
     val c = graft.core.Tables.ensureParallelism(
-      corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("cv")))
-    val s = score(metric, col("qv"), col("cv"))
+      vectors(corpus, Seq(col(cId).cast("long").as("id")), cVec, "cv", normed))
     c.join(broadcast(q), if (excludeSelf) col("qid") =!= col("id") else lit(true))
-      .select(col("qid"), col("id"), s.as("_s"))
+      .select(col("qid"), col("id"), score(metric, "qv", "cv").as("_s"))
   }
 
   /** Exact L2 rerank of an ANN shortlist `cand` (qid, id), shared by
@@ -89,8 +108,8 @@ object KNN {
     * the k nearest by exact squared distance remain. */
   private[neighbors] def refine(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
                                 idCol: String, vecCol: String, k: Int): DataFrame = {
-    val cv = corpus.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("_cv"))
-    val qv = queries.select(col(idCol).cast("long").as("qid"), asDouble(col(vecCol)).as("_qv"))
+    val cv = vectors(corpus, Seq(col(idCol).cast("long").as("id")), vecCol, "_cv")
+    val qv = vectors(queries, Seq(col(idCol).cast("long").as("qid")), vecCol, "_qv")
     val exactD = VectorOps.sqDistFixed(col("_qv"), col("_cv"))
     val pairs = cand.select(col("qid"), col("id")).join(cv, "id").join(broadcast(qv), "qid")
       .select(col("qid"), col("id"), exactD.as("_s"))
@@ -124,35 +143,27 @@ object KNN {
       case Euclidean => (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
     }
 
-  /** Bounded-heap exact top-k per key over (qid, id, _s) rows. */
-  def topKPerKey(pairs: org.apache.spark.sql.DataFrame, k: Int,
-                 better: ((Double, Long), (Double, Long)) => Boolean): org.apache.spark.sql.DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    // heap head = worst kept entry (the one to evict)
-    implicit val worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int =
-        if (better(b, a)) 1 else if (better(a, b)) -1 else 0
-    }
-    val topped = pairs.select(col("qid").cast("long"), col("id").cast("long"),
-        col("_s").cast("double"))
-      .as[(Long, Long, Double)].rdd
-      .map { case (qid, id, sv) => (qid, (sv, id)) }
-      .aggregateByKey(new scala.collection.mutable.PriorityQueue[(Double, Long)]())(
-        (h, v) => { h.enqueue(v); if (h.size > k) h.dequeue(); h },
-        (h1, h2) => { h2.foreach { v => h1.enqueue(v); if (h1.size > k) h1.dequeue() }; h1 })
-    topped.flatMap { case (qid, h) =>
-      h.toSeq.sortWith(better).zipWithIndex.map { case ((sv, id), r) =>
-        (qid, r + 1, id, sv)
-      }
-    }.toDF("qid", "rank", "id", "_s")
-      .select(col("qid"), col("rank"), col("id"), r4(col("_s")).as("score"))
-  }
+  /** Exact top-k per key over (qid, id, _s) rows: one
+    * [[graft.functions.TopK]] aggregate per qid (a bounded top-k in
+    * primitive arrays, partially aggregated map-side; the frame stays a
+    * lazy plan, so building it runs no job), posexploded to
+    * (qid, rank, id, score) with rank 1 the best under `better` and the
+    * score rounded to 4 dp. `better` must order (score, id) pairs
+    * strictly, as [[nearFirst]] does. A NaN or null score fails the
+    * query. */
+  def topKPerKey(pairs: DataFrame, k: Int,
+                 better: ((Double, Long), (Double, Long)) => Boolean): DataFrame =
+    pairs.groupBy(col("qid").cast("long").as("qid"))
+      .agg(graft.functions.TopK.of(col("id").cast("long"), col("_s").cast("double"), k, better)
+        .as("_t"))
+      .select(col("qid"), posexplode(col("_t")).as(Seq("_r", "_h")))
+      .select(col("qid"), (col("_r") + 1).as("rank"), col("_h.id").as("id"),
+        r4(col("_h.s")).as("score"))
 
   /** kNN classifier (KNeighborsClassifier semantics): majority vote of the
     * k nearest train labels, ties broken (votes desc, label asc) so the
     * decision replays exactly in SQL. Returns (qid, pred). The vote table
-    * is k×|queries| rows — every reduction after the bounded-heap top-k
+    * is k×|queries| rows — every reduction after the bounded top-k
     * runs on that bounded frame, never the corpus. */
   def classify(queries: DataFrame, train: DataFrame, qId: String, cId: String,
                qVec: String, cVec: String, labelCol: String, k: Int,
@@ -171,7 +182,7 @@ object KNN {
 
   /** kNN regressor (KNeighborsRegressor semantics, reference
     * python/cuml/neighbors/kneighbors_regressor.pyx): prediction = mean
-    * target of the k nearest train rows. Same bounded-heap scan as
+    * target of the k nearest train rows. Same bounded top-k scan as
     * [[bruteForce]]; the averaging join runs on the k×|queries| frame,
     * never the corpus. Returns (qid, pred). */
   def regress(queries: DataFrame, train: DataFrame, qId: String, cId: String,
@@ -189,12 +200,12 @@ object KNN {
   def lshBuckets(df: DataFrame, idCol: String, vecCol: String, bits: Int,
                  dim: Int, seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(bits, dim, seed)
-    val v = asDouble(col(vecCol))
     val sig = (0 until bits).map { b =>
       val plane = lit(planes(b))
-      when(VectorOps.dotFixed(v, plane) >= 0, math.pow(2, b).toLong).otherwise(0L)
+      when(VectorOps.dotFixed(col("v"), plane) >= 0, math.pow(2, b).toLong).otherwise(0L)
     }.reduce(_ + _)
-    df.select(col(idCol).cast("long").as("id"), v.as("v"), sig.as("bucket"))
+    vectors(df, Seq(col(idCol).cast("long").as("id")), vecCol, "v")
+      .select(col("id"), col("v"), sig.as("bucket"))
   }
 
   /** Deterministic pseudo-gaussian hyperplanes from md5 (engine-neutral,
@@ -212,10 +223,6 @@ object KNN {
     }
   }
 
-  /** ANN via LSH: candidates share a bucket; exact rerank inside. The
-    * rerank reuses the bounded-heap topKPerKey reduction — map-side
-    * combined, so the shuffle carries q·k rows per partition instead of
-    * the full O(candidate-pairs) set a row_number window would move. */
   /** Bucket self-join with a SALTED key (r17): geometric hyperplane
     * signatures preserve locality, so clustered corpora collapse whole
     * clusters into one bucket — the plain self-join then emits that
@@ -227,11 +234,12 @@ object KNN {
     * result multiset is identical to the plain bucket join. */
   private def saltedBucketPairs(b: DataFrame, metric: Metric,
                                 salts: Int = 16): DataFrame = {
-    val bb = b.select(col("id").as("id2"), col("v").as("v2"), col("bucket"))
-    graft.core.Salting.saltedJoin(b, bb, "bucket", "id", salts)
+    val a = withNorm(b, "v", metric == Cosine)
+    // the probe side: (id2, v2[, sq_v2], bucket)
+    val bb = a.toDF(a.columns.toIndexedSeq.map(c => if (c == "bucket") c else s"${c}2"): _*)
+    graft.core.Salting.saltedJoin(a, bb, "bucket", "id", salts)
       .filter(col("id") =!= col("id2"))
-      .select(col("id").as("qid"), col("id2").as("id"),
-        score(metric, col("v"), col("v2")).as("_s"))
+      .select(col("id").as("qid"), col("id2").as("id"), score(metric, "v", "v2").as("_s"))
   }
 
   /** Salt fan-out scaled to the corpus (r18): salting insures against a
@@ -246,6 +254,10 @@ object KNN {
   private def saltsFor(n: Long): Int =
     math.max(1L, math.min(16L, (n + 8191L) / 8192L)).toInt
 
+  /** ANN via LSH: candidates share a bucket; exact rerank inside. The
+    * rerank reuses the [[topKPerKey]] aggregate — partially aggregated
+    * map-side, so the shuffle carries q·k entries per partition instead of
+    * the full O(candidate-pairs) set a row_number window would move. */
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, k: Int, bits: Int,
               dim: Int, metric: Metric = Cosine): DataFrame = {
     val b = lshBuckets(df, idCol, vecCol, bits, dim)
@@ -271,9 +283,9 @@ object KNN {
   def lshBucketsAuto(df: DataFrame, idCol: String, vecCol: String, bits: Int,
                      dim: Int, seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(bits, dim, seed)
-    val v = asDouble(col(vecCol))
-    df.select(col(idCol).cast("long").as("id"), v.as("v"),
-      graft.functions.ArrayMath.blockSignBits(v, lit(planes.flatten)).as("bucket"))
+    vectors(df, Seq(col(idCol).cast("long").as("id")), vecCol, "v")
+      .select(col("id"), col("v"),
+        graft.functions.ArrayMath.blockSignBits(col("v"), lit(planes.flatten)).as("bucket"))
   }
 
   /** [[lshTopK]] with depth derived from the corpus count — the scale

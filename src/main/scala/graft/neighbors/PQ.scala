@@ -99,7 +99,7 @@ object PQ {
       encodeUdf(cb)(col(vecCol).cast("array<double>")), "code")
 
   /** Top-k by asymmetric PQ distance: broadcast the (query, LUT) side,
-    * score each code row with M element_at lookups (codegen), bounded-heap
+    * score each code row with M element_at lookups (codegen), bounded top-k
     * rerank per query — the same no-window shape as the LSH/IVF paths. */
   def topK(codes: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
            cb: Codebook, k: Int): DataFrame = {
@@ -117,7 +117,7 @@ object PQ {
   /** ADC shortlist + EXACT rerank (the PQ paper's IVFADC+R / FAISS
     * IndexRefine shape — the configuration production deployments run):
     * the corpus-scale pass stays the codegen'd M-lookup ADC scan over the
-    * compressed codes, its top-`shortlist` per query (bounded-heap, no
+    * compressed codes, its top-`shortlist` per query (bounded top-k, no
     * window) joins back to the raw vectors — a hash equi-join on id whose
     * left side is the BOUNDED q·shortlist candidate set, so at 100 TB the
     * fetch touches shortlist rows per query, never the corpus — and the

@@ -67,9 +67,8 @@ class BarrierSpec extends AnyFunSuite {
     val df = spark.createDataFrame(vecs).toDF("id", "v")
     val cb = PQ.train(df, "v", m = 4, k = 8, seed = 1L)
     val codes = PQ.encode(df, "id", "v", cb)
-    // the final top-k runs through an RDD bounded heap (its DF plan is an
-    // ExistingRDD scan), so the plan gates sit on the codec projections
-    // that feed it: exactly one UDF each, emitted through a Generate
+    // the plan gates sit on the codec projections that feed the top-k:
+    // exactly one UDF each, emitted through a Generate
     val codesPlan = codes.queryExecution.executedPlan.toString
     assert("\\bUDF\\b".r.findAllIn(codesPlan).size == 1, s"encode plan:\n$codesPlan")
     assert(codesPlan.contains("Generate"), "encode barrier must be a Generate node")

@@ -2,7 +2,8 @@ package graft
 
 import graft.cluster.{KMeansGraft, Lloyd}
 import graft.core.{FitCache, Rows, Tables}
-import graft.neighbors.{IVF, IVFPQ, PQ}
+import graft.manifold.Manifold
+import graft.neighbors.{IVF, IVFPQ, KNN, PQ}
 import graft.preprocessing.Datasets
 import graft.tools.StageListener
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -285,32 +286,45 @@ class KMeansSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS q_ivf_nprobe")
   }
 
-  test("building PQ.topKRefined's frame starts no job but its broadcast collects") {
-    // the bounded-heap rerank turns its input into an RDD, and AQE collects
-    // that plan's broadcast sides right then; any other job (a dimension
-    // read off the corpus, say) is work the index already knows the answer to
+  test("building a top-k frame starts no job") {
+    // the top-k is a lazy aggregate: no broadcast side is collected, no
+    // dimension is read off the corpus, until the frame is run
     val e = Tables.embeddings(spark, sf)
     val q = e.filter(col("vec_id") < 10)
+    val ivf = IVF.train(e, "embedding", 8)
+    val ivfpq = IVFPQ.train(e, "embedding", 8, m = 8, kCodes = 16)
+    val ivfpqCodes = IVFPQ.encode(e, "vec_id", "embedding", ivfpq)
     val cb = PQ.train(e, "embedding", m = 8, k = 16)
-    val codes = PQ.encode(e, "vec_id", "embedding", cb)
+    val pqCodes = PQ.encode(e, "vec_id", "embedding", cb)
+    val layout = q.select(col("vec_id").as("id"), lit(0.0).as("x"), lit(1.0).as("y"))
+    val builders = Seq[(String, () => DataFrame)](
+      "KNN.bruteForce" -> (() => KNN.bruteForce(q, e, "vec_id", "vec_id", "embedding",
+        "embedding", 5, KNN.Cosine)),
+      "IVF.topK" -> (() => IVF.topK(e, q, "vec_id", "embedding", ivf, k = 5, nprobe = 2)),
+      "IVFPQ.topK" -> (() =>
+        IVFPQ.topK(ivfpqCodes, q, "vec_id", "embedding", ivfpq, k = 5, nprobe = 2)),
+      "IVFPQ.topKRefined" -> (() => IVFPQ.topKRefined(ivfpqCodes, e, q, "vec_id",
+        "embedding", ivfpq, k = 5, nprobe = 2, shortlist = 20)),
+      "PQ.topKRefined" -> (() =>
+        PQ.topKRefined(pqCodes, e, q, "vec_id", "embedding", cb, k = 5, shortlist = 20)),
+      "Manifold.umapTransform" -> (() =>
+        Manifold.umapTransform(e, q, layout, "vec_id", "embedding", k = 5)))
     val sc = spark.sparkContext
-    val group = "pq-refine-build"
     val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group) &&
-            !p.exists(_.getProperty("spark.job.tags", "").contains("broadcast exchange")))
-          jobs.add(j.stageInfos.map(_.name).mkString(", "))
-      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("topk-build:"))
+          .foreach(g => jobs.add(s"$g: ${j.stageInfos.map(_.name).mkString(", ")}"))
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "build only")
-      try PQ.topKRefined(codes, e, q, "vec_id", "embedding", cb, k = 5, shortlist = 20)
-      finally sc.clearJobGroup()
+      for ((name, build) <- builders) {
+        sc.setJobGroup(s"topk-build:$name", "build only")
+        try build() finally sc.clearJobGroup()
+      }
       org.apache.spark.graft.Codegen.drainListeners(sc)
-      assert(jobs.isEmpty, s"jobs started while building the frame: $jobs")
+      assert(jobs.isEmpty, s"jobs started while building the frames: $jobs")
     } finally sc.removeSparkListener(listener)
   }
 }

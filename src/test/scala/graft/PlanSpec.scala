@@ -48,6 +48,53 @@ class PlanSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("top-k pair scans cast and norm each vector once per row, never per pair") {
+    // a node at or above a pair join runs once per pair, and so does a
+    // projection between the join and the nearest barrier below it (codegen
+    // defers a projected column to its first use: the join's inner loop).
+    // No such node may hold the array<double> cast or a self-dot (a norm).
+    import graft.neighbors.{IVF, PQ}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter(col("vec_id") < 10)
+    val ivf = IVF.train(e, "embedding", 8)
+    val cb = PQ.train(e, "embedding", m = 8, k = 16)
+    val codes = PQ.encode(e, "vec_id", "embedding", cb)
+    val frames = Seq(
+      "KNN.bruteForce" -> KNN.bruteForce(q, e, "vec_id", "vec_id", "embedding", "embedding",
+        5, KNN.Cosine),
+      "IVF.topK" -> IVF.topK(e, q, "vec_id", "embedding", ivf, k = 5, nprobe = 2),
+      "PQ.topKRefined" -> PQ.topKRefined(codes, e, q, "vec_id", "embedding", cb, k = 5,
+        shortlist = 20))
+    def perRowOnly(x: Expression): Boolean = x match {
+      case c: Cast => c.dataType match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      }
+      case d: graft.functions.DotProduct => d.left.semanticEquals(d.right)
+      case _ => false
+    }
+    def offenders(p: LogicalPlan, perPair: Boolean): Seq[String] = {
+      val pairwise = perPair || p.isInstanceOf[Join] || p.find(_.isInstanceOf[Join]).isDefined
+      val here = if (!pairwise || p.isInstanceOf[Generate]) Nil
+        else p.expressions.flatMap(_.collect { case x if perRowOnly(x) => s"${p.nodeName}: $x" })
+      val below = p match {
+        case _: Generate => false
+        case _: Join => true
+        case _ => perPair
+      }
+      here ++ p.children.flatMap(offenders(_, below))
+    }
+    for ((name, df) <- frames) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.find(_.isInstanceOf[Join]).isDefined, s"$name: no pair join\n$plan")
+      val bad = offenders(plan, perPair = false)
+      assert(bad.isEmpty, s"$name evaluates per pair: ${bad.mkString("; ")}\n$plan")
+    }
+  }
+
   test("text scoring and token counts project no higher-order function") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, LambdaFunction}
     val docs = Tables.documents(spark, sf)

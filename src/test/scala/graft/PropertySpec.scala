@@ -39,6 +39,64 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** topKPerKey's body before it became an aggregate: a boxed
+    * PriorityQueue per key through `Dataset.rdd` + `aggregateByKey`. The
+    * reference the aggregate must equal bit for bit. */
+  private def heapTopK(pairs: org.apache.spark.sql.DataFrame, k: Int,
+                       better: ((Double, Long), (Double, Long)) => Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    implicit val worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
+      def compare(a: (Double, Long), b: (Double, Long)): Int =
+        if (better(b, a)) 1 else if (better(a, b)) -1 else 0
+    }
+    val topped = pairs.select(col("qid").cast("long"), col("id").cast("long"),
+        col("_s").cast("double"))
+      .as[(Long, Long, Double)].rdd
+      .map { case (qid, id, sv) => (qid, (sv, id)) }
+      .aggregateByKey(new scala.collection.mutable.PriorityQueue[(Double, Long)]())(
+        (h, v) => { h.enqueue(v); if (h.size > k) h.dequeue(); h },
+        (h1, h2) => { h2.foreach { v => h1.enqueue(v); if (h1.size > k) h1.dequeue() }; h1 })
+    topped.flatMap { case (qid, h) =>
+      h.toSeq.sortWith(better).zipWithIndex.map { case ((sv, id), r) =>
+        (qid, r + 1, id, sv)
+      }
+    }.toDF("qid", "rank", "id", "_s")
+      .select(col("qid"), col("rank"), col("id"), graft.core.Num.r4(col("_s")).as("score"))
+  }
+
+  test("topKPerKey equals the former PriorityQueue heap bit for bit under heavy ties") {
+    import graft.neighbors.KNN
+    import spark.implicits._
+    // scores from at most 3 values, repeated ids, k up to twice a group's
+    // size, 4 partitions: ties decide most ranks, partial buffers merge
+    val gen = for {
+      vals <- Gen.pick(3, Seq(-2.5, -1.0, 0.0, 0.125, 0.33333, 1.0, 7.75))
+      nv <- Gen.choose(1, 3)
+      n <- Gen.choose(1, 120)
+      rows <- Gen.listOfN(n, for {
+        q <- Gen.choose(0L, 4L)
+        id <- Gen.choose(0L, 30L)
+        s <- Gen.oneOf(vals.take(nv).toSeq)
+      } yield (q, id, s))
+      k <- Gen.choose(1, 2 * (n / 5 + 1))
+    } yield (rows, k)
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted.toSeq
+    cases(gen, 12).foreach { case (rows, k) =>
+      val df = rows.toDF("qid", "id", "_s").repartition(4)
+      assert(df.rdd.getNumPartitions >= 3)
+      for (metric <- Seq(KNN.Cosine, KNN.Euclidean)) {
+        val order = KNN.nearFirst(metric)
+        val got = bits(KNN.topKPerKey(df, k, order))
+        assert(got == bits(heapTopK(df, k, order)), s"$metric k=$k rows=${rows.take(8)}…")
+        assert(got.nonEmpty && got.length <= k * rows.map(_._1).distinct.size)
+      }
+    }
+  }
+
   test("connected components converge() equals union-find on random graphs") {
     import spark.implicits._
     val gen = for {
