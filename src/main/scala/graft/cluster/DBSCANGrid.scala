@@ -19,16 +19,18 @@ import org.apache.spark.sql.functions._
   *     core-core edges: exact because same-cell cores are always mutual
   *     eps-neighbors (1.), and the number of occupied cells is bounded by
   *     area/cellWidth² (not by n), so the distinct core-cell edge list
-  *     collapses to a driver-sized union-find — one pass over the pairs,
-  *     no iterative label propagation over points.
+  *     usually collapses to a driver-sized union-find — one pass over the
+  *     pairs, no iterative label propagation over points
+  *     ([[graft.graph.ConnectedComponents.converge]] runs distributed
+  *     rounds only past its driver bound).
   */
 object DBSCANGrid {
   /** 2-D entry point (kept for the query surface); delegates to the
     * n-dimensional grid, whose d=2 specialization is bit-identical
     * (62/2 = 31-bit packed halves, ±2-cell half-plane window). */
   def fit(points: DataFrame, idCol: String, xCol: String, yCol: String,
-          eps: Double, minPts: Int, ccEdgeLimit: Long = 500000L): DataFrame =
-    fitND(points, idCol, Seq(xCol, yCol), eps, minPts, ccEdgeLimit)
+          eps: Double, minPts: Int): DataFrame =
+    fitND(points, idCol, Seq(xCol, yCol), eps, minPts)
 
   /** Steps 1-2 of the grid estimator, shared with [[coreSummary]]: the
     * packed fine/coarse cell frame and the distance-verified eps-pair set
@@ -123,13 +125,12 @@ object DBSCANGrid {
     * fine grid has the larger coordinates, so its extent guard also
     * covers the coarse key).
     *
-    * @param ccEdgeLimit cell-edge count above which the connected
-    *   components run distributed (min-label propagation) instead of in a
-    *   driver union-find. The occupied-cell graph is usually tiny next to
-    *   n, but sparse data over a huge extent can make it data-scale too —
-    *   both paths produce identical labels (component rep = min cell id). */
+    * The occupied-cell graph is usually tiny next to n, but sparse data
+    * over a huge extent can make it data-scale too; its connected
+    * components are [[graft.graph.ConnectedComponents.converge]]'s, which
+    * picks a driver union-find or distributed rounds by edge count. */
   def fitND(points: DataFrame, idCol: String, featCols: Seq[String],
-            eps: Double, minPts: Int, ccEdgeLimit: Long = 500000L): DataFrame = {
+            eps: Double, minPts: Int): DataFrame = {
     val (withCell, pairs) = cellsAndPairs(points, idCol, featCols, eps)
     val bothDirs = pairs.unionAll(pairs.select(col("bid").as("id"), col("id").as("bid")))
 
@@ -139,39 +140,15 @@ object DBSCANGrid {
       .withColumn("is_core", coalesce(col("deg"), lit(0L)) >= (minPts - 1))
       .select(col("id"), col("fcell").as("cell"), col("is_core")).cache()
 
-    // 4. distinct core-cell edges -> connected components. Small graphs
-    // collapse into a driver union-find (zero extra jobs); past
-    // ccEdgeLimit the CC runs distributed as min-label propagation — both
-    // label every cell with the min cell id of its component.
+    // 4. distinct core-cell edges -> connected components, every cell
+    // labelled with the min cell id of its component
     val coreSide = core.filter(col("is_core"))
     val cellEdgeDF = pairs
       .join(coreSide.select(col("id"), col("cell").as("ca")), Seq("id"))
       .join(coreSide.select(col("id").as("bid"), col("cell").as("cb")), Seq("bid"))
       .select(col("ca"), col("cb")).distinct().cache()
-    val spark = points.sparkSession
-    import spark.implicits._
-    val rootDF =
-      if (cellEdgeDF.count() > ccEdgeLimit)
-        graft.graph.ConnectedComponents.converge(cellEdgeDF, "ca", "cb")
-          .select(col("node").as("cell"), col("label").as("root"))
-      else {
-        val cellEdges = cellEdgeDF.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(a: Long): Long = {
-          var r = a
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = a
-          while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
-          r
-        }
-        cellEdges.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val roots = parent.keys.map(c => (c, find(c))).toSeq
-        broadcast(roots.toDF("cell", "root"))
-      }
+    val rootDF = graft.graph.ConnectedComponents.converge(cellEdgeDF, "ca", "cb")
+      .select(col("node").as("cell"), col("label").as("root"))
 
     // core labels: component root -> renumber by min core id (determinism)
     val coreLabeled = coreSide

@@ -158,11 +158,14 @@ object RandomProjection {
     }
   }
 
+  /** `matrix · v` per row, each output rounded to 4 dp; NULL outputs for a
+    * vector whose width differs from the matrix's, never a prefix sum. */
   def project(df: DataFrame, idCol: String, vecCol: String,
               matrix: Array[Array[Double]]): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
+    val raw = col(vecCol).cast("array<double>")
+    val v = when(size(raw) === matrix.headOption.fold(0)(_.length), raw)
     val outs = matrix.zipWithIndex.map { case (row, j) =>
-      round(graft.core.VectorOps.dot(v, lit(row)), 4).as(s"rp_$j")
+      round(graft.core.VectorOps.dotFixed(v, lit(row)), 4).as(s"rp_$j")
     }
     df.select((col(idCol).cast("long").as("id") +: outs.toSeq): _*)
   }

@@ -31,6 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `n_alpha`: the length of `regexp_replace(text, "[^a-z]", "")`;
   *   - `n_uniq`: `size(array_distinct(tokens))` (byte equality);
   *   - `n_stop`: tokens in [[EnStop]];
+  *   - `n_num`: `size(filter(tokens, t => t.rlike("^[0-9]+$")))` — ASCII
+  *     digits, then nothing or ONE final line terminator, before which
+  *     Java's `$` also matches ("12\n" and "12\r\n" are numeric);
   *   - `lang`: the [[LangMarkers]] language with the most marker tokens,
   *     the first in list order on ties, `und` when none occurs;
   *   - `n_pieces`: `size(regexp_extract_all(text, "[a-z]+|[0-9]+|[^a-z0-9 ]"))`
@@ -50,7 +53,7 @@ object TextKernel {
 
   /** The struct [[TextStats]] returns. */
   val StatsType: StructType = StructType(
-    Seq("n_tokens", "n_chars", "n_alpha", "n_uniq", "n_stop", "n_pieces")
+    Seq("n_tokens", "n_chars", "n_alpha", "n_uniq", "n_stop", "n_pieces", "n_num")
       .map(StructField(_, IntegerType, nullable = false)) :+
       StructField("lang", StringType, nullable = false))
 
@@ -138,6 +141,22 @@ object TextKernel {
     }
   }
 
+  /** Whether the token b[s, e) matches `^[0-9]+$`: Java's `$` (no
+    * MULTILINE) matches at the end and before one final "\r\n", '\n',
+    * '\r', U+0085, U+2028 or U+2029. */
+  private def numeric(b: Array[Byte], s: Int, e: Int): Boolean = {
+    var j = s
+    while (j < e && b(j) >= '0' && b(j) <= '9') j += 1
+    j > s && (e - j match {
+      case 0 => true
+      case 1 => b(j) == '\n' || b(j) == '\r'
+      case 2 => (b(j) == '\r' && b(j + 1) == '\n') || (b(j) == 0xC2.toByte && b(j + 1) == 0x85.toByte)
+      case 3 => b(j) == 0xE2.toByte && b(j + 1) == 0x80.toByte &&
+        (b(j + 2) == 0xA8.toByte || b(j + 2) == 0xA9.toByte)
+      case _ => false
+    })
+  }
+
   private final val Space = ' '.toByte
   // piece states
   private final val Gap = 0
@@ -151,7 +170,7 @@ object TextKernel {
     val n = b.length
     val set = new TokenSet(b)
     val hits = new Array[Int](nLangs)
-    var nTok, nChars, alpha, stop, pieces = 0
+    var nTok, nChars, alpha, stop, pieces, num = 0
     var state = Gap
     var nextChar = 0
     var start = 0
@@ -166,6 +185,7 @@ object TextKernel {
         val hh = mix(h)
         nTok += 1
         set.add(start, i, hh)
+        if (numeric(b, start, i)) num += 1
         if (i - start <= MaxMarkerLen) {
           val m = markerBitsOf(b, start, i, hh)
           if (m != 0) {
@@ -196,7 +216,7 @@ object TextKernel {
     while (l < nLangs) { best = math.max(best, hits(l)); l += 1 }
     var lang = nLangs
     if (best > 0) { l = nLangs - 1; while (l >= 0) { if (hits(l) == best) lang = l; l -= 1 } }
-    new GenericInternalRow(Array[Any](nTok, nChars, alpha, set.size, stop, pieces, langs(lang)))
+    new GenericInternalRow(Array[Any](nTok, nChars, alpha, set.size, stop, pieces, num, langs(lang)))
   }
 
   private val emptyStrings = new GenericArrayData(Array.empty[Any])

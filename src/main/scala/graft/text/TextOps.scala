@@ -52,8 +52,9 @@ object TextOps {
   def langIdScore(text: Column): Column =
     coalesce(TextKernel.stats(text).getField("lang"), lit("und"))
 
-  /** The quality terms over the kernel's counts. `alphaRatio` is null for
-    * empty text and every term is null for null text. */
+  /** The quality terms over the kernel's counts, and the Gopher rules'
+    * numeric-token count. `alphaRatio` is null for empty text and every
+    * term is null for null text. */
   private final class Quality(t: Column) {
     private val s = TextKernel.stats(t)
     private def count(f: String): Column = s.getField(f).cast("double")
@@ -62,6 +63,7 @@ object TextOps {
     val alphaRatio: Column = when(nChars > 0, count("n_alpha") / nChars)
     val uniq: Column = count("n_uniq")
     val stop: Column = count("n_stop")
+    val num: Column = count("n_num")
     /** The composite in [0,1] on the 4-dp grid; null where a term is null
       * (`least` would otherwise read a null sum as 1.0). */
     val score: Column = {
@@ -182,13 +184,14 @@ object TextOps {
 
   /** The four keep/drop rule expressions behind [[gopherFilters]] and the
     * streaming quality gate — ONE definition so the batch composite and
-    * the ingest-time filter can never drift apart. */
+    * the ingest-time filter can never drift apart. Every count comes from
+    * one kernel scan per document. */
   private[graft] def gopherRules(t: Column): Seq[(String, Column)] = {
-    val toks = tokens(t)
-    val nw = size(toks).cast("double")
-    val mwl = (length(t).cast("double") - (nw - lit(1.0))) / nw
-    val numFrac = size(filter(toks, x => x.rlike("^[0-9]+$"))).cast("double") / nw
-    val uniqR = size(array_distinct(toks)).cast("double") / nw
+    val f = new Quality(t)
+    val nw = f.nTok
+    val mwl = (f.nChars - (nw - lit(1.0))) / nw
+    val numFrac = f.num / nw
+    val uniqR = f.uniq / nw
     Seq("r_wc" -> (nw >= 10.0 && nw <= 1000.0),
       "r_mwl" -> (mwl >= 2.0 && mwl <= 12.0),
       "r_num" -> (numFrac <= 0.3),

@@ -50,6 +50,8 @@ class BlockLossSpec extends AnyFunSuite {
       ConnectedComponents.propagate(edges("a", "b"), "a", "b", 8)),
     "ConnectedComponents.converge" -> (() =>
       ConnectedComponents.converge(edges("a", "b"), "a", "b")),
+    "ConnectedComponents.distributed" -> (() =>
+      ConnectedComponents.distributed(edges("a", "b"), "a", "b", 64)),
     "PageRank.run" -> (() => PageRank.run(edges("src", "dst"), "src", "dst", rounds = 5)),
     "HITS.run" -> (() => HITS.run(edges("c", "p"), "c", "p", rounds = 3, topK = 5)),
     "LabelPropagation.propagate" -> { () =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.cluster.DBSCANGrid
 import graft.graph.ConnectedComponents
 import org.apache.spark.rdd.ShuffledRDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
@@ -8,9 +9,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fixed-round min-label propagation: exact round semantics against a
-  * per-round DataFrame reference, null endpoints, one shuffle per round,
-  * and the storage a call leaves behind. */
+/** Connected components: fixed-round propagation's exact round semantics
+  * against a per-round DataFrame reference, one shuffle per round; for
+  * every path (propagate, converge's union-find and its rounds) the null
+  * endpoint policy, the jobs a call runs and the storage it leaves
+  * behind. */
 class ConnectedComponentsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -35,14 +38,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     lab
   }
 
+  /** Every path to the labels of an edge frame over columns a, b. */
+  private def paths(edges: DataFrame): Seq[(String, () => DataFrame)] = Seq(
+    "propagate" -> (() => ConnectedComponents.propagate(edges, "a", "b", 8)),
+    "converge" -> (() => ConnectedComponents.converge(edges, "a", "b")),
+    "unionFind" -> (() => ConnectedComponents.unionFind(edges, "a", "b")),
+    "distributed" -> (() => ConnectedComponents.distributed(edges, "a", "b", 64)))
+
   test("a null endpoint is not a node: its other end keeps its own label") {
     import spark.implicits._
     val edges = Seq[(Option[Long], Option[Long])](
-      (Some(1L), Some(2L)), (Some(5L), None), (Some(7L), Some(7L)), (Some(2L), Some(1L)))
+      (Some(1L), Some(2L)), (Some(5L), None), (Some(7L), Some(7L)), (Some(2L), Some(1L)),
+      (None, Some(9L)), (None, None))
       .toDF("a", "b")
-    val got = labels(ConnectedComponents.propagate(edges, "a", "b", 8))
-    assert(got == Set((Some(1L), 1L), (Some(2L), 1L), (Some(5L), 5L), (Some(7L), 7L)),
-      got.toString)
+    for ((name, call) <- paths(edges)) {
+      val got = labels(call())
+      assert(got == Set((Some(1L), 1L), (Some(2L), 1L), (Some(5L), 5L), (Some(7L), 7L),
+        (Some(9L), 9L)), s"$name: $got")
+    }
   }
 
   test("propagate runs exactly `rounds` rounds: min label within that many hops") {
@@ -109,5 +122,52 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.toSeq
     assert(added.size <= 1, added.mkString(", "))
     assert(!added.exists(_.isInstanceOf[ShuffledRDD[_, _, _]]), added.mkString(", "))
+  }
+
+  test("converge runs one job per round: maxRounds = 4 on a 500-node path") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = (0L until 500L).map(i => (i, i + 1)).toDF("a", "b")
+    def jobs(group: String)(call: => DataFrame): Int = {
+      val listener = new SparkListener {
+        val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            ours.add(e.jobId)
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try call finally sc.clearJobGroup()
+        // job starts are posted before the jobs run, and the call has
+        // returned, so a drained bus has delivered every one of them
+        org.apache.spark.graft.Codegen.drainListeners(sc)
+        listener.ours.size
+      } finally sc.removeSparkListener(listener)
+    }
+    // the rounds: 4 round jobs (none converges a 500-node path) + the checkpoint
+    val rounds = jobs("cc-distributed")(ConnectedComponents.distributed(edges, "a", "b", 4))
+    assert(rounds >= 4 && rounds <= 4 + 2, s"$rounds jobs for 4 rounds")
+    // below the driver bound: one count and one collect
+    val driver = jobs("cc-converge")(ConnectedComponents.converge(edges, "a", "b", maxRounds = 4))
+    assert(driver <= 4 + 2, s"$driver jobs")
+  }
+
+  test("converge and DBSCANGrid.fitND keep at most one checkpoint and never an edge list") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = (0 until 30).map(i => (3000L + i, 3000L + i / 3)).toDF("a", "b")
+    val rnd = new scala.util.Random(5)
+    val points = (0 until 80).map(i => (i.toLong, (i % 2) * 9 + rnd.nextGaussian() * 0.6,
+      rnd.nextGaussian() * 0.6)).toDF("id", "x", "y")
+    val calls = paths(edges).filter(_._1 != "propagate") :+
+      ("DBSCANGrid.fitND" -> (() => DBSCANGrid.fitND(points, "id", Seq("x", "y"), 1.0, 4)))
+    for ((name, call) <- calls) {
+      val before = sc.getPersistentRDDs.keySet
+      assert(call().count() > 0, name)
+      val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.toSeq
+      assert(added.size <= 1, s"$name: ${added.mkString(", ")}")
+      assert(!added.exists(_.isInstanceOf[ShuffledRDD[_, _, _]]), s"$name: ${added.mkString(", ")}")
+    }
   }
 }

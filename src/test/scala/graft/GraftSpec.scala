@@ -1,7 +1,7 @@
 package graft
 
 import graft.cluster.{DBSCAN, KMeansGraft}
-import graft.core.{Tables, VectorOps}
+import graft.core.Tables
 import graft.dedup.Dedup
 import graft.decomposition.{PCAGraft, RandomProjection}
 import graft.linear._
@@ -181,13 +181,6 @@ class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = Dedup.exact(docs, "text", "doc_id").collect()
     assert(r.length == 2)
     assert(r.find(_.getLong(2) == 2L).get.getLong(1) == 10L) // keeper = min id
-  }
-
-  test("VectorOps cosine of identical vectors is 1") {
-    import spark.implicits._
-    val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0))).toDF("a", "b")
-    val c = df.select(VectorOps.cosine(col("a"), col("b"))).head().getDouble(0)
-    assert(abs(c - 1.0) < 1e-12)
   }
 
   test("train_test_split fractions roughly honored and deterministic") {

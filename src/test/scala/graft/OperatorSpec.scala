@@ -413,11 +413,11 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     // ~300 nodes, sparse random edges + a long chain (exercises multi-round
-    // propagation; converge() must handle diameter > 8)
+    // propagation; the rounds must handle diameter > 8)
     val edges = (0 until 250).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
       .filter(e => e._1 != e._2) ++ (400L until 430L).map(i => (i, i + 1))
     val df = edges.toDF("a", "b")
-    val got = graft.graph.ConnectedComponents.converge(df, "a", "b")
+    val got = graft.graph.ConnectedComponents.distributed(df, "a", "b", 64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // reference union-find
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -437,25 +437,76 @@ class OperatorSpec extends AnyFunSuite {
     // diameter 500 — plain min propagation would need 500 rounds; the
     // jump-composed step must finish well inside 16
     val edges = (0L until 500L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = graft.graph.ConnectedComponents.converge(edges, "a", "b", maxRounds = 16)
+    val got = graft.graph.ConnectedComponents.distributed(edges, "a", "b", maxRounds = 16)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 501)
     assert(got.values.forall(_ == 0L), s"unconverged labels: ${got.filter(_._2 != 0L).take(5)}")
   }
 
+  test("union-find and distributed CC paths agree on random graphs") {
+    import spark.implicits._
+    import graft.graph.ConnectedComponents.{distributed, unionFind}
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rnd = new scala.util.Random(17)
+    // sparse and dense random graphs with self-loops, duplicates and a chain
+    val graphs = Seq(40 -> 30, 120 -> 60, 400 -> 90).map { case (m, n) =>
+      (0 until m).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
+        (500L until 520L).map(i => (i, i + 1))
+    }
+    for ((edges, g) <- graphs.zipWithIndex) {
+      val df = edges.toDF("a", "b")
+      val want = labels(unionFind(df, "a", "b"))
+      assert(want.size > 1, s"graph $g")
+      assert(labels(distributed(df, "a", "b", 64)) == want, s"graph $g")
+    }
+  }
+
   test("DBSCAN distributed-CC path produces the same labels as the driver path") {
     import spark.implicits._
+    import graft.graph.ConnectedComponents.{distributed, unionFind}
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rnd = new scala.util.Random(21)
+    val (eps, minPts) = (0.8, 5)
     val pts = (0 until 400).map { i =>
-      val cx = if (i % 2 == 0) 0.0 else 6.0
-      (i.toLong, cx + rnd.nextGaussian(), rnd.nextGaussian())
+      (i.toLong, (if (i % 2 == 0) 0.0 else 6.0) + rnd.nextGaussian(), rnd.nextGaussian())
     }
-    val df = pts.toDF("id", "x", "y")
-    val a = DBSCANGrid.fit(df, "id", "x", "y", 0.8, 5)
+    def near(i: Int, j: Int): Boolean = {
+      val (dx, dy) = (pts(i)._2 - pts(j)._2, pts(i)._3 - pts(j)._3)
+      dx * dx + dy * dy <= eps * eps
+    }
+    val neigh = pts.indices.map(i => pts.indices.filter(j => j != i && near(i, j)))
+    val core = neigh.map(_.size >= minPts - 1)
+    // DBSCAN's cell graph: the core-core eps-pairs mapped to fine cells
+    // (width eps/√2) under fitND's packed 62-bit keys, distinct
+    val cw = eps / math.sqrt(2.0)
+    def cell(i: Int): Long =
+      ((math.floor(pts(i)._2 / cw).toLong + (1L << 30)) << 31) +
+        math.floor(pts(i)._3 / cw).toLong + (1L << 30)
+    val cellEdges = (for {
+      i <- pts.indices if core(i); j <- neigh(i) if j > i && core(j)
+    } yield (cell(i), cell(j))).distinct
+    assert(cellEdges.exists(e => e._1 == e._2) && cellEdges.exists(e => e._1 != e._2))
+    val df = cellEdges.toDF("a", "b")
+    val root = labels(distributed(df, "a", "b", 64))
+    assert(root == labels(unionFind(df, "a", "b")))
+    // DBSCAN labels from the distributed roots, under fitND's conventions:
+    // cluster = min core id of its root, border -> min core-neighbor
+    // cluster, noise -1
+    val rootOf = (i: Int) => root.getOrElse(cell(i), cell(i))
+    val cluster = pts.indices.filter(core).groupBy(rootOf).values
+      .flatMap(is => is.map(_ -> is.map(pts(_)._1).min)).toMap
+    val want = pts.indices.map { i =>
+      val cl =
+        if (core(i)) cluster(i)
+        else neigh(i).filter(core).map(cluster).reduceOption((a: Long, b: Long) => math.min(a, b)).getOrElse(-1L)
+      pts(i)._1 -> (core(i), cl)
+    }.toMap
+    assert(want.values.filter(_._1).map(_._2).toSet.size >= 2)
+    val got = DBSCANGrid.fit(pts.toDF("id", "x", "y"), "id", "x", "y", eps, minPts)
       .collect().map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(2))).toMap
-    val b = DBSCANGrid.fit(df, "id", "x", "y", 0.8, 5, ccEdgeLimit = 0L)
-      .collect().map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(2))).toMap
-    assert(a == b)
+    assert(got == want)
   }
 
   test("SES stays finite on a 3000-point series (no closed-form overflow)") {

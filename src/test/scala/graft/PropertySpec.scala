@@ -15,6 +15,18 @@ class PropertySpec extends AnyFunSuite {
   private def cases[A](gen: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
 
+  /** The higher-order folds the native vector kernels replaced: Σ aᵢ·bᵢ
+    * and Σ (aᵢ−bᵢ)², NULL when the widths differ (`zip_with` pads the
+    * shorter side with NULLs). */
+  private object Fold {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{aggregate, lit, zip_with}
+    def dot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+    def sqDist(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
+  }
+
   test("topKPerKey equals sort-and-take for arbitrary score sets") {
     import spark.implicits._
     val gen = for {
@@ -106,9 +118,11 @@ class PropertySpec extends AnyFunSuite {
       } yield (a, b))
     } yield edges.filter(e => e._1 != e._2)
     cases(gen, 5).filter(_.nonEmpty).foreach { edges =>
-      val got = graft.graph.ConnectedComponents
-        .converge(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val df = edges.toDF("a", "b")
+      val got = labels(graft.graph.ConnectedComponents.converge(df, "a", "b"))
+      val rounds = labels(graft.graph.ConnectedComponents.distributed(df, "a", "b", 64))
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = { var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r }
       edges.foreach { case (a, b) =>
@@ -118,6 +132,7 @@ class PropertySpec extends AnyFunSuite {
       }
       val want = parent.keys.map(k => k -> find(k)).toMap
       assert(got == want)
+      assert(rounds == want)
     }
   }
 
@@ -133,11 +148,11 @@ class PropertySpec extends AnyFunSuite {
       val row = df.select(
         graft.functions.ArrayMath.dot(org.apache.spark.sql.functions.col("a"),
           org.apache.spark.sql.functions.col("b")),
-        graft.core.VectorOps.dot(org.apache.spark.sql.functions.col("a"),
+        Fold.dot(org.apache.spark.sql.functions.col("a"),
           org.apache.spark.sql.functions.col("b")),
         graft.functions.ArrayMath.sqDist(org.apache.spark.sql.functions.col("a"),
           org.apache.spark.sql.functions.col("b")),
-        graft.core.VectorOps.sqDist(org.apache.spark.sql.functions.col("a"),
+        Fold.sqDist(org.apache.spark.sql.functions.col("a"),
           org.apache.spark.sql.functions.col("b"))).head()
       // identical accumulation order ⇒ identical doubles, not just close
       assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
@@ -145,6 +160,23 @@ class PropertySpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToLongBits(row.getDouble(2)) ==
         java.lang.Double.doubleToLongBits(row.getDouble(3)))
     }
+  }
+
+  test("RandomProjection.project equals the fold and gives NULL for a vector of another width") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, round}
+    val m = graft.decomposition.RandomProjection.gaussianMatrix(6, 3, 42L)
+    val rnd = new scala.util.Random(3)
+    def vec(n: Int): Option[Seq[Double]] = Some(Seq.fill(n)(rnd.nextGaussian() * 10))
+    val df = Seq(1L -> vec(6), 2L -> vec(6), 3L -> vec(4), 4L -> vec(9), 5L -> None)
+      .toDF("id", "v")
+    val got = graft.decomposition.RandomProjection.project(df, "id", "v", m)
+      .orderBy("id").collect().toSeq
+    val v = col("v").cast("array<double>")
+    val want = df.select(col("id") +: m.toSeq.map(row => round(Fold.dot(v, lit(row)), 4)): _*)
+      .orderBy("id").collect().toSeq
+    assert(got == want)
+    assert(got.map(r => r.isNullAt(1)) == Seq(false, false, true, true, true), got.toString)
   }
 
   test("graft functions register as SQL functions (extension path)") {

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The text kernel ([[graft.functions.TextKernel]]) against the expression
   * trees it replaced, kept here as references: quality score, features,
-  * language ID, token counts and k-shingles, bit for bit on the sf0.01
-  * documents and on edge strings; and the null / empty-text policy. */
+  * language ID, token counts, the Gopher rules and k-shingles, bit for bit
+  * on the sf0.01 documents and on edge strings; and the null / empty-text
+  * policy. */
 class TextKernelSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -41,6 +42,14 @@ class TextKernelSpec extends AnyFunSuite {
       size(toks(t)).cast("long"),
       size(array_distinct(toks(t))).cast("long"),
       size(regexp_extract_all(t, lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long"))
+    def numTokens(t: Column): Column = size(filter(toks(t), x => x.rlike("^[0-9]+$")))
+    def gopherRules(t: Column): Seq[Column] = {
+      val nw = size(toks(t)).cast("double")
+      val mwl = (length(t).cast("double") - (nw - lit(1.0))) / nw
+      val numFrac = numTokens(t).cast("double") / nw
+      val uniqR = size(array_distinct(toks(t))).cast("double") / nw
+      Seq(nw >= 10.0 && nw <= 1000.0, mwl >= 2.0 && mwl <= 12.0, numFrac <= 0.3, uniqR >= 0.2)
+    }
     def shingles(ts: Column, k: Int): Column =
       when(size(ts) >= k,
         transform(sequence(lit(0), size(ts) - k),
@@ -87,6 +96,27 @@ class TextKernelSpec extends AnyFunSuite {
       assert(got.size == want.size && got.nonEmpty, name)
       got.zip(want).foreach { case (g, w) => assert(g == w, s"$name: $g vs $w") }
     }
+  }
+
+  test("Gopher rules and the numeric-token count equal the rlike filter formulation") {
+    import spark.implicits._
+    // `$` also matches before ONE final line terminator
+    val numeric = Seq("12", "007", "12\n", "12\r\n", "12\r", "12\u0085", "12\u2028",
+      "12\u2029", "12\n\n", "12\n\r", "\n12", "12\n34", "1\t", "１２", "12a", "", "x",
+      "0 1 2 3 4 5 6 7 8 9 words", "9\n 8\r\n 7\u2028 x\n")
+    val numFrame = numeric.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for ((name, df) <- frames :+ ("numeric" -> numFrame)) {
+      val got = rows(df.select(col("doc_id") +:
+        graft.functions.TextKernel.stats(col("text")).getField("n_num") +:
+        TextOps.gopherRules(col("text")).map(_._2): _*))
+      val want = rows(df.select(col("doc_id") +: Ref.numTokens(col("text")) +:
+        Ref.gopherRules(col("text")): _*))
+      assert(got.size == want.size && got.nonEmpty, name)
+      got.zip(want).foreach { case (g, w) => assert(g == w, s"$name: $g vs $w") }
+    }
+    val counts = rows(numFrame.select(col("doc_id"),
+      graft.functions.TextKernel.stats(col("text")).getField("n_num"))).map(_.getInt(1))
+    assert(counts == Seq(1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 10, 3), counts.toString)
   }
 
   test("shingles equal the transform formulation for k = 1..5, short documents included") {
